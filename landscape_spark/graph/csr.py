@@ -24,6 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -416,7 +417,11 @@ def pagerank_csr_blocked(
     p_i = min(num_partitions, S)
     blocks = blocks.repartition(p_i, "i").persist()
     blocks.count()  # materialize the static side once
-    deg_rows = deg_rows.persist()
+    # cache deg_rows only if nobody has: a caller-cached deg_rows (blocks=)
+    # is the caller's to release
+    own_deg = deg_rows.storageLevel == StorageLevel.NONE
+    if own_deg:
+        deg_rows = deg_rows.persist()
     deg_rows.count()
 
     # rank state: one dense float64 row per shard (trailing out-of-range
@@ -539,7 +544,8 @@ def pagerank_csr_blocked(
         )
 
     blocks.unpersist()  # the repartitioned copy; ranks are checkpointed
-    deg_rows.unpersist()
+    if own_deg:
+        deg_rows.unpersist()
 
     def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:

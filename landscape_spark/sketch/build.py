@@ -8,6 +8,15 @@ declarative job:
     edges --explode endpoints--> (vid, code) --repartition(pmod(vid,P))-->
     mapInArrow(vectorized numpy build) --> sketches(vid, sketch)
 
+    P = sketch_partitions(n, row bytes, num_partitions)
+      = min(num_partitions, ceil(n * row bytes / TASK_SKETCH_BYTES))
+
+P is sized from the bytes of sketch rows the stage can produce, not from the
+update count: a small sketch table (n=256 is ~2 MB) runs ONE Python task per
+stage, and a caller's ``num_partitions`` is the cap (n=2^14, ~280 MB of
+sketches, still runs at it). Every sketch shuffle in this module and in the
+Boruvka passes is sized the same way; see sketch_partitions.
+
 The repartition is the only shuffle (Spark's sort-based shuffle IS the
 reference's guttering buffer tree, graph_distrib_update.cpp:26-32). After it,
 every vid's updates are co-located, so each partition emits FINAL supernodes —
@@ -37,6 +46,34 @@ from landscape_spark.sketch.l0 import (
 )
 
 SKETCH_SCHEMA = "vid long, sketch binary"
+
+# NOTE: per-task fixed cost. Every mapInArrow task pays 0.1-0.2 s before its
+# kernel sees a batch, whatever its data: PySpark 4.1's worker calls
+# importlib.invalidate_caches() once per task, and under Python 3.11 the
+# zipimporters then re-read the directories of pyspark.zip and the spark-core
+# jar (0.11-0.21 s per call, timed inside workers). Measured on local[4], a
+# 4-vCPU VM: an empty mapInArrow stage takes 0.22-0.27 s as 1 task and
+# 0.54-0.67 s as 8; XOR-merging a 2 MiB slice table (n=256) takes 0.37 s as
+# 1 task and 0.77 s as 8; a 10.5 MiB one (n=1000) 0.41 s as 1-4 tasks and
+# 0.71 s as 8. So a sketch shuffle runs one task per TASK_SKETCH_BYTES of the
+# sketch rows it can produce, up to the caller's num_partitions. 8 MiB gives
+# 1 task at n=256, 2 at n=1000 (the fastest build there: 0.53 s, against
+# 0.63 s as 1 task and 0.79 s as 8) and the cap at n=2^14. In between the
+# rounding can land past the core count (n=4096: 7 tasks, two waves; its
+# build took 0.80 s against 0.48 s as 4). The bound is on OUTPUT rows
+# (distinct keys x row bytes), never on shuffle input: AQE coalescing sizes by
+# input, 16 B per update, and could put a sparse 1 MB update shuffle whose
+# kernel allocates GBs of sketches into one task.
+TASK_SKETCH_BYTES = 8 << 20
+
+
+def sketch_partitions(rows: int, row_bytes: int, num_partitions: int) -> int:
+    """Partition count of a sketch shuffle whose output is at most ``rows``
+    sketch rows of ``row_bytes`` each: ceil(rows * row_bytes /
+    TASK_SKETCH_BYTES), at least 1 and at most the caller's
+    ``num_partitions``."""
+    want = -(-rows * row_bytes // TASK_SKETCH_BYTES)
+    return max(1, min(num_partitions, want))
 
 
 def _binary_array(rows: np.ndarray) -> pa.Array:
@@ -104,13 +141,18 @@ def build_sketch_table(
     each partition builds a PARTIAL sketch, and a second XOR-merge stage
     combines them — the linear-sketch analog of two-phase (partial+final)
     aggregation (SURVEY.md §2.2 I6). Linearity guarantees the salted result
-    is bit-identical to the unsalted one."""
+    is bit-identical to the unsalted one.
+
+    ``num_partitions`` caps both shuffles; each is sized by
+    sketch_partitions from the sketch rows it can emit (n*salt partials,
+    then n merged rows)."""
     upd = edge_updates(und_edges, params.n)
+    parts = sketch_partitions(params.n * salt, params.nbytes, num_partitions)
     if salt > 1:
         sub = F.col("vid") * F.lit(salt) + F.pmod(F.xxhash64("code"), F.lit(salt))
-        upd = upd.repartition(num_partitions, sub)
+        upd = upd.repartition(parts, sub)
     else:
-        upd = upd.repartition(num_partitions, F.col("vid"))
+        upd = upd.repartition(parts, F.col("vid"))
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         vid_parts, code_parts = [], []
@@ -129,14 +171,16 @@ def build_sketch_table(
 
     partials = upd.mapInArrow(build, SKETCH_SCHEMA)
     if salt > 1:
-        return xor_merge_by_key(partials, "vid", num_partitions)
+        merge_parts = sketch_partitions(params.n, params.nbytes, num_partitions)
+        return xor_merge_by_key(partials, "vid", merge_parts)
     return partials
 
 
 def xor_merge_by_key(df: DataFrame, key: str, num_partitions: int = 32) -> DataFrame:
     """GroupBy-key XOR merge of sketch rows (the linear sketch-addition
-    aggregation, A2/A3 in SURVEY.md §2.3). One shuffle; fold is vectorized
-    reduceat per partition."""
+    aggregation, A2/A3 in SURVEY.md §2.3). One shuffle into exactly
+    ``num_partitions`` partitions (the key domain is unknown here, so the
+    caller sizes it); fold is vectorized reduceat per partition."""
     part = df.repartition(num_partitions, F.col(key))
 
     def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -184,6 +228,12 @@ def group_cols(params: SketchParams) -> list[str]:
     return [f"g{g}" for g in range(params.rounds)]
 
 
+def slice_row_bytes(params: SketchParams) -> int:
+    """Sketch bytes of one columnar row: ``rounds`` slices, each a det
+    bucket plus one group."""
+    return params.rounds * slice_params(params).nbytes
+
+
 def _split_groups(sk: np.ndarray, params: SketchParams) -> list[np.ndarray]:
     """(G, n_slots) full supernodes -> per-group (G, 2+spg) slices, each
     carrying its own copy of the deterministic bucket."""
@@ -205,13 +255,15 @@ def build_group_slices(
 ) -> DataFrame:
     """Distributed supernode build, columnar-by-group:
     (vid long, g0 binary, ..., g{R-1} binary). Same kernel, same single
-    shuffle, same salted two-phase option as build_sketch_table."""
+    shuffle, same salted two-phase option and the same sketch_partitions
+    sizing under the ``num_partitions`` cap as build_sketch_table."""
     upd = edge_updates(und_edges, params.n)
+    parts = sketch_partitions(params.n * salt, slice_row_bytes(params), num_partitions)
     if salt > 1:
         sub = F.col("vid") * F.lit(salt) + F.pmod(F.xxhash64("code"), F.lit(salt))
-        upd = upd.repartition(num_partitions, sub)
+        upd = upd.repartition(parts, sub)
     else:
-        upd = upd.repartition(num_partitions, F.col("vid"))
+        upd = upd.repartition(parts, F.col("vid"))
     names = ["vid"] + group_cols(params)
     schema = "vid long, " + ", ".join(f"{c} binary" for c in group_cols(params))
 
@@ -239,8 +291,11 @@ def build_group_slices(
 def xor_merge_slices(
     df: DataFrame, key: str, params: SketchParams, num_partitions: int = 32
 ) -> DataFrame:
-    """GroupBy-key XOR merge of columnar slice rows (all group columns)."""
-    part = df.repartition(num_partitions, F.col(key))
+    """GroupBy-key XOR merge of columnar slice rows (all group columns).
+    The key is a vid, so the output is at most ``params.n`` rows and the
+    shuffle runs sketch_partitions of them, capped at ``num_partitions``."""
+    parts = sketch_partitions(params.n, slice_row_bytes(params), num_partitions)
+    part = df.repartition(parts, F.col(key))
     names = group_cols(params)
     schema = f"{key} long, " + ", ".join(f"{c} binary" for c in names)
 
@@ -298,7 +353,9 @@ def fold_sample(
 ) -> DataFrame:
     """Final fold + l0 sample fused in one pass: (key, sketch-slice) rows ->
     (key, u, v) for keys whose merged slice yields a sample. One shuffle on
-    key; the sample never leaves the executor as sketch bytes."""
+    key into exactly ``num_partitions`` partitions — the key count is only
+    known to the caller, which sizes it with sketch_partitions; the sample
+    never leaves the executor as sketch bytes."""
     part = df.repartition(num_partitions, F.col(key))
 
     def fs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -51,7 +51,12 @@ from landscape_spark.sketch.l0 import SketchParams
 
 class SketchStreamIngestor:
     """Maintains a persistent per-vertex sketch table under micro-batched
-    edge updates; supports in-stream CC queries on the committed state."""
+    edge updates; supports in-stream CC queries on the committed state.
+
+    ``num_partitions`` caps the sketch shuffles of every absorb and query;
+    each runs as many partitions as its sketch bytes need
+    (sketch.build.sketch_partitions). The merged state is written from the
+    merge's partitions, so a small table commits as one parquet file."""
 
     def __init__(
         self,
@@ -224,6 +229,7 @@ class SketchStreamIngestor:
                 vmap0 = slices.select(
                     F.col("vid").alias("v"), F.col("vid").alias("comp")
                 ).localCheckpoint(eager=True)
+                # _cc_rounds returns a local checkpoint: cache it as is
                 vmap = _cc_rounds(
                     self.spark,
                     slices,
@@ -232,7 +238,6 @@ class SketchStreamIngestor:
                     start_group=0,
                     num_partitions=self.num_partitions,
                 )
-            vmap = vmap.localCheckpoint(eager=True)
             self._cc_cache_version = self.batches_seen
             self._cc_cache_vmap = vmap
         if n_vertices > 0:

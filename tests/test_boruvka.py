@@ -119,3 +119,61 @@ def test_star_contraction_matches_nx(spark):
         root = min(comp)
         for v in comp:
             assert remap.get(v, v) == root
+
+
+def test_sketch_partitions_bounds():
+    """The shuffle sizing is ceil(sketch bytes / per-task target), in
+    [1, cap]: a small sketch table runs one task, a large one the cap."""
+    from landscape_spark.sketch.build import sketch_partitions, slice_row_bytes
+
+    for rows in (0, 1, 64, 1000, 1 << 14, 1 << 20):
+        for cap in (1, 4, 8, 32):
+            p = sketch_partitions(rows, 8192, cap)
+            assert 1 <= p <= cap
+    row = slice_row_bytes(SketchParams.for_graph(256))
+    assert sketch_partitions(256, row, 8) == 1
+    assert sketch_partitions(1000, slice_row_bytes(SketchParams.for_graph(1000)), 8) == 2
+    big = SketchParams.for_graph(1 << 14)
+    assert sketch_partitions(big.n, slice_row_bytes(big), 8) == 8
+    assert sketch_partitions(big.n, big.nbytes, 8) == 8
+
+
+def test_slice_build_and_merge_independent_of_partitions(spark, monkeypatch):
+    """build_group_slices and xor_merge_slices give byte-identical rows at 1
+    partition, at 8 (a per-task target small enough to hit the cap) and at
+    the sized count: the XOR fold is linear, so sizing moves only the task
+    boundaries."""
+    import random
+
+    from landscape_spark.sketch import build
+
+    rng = random.Random(5)
+    n = 200
+    pairs = ((rng.randrange(n), rng.randrange(n)) for _ in range(900))
+    edges = sorted({(a, b) for a, b in pairs if a < b})
+    e = spark.createDataFrame(edges, "a long, b long")
+    half = spark.createDataFrame(edges[::2], "a long, b long")
+    params = SketchParams.for_graph(n, seed=4)
+
+    def rows(df):
+        return sorted((r[0], *(bytes(x) for x in r[1:])) for r in df.collect())
+
+    def run(cap):
+        built = build.build_group_slices(e, params, cap)
+        merged = build.xor_merge_slices(
+            built.unionAll(build.build_group_slices(half, params, cap)), "vid", params, cap
+        )
+        return built, merged
+
+    sized_parts = build.sketch_partitions(n, build.slice_row_bytes(params), 8)
+    out = {}
+    for label, cap, target, parts in (
+        ("one", 1, build.TASK_SKETCH_BYTES, 1),
+        ("cap", 8, 1, 8),
+        ("sized", 8, build.TASK_SKETCH_BYTES, sized_parts),
+    ):
+        monkeypatch.setattr(build, "TASK_SKETCH_BYTES", target)
+        built, merged = run(cap)
+        assert merged.rdd.getNumPartitions() == parts
+        out[label] = (rows(built), rows(merged))
+    assert out["one"] == out["cap"] == out["sized"]

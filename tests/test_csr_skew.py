@@ -109,3 +109,26 @@ def test_pagerank_csr_blocked_all_dangling_uniform(spark):
     got = {r.v: r.pr_score for r in pagerank_csr_blocked(spark, empty, 10, iters=5, shards=3).collect()}
     assert len(got) == 10
     assert all(abs(v - 0.1) < 1e-12 for v in got.values())
+
+
+def test_pagerank_csr_blocked_keeps_caller_cached_deg_rows(spark, sf_small):
+    """A deg_rows table the caller cached and passed via blocks= is the
+    caller's to release: the PageRank call must leave it cached."""
+    from pyspark import StorageLevel
+
+    from landscape_spark.graph.csr import build_blocked_csr, pagerank_csr_blocked
+
+    n = linkgraph.num_vertices(spark, sf_small)
+    e = linkgraph.directed_edges(spark, sf_small)
+    blocks, deg_rows = build_blocked_csr(e, n, 4, num_partitions=4)
+    blocks, deg_rows = blocks.persist(), deg_rows.persist()
+    blocks.count(), deg_rows.count()
+    try:
+        pagerank_csr_blocked(
+            spark, e, n, iters=2, shards=4, num_partitions=4, blocks=(blocks, deg_rows)
+        ).count()
+        assert blocks.storageLevel != StorageLevel.NONE
+        assert deg_rows.storageLevel != StorageLevel.NONE
+    finally:
+        blocks.unpersist()
+        deg_rows.unpersist()

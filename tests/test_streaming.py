@@ -231,3 +231,23 @@ def test_state_retains_previous_version_for_racing_queries(spark, tmp_path):
         ing.absorb_batch(spark.createDataFrame([pair], "a long, b long"), i)
     dirs = sorted(d for d in os.listdir(sd) if d.startswith("sketches_v"))
     assert dirs == ["sketches_v1", "sketches_v2"]  # current + previous only
+
+
+def test_small_state_commits_one_parquet_file(spark, tmp_path):
+    """A 64-vertex sketch table is far below one task's byte target, so the
+    build and the state merge each run one partition and every commit
+    writes exactly one parquet part file, even with a cap of 8."""
+    import os
+
+    n = 64
+    params = SketchParams.for_graph(n, seed=17)
+    sd = str(tmp_path / "one")
+    ing = SketchStreamIngestor(spark, params, sd, num_partitions=8)
+    for i, batch in enumerate([[(1, 2), (2, 3), (10, 11)], [(3, 4), (2, 3)]]):
+        ing.absorb_batch(spark.createDataFrame(batch, "a long, b long"), i)
+        vdir = ing._version_dir(i)
+        parts = [f for f in os.listdir(vdir) if f.startswith("part-")]
+        assert len(parts) == 1, parts
+    got = {r.v: r.comp for r in ing.query_components(0).collect()}
+    # (2, 3) was sent twice: XOR deleted it
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10}
