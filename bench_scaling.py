@@ -69,8 +69,7 @@ for _rep in range(3):
     sk = cand
 rounds_box = [0]
 t0 = time.time()
-vmap0 = sk.select(F.col("vid").alias("v"), F.col("vid").alias("comp")).localCheckpoint(eager=True)
-vmap = _cc_rounds(spark, sk, vmap0, params, 0, 32,
+vmap = _cc_rounds(spark, sk, None, params, 0, 32,
                   on_round=lambda g, s, m_: rounds_box.__setitem__(0, g + 1))
 rounds = rounds_box[0]
 ncomp = vmap.select("comp").distinct().count()

@@ -78,10 +78,7 @@ def main() -> None:
         slices.count()
         ingest_sec = time.time() - t0
         t0 = time.time()
-        vmap0 = slices.select(F.col("vid").alias("v"), F.col("vid").alias("comp"))
-        vmap = _cc_rounds(
-            spark, slices, vmap0.localCheckpoint(eager=True), params, 0, parts
-        )
+        vmap = _cc_rounds(spark, slices, None, params, 0, parts)
         n_comp = vmap.select("comp").distinct().count()
         out.update(
             updates=m_updates,

@@ -459,7 +459,10 @@ def q_bucketed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge table, WRITE it with the hash-bucketed partitioned writer
     (sources.py — the persisted co-location layout; Iceberg spec at
     deploy), read it back, and aggregate. Shares degree_distribution's
-    oracle, so the persisted bytes are hash-checked end to end."""
+    oracle, so the persisted bytes are hash-checked end to end. The small
+    degree histogram is materialized on the driver, so the table copy is
+    removed before the gate returns."""
+    import shutil
     import tempfile
 
     from landscape_spark import sources
@@ -468,17 +471,20 @@ def q_bucketed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-run unique dir: a fixed path in the shared tmp dir races with a
     # concurrent gate run on the same host (overwrite mid-read) and could
     # follow a pre-existing attacker-created path in world-writable /tmp
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="landscape_gate_edge_table_"), "edges"
-    )
-    sources.write_edge_table(e, path)
-    back = sources.read_edge_table(spark, path)
-    return (
-        back.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .groupBy("out_deg")
-        .agg(F.count(F.lit(1)).alias("n_vertices"))
-    )
+    tmp = tempfile.mkdtemp(prefix="landscape_gate_edge_table_")
+    try:
+        path = os.path.join(tmp, "edges")
+        sources.write_edge_table(e, path)
+        hist = (
+            sources.read_edge_table(spark, path)
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("out_deg"))
+            .groupBy("out_deg")
+            .agg(F.count(F.lit(1)).alias("n_vertices"))
+        )
+        return spark.createDataFrame(hist.collect(), hist.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def q_degree_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:

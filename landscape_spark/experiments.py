@@ -63,9 +63,7 @@ def exp_speed(args) -> dict:
         sk.count()
         best = min(best, time.time() - t0)
     t0 = time.time()
-    vmap0 = sk.select(F.col("vid").alias("v"), F.col("vid").alias("comp"))
-    vmap = _cc_rounds(spark, sk, vmap0.localCheckpoint(eager=True), params, 0,
-                      max(8, args.cpus))
+    vmap = _cc_rounds(spark, sk, None, params, 0, max(8, args.cpus))
     ncomp = vmap.select("comp").distinct().count()
     cc_sec = time.time() - t0
     return {"experiment": "speed", "n": args.n, "updates": m_upd,

@@ -15,17 +15,18 @@ The reference's query paths:
 Spark rendition: supernodes live in a DISTRIBUTED, IMMUTABLE columnar slice
 table — one binary column per sketch group, built once and never rewritten
 (the reference holds all supernodes on rank 0 — its acknowledged ceiling,
-which this removes). Every pass projects only the groups it consumes
-(column pruning), re-folds vertex slices under the current labels map-side,
-and fuses the final fold with l0 sampling in one shuffle; only the tiny
-vid->comp map updates per pass. Sampled component pairs merge via a driver
-DSU under COLLECT_THRESHOLD samples and via the distributed Boruvka
-min-edge rule + large-star/small-star contraction above it. Each Boruvka
-round consumes one sketch GROUP (one-shot sampling), so k-forest extraction
-budgets rounds_per_forest groups per pass via ``start_group``. The same
-machinery serves batch CC (_cc_rounds), k-forests (_forest_pass_slices),
-and the streaming in-stream queries (streaming/ingest reuses _cc_rounds on
-its slice-parquet state).
+which this removes). As in the reference, CC and every k-forest pass run the
+SAME Boruvka emulation, _boruvka_passes: every pass projects only the groups
+it consumes (column pruning), re-folds vertex slices under the current labels
+map-side, and fuses the final fold with l0 sampling in one shuffle; only the
+tiny vid->comp map updates per pass. Sampled cut edges merge via a driver DSU
+under COLLECT_THRESHOLD samples and via the distributed Boruvka min-edge rule
++ large-star/small-star contraction above it (the log-rounds contraction of
+"Finding connected components in map-reduce in logarithmic rounds", ICDE'13).
+Each Boruvka round consumes one sketch GROUP (one-shot sampling), so k-forest
+extraction budgets per_pass groups per pass. Batch CC (_cc_rounds), the
+k-forests (k_spanning_forests) and the streaming in-stream queries
+(streaming/ingest reuses _cc_rounds on its slice-parquet state) all call it.
 
 Component labels are canonical min-vertex-ids — exactly comparable to the
 min-label SQL oracle.
@@ -33,31 +34,35 @@ min-label SQL oracle.
 
 from __future__ import annotations
 
+import math
+import time
+import warnings
+from functools import reduce
+
 import numpy as np
 import pandas as _pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from landscape_spark.sketch.build import (
     build_group_slices,
     fold_sample,
-    partial_fold,
     sample_vertex_groups,
     sketch_partitions,
     slice_params,
+    xor_fold,
+    xor_merge_slices,
 )
 from landscape_spark.sketch.l0 import SketchParams
 
-
-def _np_arr(xs: list[int]) -> np.ndarray:
-    return np.asarray(xs, dtype=np.int64)
-
-
-# Above this many per-round samples the driver DSU is replaced by distributed
-# star contraction over the sampled component graph (the reference collects
+# Above this many per-round samples the driver DSU is replaced by the
+# distributed Boruvka min-edge rule + star contraction (the reference collects
 # every sample on rank 0, src/graph_distrib_update.cpp:105-154 — its
 # acknowledged ceiling; this removes it).
 COLLECT_THRESHOLD = 2_000_000
+
+# Sketch groups sampled by a pass loop's first pass; later passes sample 2.
+FIRST_PASS_GROUPS = 4
 
 
 class DSU:
@@ -171,260 +176,114 @@ def _star_contraction(pairs: DataFrame) -> DataFrame:
     return e.select(F.col("y").alias("old_comp"), F.col("x").alias("new_comp"))
 
 
-def _cc_rounds(
+def _pairs_frame(
+    spark: SparkSession, rows: list[tuple[int, int]], names: tuple[str, str]
+) -> DataFrame:
+    """Driver-side int pairs -> two-column long DataFrame through Arrow
+    (pandas): py4j row-by-row conversion of a ~n-sized list would dominate
+    the pass."""
+    arr = np.asarray(rows, dtype=np.int64).reshape(-1, 2)
+    return spark.createDataFrame(
+        _pd.DataFrame({names[0]: arr[:, 0], names[1]: arr[:, 1]}),
+        f"{names[0]} long, {names[1]} long",
+    )
+
+
+def _forest_frame(
+    spark: SparkSession, pairs: list[tuple[int, int]], kept: list[DataFrame]
+) -> DataFrame:
+    """One (a, b) DataFrame over a pass loop's forest edges: the
+    driver-merged pairs plus the distributed passes' min-edge frames."""
+    return reduce(
+        DataFrame.unionAll,
+        [f.select("a", "b") for f in kept],
+        _pairs_frame(spark, pairs, ("a", "b")),
+    )
+
+
+def _boruvka_passes(
     spark: SparkSession,
     slices: DataFrame,
-    vmap: DataFrame,
+    vmap: DataFrame | None,
     params: SketchParams,
     start_group: int,
+    end_group: int,
     num_partitions: int,
     on_round=None,
     ckpt=None,
     collect_threshold: int = COLLECT_THRESHOLD,
     slices_path: str | None = None,
-    groups_per_pass: int = 4,
-) -> DataFrame:
-    """The Boruvka round loop over the columnar slice table.
+) -> tuple[DataFrame, tuple[list[tuple[int, int]], list[DataFrame]], int]:
+    """The one Boruvka pass loop over the columnar slice table, consuming
+    sketch groups [start_group, end_group). It serves CC (_cc_rounds) and
+    every k-forest pass (k_spanning_forests).
 
-    Per PASS: project ``groups_per_pass`` group columns (column pruning ships
-    only those), stack them to (comp*j+i, slice) rows under the CURRENT
-    component labels, map-side partial XOR-fold, one shuffle fusing the final
-    fold with l0 sampling, then merge sampled component pairs (driver DSU
-    under collect_threshold samples, distributed star contraction above it)
-    and remap the vid->comp map.
+    Per PASS: project the pass's group columns (column pruning ships only
+    those), stack them to (comp*j+i, slice) rows under the CURRENT component
+    labels, map-side partial XOR-fold, one shuffle fusing the final fold with
+    l0 sampling, then merge the sampled cut edges and remap the vid->comp
+    map. ``vmap=None`` means the identity map over ``slices.vid``; an
+    identity first pass (``vmap=None`` or ``start_group == 0``) samples
+    straight off the unique vertex rows — no fold, no shuffle, no label
+    joins. Vertex sketches are built ONCE and never rewritten; per-pass
+    materialization is O(n slice bytes + vmap). Each pass's fold shuffle is
+    sized from live components x groups x slice bytes, capped at
+    ``num_partitions`` (build.sketch_partitions).
 
-    Batching j groups per pass trades a few extra consumed sketch groups
-    (groups 2..j of a pass sample at the pass-start granularity, so some of
-    their samples land inside freshly-merged components and union as no-ops)
-    for j-times fewer Spark jobs — each pass still contracts at least as much
-    as one classic Boruvka round, so <= log2(n) passes. Because batching can
-    consume up to 2*log2(n)+2 groups against a log2(n)+6 budget, a RESERVE
-    schedule guards the tail: once the remaining group budget is within
-    ceil(log2(live))+1 (one guaranteed-halving group per remaining doubling),
-    passes drop to a single group — the worst-case consumption then always
-    fits the budget, and exhausting it anyway (l0-sampling failures beyond
-    the census-calibrated rate) raises a RuntimeWarning instead of silently
-    returning an under-merged map. Vertex sketches are built ONCE and never
-    rewritten; per-pass materialization is O(n slice bytes + vmap), not
-    O(live supernodes x full sketch) as in round 1. Each pass's fold shuffle
-    is sized from live components x groups x slice bytes, capped at
-    ``num_partitions`` (build.sketch_partitions)."""
-    import math as _math
-    import time as _time
-    import warnings as _warnings
+    Merging: under ``collect_threshold`` samples a driver DSU applies the
+    samples in (group, a, b) order — union-by-min makes the roots the
+    component minima whatever the order. Above it, the Boruvka min-edge rule
+    keeps one sampled edge per component (acyclic by the max-edge-in-cycle
+    argument) and large-star/small-star contraction merges their components,
+    with nothing collected to the driver. Either way the accepted edges are
+    a spanning forest of the merges.
 
+    Schedule: the first pass samples FIRST_PASS_GROUPS groups, later passes
+    2 (groups 2..j of a pass sample at the pass-start granularity, so some of
+    their samples land inside freshly-merged components and union as no-ops,
+    for j-times fewer Spark jobs). A RESERVE schedule guards the tail: once
+    the remaining budget is within ceil(log2(live))+1 groups (one
+    guaranteed-halving group per remaining doubling) passes drop to one
+    group, as do all passes above collect_threshold live components. If the
+    budget runs out while the last pass still sampled cut edges and the
+    exact distinct-component count is above 1, the result is UNCONFIRMED and
+    a RuntimeWarning says so (sampling failures beyond the census-calibrated
+    rate) instead of silently returning an under-merged map or a
+    non-maximal forest.
+
+    Returns (vid->comp map as a local checkpoint, forest edges, groups
+    consumed). The forest edges are the driver-merged (a, b) pairs plus the
+    checkpointed (a, b, comp_u, comp_v) min-edge frames of the distributed
+    passes."""
     sp = slice_params(params)
-    # live-component counter: when it hits 1 the graph is fully connected and
-    # NO cut edge can exist — converged without paying a confirm pass.
-    # (Graphs with >1 final component still converge via the empty-sample
-    # break.) slices is cached/checkpointed, so the count is nearly free.
-    n_live = slices.count()
-    g = start_group
-    converged = False
-    while g < params.rounds:
-        _t0 = _time.time()
-        # after the first pass most components are merged — later passes are
-        # mostly convergence checks, so sample fewer groups per pass
-        j_pass = groups_per_pass if g == start_group else min(2, groups_per_pass)
-        # reserve schedule: one single-group pass guarantees >= halving, so
-        # ceil(log2(live)) remaining groups always suffice — stop batching
-        # when the budget is down to that bound (+1 slack)
-        if params.rounds - g <= _math.ceil(_math.log2(max(n_live, 2))) + 1:
-            j_pass = 1
-        gs = list(range(g, min(g + j_pass, params.rounds)))
-        j = len(gs)
-        if g == 0:
-            # vmap is the identity and vertex rows are unique: sample straight
-            # off the vertex slices — no fold, no shuffle, no label joins
-            resolved = sample_vertex_groups(
-                slices, [f"g{gg}" for gg in gs], sp
-            ).select("gi", F.col("u").alias("comp_u"), F.col("v").alias("comp_v"))
-        else:
-            stack = F.expr(
-                f"stack({j}, "
-                + ", ".join(f"{i}L, g{gg}" for i, gg in enumerate(gs))
-                + ") as (gi, sketch)"
-            )
-            sl = slices.select(F.col("vid").alias("v"), stack)
-            keyed = sl.join(vmap, on="v").select(
-                (F.col("comp") * j + F.col("gi")).alias("ckey"), "sketch"
-            )
-            samples = fold_sample(
-                partial_fold(keyed, "ckey"),
-                "ckey",
-                sp,
-                sketch_partitions(n_live * j, sp.nbytes, num_partitions),
-            )
-            u_map = vmap.select(F.col("v").alias("u"), F.col("comp").alias("comp_u"))
-            v_map = vmap.select(F.col("v").alias("v2"), F.col("comp").alias("comp_v"))
-            resolved = (
-                samples.join(u_map, on="u")
-                .join(v_map, samples.v == v_map.v2)
-                .select((F.col("ckey") % j).alias("gi"), "comp_u", "comp_v")
-                .where(F.col("comp_u") != F.col("comp_v"))
-            )
-        # materialize the (tiny: <= live components x j rows) sample set ONCE,
-        # then collect from the checkpoint — limit().collect() would re-run
-        # the whole narrow sampling pipeline in incremental waves. The row
-        # count rides the checkpoint action via observe() (integer — exact
-        # under any task merge order), saving one probe job per pass.
-        from pyspark.sql import Observation
-
-        _obs = Observation()
-        resolved = resolved.observe(
-            _obs, F.count(F.lit(1)).alias("n")
+    identity = vmap is None or start_group == 0
+    if vmap is None:
+        vmap = slices.select(
+            F.col("vid").alias("v"), F.col("vid").alias("comp")
         ).localCheckpoint(eager=True)
-        n_samp = _obs.get["n"]
-        if n_samp == 0:
-            if on_round is not None:
-                on_round(g, 0, False)
-            converged = True  # no live component holds a cut edge
-            break
-        merged_any = False
-        n_merged = 0
-        if n_samp <= collect_threshold:
-            head = resolved.collect()
-            dsu = DSU()
-            touched: set[int] = set()
-            # apply the pass's sample sets in group order (determinism)
-            for row in sorted(head, key=lambda r: (r.gi, r.comp_u, r.comp_v)):
-                if dsu.union(row.comp_u, row.comp_v):
-                    touched.add(row.comp_u)
-                    touched.add(row.comp_v)
-            remap = [
-                (c, dsu.find(c)) for c in sorted(touched) if dsu.find(c) != c
-            ]
-            merged_any = bool(remap)
-            n_merged = len(remap)
-            # Arrow path (pandas) — py4j row-by-row conversion of a ~n-sized
-            # remap would dominate the pass
-            remap_pdf = _pd.DataFrame(
-                {
-                    "old_comp": _np_arr([r[0] for r in remap]),
-                    "new_comp": _np_arr([r[1] for r in remap]),
-                }
-            )
-            remap_df = F.broadcast(spark.createDataFrame(remap_pdf))
-        else:
-            remap_df = _star_contraction(
-                resolved.select(F.col("comp_u").alias("x"), F.col("comp_v").alias("y"))
-            ).localCheckpoint(eager=True)
-            merged_any = True  # every surviving pair crosses components
-            n_merged = remap_df.count()
-        if merged_any:
-            vmap = (
-                vmap.join(remap_df, vmap.comp == remap_df.old_comp, "left")
-                .select("v", F.coalesce("new_comp", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
-            )
-        if on_round is not None:
-            on_round(g, n_samp, merged_any)
-        g += j
-        # after a resume n_live starts from the vertex count (an
-        # overestimate), which only delays this shortcut — never wrong
-        n_live -= n_merged
-        if ckpt is not None:
-            dfs = {"vmap": vmap}
-            if ckpt.latest_round() is None:
-                dfs["slices"] = slices
-            ckpt.save_round(
-                gs[0],
-                dfs,
-                {
-                    "next_group": g,
-                    "slices_path": slices_path
-                    or f"{ckpt.round_dir(gs[0])}/slices.parquet",
-                    "params": {
-                        "n": params.n,
-                        "rounds": params.rounds,
-                        "cols": params.cols,
-                        "depths": params.depths,
-                        "seed": params.seed,
-                    },
-                },
-                {"samples": n_samp, "round_sec": round(_time.time() - _t0, 3)},
-            )
-            if slices_path is None:
-                slices_path = f"{ckpt.round_dir(gs[0])}/slices.parquet"
-        if n_live <= 1:
-            converged = True
-            break
-    if not converged and n_live > 1:
-        # n_live is an upper bound (after a resume it starts from the vertex
-        # count), so confirm with the exact distinct-component count before
-        # alarming — a connected graph that finished on the last budgeted
-        # group is NOT under-merged
-        n_true = vmap.select("comp").distinct().count()
-        if n_true > 1:
-            _warnings.warn(
-                f"sketch group budget exhausted after {params.rounds} groups "
-                f"with {n_true} components live and no group left for an "
-                "empty-sample confirm pass — the returned map is UNCONFIRMED "
-                "(it may be complete if the graph is disconnected, or "
-                "under-merged); raise SketchParams.rounds (extra_rounds) or "
-                "check the sampling-failure census calibration",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    return vmap
-
-
-def _forest_pass_slices(
-    spark: SparkSession,
-    slices: DataFrame,
-    params: SketchParams,
-    start_group: int,
-    max_groups: int,
-    num_partitions: int,
-    collect_threshold: int = COLLECT_THRESHOLD,
-) -> tuple[DataFrame, DataFrame, int]:
-    """One Boruvka emulation over the COLUMNAR slice table that also returns
-    the extracted forest edges — the k-forest engine, on the SAME scale
-    machinery as the flagship _cc_rounds: per-pass column-pruned projection
-    (only the consumed groups' columns ship), map-side partial XOR fold, one
-    shuffle fusing the final fold with l0 sampling, driver DSU under
-    collect_threshold / min-edge rule + star contraction above it. Unlike
-    round 2's blob-table pass, component sketches are NEVER materialized
-    or re-merged — every pass re-folds from the immutable vertex slices
-    under the current labels, so per-pass traffic is O(n slice bytes + vmap)
-    instead of O(live supernodes x full blob) (+ a full-blob checkpoint).
-
-    vmap starts as the identity (fresh pass), so the first pass samples
-    straight off the vertex rows with no fold, no shuffle, no label joins.
-    Returns (vid->comp map, forest edges (a, b), groups consumed)."""
-    import math as _math
-
-    sp = slice_params(params)
-    vmap = slices.select(
-        F.col("vid").alias("v"), F.col("vid").alias("comp")
-    ).localCheckpoint(eager=True)
+    # live-component counter: at 1 the graph is fully connected and NO cut
+    # edge can exist — converged without paying a confirm pass (graphs with
+    # >1 final component converge via the empty-sample break). slices is
+    # cached/checkpointed, so the count is nearly free; after a resume it
+    # starts from the vertex count (an overestimate), which only delays this
+    # shortcut — never wrong.
     n_live = slices.count()
-    forest_parts: list[DataFrame] = []
-    groups_used = 0
+    pairs: list[tuple[int, int]] = []
+    kept_parts: list[DataFrame] = []
     g = start_group
-    end = min(start_group + max_groups, params.rounds)
-    first = True
-    last_n_samp = 0
-    while g < end and n_live > 1:
+    converged = n_live <= 1
+    while g < end_group and not converged:
+        t0 = time.time()
         if n_live > collect_threshold:
-            j = 1  # distributed rounds contract strictly sequentially
+            j = 1  # distributed passes contract strictly one group at a time
         else:
-            j = 4 if first else 2
-            if end - g <= _math.ceil(_math.log2(max(n_live, 2))) + 1:
+            j = FIRST_PASS_GROUPS if g == start_group else 2
+            if end_group - g <= math.ceil(math.log2(max(n_live, 2))) + 1:
                 j = 1
-        gs = list(range(g, min(g + j, end)))
-        g += len(gs)
-        groups_used += len(gs)
-        if first:
-            # identity labels: sample straight off the unique vertex rows
-            resolved = sample_vertex_groups(
-                slices, [f"g{gg}" for gg in gs], sp
-            ).select(
-                "gi",
-                "u",
-                "v",
-                F.col("u").alias("comp_u"),
-                F.col("v").alias("comp_v"),
+        gs = list(range(g, min(g + j, end_group)))
+        if g == start_group and identity:
+            resolved = sample_vertex_groups(slices, [f"g{gg}" for gg in gs], sp).select(
+                "gi", "u", "v", F.col("u").alias("comp_u"), F.col("v").alias("comp_v")
             )
         else:
             stack = F.expr(
@@ -438,7 +297,7 @@ def _forest_pass_slices(
                 .select((F.col("comp") * len(gs) + F.col("gi")).alias("ckey"), "sketch")
             )
             samples = fold_sample(
-                partial_fold(keyed, "ckey"),
+                xor_fold(keyed, "ckey", ["sketch"]),
                 "ckey",
                 sp,
                 sketch_partitions(n_live * len(gs), sp.nbytes, num_partitions),
@@ -448,63 +307,38 @@ def _forest_pass_slices(
             resolved = (
                 samples.join(u_map, on="u")
                 .join(v_map, samples.v == v_map.v2)
-                .select(
-                    (F.col("ckey") % len(gs)).alias("gi"), "u", "v", "comp_u", "comp_v"
-                )
+                .select((F.col("ckey") % len(gs)).alias("gi"), "u", "v", "comp_u", "comp_v")
                 .where(F.col("comp_u") != F.col("comp_v"))
             )
-        first = False
-        from pyspark.sql import Observation
-
-        _obs = Observation()
-        resolved = resolved.observe(
-            _obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        n_samp = _obs.get["n"]
-        last_n_samp = n_samp
+        # materialize the (tiny: <= live components x j rows) sample set ONCE,
+        # then collect from the checkpoint — limit().collect() would re-run
+        # the whole narrow sampling pipeline in incremental waves. The row
+        # count rides the checkpoint action via observe() (integer — exact
+        # under any task merge order), saving one probe job per pass.
+        obs = Observation()
+        resolved = resolved.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        n_samp = obs.get["n"]
         if n_samp == 0:
-            break  # no live component holds a cut edge: forest complete
-        n_merged = 0
+            if on_round is not None:
+                on_round(g, 0, False)
+            converged = True  # no live component holds a cut edge
+            break
         if n_samp <= collect_threshold:
             dsu = DSU()
             touched: set[int] = set()
-            accepted: list[tuple[int, int]] = []
             for row in sorted(
                 resolved.collect(), key=lambda r: (r.gi, min(r.u, r.v), max(r.u, r.v))
             ):
                 if dsu.union(row.comp_u, row.comp_v):
-                    touched.add(row.comp_u)
-                    touched.add(row.comp_v)
-                    accepted.append((min(row.u, row.v), max(row.u, row.v)))
-            n_merged = len(accepted)
-            if not accepted:
-                continue
-            forest_parts.append(
-                spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            "a": _np_arr([e[0] for e in accepted]),
-                            "b": _np_arr([e[1] for e in accepted]),
-                        }
-                    )
-                )
-            )
+                    touched.update((row.comp_u, row.comp_v))
+                    pairs.append((min(row.u, row.v), max(row.u, row.v)))
             remap = [(c, dsu.find(c)) for c in sorted(touched) if dsu.find(c) != c]
-            remap_df = F.broadcast(
-                spark.createDataFrame(
-                    _pd.DataFrame(
-                        {
-                            "old_comp": _np_arr([r[0] for r in remap]),
-                            "new_comp": _np_arr([r[1] for r in remap]),
-                        }
-                    )
-                )
-            )
+            n_merged = len(remap)
+            remap_df = F.broadcast(_pairs_frame(spark, remap, ("old_comp", "new_comp")))
         else:
-            # Boruvka min-edge rule (acyclic by the max-edge-in-cycle
-            # argument) + star contraction — no driver collect; only the
-            # vid->comp map updates, so no root self-maps are needed here
-            # (there is no supernode table to XOR-merge on this path).
+            # Boruvka min-edge rule + star contraction: nothing collected
             ek = resolved.select(
                 F.least("u", "v").alias("a"),
                 F.greatest("u", "v").alias("b"),
@@ -513,9 +347,8 @@ def _forest_pass_slices(
             )
             sym = ek.select(
                 F.col("comp_u").alias("c"), "a", "b", "comp_u", "comp_v"
-            ).unionAll(
-                ek.select(F.col("comp_v").alias("c"), "a", "b", "comp_u", "comp_v")
-            )
+            ).unionAll(ek.select(F.col("comp_v").alias("c"), "a", "b", "comp_u", "comp_v"))
+            kobs = Observation()
             kept = (
                 sym.groupBy("c")
                 .agg(
@@ -525,41 +358,98 @@ def _forest_pass_slices(
                 )
                 .select("e.a", "e.b", "e.comp_u", "e.comp_v")
                 .distinct()
+                .observe(kobs, F.count(F.lit(1)).alias("n"))
                 .localCheckpoint(eager=True)
             )
-            n_merged = kept.count()
-            forest_parts.append(kept.select("a", "b"))
+            # kept edges are acyclic, so each one merges two components
+            n_merged = kobs.get["n"]
+            kept_parts.append(kept)
+            # the contraction's result is a projection of its checkpointed
+            # final edge set — no second checkpoint needed
             remap_df = _star_contraction(
                 kept.select(F.col("comp_u").alias("x"), F.col("comp_v").alias("y"))
-            ).localCheckpoint(eager=True)
+            )
         vmap = (
             vmap.join(remap_df, vmap.comp == remap_df.old_comp, "left")
             .select("v", F.coalesce("new_comp", "comp").alias("comp"))
             .localCheckpoint(eager=True)
         )
+        if on_round is not None:
+            on_round(g, n_samp, n_merged > 0)
+        g += len(gs)
         n_live -= n_merged
-    if g >= end and n_live > 1 and last_n_samp > 0:
-        # same guard _cc_rounds grew: the pass budget ran out while the last
-        # sample round still surfaced cut edges, so the forest was never
-        # CONFIRMED maximal by an empty-sample pass — a silently-truncated
-        # forest would make the k-edge-connectivity certificate wrong
-        import warnings as _warnings
+        converged = n_live <= 1
+        if ckpt is not None:
+            dfs = {"vmap": vmap}
+            if ckpt.latest_round() is None:
+                dfs["slices"] = slices
+            slices_path = slices_path or f"{ckpt.round_dir(gs[0])}/slices.parquet"
+            ckpt.save_round(
+                gs[0],
+                dfs,
+                {
+                    "next_group": g,
+                    "slices_path": slices_path,
+                    "params": {
+                        "n": params.n,
+                        "rounds": params.rounds,
+                        "cols": params.cols,
+                        "depths": params.depths,
+                        "seed": params.seed,
+                    },
+                },
+                {"samples": n_samp, "round_sec": round(time.time() - t0, 3)},
+            )
+    if not converged:
+        # n_live is an upper bound, so confirm with the exact distinct-component
+        # count before alarming — a graph that finished on the last budgeted
+        # group with every vertex in one component is NOT under-merged
+        n_true = vmap.select("comp").distinct().count()
+        if n_true > 1:
+            warnings.warn(
+                f"sketch group budget exhausted after groups {start_group}.."
+                f"{end_group - 1} with {n_true} components live and cut edges "
+                "still sampled — the returned map and forest are UNCONFIRMED "
+                "(complete if the graph is disconnected, or under-merged); "
+                "raise SketchParams.rounds (extra_rounds) or check the "
+                "sampling-failure census calibration",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+    return vmap, (pairs, kept_parts), g - start_group
 
-        _warnings.warn(
-            f"forest pass exhausted its {max_groups}-group budget with "
-            f"~{n_live} components live and cut edges still sampled — the "
-            "extracted forest is UNCONFIRMED (may be non-maximal); raise the "
-            "per-pass budget or check the sampling-failure census",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if forest_parts:
-        forest = forest_parts[0]
-        for p in forest_parts[1:]:
-            forest = forest.unionAll(p)
-    else:
-        forest = spark.createDataFrame([], "a long, b long")
-    return vmap, forest, groups_used
+
+def _cc_rounds(
+    spark: SparkSession,
+    slices: DataFrame,
+    vmap: DataFrame | None,
+    params: SketchParams,
+    start_group: int = 0,
+    num_partitions: int = 32,
+    on_round=None,
+    ckpt=None,
+    collect_threshold: int = COLLECT_THRESHOLD,
+    slices_path: str | None = None,
+) -> DataFrame:
+    """Boruvka CC over the columnar slice table: _boruvka_passes from
+    ``start_group`` to the end of the group budget, returning only the
+    vid->comp map (a local checkpoint). ``vmap=None`` is the identity map
+    over ``slices.vid``; a caller-built map at ``start_group == 0`` must be
+    that identity. With ``ckpt``, every pass persists (vmap, next group) and
+    the once-written slice table for resume_connected_components."""
+    return _boruvka_passes(
+        spark,
+        slices,
+        vmap,
+        params,
+        start_group,
+        params.rounds,
+        num_partitions,
+        on_round,
+        ckpt,
+        collect_threshold,
+        slices_path,
+    )[0]
 
 
 def connected_components_sketch(
@@ -571,7 +461,6 @@ def connected_components_sketch(
     on_round=None,
     checkpoint_dir: str | None = None,
     collect_threshold: int = COLLECT_THRESHOLD,
-    groups_per_pass: int = 4,
 ) -> DataFrame:
     """Return (v, comp), comp = min vertex id of v's component. Isolated
     vertices never enter the sketch table; extend with components_with_isolated.
@@ -601,22 +490,17 @@ def connected_components_sketch(
     # full rounds-wide row every pass
     slices = build_group_slices(und_edges, params, num_partitions).persist()
     slices.count()
-    # the slice table has exactly one row per edge-incident vertex — the
-    # identity label map falls out for free (no distinct over the edge list)
-    vmap0 = slices.select(
-        F.col("vid").alias("v"), F.col("vid").alias("comp")
-    ).localCheckpoint(eager=True)
+    # the slice table has exactly one row per edge-incident vertex, so the
+    # identity label map (vmap=None) needs no distinct over the edge list
     vmap = _cc_rounds(
         spark,
         slices,
-        vmap0,
+        None,
         params,
-        start_group=0,
         num_partitions=num_partitions,
         on_round=on_round,
         ckpt=ckpt,
         collect_threshold=collect_threshold,
-        groups_per_pass=groups_per_pass,
     )
     # the returned map is checkpointed per round — release the slice cache
     # instead of pinning O(n x rounds x slice-bytes) until session end
@@ -694,18 +578,19 @@ def k_spanning_forests(
     forests: list[DataFrame] = []
     group_cursor = 0
     for t in range(k):
-        vmap, forest, used = _forest_pass_slices(
+        _, (pairs, kept), used = _boruvka_passes(
             spark,
             slices,
+            None,
             params,
-            start_group=group_cursor,
-            max_groups=per_pass,
-            num_partitions=num_partitions,
+            group_cursor,
+            group_cursor + per_pass,
+            num_partitions,
         )
         group_cursor += used
-        forest = forest.localCheckpoint(eager=True)
-        if forest.isEmpty():
-            break
+        if not pairs and not kept:
+            break  # no edge left in the remaining graph
+        forest = _forest_frame(spark, pairs, kept)
         forests.append(forest.select(F.lit(t).cast("int").alias("forest_id"), "a", "b"))
         if t == k - 1:
             break
@@ -714,8 +599,6 @@ def k_spanning_forests(
         # a linear sketch, so the delta table is just another distributed
         # slice build over the forest edges — O(forest) stays on executors
         # (the reference XORs them on rank 0, graph_distrib_update.cpp:180-183).
-        from landscape_spark.sketch.build import xor_merge_slices
-
         delta = build_group_slices(forest, params, num_partitions)
         # persist (MEMORY_AND_DISK), not localCheckpoint: the columnar cache
         # prunes to each pass's consumed group columns, which checkpointed
@@ -730,13 +613,12 @@ def k_spanning_forests(
         new_slices.count()
         slices.unpersist()
         slices = new_slices
-    slices.unpersist()  # forests are checkpointed — nothing below reads slices
+    # the forests are driver-side pairs and checkpointed frames — nothing
+    # below reads slices
+    slices.unpersist()
     if not forests:
         return spark.createDataFrame([], "forest_id int, a long, b long")
-    out = forests[0]
-    for f in forests[1:]:
-        out = out.unionAll(f)
-    return out
+    return reduce(DataFrame.unionAll, forests)
 
 
 def components_with_isolated(

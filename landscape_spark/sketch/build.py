@@ -6,7 +6,7 @@ sketch deltas merged on the main node (/root/reference/src/worker_cluster.cpp:
 declarative job:
 
     edges --explode endpoints--> (vid, code) --repartition(pmod(vid,P))-->
-    mapInArrow(vectorized numpy build) --> sketches(vid, sketch)
+    mapInArrow(vectorized numpy build) --> slices(vid, g0, ..., g{R-1})
 
     P = sketch_partitions(n, row bytes, num_partitions)
       = min(num_partitions, ceil(n * row bytes / TASK_SKETCH_BYTES))
@@ -44,8 +44,6 @@ from landscape_spark.sketch.l0 import (
     sample_group,
     xor_fold_rows,
 )
-
-SKETCH_SCHEMA = "vid long, sketch binary"
 
 # NOTE: per-task fixed cost. Every mapInArrow task pays 0.1-0.2 s before its
 # kernel sees a batch, whatever its data: PySpark 4.1's worker calls
@@ -96,7 +94,7 @@ def _binary_matrix(a: pa.Array) -> np.ndarray:
     objects per batch (measured ~30x slower on the write side; the read side
     was the larger half of kernel time in round 2). Falls back to the slow
     path only if the column is ragged or nullable (never true for sketch
-    blobs)."""
+    slices)."""
     if len(a) == 0:
         return np.empty((0, 0), dtype=np.uint64)
     if a.null_count == 0:
@@ -128,92 +126,17 @@ def edge_updates(und_edges: DataFrame, n: int) -> DataFrame:
     )
 
 
-def build_sketch_table(
-    und_edges: DataFrame,
-    params: SketchParams,
-    num_partitions: int = 32,
-    salt: int = 1,
-) -> DataFrame:
-    """Distributed supernode build. Returns DataFrame (vid, sketch).
-
-    salt > 1 enables EXPLICIT SALTED REPARTITIONING for hub-vertex skew
-    (north rule): a hub vertex's updates are split across ``salt`` sub-keys,
-    each partition builds a PARTIAL sketch, and a second XOR-merge stage
-    combines them — the linear-sketch analog of two-phase (partial+final)
-    aggregation (SURVEY.md §2.2 I6). Linearity guarantees the salted result
-    is bit-identical to the unsalted one.
-
-    ``num_partitions`` caps both shuffles; each is sized by
-    sketch_partitions from the sketch rows it can emit (n*salt partials,
-    then n merged rows)."""
-    upd = edge_updates(und_edges, params.n)
-    parts = sketch_partitions(params.n * salt, params.nbytes, num_partitions)
-    if salt > 1:
-        sub = F.col("vid") * F.lit(salt) + F.pmod(F.xxhash64("code"), F.lit(salt))
-        upd = upd.repartition(parts, sub)
-    else:
-        upd = upd.repartition(parts, F.col("vid"))
-
-    def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        vid_parts, code_parts = [], []
-        for b in batches:
-            vid_parts.append(b.column("vid").to_numpy(zero_copy_only=False))
-            code_parts.append(b.column("code").to_numpy(zero_copy_only=False))
-        if not vid_parts:
-            return
-        vids = np.concatenate(vid_parts).astype(np.int64)
-        codes = np.concatenate(code_parts).astype(np.int64).view(np.uint64)
-        uvids, sk = build_sketches(vids, codes, params)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(uvids, type=pa.int64()), _binary_array(sk)],
-            names=["vid", "sketch"],
-        )
-
-    partials = upd.mapInArrow(build, SKETCH_SCHEMA)
-    if salt > 1:
-        merge_parts = sketch_partitions(params.n, params.nbytes, num_partitions)
-        return xor_merge_by_key(partials, "vid", merge_parts)
-    return partials
-
-
-def xor_merge_by_key(df: DataFrame, key: str, num_partitions: int = 32) -> DataFrame:
-    """GroupBy-key XOR merge of sketch rows (the linear sketch-addition
-    aggregation, A2/A3 in SURVEY.md §2.3). One shuffle into exactly
-    ``num_partitions`` partitions (the key domain is unknown here, so the
-    caller sizes it); fold is vectorized reduceat per partition."""
-    part = df.repartition(num_partitions, F.col(key))
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keys_parts, blob_parts = [], []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            keys_parts.append(b.column(key).to_numpy(zero_copy_only=False))
-            blob_parts.append(_binary_matrix(b.column("sketch")))
-        if not keys_parts:
-            return
-        keys = np.concatenate(keys_parts).astype(np.int64)
-        rows = _stack_binary(blob_parts)
-        ids, folded = xor_fold_rows(rows, keys)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, type=pa.int64()), _binary_array(folded)],
-            names=[key, "sketch"],
-        )
-
-    return part.mapInArrow(fold, f"{key} long, sketch binary")
-
-
 # ---------------------------------------------------------------------------
-# Columnar per-group layout (the CC fast path).
+# Columnar per-group layout.
 #
-# The blob layout above stores ALL groups in one binary cell, so every Boruvka
-# round deserializes rounds*cols*depths*16 bytes per row just to sample ONE
-# group (~28KB/vertex at n=2^16) — the dominant cost of cc_sketch in round 1.
-# The columnar layout stores one binary column PER GROUP, each prefixed with
-# its own copy of the deterministic bucket (linear, so per-group copies merge
-# identically). Round g then projects only (vid, g{g}) — Spark column pruning
-# ships 1/rounds of the table through Arrow — and the per-round component
-# merge updates only the tiny vid->comp map, never rematerializing sketches.
+# The table stores one binary column PER GROUP, each prefixed with its own
+# copy of the deterministic bucket (linear, so per-group copies merge
+# identically). A single blob cell holding all groups would make every
+# Boruvka round deserialize rounds*cols*depths*16 bytes per row just to sample
+# ONE group (~28KB/vertex at n=2^16). Round g instead projects only (vid,
+# g{g}) — Spark column pruning ships 1/rounds of the table through Arrow —
+# and the per-round component merge updates only the tiny vid->comp map,
+# never rematerializing sketches.
 # ---------------------------------------------------------------------------
 
 
@@ -254,9 +177,18 @@ def build_group_slices(
     salt: int = 1,
 ) -> DataFrame:
     """Distributed supernode build, columnar-by-group:
-    (vid long, g0 binary, ..., g{R-1} binary). Same kernel, same single
-    shuffle, same salted two-phase option and the same sketch_partitions
-    sizing under the ``num_partitions`` cap as build_sketch_table."""
+    (vid long, g0 binary, ..., g{R-1} binary).
+
+    salt > 1 enables EXPLICIT SALTED REPARTITIONING for hub-vertex skew: a
+    hub vertex's updates are split across ``salt`` sub-keys, each partition
+    builds a PARTIAL slice row, and xor_merge_slices combines them — the
+    linear-sketch analog of two-phase (partial+final) aggregation (SURVEY.md
+    §2.2 I6). Linearity makes the salted result bit-identical to the
+    unsalted one.
+
+    ``num_partitions`` caps both shuffles; each is sized by
+    sketch_partitions from the sketch rows it can emit (n*salt partials,
+    then n merged rows)."""
     upd = edge_updates(und_edges, params.n)
     parts = sketch_partitions(params.n * salt, slice_row_bytes(params), num_partitions)
     if salt > 1:
@@ -288,64 +220,60 @@ def build_group_slices(
     return partials
 
 
+def _fold_batches(
+    batches: Iterator[pa.RecordBatch], key: str, cols: list[str]
+) -> tuple[np.ndarray, list[np.ndarray]] | None:
+    """The one XOR-fold kernel: gather ``key`` and the binary ``cols`` (all
+    of one fixed width) of a partition, XOR-fold rows sharing a key
+    (vectorized reduceat). Returns (keys, per-column folded matrices), or
+    None for an empty partition."""
+    keys_parts: list[np.ndarray] = []
+    mats: list[list[np.ndarray]] = [[] for _ in cols]
+    for b in batches:
+        if b.num_rows == 0:
+            continue
+        keys_parts.append(b.column(key).to_numpy(zero_copy_only=False))
+        for parts, c in zip(mats, cols):
+            parts.append(_binary_matrix(b.column(c)))
+    if not keys_parts:
+        return None
+    keys = np.concatenate(keys_parts).astype(np.int64)
+    stacked = [_stack_binary(parts) for parts in mats]
+    wide = stacked[0] if len(cols) == 1 else np.concatenate(stacked, axis=1)
+    ids, folded = xor_fold_rows(wide, keys)
+    w = stacked[0].shape[1]
+    return ids, [folded[:, i * w : (i + 1) * w] for i in range(len(cols))]
+
+
+def xor_fold(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
+    """Map-side XOR fold of (key, binary cols...) rows WITHIN each partition
+    — no shuffle, same schema out. The per-partition output is <= min(rows,
+    distinct keys), so a downstream shuffle moves component partials, not
+    vertex rows (the partial+final aggregation pattern, SURVEY.md §2.3 A3);
+    after a repartition on the key it is the final merge."""
+    schema = f"{key} long, " + ", ".join(f"{c} binary" for c in cols)
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        out = _fold_batches(batches, key, cols)
+        if out is not None:
+            ids, folded = out
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids, type=pa.int64())] + [_binary_array(m) for m in folded],
+                names=[key] + cols,
+            )
+
+    return df.mapInArrow(fold, schema)
+
+
 def xor_merge_slices(
     df: DataFrame, key: str, params: SketchParams, num_partitions: int = 32
 ) -> DataFrame:
-    """GroupBy-key XOR merge of columnar slice rows (all group columns).
-    The key is a vid, so the output is at most ``params.n`` rows and the
-    shuffle runs sketch_partitions of them, capped at ``num_partitions``."""
+    """GroupBy-key XOR merge of columnar slice rows (all group columns): one
+    shuffle on the key, then xor_fold. The key is a vid, so the output is at
+    most ``params.n`` rows and the shuffle runs sketch_partitions of them,
+    capped at ``num_partitions``."""
     parts = sketch_partitions(params.n, slice_row_bytes(params), num_partitions)
-    part = df.repartition(parts, F.col(key))
-    names = group_cols(params)
-    schema = f"{key} long, " + ", ".join(f"{c} binary" for c in names)
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keys_parts: list[np.ndarray] = []
-        cols: dict[str, list[np.ndarray]] = {nm: [] for nm in names}
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            keys_parts.append(b.column(key).to_numpy(zero_copy_only=False))
-            for nm in names:
-                cols[nm].append(_binary_matrix(b.column(nm)))
-        if not keys_parts:
-            return
-        keys = np.concatenate(keys_parts).astype(np.int64)
-        wide = np.concatenate([_stack_binary(cols[nm]) for nm in names], axis=1)
-        ids, folded = xor_fold_rows(wide, keys)
-        W = wide.shape[1] // len(names)
-        arrays = [pa.array(ids, type=pa.int64())]
-        for gi in range(len(names)):
-            arrays.append(_binary_array(folded[:, gi * W : (gi + 1) * W]))
-        yield pa.RecordBatch.from_arrays(arrays, names=[key] + names)
-
-    return part.mapInArrow(fold, schema)
-
-
-def partial_fold(df: DataFrame, key: str) -> DataFrame:
-    """Map-side combine: XOR-fold (key, sketch) rows WITHIN each partition —
-    no shuffle. The per-partition output is <= min(rows, distinct keys), so
-    the downstream shuffle moves component partials, not vertex rows (the
-    partial+final aggregation pattern, SURVEY.md §2.3 A3)."""
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keys_parts, blob_parts = [], []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            keys_parts.append(b.column(key).to_numpy(zero_copy_only=False))
-            blob_parts.append(_binary_matrix(b.column("sketch")))
-        if not keys_parts:
-            return
-        keys = np.concatenate(keys_parts).astype(np.int64)
-        rows = _stack_binary(blob_parts)
-        ids, folded = xor_fold_rows(rows, keys)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, type=pa.int64()), _binary_array(folded)],
-            names=[key, "sketch"],
-        )
-
-    return df.mapInArrow(fold, f"{key} long, sketch binary")
+    return xor_fold(df.repartition(parts, F.col(key)), key, group_cols(params))
 
 
 def fold_sample(
@@ -359,26 +287,18 @@ def fold_sample(
     part = df.repartition(num_partitions, F.col(key))
 
     def fs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        keys_parts, blob_parts = [], []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            keys_parts.append(b.column(key).to_numpy(zero_copy_only=False))
-            blob_parts.append(_binary_matrix(b.column("sketch")))
-        if not keys_parts:
-            return
-        keys = np.concatenate(keys_parts).astype(np.int64)
-        rows = _stack_binary(blob_parts)
-        ids, folded = xor_fold_rows(rows, keys)
-        ok, u, v = sample_group(folded, 0, sparams)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(ids[ok], type=pa.int64()),
-                pa.array(u[ok], type=pa.int64()),
-                pa.array(v[ok], type=pa.int64()),
-            ],
-            names=[key, "u", "v"],
-        )
+        out = _fold_batches(batches, key, ["sketch"])
+        if out is not None:
+            ids, (folded,) = out
+            ok, u, v = sample_group(folded, 0, sparams)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids[ok], type=pa.int64()),
+                    pa.array(u[ok], type=pa.int64()),
+                    pa.array(v[ok], type=pa.int64()),
+                ],
+                names=[key, "u", "v"],
+            )
 
     return part.mapInArrow(fs, f"{key} long, u long, v long")
 

@@ -82,7 +82,7 @@ def census_one(
     rounds_used, budget).
 
     batched=True emulates the PRODUCTION pass schedule of
-    boruvka._cc_rounds — 4 groups on the first pass, 2 thereafter, reserve
+    boruvka._boruvka_passes — 4 groups on the first pass, 2 thereafter, reserve
     to 1 group per pass once the remaining budget is within
     ceil(log2(live))+1 — with every group of a pass sampling the PASS-START
     component state and unions applied in group order. This measures

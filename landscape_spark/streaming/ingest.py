@@ -201,10 +201,11 @@ class SketchStreamIngestor:
 
     def query_components(self, n_vertices: int = 0) -> DataFrame:
         """In-stream CC query on the committed sketch state (v, comp): the
-        SAME _cc_rounds machinery as the flagship batch query (column-pruned
-        passes straight off the parquet state, no supernode
-        rematerialization, driver DSU under threshold / star contraction
-        above). With n_vertices > 0 the result covers ALL of 0..n-1
+        SAME _cc_rounds pass loop as the flagship batch query and the
+        k-forests (column-pruned passes straight off the parquet state from
+        the identity label map, no supernode rematerialization, driver DSU
+        under threshold / min-edge rule + star contraction above). With
+        n_vertices > 0 the result covers ALL of 0..n-1
         (never-seen vertices as their own singleton components); with 0 it
         covers edge-incident vertices only. The micro-batch boundary is the
         flush barrier; each query starts at group 0 — the state changed
@@ -226,16 +227,9 @@ class SketchStreamIngestor:
             if slices is None:
                 vmap = self.spark.createDataFrame([], "v long, comp long")
             else:
-                vmap0 = slices.select(
-                    F.col("vid").alias("v"), F.col("vid").alias("comp")
-                ).localCheckpoint(eager=True)
                 # _cc_rounds returns a local checkpoint: cache it as is
                 vmap = _cc_rounds(
-                    self.spark,
-                    slices,
-                    vmap0,
-                    self.params,
-                    start_group=0,
+                    self.spark, slices, None, self.params,
                     num_partitions=self.num_partitions,
                 )
             self._cc_cache_version = self.batches_seen

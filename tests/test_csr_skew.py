@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from landscape_spark import linkgraph
 from landscape_spark.graph.csr import build_csr_blocks, pagerank_csr
 from landscape_spark.graph.pagerank import pagerank
-from landscape_spark.sketch.build import build_sketch_table
+from landscape_spark.sketch.build import build_group_slices, group_cols
 from landscape_spark.sketch.l0 import SketchParams
 
 
@@ -57,8 +57,8 @@ def test_pagerank_csr_dense_regime_guard(spark, sf_small):
 
 
 def test_salted_build_bit_identical(spark):
-    """Salted (two-phase) sketch build == unsalted build, bit for bit —
-    linearity makes skew handling semantics-free."""
+    """Salted (two-phase) slice build == unsalted build, bit for bit in every
+    g{i} column — linearity makes skew handling semantics-free."""
     rng = np.random.default_rng(1)
     n = 256
     # heavy hub skew: half of all edges touch vertex 0
@@ -69,15 +69,15 @@ def test_salted_build_bit_identical(spark):
     }
     e = spark.createDataFrame(sorted(edges), "a long, b long")
     params = SketchParams.for_graph(n, seed=9)
-    plain = {
-        r.vid: bytes(r.sketch)
-        for r in build_sketch_table(e, params, num_partitions=4, salt=1).collect()
-    }
-    salted = {
-        r.vid: bytes(r.sketch)
-        for r in build_sketch_table(e, params, num_partitions=4, salt=8).collect()
-    }
-    assert plain == salted
+    cols = group_cols(params)
+
+    def rows(salt):
+        built = build_group_slices(e, params, num_partitions=4, salt=salt)
+        return {r.vid: tuple(bytes(r[c]) for c in cols) for r in built.collect()}
+
+    plain = rows(1)
+    assert len(plain) == len({v for ed in edges for v in ed})
+    assert plain == rows(8)
 
 
 def test_pagerank_csr_blocked_matches_join_path(spark, sf_small):

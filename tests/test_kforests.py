@@ -106,7 +106,7 @@ def test_boruvka_pass_distributed_path_matches_exact(spark):
     acyclic spanning forest of the graph."""
     import random
 
-    from landscape_spark.sketch.boruvka import _forest_pass_slices
+    from landscape_spark.sketch.boruvka import _boruvka_passes, _forest_frame
     from landscape_spark.sketch.build import build_group_slices
     from landscape_spark.sketch.l0 import SketchParams
 
@@ -124,15 +124,19 @@ def test_boruvka_pass_distributed_path_matches_exact(spark):
     slices = build_group_slices(e, params, num_partitions=4).localCheckpoint(
         eager=True
     )
-    vmap, forest, _ = _forest_pass_slices(
+    vmap, (pairs, kept), _ = _boruvka_passes(
         spark,
         slices,
+        None,
         params,
         start_group=0,
-        max_groups=params.rounds,
+        end_group=params.rounds,
         num_partitions=4,
         collect_threshold=0,
     )
+    # nothing merges on the driver under collect_threshold=0
+    assert pairs == [] and kept
+    forest = _forest_frame(spark, pairs, kept)
     g = nx.Graph(edges)
     oracle = {v: min(c) for c in nx.connected_components(g) for v in c}
     got = {r.v: r.comp for r in vmap.collect()}
@@ -145,3 +149,44 @@ def test_boruvka_pass_distributed_path_matches_exact(spark):
     fg.add_nodes_from(g.nodes)
     assert nx.is_forest(nx.Graph(fe))
     assert nx.number_connected_components(fg) == nx.number_connected_components(g)
+
+
+def test_budget_exhaustion_policy_shared(spark):
+    """CC and the k-forest passes share one exhaustion policy: a group
+    budget too small for the graph warns from _cc_rounds and from a forest
+    pass; a connected graph that converges on its last budgeted group does
+    not warn from either."""
+    import warnings
+
+    import pytest
+
+    from landscape_spark.sketch.boruvka import _boruvka_passes, _cc_rounds
+    from landscape_spark.sketch.build import build_group_slices
+    from landscape_spark.sketch.l0 import SketchParams
+
+    def slices_of(edges, params):
+        e = spark.createDataFrame(edges, "a long, b long")
+        return build_group_slices(e, params, num_partitions=4).localCheckpoint(eager=True)
+
+    n = 256
+    base = SketchParams.for_graph(n, seed=5)
+    one = SketchParams(n=n, rounds=1, cols=base.cols, depths=base.depths, seed=5)
+    # one Boruvka group cannot connect a 256-vertex path
+    path = [(i, i + 1) for i in range(n - 1)]
+    with pytest.warns(RuntimeWarning, match="budget exhausted"):
+        _cc_rounds(spark, slices_of(path, one), None, one, num_partitions=4)
+    # a later forest pass with a one-group budget, as k_spanning_forests calls it
+    with pytest.warns(RuntimeWarning, match="budget exhausted"):
+        _boruvka_passes(spark, slices_of(path, base), None, base, 2, 3, 4)
+
+    # every leaf of a star holds exactly one edge, which its deterministic
+    # bucket always samples: the single budgeted group connects the graph
+    star = [(0, i) for i in range(1, 32)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        vmap = _cc_rounds(spark, slices_of(star, one), None, one, num_partitions=4)
+        _, (pairs, kept), used = _boruvka_passes(
+            spark, slices_of(star, base), None, base, 2, 3, 4
+        )
+    assert {r.comp for r in vmap.collect()} == {0}
+    assert sorted(pairs) == star and kept == [] and used == 1

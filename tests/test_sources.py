@@ -21,3 +21,19 @@ def test_edge_table_roundtrip_and_pruning(spark, sf_small, tmp_path):
     rows = lookup.collect()
     expected = [(r.src, r.dst) for r in e.where("src = 5").collect()]
     assert sorted((r.src, r.dst) for r in rows) == sorted(expected)
+
+
+def test_bucketed_roundtrip_gate_removes_its_table(spark, sf_small):
+    """The bucketed_roundtrip gate writes a temporary edge table; running it
+    must leave no landscape_gate_edge_table_* directory behind."""
+    import glob
+    import os
+    import tempfile
+
+    from landscape_spark.entry_queries import q_bucketed_roundtrip
+
+    pattern = os.path.join(tempfile.gettempdir(), "landscape_gate_edge_table_*")
+    before = set(glob.glob(pattern))
+    rows = q_bucketed_roundtrip(spark, sf_small).collect()
+    assert rows and sum(r.n_vertices for r in rows) > 0
+    assert set(glob.glob(pattern)) == before
