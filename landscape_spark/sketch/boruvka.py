@@ -18,11 +18,15 @@ table — one binary column per sketch group, built once and never rewritten
 which this removes). As in the reference, CC and every k-forest pass run the
 SAME Boruvka emulation, _boruvka_passes: every pass projects only the groups
 it consumes (column pruning), re-folds vertex slices under the current labels
-map-side, and fuses the final fold with l0 sampling in one shuffle; only the
-tiny vid->comp map updates per pass. Sampled cut edges merge via a driver DSU
-under COLLECT_THRESHOLD samples and via the distributed Boruvka min-edge rule
-+ large-star/small-star contraction above it (the log-rounds contraction of
-"Finding connected components in map-reduce in logarithmic rounds", ICDE'13).
+and l0-samples the folds; only the vid->comp map updates per pass. Up to
+COLLECT_THRESHOLD vertex ids that map is a dense array on the driver beside
+one DSU, as the reference keeps its DSU on the main node — each pass is then
+one Spark job, with the labels shipped inside the fold kernel. Above it the
+map stays distributed and is joined per pass; sampled cut edges merge via the
+driver DSU up to COLLECT_THRESHOLD samples and via the distributed Boruvka
+min-edge rule + large-star/small-star contraction above it (the log-rounds
+contraction of "Finding connected components in map-reduce in logarithmic
+rounds", ICDE'13).
 Each Boruvka round consumes one sketch GROUP (one-shot sampling), so k-forest
 extraction budgets per_pass groups per pass. Batch CC (_cc_rounds), the
 k-forests (k_spanning_forests) and the streaming in-stream queries
@@ -40,25 +44,28 @@ import warnings
 from functools import reduce
 
 import numpy as np
-import pandas as _pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from landscape_spark.sketch.build import (
     build_group_slices,
     fold_sample,
-    sample_vertex_groups,
+    relabel_fold,
     sketch_partitions,
     slice_params,
-    xor_fold,
     xor_merge_slices,
 )
 from landscape_spark.sketch.l0 import SketchParams
 
-# Above this many per-round samples the driver DSU is replaced by the
-# distributed Boruvka min-edge rule + star contraction (the reference collects
-# every sample on rank 0, src/graph_distrib_update.cpp:105-154 — its
-# acknowledged ceiling; this removes it).
+# The largest vertex-id space (SketchParams.n) whose Boruvka labels the driver
+# owns: up to it the vid->comp map is a dense int64 array on the driver (at
+# most 16 MB) beside the DSU, and each pass is one Spark job. Above it the map
+# stays distributed, and a pass's samples merge in the driver DSU only while
+# they number at most this many; beyond that the distributed Boruvka min-edge
+# rule + star contraction merges them (the reference collects every sample on
+# rank 0, src/graph_distrib_update.cpp:105-154 — its acknowledged ceiling;
+# this removes it).
 COLLECT_THRESHOLD = 2_000_000
 
 # Sketch groups sampled by a pass loop's first pass; later passes sample 2.
@@ -82,13 +89,15 @@ class DSU:
             self.parent[x], x = root, self.parent[x]
         return root
 
-    def union(self, a: int, b: int) -> bool:
+    def union(self, a: int, b: int) -> int | None:
+        """Join a's and b's sets; return the root absorbed (the larger), or
+        None when they were already one set."""
         ra, rb = self.find(a), self.find(b)
         if ra == rb:
-            return False
+            return None
         lo, hi = (ra, rb) if ra < rb else (rb, ra)
         self.parent[hi] = lo
-        return True
+        return hi
 
 
 def _star_contraction(pairs: DataFrame) -> DataFrame:
@@ -176,15 +185,25 @@ def _star_contraction(pairs: DataFrame) -> DataFrame:
     return e.select(F.col("y").alias("old_comp"), F.col("x").alias("new_comp"))
 
 
+def _local_frame(spark: SparkSession, cols: dict[str, np.ndarray], schema: str) -> DataFrame:
+    """One-partition DataFrame over driver-side arrays, built through Arrow.
+    A frame built from a Python list is a pickled Python RDD, and every
+    scan of it maps spark.default.parallelism partitions through Python
+    workers; an Arrow-built frame is a local relation, scanned in up to
+    that many JVM tasks. Coalesced, every scan is one task (an empty frame
+    too: Spark keeps one empty partition)."""
+    table = pa.table({c: pa.array(a) for c, a in cols.items()})
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
 def _pairs_frame(
     spark: SparkSession, rows: list[tuple[int, int]], names: tuple[str, str]
 ) -> DataFrame:
-    """Driver-side int pairs -> two-column long DataFrame through Arrow
-    (pandas): py4j row-by-row conversion of a ~n-sized list would dominate
-    the pass."""
+    """Driver-side int pairs -> two-column long DataFrame (_local_frame)."""
     arr = np.asarray(rows, dtype=np.int64).reshape(-1, 2)
-    return spark.createDataFrame(
-        _pd.DataFrame({names[0]: arr[:, 0], names[1]: arr[:, 1]}),
+    return _local_frame(
+        spark,
+        {names[0]: arr[:, 0], names[1]: arr[:, 1]},
         f"{names[0]} long, {names[1]} long",
     )
 
@@ -199,6 +218,147 @@ def _forest_frame(
         [f.select("a", "b") for f in kept],
         _pairs_frame(spark, pairs, ("a", "b")),
     )
+
+
+def _dsu_merge(
+    dsu: DSU,
+    gi: np.ndarray,
+    u: np.ndarray,
+    v: np.ndarray,
+    comp_u: np.ndarray,
+    comp_v: np.ndarray,
+    pairs: list[tuple[int, int]],
+) -> list[int]:
+    """The driver merge of one pass's sampled cut edges: union their
+    endpoint components in (group, lo, hi) order — union-by-min makes the
+    roots the component minima whatever the order — and append each edge
+    that merges two components to ``pairs`` as (lo, hi). Returns the
+    components absorbed, one per merging edge."""
+    lo, hi = np.minimum(u, v), np.maximum(u, v)
+    order = np.lexsort((hi, lo, gi))
+    absorbed: list[int] = []
+    for a, b, cu, cv in zip(
+        lo[order].tolist(), hi[order].tolist(), comp_u[order].tolist(), comp_v[order].tolist()
+    ):
+        gone = dsu.union(cu, cv)
+        if gone is not None:
+            absorbed.append(gone)
+            pairs.append((a, b))
+    return absorbed
+
+
+def _driver_samples(
+    slices: DataFrame,
+    cols: list[str],
+    sp: SketchParams,
+    labels: np.ndarray,
+    n_vids: int,
+    n_live: int,
+    num_partitions: int,
+    identity: bool,
+) -> tuple[np.ndarray, ...]:
+    """One driver-mode pass in one Spark job: relabel_fold keys every
+    vertex slice of ``cols`` by its component from ``labels``, folds and
+    samples; the samples come back through Arrow and resolve to components
+    by gathers from ``labels``. Returns (gi, u, v, comp_u, comp_v) of the
+    samples that cut two components.
+
+    When the rows the pass reads fit one task (sketch_partitions), it runs
+    as one coalesced task with no shuffle. Otherwise the identity pass
+    samples straight off the stored slice partitions (every key is one
+    vertex's), and later passes fold map-side, then shuffle into
+    sketch_partitions(live components x groups) tasks for fold_sample."""
+    j = len(cols)
+    src = slices.select("vid", *cols)
+    if sketch_partitions(n_vids * j, sp.nbytes, num_partitions) == 1:
+        out = relabel_fold(src.coalesce(1), sp, labels)
+    elif identity:
+        out = relabel_fold(src, sp)
+    else:
+        parts = sketch_partitions(n_live * j, sp.nbytes, num_partitions)
+        out = fold_sample(relabel_fold(src, sp, labels, final=False), "ckey", sp, parts)
+    t = out.toArrow()
+    ckey, u, v = (t.column(c).to_numpy() for c in ("ckey", "u", "v"))
+    comp_u, comp_v = labels[u], labels[v]
+    cut = comp_u != comp_v
+    return ckey[cut] % j, u[cut], v[cut], comp_u[cut], comp_v[cut]
+
+
+def _distributed_samples(
+    slices: DataFrame,
+    vmap: DataFrame,
+    cols: list[str],
+    sp: SketchParams,
+    n_live: int,
+    num_partitions: int,
+    identity: bool,
+) -> tuple[DataFrame, int]:
+    """One distributed-mode pass's sampled cut edges as a local checkpoint
+    of (gi, u, v, comp_u, comp_v) rows, and their count. The identity pass
+    samples straight off the vertex rows; later passes join the vid->comp
+    map to the vertex slices, fold map-side (relabel_fold on the comp
+    column) and fuse the final fold with sampling in one shuffle."""
+    j = len(cols)
+    if identity:
+        resolved = relabel_fold(slices.select("vid", *cols), sp).select(
+            (F.col("ckey") % j).alias("gi"),
+            "u",
+            "v",
+            F.col("u").alias("comp_u"),
+            F.col("v").alias("comp_v"),
+        )
+    else:
+        keyed = slices.select(F.col("vid").alias("v"), *cols).join(vmap, on="v")
+        samples = fold_sample(
+            relabel_fold(keyed.select("comp", *cols), sp, final=False),
+            "ckey",
+            sp,
+            sketch_partitions(n_live * j, sp.nbytes, num_partitions),
+        )
+        u_map = vmap.select(F.col("v").alias("u"), F.col("comp").alias("comp_u"))
+        v_map = vmap.select(F.col("v").alias("v2"), F.col("comp").alias("comp_v"))
+        resolved = (
+            samples.join(u_map, on="u")
+            .join(v_map, samples.v == v_map.v2)
+            .select((F.col("ckey") % j).alias("gi"), "u", "v", "comp_u", "comp_v")
+            .where(F.col("comp_u") != F.col("comp_v"))
+        )
+    # materialize the (tiny: <= live components x j rows) sample set ONCE,
+    # then read it from the checkpoint — limit().collect() would re-run the
+    # whole narrow sampling pipeline in incremental waves. The row count
+    # rides the checkpoint action via observe() (integer — exact under any
+    # task merge order), saving one probe job per pass.
+    obs = Observation()
+    resolved = resolved.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    return resolved, obs.get["n"]
+
+
+def _min_edges(resolved: DataFrame) -> tuple[DataFrame, int]:
+    """Boruvka min-edge rule over one pass's sampled cut edges, nothing
+    collected: every component keeps its least (a, b) incident sample. The
+    kept edges are acyclic, so each merges two components; returns them as
+    a local checkpoint of (a, b, comp_u, comp_v) rows, and their count."""
+    ek = resolved.select(
+        F.least("u", "v").alias("a"),
+        F.greatest("u", "v").alias("b"),
+        "comp_u",
+        "comp_v",
+    )
+    sym = ek.select(F.col("comp_u").alias("c"), "a", "b", "comp_u", "comp_v").unionAll(
+        ek.select(F.col("comp_v").alias("c"), "a", "b", "comp_u", "comp_v")
+    )
+    obs = Observation()
+    kept = (
+        sym.groupBy("c")
+        .agg(F.min_by(F.struct("a", "b", "comp_u", "comp_v"), F.struct("a", "b")).alias("e"))
+        .select("e.a", "e.b", "e.comp_u", "e.comp_v")
+        .distinct()
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    return kept, obs.get["n"]
 
 
 def _boruvka_passes(
@@ -219,24 +379,35 @@ def _boruvka_passes(
     every k-forest pass (k_spanning_forests).
 
     Per PASS: project the pass's group columns (column pruning ships only
-    those), stack them to (comp*j+i, slice) rows under the CURRENT component
-    labels, map-side partial XOR-fold, one shuffle fusing the final fold with
-    l0 sampling, then merge the sampled cut edges and remap the vid->comp
-    map. ``vmap=None`` means the identity map over ``slices.vid``; an
-    identity first pass (``vmap=None`` or ``start_group == 0``) samples
-    straight off the unique vertex rows — no fold, no shuffle, no label
-    joins. Vertex sketches are built ONCE and never rewritten; per-pass
-    materialization is O(n slice bytes + vmap). Each pass's fold shuffle is
-    sized from live components x groups x slice bytes, capped at
-    ``num_partitions`` (build.sketch_partitions).
+    those), key each vertex slice by comp*j+i under the CURRENT component
+    labels, XOR-fold, l0-sample one cut edge per (component, group), merge
+    the sampled edges and relabel. ``vmap=None`` means the identity map
+    over ``slices.vid``, as does any map at ``start_group == 0``. Vertex
+    sketches are built ONCE and never rewritten.
 
-    Merging: under ``collect_threshold`` samples a driver DSU applies the
-    samples in (group, a, b) order — union-by-min makes the roots the
-    component minima whatever the order. Above it, the Boruvka min-edge rule
-    keeps one sampled edge per component (acyclic by the max-edge-in-cycle
-    argument) and large-star/small-star contraction merges their components,
-    with nothing collected to the driver. Either way the accepted edges are
-    a spanning forest of the merges.
+    Where the vid->comp map lives is chosen once per call from
+    ``params.n`` (every vid is below it, build.edge_updates), at no Spark
+    cost:
+
+    * ``params.n <= collect_threshold``: a dense int64 array on the driver,
+      beside one union-find for the whole call. One vid collect starts the
+      call; each pass is ONE Spark job (_driver_samples — the array ships
+      in relabel_fold's closure), and the relabel is one numpy gather.
+    * above it, a distributed map: each pass joins it to the vertex slices,
+      folds map-side and fuses the final fold with l0 sampling in one
+      shuffle (sized from live components x groups x slice bytes, capped
+      at ``num_partitions``, build.sketch_partitions), then rewrites it
+      as a local checkpoint. An identity first pass samples straight off
+      the vertex rows (no fold, no shuffle, no joins). Sampled edges merge
+      through the driver union-find while they number at most
+      ``collect_threshold``; above that, the Boruvka min-edge rule keeps
+      one sampled edge per component (acyclic by the max-edge-in-cycle
+      argument) and large-star/small-star contraction merges their
+      components, with nothing collected to the driver.
+
+    Either way the driver merge applies the samples in (group, lo, hi)
+    order (_dsu_merge), and the accepted edges are a spanning forest of the
+    merges.
 
     Schedule: the first pass samples FIRST_PASS_GROUPS groups, later passes
     2 (groups 2..j of a pass sample at the pass-start granularity, so some of
@@ -251,23 +422,34 @@ def _boruvka_passes(
     rate) instead of silently returning an under-merged map or a
     non-maximal forest.
 
-    Returns (vid->comp map as a local checkpoint, forest edges, groups
-    consumed). The forest edges are the driver-merged (a, b) pairs plus the
-    checkpointed (a, b, comp_u, comp_v) min-edge frames of the distributed
-    passes."""
+    Returns (vid->comp map, forest edges, groups consumed). The map is a
+    one-partition frame built from the driver's array (_local_frame), or
+    above the threshold a local checkpoint. The forest edges are the
+    driver-merged (a, b) pairs plus the checkpointed (a, b, comp_u, comp_v)
+    min-edge frames of the distributed passes."""
     sp = slice_params(params)
     identity = vmap is None or start_group == 0
-    if vmap is None:
-        vmap = slices.select(
-            F.col("vid").alias("v"), F.col("vid").alias("comp")
-        ).localCheckpoint(eager=True)
-    # live-component counter: at 1 the graph is fully connected and NO cut
-    # edge can exist — converged without paying a confirm pass (graphs with
-    # >1 final component converge via the empty-sample break). slices is
-    # cached/checkpointed, so the count is nearly free; after a resume it
-    # starts from the vertex count (an overestimate), which only delays this
-    # shortcut — never wrong.
-    n_live = slices.count()
+    driver = params.n <= collect_threshold
+    if driver:
+        vids = np.sort(slices.select("vid").toArrow().column("vid").to_numpy())
+        labels = np.arange(params.n, dtype=np.int64)
+        if not identity:
+            t = vmap.toArrow()
+            labels[t.column("v").to_numpy()] = t.column("comp").to_numpy()
+        # exact live-component count: at 1 the graph is fully connected and
+        # NO cut edge can exist — converged without paying a confirm pass
+        # (graphs with >1 final component converge via the empty-sample break)
+        n_live = np.unique(labels[vids]).size
+    else:
+        if vmap is None:
+            vmap = slices.select(
+                F.col("vid").alias("v"), F.col("vid").alias("comp")
+            ).localCheckpoint(eager=True)
+        # slices is cached/checkpointed, so the count is nearly free; after
+        # a resume it starts from the vertex count (an overestimate), which
+        # only delays the n_live == 1 shortcut — never wrong
+        n_live = slices.count()
+    dsu = DSU()
     pairs: list[tuple[int, int]] = []
     kept_parts: list[DataFrame] = []
     g = start_group
@@ -281,105 +463,67 @@ def _boruvka_passes(
             if end_group - g <= math.ceil(math.log2(max(n_live, 2))) + 1:
                 j = 1
         gs = list(range(g, min(g + j, end_group)))
-        if g == start_group and identity:
-            resolved = sample_vertex_groups(slices, [f"g{gg}" for gg in gs], sp).select(
-                "gi", "u", "v", F.col("u").alias("comp_u"), F.col("v").alias("comp_v")
+        cols = [f"g{gg}" for gg in gs]
+        first = g == start_group and identity
+        if driver:
+            samples = _driver_samples(
+                slices, cols, sp, labels, len(vids), n_live, num_partitions, first
             )
+            n_samp = len(samples[0])
         else:
-            stack = F.expr(
-                f"stack({len(gs)}, "
-                + ", ".join(f"{i}L, g{gg}" for i, gg in enumerate(gs))
-                + ") as (gi, sketch)"
+            resolved, n_samp = _distributed_samples(
+                slices, vmap, cols, sp, n_live, num_partitions, first
             )
-            keyed = (
-                slices.select(F.col("vid").alias("v"), stack)
-                .join(vmap, on="v")
-                .select((F.col("comp") * len(gs) + F.col("gi")).alias("ckey"), "sketch")
-            )
-            samples = fold_sample(
-                xor_fold(keyed, "ckey", ["sketch"]),
-                "ckey",
-                sp,
-                sketch_partitions(n_live * len(gs), sp.nbytes, num_partitions),
-            )
-            u_map = vmap.select(F.col("v").alias("u"), F.col("comp").alias("comp_u"))
-            v_map = vmap.select(F.col("v").alias("v2"), F.col("comp").alias("comp_v"))
-            resolved = (
-                samples.join(u_map, on="u")
-                .join(v_map, samples.v == v_map.v2)
-                .select((F.col("ckey") % len(gs)).alias("gi"), "u", "v", "comp_u", "comp_v")
-                .where(F.col("comp_u") != F.col("comp_v"))
-            )
-        # materialize the (tiny: <= live components x j rows) sample set ONCE,
-        # then collect from the checkpoint — limit().collect() would re-run
-        # the whole narrow sampling pipeline in incremental waves. The row
-        # count rides the checkpoint action via observe() (integer — exact
-        # under any task merge order), saving one probe job per pass.
-        obs = Observation()
-        resolved = resolved.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        n_samp = obs.get["n"]
         if n_samp == 0:
             if on_round is not None:
                 on_round(g, 0, False)
             converged = True  # no live component holds a cut edge
             break
-        if n_samp <= collect_threshold:
-            dsu = DSU()
-            touched: set[int] = set()
-            for row in sorted(
-                resolved.collect(), key=lambda r: (r.gi, min(r.u, r.v), max(r.u, r.v))
-            ):
-                if dsu.union(row.comp_u, row.comp_v):
-                    touched.update((row.comp_u, row.comp_v))
-                    pairs.append((min(row.u, row.v), max(row.u, row.v)))
-            remap = [(c, dsu.find(c)) for c in sorted(touched) if dsu.find(c) != c]
-            n_merged = len(remap)
-            remap_df = F.broadcast(_pairs_frame(spark, remap, ("old_comp", "new_comp")))
+        if driver:
+            absorbed = np.asarray(_dsu_merge(dsu, *samples, pairs), dtype=np.int64)
+            remap = np.arange(params.n, dtype=np.int64)
+            remap[absorbed] = [dsu.find(c) for c in absorbed.tolist()]
+            labels = remap[labels]
+            n_merged = len(absorbed)
         else:
-            # Boruvka min-edge rule + star contraction: nothing collected
-            ek = resolved.select(
-                F.least("u", "v").alias("a"),
-                F.greatest("u", "v").alias("b"),
-                "comp_u",
-                "comp_v",
-            )
-            sym = ek.select(
-                F.col("comp_u").alias("c"), "a", "b", "comp_u", "comp_v"
-            ).unionAll(ek.select(F.col("comp_v").alias("c"), "a", "b", "comp_u", "comp_v"))
-            kobs = Observation()
-            kept = (
-                sym.groupBy("c")
-                .agg(
-                    F.min_by(
-                        F.struct("a", "b", "comp_u", "comp_v"), F.struct("a", "b")
-                    ).alias("e")
+            if n_samp <= collect_threshold:
+                t = resolved.toArrow()
+                absorbed = _dsu_merge(
+                    dsu,
+                    *(t.column(c).to_numpy() for c in ("gi", "u", "v", "comp_u", "comp_v")),
+                    pairs,
                 )
-                .select("e.a", "e.b", "e.comp_u", "e.comp_v")
-                .distinct()
-                .observe(kobs, F.count(F.lit(1)).alias("n"))
+                remap_df = F.broadcast(
+                    _pairs_frame(
+                        spark,
+                        [(c, dsu.find(c)) for c in sorted(absorbed)],
+                        ("old_comp", "new_comp"),
+                    )
+                )
+                n_merged = len(absorbed)
+            else:
+                kept, n_merged = _min_edges(resolved)
+                kept_parts.append(kept)
+                # the contraction's result is a projection of its
+                # checkpointed final edge set — no second checkpoint needed
+                remap_df = _star_contraction(
+                    kept.select(F.col("comp_u").alias("x"), F.col("comp_v").alias("y"))
+                )
+            vmap = (
+                vmap.join(remap_df, vmap.comp == remap_df.old_comp, "left")
+                .select("v", F.coalesce("new_comp", "comp").alias("comp"))
                 .localCheckpoint(eager=True)
             )
-            # kept edges are acyclic, so each one merges two components
-            n_merged = kobs.get["n"]
-            kept_parts.append(kept)
-            # the contraction's result is a projection of its checkpointed
-            # final edge set — no second checkpoint needed
-            remap_df = _star_contraction(
-                kept.select(F.col("comp_u").alias("x"), F.col("comp_v").alias("y"))
-            )
-        vmap = (
-            vmap.join(remap_df, vmap.comp == remap_df.old_comp, "left")
-            .select("v", F.coalesce("new_comp", "comp").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
         if on_round is not None:
             on_round(g, n_samp, n_merged > 0)
         g += len(gs)
         n_live -= n_merged
         converged = n_live <= 1
         if ckpt is not None:
+            if driver:
+                vmap = _local_frame(
+                    spark, {"v": vids, "comp": labels[vids]}, "v long, comp long"
+                )
             dfs = {"vmap": vmap}
             if ckpt.latest_round() is None:
                 dfs["slices"] = slices
@@ -401,10 +545,14 @@ def _boruvka_passes(
                 {"samples": n_samp, "round_sec": round(time.time() - t0, 3)},
             )
     if not converged:
-        # n_live is an upper bound, so confirm with the exact distinct-component
-        # count before alarming — a graph that finished on the last budgeted
-        # group with every vertex in one component is NOT under-merged
-        n_true = vmap.select("comp").distinct().count()
+        # n_live can overestimate after a distributed resume, so confirm with
+        # the exact distinct-component count before alarming — a graph that
+        # finished on the last budgeted group with every vertex in one
+        # component is NOT under-merged
+        if driver:
+            n_true = np.unique(labels[vids]).size
+        else:
+            n_true = vmap.select("comp").distinct().count()
         if n_true > 1:
             warnings.warn(
                 f"sketch group budget exhausted after groups {start_group}.."
@@ -416,6 +564,8 @@ def _boruvka_passes(
                 RuntimeWarning,
                 stacklevel=3,
             )
+    if driver:
+        vmap = _local_frame(spark, {"v": vids, "comp": labels[vids]}, "v long, comp long")
     return vmap, (pairs, kept_parts), g - start_group
 
 
@@ -433,10 +583,12 @@ def _cc_rounds(
 ) -> DataFrame:
     """Boruvka CC over the columnar slice table: _boruvka_passes from
     ``start_group`` to the end of the group budget, returning only the
-    vid->comp map (a local checkpoint). ``vmap=None`` is the identity map
-    over ``slices.vid``; a caller-built map at ``start_group == 0`` must be
-    that identity. With ``ckpt``, every pass persists (vmap, next group) and
-    the once-written slice table for resume_connected_components."""
+    vid->comp map (a one-partition driver-built frame, or above
+    ``collect_threshold`` a local checkpoint). ``vmap=None`` is the identity
+    map over ``slices.vid``; a caller-built map at ``start_group == 0`` is
+    taken to be that identity and never read. With ``ckpt``, every pass
+    persists (vmap, next group) and the once-written slice table for
+    resume_connected_components."""
     return _boruvka_passes(
         spark,
         slices,
@@ -502,7 +654,7 @@ def connected_components_sketch(
         ckpt=ckpt,
         collect_threshold=collect_threshold,
     )
-    # the returned map is checkpointed per round — release the slice cache
+    # the returned map does not read the slices — release the slice cache
     # instead of pinning O(n x rounds x slice-bytes) until session end
     slices.unpersist()
     return vmap
@@ -529,12 +681,12 @@ def resume_connected_components(
         n=p["n"], rounds=p["rounds"], cols=p["cols"], depths=p["depths"], seed=p["seed"]
     )
     slices_path = lineage["state"]["slices_path"]
-    slices = spark.read.parquet(slices_path).localCheckpoint(eager=True)
-    vmap = dfs["vmap"].localCheckpoint(eager=True)
+    # both stay parquet scans: every pass reads only its groups' columns,
+    # and a driver-owned label map reads the saved vmap once
     return _cc_rounds(
         spark,
-        slices,
-        vmap,
+        spark.read.parquet(slices_path),
+        dfs["vmap"],
         params,
         start_group=lineage["state"]["next_group"],
         num_partitions=num_partitions,
@@ -617,7 +769,12 @@ def k_spanning_forests(
     # below reads slices
     slices.unpersist()
     if not forests:
-        return spark.createDataFrame([], "forest_id int, a long, b long")
+        empty = np.empty(0, dtype=np.int64)
+        return _local_frame(
+            spark,
+            {"forest_id": empty.astype(np.int32), "a": empty, "b": empty},
+            "forest_id int, a long, b long",
+        )
     return reduce(DataFrame.unionAll, forests)
 
 

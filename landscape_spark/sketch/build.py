@@ -220,12 +220,11 @@ def build_group_slices(
     return partials
 
 
-def _fold_batches(
+def _gather(
     batches: Iterator[pa.RecordBatch], key: str, cols: list[str]
-) -> tuple[np.ndarray, list[np.ndarray]] | None:
-    """The one XOR-fold kernel: gather ``key`` and the binary ``cols`` (all
-    of one fixed width) of a partition, XOR-fold rows sharing a key
-    (vectorized reduceat). Returns (keys, per-column folded matrices), or
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """A partition's ``key`` column and its binary ``cols`` (all of one fixed
+    width W) side by side: (keys, (rows, len(cols) * W)-uint64 matrix), or
     None for an empty partition."""
     keys_parts: list[np.ndarray] = []
     mats: list[list[np.ndarray]] = [[] for _ in cols]
@@ -239,10 +238,35 @@ def _fold_batches(
         return None
     keys = np.concatenate(keys_parts).astype(np.int64)
     stacked = [_stack_binary(parts) for parts in mats]
-    wide = stacked[0] if len(cols) == 1 else np.concatenate(stacked, axis=1)
-    ids, folded = xor_fold_rows(wide, keys)
-    w = stacked[0].shape[1]
+    return keys, stacked[0] if len(cols) == 1 else np.concatenate(stacked, axis=1)
+
+
+def _fold_batches(
+    batches: Iterator[pa.RecordBatch], key: str, cols: list[str]
+) -> tuple[np.ndarray, list[np.ndarray]] | None:
+    """The one XOR-fold kernel: gather ``key`` and the binary ``cols`` of a
+    partition, XOR-fold rows sharing a key (vectorized reduceat). Returns
+    (keys, per-column folded matrices), or None for an empty partition."""
+    got = _gather(batches, key, cols)
+    if got is None:
+        return None
+    ids, folded = xor_fold_rows(got[1], got[0])
+    w = folded.shape[1] // len(cols)
     return ids, [folded[:, i * w : (i + 1) * w] for i in range(len(cols))]
+
+
+def _sample_batch(ids: np.ndarray, folded: np.ndarray, sparams: SketchParams, key: str):
+    """(key, u, v) record batch of the rows of ``folded`` that yield an l0
+    sample."""
+    ok, u, v = sample_group(folded, 0, sparams)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(ids[ok], type=pa.int64()),
+            pa.array(u[ok], type=pa.int64()),
+            pa.array(v[ok], type=pa.int64()),
+        ],
+        names=[key, "u", "v"],
+    )
 
 
 def xor_fold(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
@@ -290,45 +314,48 @@ def fold_sample(
         out = _fold_batches(batches, key, ["sketch"])
         if out is not None:
             ids, (folded,) = out
-            ok, u, v = sample_group(folded, 0, sparams)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids[ok], type=pa.int64()),
-                    pa.array(u[ok], type=pa.int64()),
-                    pa.array(v[ok], type=pa.int64()),
-                ],
-                names=[key, "u", "v"],
-            )
+            yield _sample_batch(ids, folded, sparams, key)
 
     return part.mapInArrow(fs, f"{key} long, u long, v long")
 
 
-def sample_vertex_groups(
-    df: DataFrame, cols: list[str], sparams: SketchParams
+def relabel_fold(
+    df: DataFrame,
+    sparams: SketchParams,
+    labels: np.ndarray | None = None,
+    final: bool = True,
 ) -> DataFrame:
-    """Round-0 fast path: vertex slice rows are unique per vid and the
-    vid->comp map is the identity, so sampling needs NO fold, NO shuffle and
-    NO label joins — one scan emitting (gi, u, v) per (vertex, group) sample."""
-    sel = df.select(*cols)
+    """One Boruvka pass's map side over (id, g_a, g_b, ...) slice rows:
+    label each row's id with its component from the driver's dense
+    ``labels`` array (None: the id already is the component), key its slice
+    of the pass's i-th group comp*j+i (j groups), and XOR-fold the rows
+    sharing a key. The array ships with the kernel's closure — no label
+    join, no broadcast frame.
 
-    def ms(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            gis, us, vs = [], [], []
-            for gi, c in enumerate(cols):
-                rows = _binary_matrix(b.column(c))
-                ok, u, v = sample_group(rows, 0, sparams)
-                gis.append(np.full(int(ok.sum()), gi, dtype=np.int64))
-                us.append(u[ok])
-                vs.append(v[ok])
+    ``final``: the partition holds every row of its keys (one task over the
+    whole table, or the identity labels, under which every key is one
+    vertex's), so the fold is complete and each row is l0-sampled here:
+    (ckey, u, v). Otherwise the partial folds (ckey, sketch) go on to a
+    repartition on ckey and fold_sample."""
+    key, *cols = df.columns
+    j = len(cols)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        got = _gather(batches, key, cols)
+        if got is None:
+            return
+        ids, wide = got
+        comp = ids if labels is None else labels[ids]
+        # (N, j*W) -> (N*j, W): row r*j+i is row r's slice of group i
+        keys = (comp[:, None] * j + np.arange(j, dtype=np.int64)).ravel()
+        ckeys, folded = xor_fold_rows(wide.reshape(len(keys), -1), keys)
+        if final:
+            yield _sample_batch(ckeys, folded, sparams, "ckey")
+        else:
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(gis), type=pa.int64()),
-                    pa.array(np.concatenate(us), type=pa.int64()),
-                    pa.array(np.concatenate(vs), type=pa.int64()),
-                ],
-                names=["gi", "u", "v"],
+                [pa.array(ckeys, type=pa.int64()), _binary_array(folded)],
+                names=["ckey", "sketch"],
             )
 
-    return sel.mapInArrow(ms, "gi long, u long, v long")
+    schema = "ckey long, u long, v long" if final else "ckey long, sketch binary"
+    return df.mapInArrow(kernel, schema)

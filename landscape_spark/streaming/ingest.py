@@ -42,6 +42,7 @@ import json
 import os
 import shutil
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -203,9 +204,9 @@ class SketchStreamIngestor:
         """In-stream CC query on the committed sketch state (v, comp): the
         SAME _cc_rounds pass loop as the flagship batch query and the
         k-forests (column-pruned passes straight off the parquet state from
-        the identity label map, no supernode rematerialization, driver DSU
-        under threshold / min-edge rule + star contraction above). With
-        n_vertices > 0 the result covers ALL of 0..n-1
+        the identity label map, no supernode rematerialization; driver-owned
+        labels and DSU up to COLLECT_THRESHOLD vertex ids, one Spark job per
+        pass). With n_vertices > 0 the result covers ALL of 0..n-1
         (never-seen vertices as their own singleton components); with 0 it
         covers edge-incident vertices only. The micro-batch boundary is the
         flush barrier; each query starts at group 0 — the state changed
@@ -213,7 +214,11 @@ class SketchStreamIngestor:
         (Q5). The raw Boruvka result is cached until the next absorbed batch
         (GreedyCC); the isolated-vertex padding is a cheap per-call join on
         top of the cache."""
-        from landscape_spark.sketch.boruvka import _cc_rounds, components_with_isolated
+        from landscape_spark.sketch.boruvka import (
+            _cc_rounds,
+            _local_frame,
+            components_with_isolated,
+        )
 
         # the cache holds the RAW edge-incident map (the expensive Boruvka
         # result); isolated-vertex padding is a cheap join applied per call,
@@ -225,9 +230,12 @@ class SketchStreamIngestor:
             self.cc_cache_misses += 1
             slices = self.current_sketches()
             if slices is None:
-                vmap = self.spark.createDataFrame([], "v long, comp long")
+                empty = np.empty(0, dtype=np.int64)
+                vmap = _local_frame(self.spark, {"v": empty, "comp": empty}, "v long, comp long")
             else:
-                # _cc_rounds returns a local checkpoint: cache it as is
+                # _cc_rounds returns a one-partition frame built from its
+                # driver-side labels (above COLLECT_THRESHOLD vertex ids, a
+                # local checkpoint); neither rereads the state: cache it as is
                 vmap = _cc_rounds(
                     self.spark, slices, None, self.params,
                     num_partitions=self.num_partitions,

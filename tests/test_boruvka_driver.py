@@ -1,0 +1,176 @@
+"""Driver-owned Borůvka labels: up to COLLECT_THRESHOLD vertex ids the
+vid->comp map is a driver array, so each pass is one Spark job, no pass
+leaves session state behind, and the labels, samples and forests equal those
+of the distributed label map."""
+
+from __future__ import annotations
+
+import functools
+
+import networkx as nx
+import pytest
+from pyspark.sql import functions as F
+
+from landscape_spark import linkgraph
+from landscape_spark.sketch import boruvka, build
+from landscape_spark.sketch.boruvka import (
+    _boruvka_passes,
+    _cc_rounds,
+    connected_components_sketch,
+    k_spanning_forests,
+    resume_connected_components,
+)
+from landscape_spark.sketch.build import build_group_slices
+from landscape_spark.sketch.l0 import SketchParams
+from landscape_spark.streaming.ingest import SketchStreamIngestor
+
+N = 256
+
+
+@pytest.fixture(scope="module")
+def er_edges(spark):
+    """A 256-vertex ER graph (average degree about 7.6)."""
+    rows = linkgraph.er_hash_net_edges(spark, N, 0.03, seed=7).collect()
+    return sorted((r.a, r.b) for r in rows)
+
+
+def _edges_df(spark, edges):
+    return spark.createDataFrame(edges, "a long, b long")
+
+
+def _oracle(edges):
+    g = nx.Graph(edges)
+    return {v: min(c) for c in nx.connected_components(g) for v in c}
+
+
+def _persisted(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+@pytest.mark.parametrize("graph", ["er", "path", "matching"])
+def test_cc_rounds_runs_one_job_per_pass(spark, er_edges, graph):
+    """One vid collect starts the call, then each pass (the matching's empty
+    confirm pass included) is one Spark job: at most passes + 1 jobs."""
+    edges = {
+        "er": er_edges,
+        "path": [(i, i + 1) for i in range(N - 1)],
+        "matching": [(i, i + 1) for i in range(0, N, 2)],
+    }[graph]
+    params = SketchParams.for_graph(N, seed=7)
+    slices = build_group_slices(_edges_df(spark, edges), params, 4).persist()
+    slices.count()
+    sc = spark.sparkContext
+    passes: list[int] = []
+    group = f"cc_rounds_job_count_{graph}"
+    sc.setJobGroup(group, "driver-mode _cc_rounds")
+    try:
+        vmap = _cc_rounds(
+            spark, slices, None, params, num_partitions=8,
+            on_round=lambda g, s, m: passes.append(g),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert passes and len(jobs) <= len(passes) + 1
+    assert {r.v: r.comp for r in vmap.collect()} == _oracle(edges)
+    assert vmap.rdd.getNumPartitions() == 1
+    slices.unpersist()
+
+
+def test_sketch_operators_leave_no_persisted_rdds(spark, er_edges, tmp_path):
+    """Session litter: the persisted-RDD count is back to its pre-call value
+    after each sketch operator, its result consumed."""
+    e = _edges_df(spark, er_edges)
+    before = _persisted(spark)
+    connected_components_sketch(spark, e, N, num_partitions=4).collect()
+    assert _persisted(spark) == before
+    k_spanning_forests(spark, e, N, 2, num_partitions=4).collect()
+    assert _persisted(spark) == before
+    ing = SketchStreamIngestor(
+        spark, SketchParams.for_graph(N, seed=7), str(tmp_path / "st"), num_partitions=4
+    )
+    ing.absorb_batch(e, 0)
+    ing.query_components(0).collect()
+    assert _persisted(spark) == before
+
+
+def test_driver_and_distributed_label_maps_agree(spark, er_edges):
+    """The vmap of the driver-owned labels equals collect_threshold=0's
+    (distributed map, min-edge merges) and the oracle."""
+    e = _edges_df(spark, er_edges)
+    drv = connected_components_sketch(spark, e, N, num_partitions=4)
+    dist = connected_components_sketch(spark, e, N, num_partitions=4, collect_threshold=0)
+    got = sorted(map(tuple, drv.collect()))
+    assert got == sorted(map(tuple, dist.collect()))
+    assert dict(got) == _oracle(er_edges)
+
+
+def test_label_map_placement_keeps_samples_and_forests(spark, er_edges, monkeypatch):
+    """A vertex-id space above the threshold keeps the label map distributed
+    while its few samples still merge in the driver DSU: every sample and
+    every merge is the driver-owned run's, so the k=2 forests are the same
+    sets."""
+    n = 4096  # vids stay below 256, so the ids fit either placement
+    e = _edges_df(spark, er_edges)
+
+    def forests():
+        out: dict[int, set[tuple[int, int]]] = {}
+        for r in k_spanning_forests(spark, e, n, 2, num_partitions=4).collect():
+            out.setdefault(r.forest_id, set()).add((r.a, r.b))
+        return out
+
+    drv = forests()
+    monkeypatch.setattr(
+        boruvka,
+        "_boruvka_passes",
+        functools.partial(_boruvka_passes, collect_threshold=n - 1),
+    )
+    assert forests() == drv
+    assert set(drv) == {0, 1}
+
+
+def test_pass_task_layout_keeps_samples(spark, er_edges, monkeypatch):
+    """A driver-mode pass runs as one coalesced task when its rows fit one;
+    otherwise over the stored slice partitions, the identity pass sampling
+    map-side and later passes folding map-side before a shuffle. The
+    samples, merges and labels are the same either way."""
+    params = SketchParams.for_graph(N, seed=7)
+    e = _edges_df(spark, er_edges)
+
+    def run():
+        slices = build_group_slices(e, params, 4).persist()
+        vmap, (pairs, _), used = _boruvka_passes(
+            spark, slices, None, params, 0, params.rounds, 4
+        )
+        out = sorted(map(tuple, vmap.collect())), pairs, used
+        slices.unpersist()
+        return out
+
+    one_task = run()
+    monkeypatch.setattr(build, "TASK_SKETCH_BYTES", 1)
+    assert run() == one_task
+
+
+def test_resume_round_trips_driver_checkpoint(spark, er_edges, tmp_path):
+    """A driver-mode run's last checkpointed vmap loads back into the label
+    array: resuming it gives the same map."""
+    e = _edges_df(spark, er_edges)
+    ck = str(tmp_path / "ck")
+    vmap = connected_components_sketch(spark, e, N, num_partitions=4, checkpoint_dir=ck)
+    want = sorted(map(tuple, vmap.collect()))
+    got = sorted(map(tuple, resume_connected_components(spark, ck, num_partitions=4).collect()))
+    assert got == want
+    assert dict(got) == _oracle(er_edges)
+
+
+def test_empty_frames_are_one_partition(spark, tmp_path):
+    """Empty results are built without a Python RDD, as one partition:
+    the empty-state stream query and an edgeless k-forest call."""
+    ing = SketchStreamIngestor(
+        spark, SketchParams.for_graph(64, seed=1), str(tmp_path / "st"), num_partitions=2
+    )
+    q = ing.query_components(0)
+    assert q.rdd.getNumPartitions() == 1 and q.count() == 0
+    none = spark.range(0).select(F.col("id").alias("a"), F.col("id").alias("b"))
+    f = k_spanning_forests(spark, none, 8, 2, num_partitions=2)
+    assert f.rdd.getNumPartitions() == 1 and f.count() == 0
