@@ -22,7 +22,7 @@ Region semantics (Broder's full 6-way map):
 Plan shape: one SCC run (graph/scc.py), four frontier-synchronous
 reachability sweeps (forward/backward from the core, forward from IN,
 backward from OUT — each edge fires at most once per sweep, the
-graph/traversal.py cost model), one undirected min-label CC run for the
+graph/traversal.py cost model), one exact CC run (graph/cc.py) for the
 weak components, then a single CASE projection. All state is
 vertex-partitioned DataFrames; checkpoints bound lineage exactly as in
 the constituent operators.
@@ -40,7 +40,10 @@ from landscape_spark.graph.scc import strongly_connected_components
 def _reachable(edges: DataFrame, seeds: DataFrame, max_iter: int = 512) -> DataFrame:
     """(v) reachable from the seed DataFrame along (src, dst) edges —
     seeds included. Frontier-synchronous: each edge fires once across the
-    run, when its src enters the reached set."""
+    run, when its src enters the reached set. Reaching max_iter rounds with
+    the frontier still non-empty WARNS: the reached set is then incomplete."""
+    import warnings
+
     from pyspark.sql import Observation
 
     reached = seeds.select("v").distinct().localCheckpoint(eager=True)
@@ -59,6 +62,13 @@ def _reachable(edges: DataFrame, seeds: DataFrame, max_iter: int = 512) -> DataF
             break
         reached = reached.unionAll(nxt).localCheckpoint(eager=True)
         frontier = nxt
+    else:
+        warnings.warn(
+            f"bow-tie reachability stopped at max_iter={max_iter} with its "
+            "frontier non-empty — the reached set is incomplete; raise max_iter",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return reached
 
 

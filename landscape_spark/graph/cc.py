@@ -1,29 +1,52 @@
-"""Exact connected components via iterative min-label propagation.
+"""Exact connected components: hook-and-shortcut, finished on the driver.
 
 This is the engine's EXACT CC operator (the deterministic golden path the
 sketch-based Boruvka CC is verified against). The reference's exact analog is
 its verifier oracle (/root/reference/test/distributed_graph_test.cpp:16-27
-uses FileGraphVerifier over the cumulative stream); its production CC is the
-sketch path (see landscape_spark.sketch.boruvka).
+uses FileGraphVerifier over the cumulative stream), and it keeps its
+union-find on the main node (src/graph_distrib_update.cpp:105-154); its
+production CC is the sketch path (see landscape_spark.sketch.boruvka).
 
-Algorithm: hash-to-min label propagation. label(v) starts at v; each round
-every vertex takes the min label over itself and its neighbors; converged when
-the global label sum stops decreasing (labels are monotone non-increasing, so
-the sum is a cheap O(1)-row convergence certificate — no count of changed
-rows, no extra join).
+Algorithm: hook-and-shortcut over root-relabelled edges. Every vertex starts
+as its own root; each round every root hooks onto the smallest root it
+touches, then full pointer jumping makes every tree a star again, and the
+edges are relabelled to their endpoints' roots, dropping the ones inside a
+component. Pointers only ever go to smaller ids, so the roots are the
+component minima (a unique fixpoint), and the round count follows the
+logarithm of the component size, not the diameter: a shuffled 65536-vertex
+path takes 11 rounds ("Finding connected components in map-reduce in
+logarithmic rounds", ICDE'13).
 
-Scale notes: each round is one shuffle (groupBy v). Rounds ~ graph diameter;
-web graphs are short-diameter so this terminates fast. Lineage is cut every
-round with localCheckpoint to keep plans O(1). Label messages with
-comp >= receiver id are dropped before the shuffle (labels are monotone
-non-increasing and label(v) <= v, so such a message can never lower the
-receiver's label) — this halves message traffic.
+Placement: while the live edge set is larger than COLLECT_THRESHOLD, each
+round runs as DataFrame jobs (the hook aggregate, then pointer jumps and the
+edge relabel as union + window steps, _follow), every intermediate a local
+checkpoint released before the call returns. Once the live edges fit, they
+come to the driver through Arrow and the numpy kernel (_hook_and_shortcut)
+finishes. The driver-side union-find this
+amounts to is bounded by the one constant, as "BTS: load-balanced
+distributed union-find" (ICDE'24) bounds a central one. Sketch Boruvka's
+distributed merge (sketch/boruvka.py) runs its sampled component pairs
+through this same operator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import warnings
+
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+# The most rows the driver owns. Exact CC collects its live edge set once it
+# has at most this many edges (with no distributed round run, the vertex
+# column too). Sketch Boruvka (sketch/boruvka.py) keeps its vid->comp map as
+# a dense driver array (at most 16 MB) up to this vertex-id space, and above
+# it merges a pass's samples in its driver DSU while they number at most
+# this many (the reference collects every sample on rank 0,
+# src/graph_distrib_update.cpp:105-154 — its acknowledged ceiling).
+COLLECT_THRESHOLD = 2_000_000
 
 
 def symmetrize(und_edges: DataFrame) -> DataFrame:
@@ -33,76 +56,167 @@ def symmetrize(und_edges: DataFrame) -> DataFrame:
     ).unionAll(und_edges.select(F.col("b").alias("v"), F.col("a").alias("w")))
 
 
+def _local_frame(spark: SparkSession, cols: dict[str, np.ndarray], schema: str) -> DataFrame:
+    """One-partition DataFrame over driver-side arrays, built through Arrow.
+    A frame built from a Python list is a pickled Python RDD, and every
+    scan of it maps spark.default.parallelism partitions through Python
+    workers; an Arrow-built frame is a local relation, scanned in up to
+    that many JVM tasks. Coalesced, every scan is one task (an empty frame
+    too: Spark keeps one empty partition)."""
+    table = pa.table({c: pa.array(a) for c, a in cols.items()})
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
+def _ids(table: pa.Table, col: str) -> np.ndarray:
+    """A collected id column as int64."""
+    return table.column(col).to_numpy().astype(np.int64)
+
+
+def _relabel(labels: DataFrame, remap: DataFrame) -> DataFrame:
+    """(v, comp) labels with every comp that remap's (x, p) moves set to p:
+    a join, so a small remap broadcasts beside a large label table."""
+    moves = remap.select(F.col("x").alias("comp"), "p")
+    return labels.join(moves, on="comp", how="left").select(
+        "v", F.coalesce("p", "comp").alias("comp")
+    )
+
+
+def _release(checkpoint: DataFrame) -> None:
+    """Free a local checkpoint's blocks: they belong to the RDD under its
+    LogicalRDD leaf, which DataFrame.unpersist does not reach."""
+    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _hook_and_shortcut(
+    u: np.ndarray, v: np.ndarray, n: int, max_iter: int
+) -> tuple[np.ndarray, bool]:
+    """Component minima of the graph on dense ids [0, n) with edges (u, v):
+    returns (parent, converged), parent[i] the least id of i's component.
+    Each round every root hooks onto the smallest root it touches, full
+    pointer jumping flattens the trees, and the edges are relabelled to
+    roots; converged is False when edges were still live after max_iter
+    rounds."""
+    parent = np.arange(n)
+    for _ in range(max_iter):
+        live = u != v
+        u, v = u[live], v[live]
+        if u.size == 0:
+            return parent, True
+        hook = np.arange(n)
+        np.minimum.at(hook, u, v)
+        np.minimum.at(hook, v, u)
+        parent = hook[parent]
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
+        u, v = parent[u], parent[v]
+    return parent, not (u != v).any()
+
+
+def _follow(df: DataFrame, col: str, ptr: DataFrame) -> DataFrame:
+    """``df`` with ``col`` moved along ptr's (x, p) pointers where it has
+    one, plus ``_to``: the new value, null where nothing moved. A union and
+    a window over the key, not a join: Spark estimates a join's size as the
+    PRODUCT of its inputs' estimates, and local checkpoints keep their
+    plan's estimate, so joining a pointer table with itself once per jump
+    squares the estimate each time — its digits double per jump, and
+    planning stalls in BigInt arithmetic within a few rounds. A union's
+    estimate is a sum. The cost: one task buffers (and spills) all rows of
+    a key, as a shuffle join without skew splitting would."""
+    rows = df.withColumnRenamed(col, "_k").unionByName(
+        ptr.select(F.col("x").alias("_k"), F.col("p").alias("_to")),
+        allowMissingColumns=True,
+    )
+    return (
+        rows.withColumn("_row", F.col("_to").isNull())
+        .withColumn("_to", F.max("_to").over(Window.partitionBy("_k")))
+        .where("_row")
+        .select(
+            *[F.coalesce("_to", "_k").alias(c) if c == col else c for c in df.columns], "_to"
+        )
+    )
+
+
+def _checkpoint(df: DataFrame, agg) -> tuple[DataFrame, int]:
+    """Eager local checkpoint of ``df`` (less ``_to``) and the integer
+    aggregate ``agg``, observed on the same job."""
+    obs = Observation()
+    out = df.observe(obs, agg.alias("n")).drop("_to").localCheckpoint(eager=True)
+    return out, obs.get["n"]
+
+
 def connected_components_exact(
     und_edges: DataFrame,
     vertices: DataFrame,
     max_iter: int = 512,
 ) -> DataFrame:
     """Return (v, comp) where comp is the MIN vertex id in v's component
-    (canonical min labels, a unique fixpoint).
+    (canonical min labels, a unique fixpoint), materialized: a
+    one-partition driver-built frame when the edges fit COLLECT_THRESHOLD,
+    else a local checkpoint. Callers re-read it without re-running CC.
 
-    und_edges: columns (a, b) with a < b. vertices: column (v).
+    und_edges: columns (a, b), a != b. vertices: column (v).
 
-    max_iter bounds rounds at graph DIAMETER; near-critical random graphs
-    (m ~ n/2) grow paths of diameter ~n^(1/3), which overflowed an earlier
-    cap of 64 at n=65536 and silently mislabeled the path tails. The
-    sum-based convergence check exits as soon as labels are stable, so
-    short-diameter graphs (the web-graph case) never pay for the higher cap.
+    max_iter bounds hook rounds, distributed and driver rounds together.
+    Exhausting it with edges still live WARNS: the labels are then wrong
+    for some vertices.
     """
-    import warnings
-
-    # cache the symmetrized adjacency: each round's message join re-reads
-    # it, and for gate callers the underlying edge relation is a lazy
-    # scan + explode + distinct that would otherwise re-execute per round.
-    # Deliberately NO repartition — the label side broadcasts while small
-    # and the message fan-out is linear, so a pinned exchange only adds an
-    # up-front shuffle (measured +0.2s at sf0.1 for zero per-round gain).
-    from pyspark.sql import Observation
-
-    sym = symmetrize(und_edges).cache()
-    # the certificate (INTEGER label sum — exact under any task merge
-    # order) rides each checkpoint action via observe(): no separate
-    # per-round O(n)-scan certificate job
-    obs0 = Observation()
-    labels = vertices.select("v", F.col("v").alias("comp"))
-    labels = labels.observe(obs0, F.sum("comp").alias("s")).localCheckpoint(
-        eager=True
-    )
-    prev_sum = obs0.get["s"]
-    converged = False
-    for _ in range(max_iter):
-        msgs = (
-            sym.join(labels, on="v")
-            .select(F.col("w").alias("v"), "comp")
-            # label(u) <= u, so a message with comp >= v can never lower
-            # v's label (label(v) <= v <= comp) — dropping them pre-shuffle
-            # halves message traffic without changing the fixpoint
-            .where(F.col("comp") < F.col("v"))
-        )
-        obs = Observation()
-        labels = (
-            msgs.unionAll(labels)
-            .groupBy("v")
-            .agg(F.min("comp").alias("comp"))
-            .observe(obs, F.sum("comp").alias("s"))
-        )
-        labels = labels.localCheckpoint(eager=True)
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # labels were still decreasing when the round budget ran out — the
-        # returned map is WRONG for some vertices (this is the golden path
-        # the sketch CC is verified against; silence here would let a
-        # mislabeled run validate or falsify sketch results)
-        warnings.warn(
-            f"connected_components_exact did not converge within "
-            f"{max_iter} rounds (graph diameter exceeds the cap) — labels "
-            "are still decreasing; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    sym.unpersist()  # labels are checkpointed — nothing below reads sym
+    spark = vertices.sparkSession
+    edges = und_edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    # one job: the whole edge set when it fits, else a sign that it does not
+    t = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
+    n_live, rounds, owned = t.num_rows, 0, []
+    labels = vertices.select("v").distinct().select("v", F.col("v").alias("comp"))
+    try:
+        while n_live > COLLECT_THRESHOLD and rounds < max_iter:
+            # every root hooks onto the smallest root it touches, then full
+            # pointer jumping, then the edges move to their endpoints' roots
+            sym = edges.unionAll(edges.select(F.col("y").alias("x"), F.col("x").alias("y")))
+            hooks = sym.groupBy("x").agg(F.min("y").alias("p")).where(F.col("p") < F.col("x"))
+            moved = 1
+            while moved:
+                hooks, moved = _checkpoint(_follow(hooks, "p", hooks), F.count("_to"))
+                owned.append(hooks)
+            edges, n_live = _checkpoint(
+                _follow(_follow(edges, "x", hooks).drop("_to"), "y", hooks)
+                .where(F.col("x") != F.col("y"))
+                .select(F.least("x", "y").alias("x"), F.greatest("x", "y").alias("y"))
+                .distinct(),
+                F.count(F.lit(1)),
+            )
+            owned.append(edges)
+            labels = _relabel(labels, hooks)
+            rounds += 1
+        converged = n_live == 0
+        if n_live <= COLLECT_THRESHOLD:
+            x, y = (_ids(edges.toArrow() if owned else t, c) for c in ("x", "y"))
+            vids = np.unique(_ids(vertices.select("v").toArrow(), "v")) if not owned else x[:0]
+            ids = np.unique(np.concatenate([vids, x, y]))
+            u, v = np.searchsorted(ids, x), np.searchsorted(ids, y)
+            parent, converged = _hook_and_shortcut(u, v, ids.size, max_iter - rounds)
+            comp = ids[parent]
+            if not owned:
+                comp = comp[np.searchsorted(ids, vids)]
+                labels = _local_frame(spark, {"v": vids, "comp": comp}, "v long, comp long")
+            else:
+                moved = comp != ids
+                remap = {"x": ids[moved], "p": comp[moved]}
+                labels = _relabel(labels, _local_frame(spark, remap, "x long, p long"))
+        if not converged:
+            # edges were still live when the round budget ran out — the
+            # returned map is WRONG for some vertices (this is the golden path
+            # the sketch CC is verified against; silence here would let a
+            # mislabeled run validate or falsify sketch results)
+            warnings.warn(
+                f"connected_components_exact did not converge within "
+                f"{max_iter} rounds — edges between components are still live; "
+                "raise max_iter",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        if owned:
+            labels = labels.localCheckpoint(eager=True)
+    finally:
+        # the labels checkpoint no longer reads them; on an error, nothing does
+        for df in owned:
+            _release(df)
     return labels

@@ -19,8 +19,8 @@ Spark-native formulation (peeling is inherently sequential in k).
 Convergence certificate: values are non-negative integers and monotone
 non-increasing per vertex, so the global SUM is strictly decreasing
 until the fixpoint — when the sum stops changing, NO value changed
-(same O(1)-row certificate as graph/cc.py min-label propagation). No
-changed-row count, no extra join.
+(an O(1)-row certificate riding the round's checkpoint). No changed-row
+count, no extra join.
 
 Scale notes per round: one shuffle joining the state to the symmetric
 edge list (on the neighbor key), one exchange for the per-vertex window

@@ -37,8 +37,9 @@ def label_propagation(
     run equals an uninterrupted one exactly (labels are integers)."""
     spark = und_edges.sparkSession
     # cached (no repartition — labels broadcast while small, fan-out is
-    # linear): rounds re-read the adjacency without re-deriving the
-    # caller's edge plan (see connected_components_exact)
+    # linear): every round's message join re-reads the adjacency, and for
+    # gate callers the edge relation is a lazy scan + explode + distinct
+    # that would otherwise re-execute per round
     sym = symmetrize(und_edges).cache()
     if start_labels is not None:
         labels = start_labels.select("v", "label").localCheckpoint(eager=True)

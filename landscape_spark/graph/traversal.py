@@ -9,8 +9,8 @@ the signal crawl schedulers and seed-biased curation pipelines cut on.
 
 Algorithm: synchronous frontier expansion. dist(seed) = 0; round d
 expands the round-(d-1) frontier along out-edges, keeping only vertices
-not yet reached. Unlike the min-label loops (cc.py / lpa.py) whose
-per-round messages are O(m), BFS messages are FRONTIER-sized: each edge
+not yet reached. Unlike the label loops (lpa.py) whose per-round
+messages are O(m), BFS messages are FRONTIER-sized: each edge
 fires exactly once over the whole run (when its src enters the
 frontier), so total traffic is O(m) across ALL rounds — the textbook
 level-synchronous BFS cost, and the reason this is not expressed as a

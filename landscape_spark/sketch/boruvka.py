@@ -23,10 +23,10 @@ COLLECT_THRESHOLD vertex ids that map is a dense array on the driver beside
 one DSU, as the reference keeps its DSU on the main node — each pass is then
 one Spark job, with the labels shipped inside the fold kernel. Above it the
 map stays distributed and is joined per pass; sampled cut edges merge via the
-driver DSU up to COLLECT_THRESHOLD samples and via the distributed Boruvka
-min-edge rule + large-star/small-star contraction above it (the log-rounds
-contraction of "Finding connected components in map-reduce in logarithmic
-rounds", ICDE'13).
+driver DSU up to COLLECT_THRESHOLD samples; above it the Boruvka min-edge
+rule keeps one sampled edge per component and the engine's one exact-CC
+kernel (graph/cc.py: hook-and-shortcut, finished on the driver once its
+live edges fit) merges their component pairs.
 Each Boruvka round consumes one sketch GROUP (one-shot sampling), so k-forest
 extraction budgets per_pass groups per pass. Batch CC (_cc_rounds), the
 k-forests (k_spanning_forests) and the streaming in-stream queries
@@ -44,10 +44,15 @@ import warnings
 from functools import reduce
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from landscape_spark.graph.cc import (
+    COLLECT_THRESHOLD,
+    _local_frame,
+    _relabel,
+    connected_components_exact,
+)
 from landscape_spark.sketch.build import (
     build_group_slices,
     fold_sample,
@@ -57,16 +62,6 @@ from landscape_spark.sketch.build import (
     xor_merge_slices,
 )
 from landscape_spark.sketch.l0 import SketchParams
-
-# The largest vertex-id space (SketchParams.n) whose Boruvka labels the driver
-# owns: up to it the vid->comp map is a dense int64 array on the driver (at
-# most 16 MB) beside the DSU, and each pass is one Spark job. Above it the map
-# stays distributed, and a pass's samples merge in the driver DSU only while
-# they number at most this many; beyond that the distributed Boruvka min-edge
-# rule + star contraction merges them (the reference collects every sample on
-# rank 0, src/graph_distrib_update.cpp:105-154 — its acknowledged ceiling;
-# this removes it).
-COLLECT_THRESHOLD = 2_000_000
 
 # Sketch groups sampled by a pass loop's first pass; later passes sample 2.
 FIRST_PASS_GROUPS = 4
@@ -100,124 +95,14 @@ class DSU:
         return hi
 
 
-def _star_contraction(pairs: DataFrame) -> DataFrame:
-    """Distributed connected components of the (tiny relative to the graph)
-    sampled component-pair graph: alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — public algorithm). Converges in O(log^2) rounds to
-    stars centered at each group's minimum label.
-
-    Input: (x, y) component-id pairs, x != y. Output: (old_comp, new_comp)
-    for every component whose label changes (roots are omitted — their label
-    is already the group minimum). Everything stays distributed; nothing is
-    collected to the driver."""
-    e = (
-        pairs.select(F.least("x", "y").alias("x"), F.greatest("x", "y").alias("y"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _stats(df: DataFrame):
-        """One-job convergence certificate: (count, sum x, sum y, two
-        independently-seeded mod-2^31 hash sums) — an unordered-set
-        fingerprint. Distinct edge sets with equal stats need BOTH hash
-        sums to collide (~2^-62 per round), the same w.h.p. class as the
-        sketches themselves. Mersenne-prime mods keep the ANSI-mode sums
-        exact (a raw sum of 64-bit hashes overflows long); overflow needs
-        > 2^32 pair rows, far past the contracted-graph regime. Replaces
-        the earlier count() + exceptAll() probe (two comparison jobs per
-        round) with a single aggregate on the new set; the previous
-        round's stats are remembered, not recomputed. A fingerprint MATCH
-        is then confirmed by one exact set-equality job at the apparent
-        fixpoint (see below), so termination itself is exact — the
-        fingerprint only decides when to run the exact check."""
-        p = F.lit((1 << 31) - 1)
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.pmod(F.xxhash64("x", "y", F.lit(1)), p)).alias("h1"),
-            F.sum(F.pmod(F.xxhash64("x", "y", F.lit(2)), p)).alias("h2"),
-        ).first()
-        return (r.n, r.sx, r.sy, r.h1, r.h2)
-
-    e_stats = _stats(e)
-    while True:
-        # large-star: every node links its strictly-larger neighbors to
-        # min(N(u) ∪ {u})
-        sym = e.select("x", "y").unionAll(
-            e.select(F.col("y").alias("x"), F.col("x").alias("y"))
-        )
-        mins = sym.groupBy("x").agg(F.min("y").alias("mn"))
-        mins = mins.select("x", F.least("x", "mn").alias("m"))
-        ls = (
-            sym.join(mins, on="x")
-            .where(F.col("y") > F.col("x"))
-            .select(F.col("y").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        # small-star: direct edges larger->smaller; every node links its
-        # smaller neighbors AND itself to the minimum
-        d = ls.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        mins2 = d.groupBy("u").agg(F.min("v").alias("m"))
-        ss = (
-            d.join(mins2, on="u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionAll(mins2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-            .where(F.col("a") != F.col("b"))
-            .select(F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        ss_stats = _stats(ss)
-        if ss_stats == e_stats:
-            # fingerprint says converged: confirm with ONE exact set-equality
-            # job (both sides are distinct, so symmetric exceptAll emptiness
-            # is set equality). Per-round the cheap fingerprint decides; the
-            # exact check runs only at the apparent fixpoint — on the
-            # smallest graph of the run — so the ~2^-62 per-round collision
-            # can no longer terminate contraction early, at the cost of one
-            # extra job per contraction instead of two per round.
-            if ss.exceptAll(e).unionAll(e.exceptAll(ss)).isEmpty():
-                break
-        e, e_stats = ss, ss_stats
-    # converged: every edge is (root=min, leaf)
-    return e.select(F.col("y").alias("old_comp"), F.col("x").alias("new_comp"))
-
-
-def _local_frame(spark: SparkSession, cols: dict[str, np.ndarray], schema: str) -> DataFrame:
-    """One-partition DataFrame over driver-side arrays, built through Arrow.
-    A frame built from a Python list is a pickled Python RDD, and every
-    scan of it maps spark.default.parallelism partitions through Python
-    workers; an Arrow-built frame is a local relation, scanned in up to
-    that many JVM tasks. Coalesced, every scan is one task (an empty frame
-    too: Spark keeps one empty partition)."""
-    table = pa.table({c: pa.array(a) for c, a in cols.items()})
-    return spark.createDataFrame(table, schema).coalesce(1)
-
-
-def _pairs_frame(
-    spark: SparkSession, rows: list[tuple[int, int]], names: tuple[str, str]
-) -> DataFrame:
-    """Driver-side int pairs -> two-column long DataFrame (_local_frame)."""
-    arr = np.asarray(rows, dtype=np.int64).reshape(-1, 2)
-    return _local_frame(
-        spark,
-        {names[0]: arr[:, 0], names[1]: arr[:, 1]},
-        f"{names[0]} long, {names[1]} long",
-    )
-
-
 def _forest_frame(
     spark: SparkSession, pairs: list[tuple[int, int]], kept: list[DataFrame]
 ) -> DataFrame:
     """One (a, b) DataFrame over a pass loop's forest edges: the
     driver-merged pairs plus the distributed passes' min-edge frames."""
-    return reduce(
-        DataFrame.unionAll,
-        [f.select("a", "b") for f in kept],
-        _pairs_frame(spark, pairs, ("a", "b")),
-    )
+    ab = np.asarray(pairs, dtype=np.int64).reshape(-1, 2)
+    merged = _local_frame(spark, {"a": ab[:, 0], "b": ab[:, 1]}, "a long, b long")
+    return reduce(DataFrame.unionAll, [f.select("a", "b") for f in kept], merged)
 
 
 def _dsu_merge(
@@ -402,8 +287,8 @@ def _boruvka_passes(
       through the driver union-find while they number at most
       ``collect_threshold``; above that, the Boruvka min-edge rule keeps
       one sampled edge per component (acyclic by the max-edge-in-cycle
-      argument) and large-star/small-star contraction merges their
-      components, with nothing collected to the driver.
+      argument) and connected_components_exact over their component
+      pairs (graph/cc.py) gives the merged components' min labels.
 
     Either way the driver merge applies the samples in (group, lo, hi)
     order (_dsu_merge), and the accepted edges are a spanning forest of the
@@ -479,41 +364,31 @@ def _boruvka_passes(
                 on_round(g, 0, False)
             converged = True  # no live component holds a cut edge
             break
-        if driver:
-            absorbed = np.asarray(_dsu_merge(dsu, *samples, pairs), dtype=np.int64)
-            remap = np.arange(params.n, dtype=np.int64)
-            remap[absorbed] = [dsu.find(c) for c in absorbed.tolist()]
-            labels = remap[labels]
-            n_merged = len(absorbed)
-        else:
-            if n_samp <= collect_threshold:
+        if driver or n_samp <= collect_threshold:
+            if not driver:
                 t = resolved.toArrow()
-                absorbed = _dsu_merge(
-                    dsu,
-                    *(t.column(c).to_numpy() for c in ("gi", "u", "v", "comp_u", "comp_v")),
-                    pairs,
-                )
-                remap_df = F.broadcast(
-                    _pairs_frame(
-                        spark,
-                        [(c, dsu.find(c)) for c in sorted(absorbed)],
-                        ("old_comp", "new_comp"),
-                    )
-                )
-                n_merged = len(absorbed)
+                samples = [t.column(c).to_numpy() for c in ("gi", "u", "v", "comp_u", "comp_v")]
+            absorbed = np.asarray(_dsu_merge(dsu, *samples, pairs), dtype=np.int64)
+            roots = np.asarray([dsu.find(c) for c in absorbed.tolist()], dtype=np.int64)
+            n_merged = len(absorbed)
+            if driver:
+                remap = np.arange(params.n, dtype=np.int64)
+                remap[absorbed] = roots
+                labels = remap[labels]
             else:
-                kept, n_merged = _min_edges(resolved)
-                kept_parts.append(kept)
-                # the contraction's result is a projection of its
-                # checkpointed final edge set — no second checkpoint needed
-                remap_df = _star_contraction(
-                    kept.select(F.col("comp_u").alias("x"), F.col("comp_v").alias("y"))
-                )
-            vmap = (
-                vmap.join(remap_df, vmap.comp == remap_df.old_comp, "left")
-                .select("v", F.coalesce("new_comp", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
+                remap = _local_frame(spark, {"x": absorbed, "p": roots}, "x long, p long")
+        else:
+            kept, n_merged = _min_edges(resolved)
+            kept_parts.append(kept)
+            # the merged components' min labels: exact CC over the kept
+            # component pairs (materialized, so the join reads it once)
+            comps = kept.select(F.col("comp_u").alias("a"), F.col("comp_v").alias("b"))
+            ends = comps.select(F.col("a").alias("v")).unionAll(comps.select("b"))
+            remap = connected_components_exact(comps, ends).select(
+                F.col("v").alias("x"), F.col("comp").alias("p")
             )
+        if not driver:
+            vmap = _relabel(vmap, remap).localCheckpoint(eager=True)
         if on_round is not None:
             on_round(g, n_samp, n_merged > 0)
         g += len(gs)

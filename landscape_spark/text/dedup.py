@@ -151,10 +151,10 @@ def near_dup_groups(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     components of the union are exactly the transitive dup groups).
 
     Plan: CC runs ONLY over pair-incident vertices (at scale the dup-pair
-    graph is a sliver of the corpus — near-dup groups are short-diameter,
-    so min-label propagation converges in a few one-shuffle rounds), then
-    one left join assigns keepers corpus-wide; comp labels ARE min ids, so
-    the keeper needs no extra aggregation. Reuses the engine's own CC
+    graph is a sliver of the corpus, so its edges usually fit the driver
+    and exact CC finishes there in one collect), then one left join
+    assigns keepers corpus-wide; comp labels ARE min ids, so the keeper
+    needs no extra aggregation. Reuses the engine's own CC
     operator (graph/cc.py) on the derived graph — the same machinery the
     reference applies to its edge streams."""
     from landscape_spark.graph.cc import connected_components_exact

@@ -99,12 +99,14 @@ def test_sketch_cc_distributed_merge_path(spark):
     assert len(set(got.values())) == 78
 
 
-def test_star_contraction_matches_nx(spark):
-    """The distributed component-merge primitive against networkx on a messy
-    multi-component pair graph."""
+def test_star_contraction_matches_nx(spark, monkeypatch):
+    """The component-merge primitive of Borůvka's distributed passes — the
+    one exact-CC kernel over the sampled component pairs — against networkx
+    on a messy multi-component pair graph, finished on the driver and with
+    every round distributed (COLLECT_THRESHOLD 0)."""
     import networkx as nx
 
-    from landscape_spark.sketch.boruvka import _star_contraction
+    import landscape_spark.graph.cc as cc
 
     rng = __import__("random").Random(7)
     pairs = set()
@@ -113,12 +115,15 @@ def test_star_contraction_matches_nx(spark):
         if a != b:
             pairs.add((a, b))
     g = nx.Graph(pairs)
-    df = spark.createDataFrame(sorted(pairs), "x long, y long")
-    remap = {r.old_comp: r.new_comp for r in _star_contraction(df).collect()}
-    for comp in nx.connected_components(g):
-        root = min(comp)
-        for v in comp:
-            assert remap.get(v, v) == root
+    df = spark.createDataFrame(sorted(pairs), "a long, b long")
+    ends = df.select(F.col("a").alias("v")).unionAll(df.select(F.col("b").alias("v")))
+    for threshold in (cc.COLLECT_THRESHOLD, 0):
+        monkeypatch.setattr(cc, "COLLECT_THRESHOLD", threshold)
+        remap = {r.v: r.comp for r in cc.connected_components_exact(df, ends).collect()}
+        for comp in nx.connected_components(g):
+            root = min(comp)
+            for v in comp:
+                assert remap.get(v, v) == root
 
 
 def test_sketch_partitions_bounds():

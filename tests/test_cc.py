@@ -6,9 +6,14 @@ The 78-component assertion ports the reference's strongest exact test
 
 from __future__ import annotations
 
+import warnings
+
 import networkx as nx
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+import landscape_spark.graph.cc as cc
 from landscape_spark import linkgraph
 from landscape_spark.graph.cc import connected_components_exact
 
@@ -57,8 +62,8 @@ def test_cc_isolated_vertices(spark):
 
 
 def test_cc_long_path_diameter(spark):
-    """Path of 300 vertices (diameter 299): min-label propagation must still
-    converge — regression for the iteration cap that silently mislabeled
+    """Path of 300 vertices (diameter 299): exact CC must still converge —
+    regression for the diameter-bound iteration cap that silently mislabeled
     long-path tails at n=65536 (found via sketch-vs-exact cross-validation)."""
     n = 300
     edges = [(i, i + 1) for i in range(n - 1)]
@@ -68,21 +73,26 @@ def test_cc_long_path_diameter(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_cc_exact_warns_on_round_budget_exhaustion(spark):
-    """Exhausting max_iter while labels are still decreasing must WARN — a
-    silently wrong golden-path result would validate or falsify sketch CC."""
-    import warnings
-
-    from pyspark.sql import functions as F
-
-    n = 64
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a long, b long"
+def _shuffled_path(spark, n, seed):
+    """A path over a seeded permutation of 0..n-1: its ids follow no order,
+    so no round can hook it in one sweep. Built through Arrow."""
+    perm = np.random.default_rng(seed).permutation(n)
+    a, b = perm[:-1], perm[1:]
+    e = cc._local_frame(
+        spark, {"a": np.minimum(a, b), "b": np.maximum(a, b)}, "a long, b long"
     )
-    verts = spark.range(n).select(F.col("id").alias("v"))
+    return e, spark.range(n).select(F.col("id").alias("v"))
+
+
+def test_cc_exact_warns_on_round_budget_exhaustion(spark):
+    """Exhausting max_iter while edges are still live must WARN — a
+    silently wrong golden-path result would validate or falsify sketch CC.
+    A sorted path converges in one hook round, so the budget is exhausted
+    on a shuffled one."""
+    path, verts = _shuffled_path(spark, 64, seed=5)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components_exact(path, verts, max_iter=3).count()
+        connected_components_exact(path, verts, max_iter=1).count()
     assert any("did not converge" in str(x.message) for x in w)
     # and a converged run stays silent
     with warnings.catch_warnings(record=True) as w:
@@ -90,3 +100,19 @@ def test_cc_exact_warns_on_round_budget_exhaustion(spark):
         got = {r.v: r.comp for r in connected_components_exact(path, verts).collect()}
     assert not any("did not converge" in str(x.message) for x in w)
     assert set(got.values()) == {0}
+
+
+@pytest.mark.parametrize("threshold", [None, 0], ids=["driver", "distributed"])
+def test_cc_shuffled_path_round_bound(spark, monkeypatch, threshold):
+    """Hook-and-shortcut rounds are logarithmic, not diameter-bound: a
+    shuffled 65536-vertex path (diameter 65535) converges within 20 rounds,
+    on the driver and with every round distributed (threshold 0)."""
+    if threshold is not None:
+        monkeypatch.setattr(cc, "COLLECT_THRESHOLD", threshold)
+    path, verts = _shuffled_path(spark, 1 << 16, seed=11)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got = connected_components_exact(path, verts, max_iter=20).toArrow()
+    assert not any("did not converge" in str(x.message) for x in w)
+    assert got.num_rows == 1 << 16
+    assert not got.column("comp").to_numpy().any()

@@ -412,6 +412,26 @@ def test_bowtie_chain_into_core_is_in_not_tendril(spark):
     assert got[0] == "CORE" and got[1] == "CORE"
 
 
+def test_bowtie_reachability_warns_at_its_cap(spark):
+    """A reachability sweep that reaches max_iter with its frontier still
+    non-empty WARNS (its reached set is incomplete); a converged one is
+    silent."""
+    import warnings
+
+    from landscape_spark.graph.bowtie import _reachable
+
+    e = spark.range(7).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    seeds = _verts(spark, 1)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        assert _reachable(e, seeds, max_iter=2).count() == 3
+    assert any("frontier non-empty" in str(x.message) for x in w)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        assert _reachable(e, seeds).count() == 8
+    assert not any("frontier non-empty" in str(x.message) for x in w)
+
+
 def test_reciprocity_hand_check(spark):
     from landscape_spark.graph.stats import reciprocity
 

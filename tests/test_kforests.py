@@ -101,7 +101,7 @@ def test_point_queries(spark):
 
 def test_boruvka_pass_distributed_path_matches_exact(spark):
     """collect_threshold=0 forces the fully-distributed round machinery
-    (min-edge rule + star contraction, no driver DSU) on every round; the
+    (min-edge rule + the exact-CC kernel, no driver DSU) on every round; the
     resulting components must equal exact CC and the forest must be an
     acyclic spanning forest of the graph."""
     import random
@@ -141,7 +141,7 @@ def test_boruvka_pass_distributed_path_matches_exact(spark):
     oracle = {v: min(c) for c in nx.connected_components(g) for v in c}
     got = {r.v: r.comp for r in vmap.collect()}
     # component PARTITION must match (labels are min-ids in the oracle; the
-    # distributed path's star contraction also converges to min labels)
+    # exact-CC kernel of the distributed path also gives min labels)
     assert got == oracle
     fe = [(r.a, r.b) for r in forest.collect()]
     assert len(fe) == len(set(fe))
