@@ -1,4 +1,13 @@
-"""Per-round checkpoints with per-partition lineage + metrics (north rule).
+"""Per-round checkpoints: the in-session round step, and durable rounds with
+per-partition lineage + metrics (north rule).
+
+``step`` is the one round primitive of every iterative operator (graph/ and
+sketch Boruvka's distributed label map): it cuts the round's lineage with an
+eager local checkpoint, reads the round's integer certificates off the same
+job, and frees the checkpoints the new round replaces, so a finished query
+leaves only the checkpoints its result reads. The reference likewise keeps
+only the current round's state on its main node (its
+src/graph_distrib_update.cpp:105-154).
 
 Every Boruvka round (and any other iterative loop) can persist its state as
 parquet plus a lineage JSON capturing: round index, input lineage (previous
@@ -15,10 +24,44 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Iterable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of every local checkpoint ``df`` reads: they belong to
+    the RDD under each LogicalRDD leaf of its plan, which DataFrame.unpersist
+    does not reach. Pass only frames whose checkpoints the caller owns."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for leaf in (leaves.apply(i) for i in range(leaves.size())):
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+
+
+def step(
+    df: DataFrame, *, release: Iterable[DataFrame] = (), **ints: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """One round: ``df`` as an eager local checkpoint, and the integer
+    aggregates ``ints`` (name -> Column) observed on that same job. Once it
+    is materialized, the checkpoints of every frame in ``release`` are freed
+    (_release) — the frames this round replaces, which nothing reads any
+    more. Observed values merge in task-completion order, so only integers
+    may ride here (exact under any order); a float raises TypeError. None,
+    a sum over zero rows, passes."""
+    obs = Observation()
+    if ints:
+        df = df.observe(obs, *[agg.alias(name) for name, agg in ints.items()])
+    out = df.localCheckpoint(eager=True)
+    stats = obs.get if ints else {}
+    if any(isinstance(value, float) for value in stats.values()):
+        _release(out)
+        raise TypeError(f"observed float aggregates in {stats}: only integers are exact here")
+    for frame in release:
+        _release(frame)
+    return out, stats
 
 
 def partition_counts(df: DataFrame) -> list[int]:

@@ -36,14 +36,18 @@ idempotent max-merge, so there is no separate state-merge join. Registers
 are monotone non-decreasing, so the integer SUM of all registers is a
 strictly-increasing-until-fixpoint convergence certificate (the kcore.py
 trick); at the fixpoint N(h) = N(inf) exactly (the sketches stop
-changing when every ball stops growing). Lineage is cut every round.
+changing when every ball stops growing). Lineage is cut every round
+(checkpoint.step, which frees the round it replaces).
 """
 
 from __future__ import annotations
 
-
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from landscape_spark.checkpoint import _release, step
+from landscape_spark.graph.cc import _local_frame
 
 
 def _alpha(m: int) -> float:
@@ -147,22 +151,22 @@ def neighborhood_function(
         .repartition(p, "dst")
         .cache()
     )
-    state = _init_registers(vertices, log2m, seed).localCheckpoint(eager=True)
+    state, _ = step(_init_registers(vertices, log2m, seed))
     prev_cert, est0 = _round_stats(state)
-    est = [(0, est0)]
+    est = [est0]  # est[h] estimates N(h)
     elem_max = [
         F.max(F.element_at(F.col("regs"), i + 1)).alias(f"_m{i}") for i in range(m)
     ]
     for h in range(1, max_h + 1):
-        state = (
+        state, _ = step(
             ep.join(state.withColumnRenamed("v", "dst"), on="dst")
             .groupBy(F.col("src").alias("v"))
             .agg(*elem_max)
-            .select("v", F.array(*[F.col(f"_m{i}") for i in range(m)]).alias("regs"))
-            .localCheckpoint(eager=True)
+            .select("v", F.array(*[F.col(f"_m{i}") for i in range(m)]).alias("regs")),
+            release=(state,),
         )
         cert, est_h = _round_stats(state)
-        est.append((h, est_h))
+        est.append(est_h)
         if cert == prev_cert:
             # max-merge is idempotent: unchanged registers => every ball
             # is stable => N(h) = N(inf); drop the duplicate last row
@@ -170,9 +174,10 @@ def neighborhood_function(
             break
         prev_cert = cert
     ep.unpersist()
-    return spark.createDataFrame(
-        [(h, round(v, 6)) for h, v in est], "h int, n_pairs_est double"
-    )
+    _release(state)
+    h = np.arange(len(est), dtype=np.int32)
+    n_pairs = np.asarray([round(x, 6) for x in est])
+    return _local_frame(spark, {"h": h, "n_pairs_est": n_pairs}, "h int, n_pairs_est double")
 
 
 def effective_diameter(
@@ -255,22 +260,19 @@ def harmonic_centrality(
         .repartition(p, "dst")
         .cache()
     )
-    from pyspark.sql import Observation
-
     # the fixpoint certificate (INTEGER register sum — exact under any task
     # merge order) rides each checkpoint action via observe(): no separate
     # per-hop certificate job. (neighborhood_function keeps its combined
     # cert+estimate job instead: the published estimate is a FLOAT sum, and
     # observe() merges task metrics in completion order, which would make
     # the published value run-order-dependent at the last ulp.)
-    obs0 = Observation()
-    state = (
-        _init_registers(vertices, log2m, seed)
-        .select("v", "regs", est.alias("prev_est"), F.lit(0.0).alias("hc"))
-        .observe(obs0, F.sum(reg_sum).alias("s"))
-        .localCheckpoint(eager=True)
+    state, stats = step(
+        _init_registers(vertices, log2m, seed).select(
+            "v", "regs", est.alias("prev_est"), F.lit(0.0).alias("hc")
+        ),
+        s=F.sum(reg_sum),
     )
-    prev_cert = obs0.get["s"]
+    prev_cert = stats["s"]
     elem_max = [
         F.max(F.element_at(F.col("regs"), i + 1)).alias(f"_m{i}") for i in range(m)
     ]
@@ -292,20 +294,22 @@ def harmonic_centrality(
                 "hc",
             )
         )
-        obs = Observation()
-        state = merged.select(
-            "v",
-            "regs",
-            est.alias("prev_est"),
-            # ball growth at this hop, each new member at distance exactly h
-            (
-                F.col("hc")
-                + F.greatest(est - F.col("prev_est"), F.lit(0.0)) / F.lit(float(h))
-            ).alias("hc"),
-        ).observe(obs, F.sum(reg_sum).alias("s")).localCheckpoint(eager=True)
-        cert = obs.get["s"]
-        if cert == prev_cert:
+        state, stats = step(
+            merged.select(
+                "v",
+                "regs",
+                est.alias("prev_est"),
+                # ball growth at this hop, each new member at distance exactly h
+                (
+                    F.col("hc")
+                    + F.greatest(est - F.col("prev_est"), F.lit(0.0)) / F.lit(float(h))
+                ).alias("hc"),
+            ),
+            release=(state,),
+            s=F.sum(reg_sum),
+        )
+        if stats["s"] == prev_cert:
             break
-        prev_cert = cert
+        prev_cert = stats["s"]
     ep.unpersist()
     return state.select("v", F.round("hc", 6).alias("harmonic"))

@@ -25,16 +25,21 @@ keeps the forward frontier minimal. Path counts are exact int64 (sigma
 overflows int64 only past ~9e18 shortest paths per (s,v) — far beyond
 any graph this runs on at gate scale; the oracle uses BIGINT too, so
 overflow would at worst break both sides identically). Lineage is cut
-per level; levels are retained (they are the backward phase's schedule).
+per level (checkpoint.step); each forward level is kept until the backward
+phase has checkpointed its delta (the levels are that phase's schedule).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
+from landscape_spark.graph.cc import _local_frame
 from landscape_spark.session import local_parallelism
 
 
@@ -53,40 +58,38 @@ def betweenness_sources(
     e = edges.select("src", "dst").repartition(p, "src").cache()
     e.count()
 
-    src_list = [int(s) for s in dict.fromkeys(sources)]
-    level0 = spark.createDataFrame(
-        [(s, s, 1) for s in src_list], "s long, v long, sigma long"
-    ).localCheckpoint(eager=True)
-    from pyspark.sql import Observation
-
+    src = np.asarray(list(dict.fromkeys(int(s) for s in sources)), dtype=np.int64)
+    seeds = {"s": src, "v": src, "sigma": np.ones_like(src)}
+    level0, _ = step(_local_frame(spark, seeds, "s long, v long, sigma long"))
     levels = [level0]
-    reached = level0.select("s", "v").localCheckpoint(eager=True)
+    reached, _ = step(level0.select("s", "v"))
     for _ in range(int(max_depth)):
         prev = levels[-1]
-        obs = Observation()
-        nxt = (
+        nxt, stats = step(
             prev.join(e, e.src == prev.v)
             .select("s", F.col("dst").alias("v"), "sigma")
             .groupBy("s", "v")
             .agg(F.sum("sigma").alias("sigma"))
-            .join(reached, on=["s", "v"], how="left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(reached, on=["s", "v"], how="left_anti"),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if stats["n"] == 0:
+            _release(nxt)
             break
         levels.append(nxt)
-        reached = reached.unionAll(nxt.select("s", "v")).localCheckpoint(
-            eager=True
-        )
+        reached, _ = step(reached.unionAll(nxt.select("s", "v")), release=(reached,))
+    _release(reached)
 
     # backward sweep: deepest level has no successors -> delta 0. The
     # successor state carries (sigma, delta) in ONE frame, so each level
     # pays a single (s, w)-keyed join against it instead of two.
+    # each level is freed once its delta is checkpointed; the deltas stay,
+    # the result reads them all
     deltas = [None] * len(levels)
-    deltas[-1] = levels[-1].select(
-        "s", "v", "sigma", F.lit(0.0).alias("delta")
-    ).localCheckpoint(eager=True)
+    deltas[-1], _ = step(
+        levels[-1].select("s", "v", "sigma", F.lit(0.0).alias("delta")),
+        release=(levels[-1],),
+    )
     for t in range(len(levels) - 2, -1, -1):
         cur, succ_sd = levels[t], deltas[t + 1]
         contrib = (
@@ -109,20 +112,18 @@ def betweenness_sources(
                 ).alias("delta")
             )
         )
-        deltas[t] = (
+        deltas[t], _ = step(
             cur.select("s", "v", "sigma")
             .join(contrib, on=["s", "v"], how="left")
             .select(
                 "s", "v", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            release=(cur,),
         )
 
-    all_d = deltas[0]
-    for d in deltas[1:]:
-        all_d = all_d.unionAll(d)
     bc = (
-        all_d.where(F.col("v") != F.col("s"))
+        reduce(DataFrame.unionAll, deltas)
+        .where(F.col("v") != F.col("s"))
         .groupBy("v")
         .agg(F.sum("delta").alias("bc"))
     )

@@ -24,15 +24,19 @@ reachability sweeps (forward/backward from the core, forward from IN,
 backward from OUT — each edge fires at most once per sweep, the
 graph/traversal.py cost model), one exact CC run (graph/cc.py) for the
 weak components, then a single CASE projection. All state is
-vertex-partitioned DataFrames; checkpoints bound lineage exactly as in
-the constituent operators.
+vertex-partitioned DataFrames; every round is a checkpoint.step, which
+frees the round it replaces, and the SCC labels are re-checkpointed once
+so the per-round parts they read can be freed too.
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
 from landscape_spark.graph.cc import connected_components_exact
 from landscape_spark.graph.scc import strongly_connected_components
 
@@ -42,27 +46,25 @@ def _reachable(edges: DataFrame, seeds: DataFrame, max_iter: int = 512) -> DataF
     seeds included. Frontier-synchronous: each edge fires once across the
     run, when its src enters the reached set. Reaching max_iter rounds with
     the frontier still non-empty WARNS: the reached set is then incomplete."""
-    import warnings
-
-    from pyspark.sql import Observation
-
-    reached = seeds.select("v").distinct().localCheckpoint(eager=True)
+    reached, _ = step(seeds.select("v").distinct())
     frontier = reached
     for _ in range(max_iter):
-        obs = Observation()
-        nxt = (
+        nxt, stats = step(
             edges.join(frontier.withColumnRenamed("v", "src"), on="src")
             .select(F.col("dst").alias("v"))
             .distinct()
-            .join(reached, on="v", how="left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(reached, on="v", how="left_anti"),
+            release=() if frontier is reached else (frontier,),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if stats["n"] == 0:
+            _release(nxt)
             break
-        reached = reached.unionAll(nxt).localCheckpoint(eager=True)
+        reached, _ = step(reached.unionAll(nxt), release=(reached,))
         frontier = nxt
     else:
+        if frontier is not reached:
+            _release(frontier)
         warnings.warn(
             f"bow-tie reachability stopped at max_iter={max_iter} with its "
             "frontier non-empty — the reached set is incomplete; raise max_iter",
@@ -85,7 +87,9 @@ def bowtie_decomposition(
     from landscape_spark.session import local_parallelism
 
     p = local_parallelism(edges.sparkSession)
-    scc = strongly_connected_components(edges, vertices).localCheckpoint(eager=True)
+    # one checkpoint of the SCC labels frees the per-round parts they read
+    parts = strongly_connected_components(edges, vertices)
+    scc, _ = step(parts, release=(parts,))
     # each orientation cached partitioned on the frontier-join key ONCE:
     # the two sweeps per orientation then reuse the cached partitioning
     # every round (only the frontier moves — guide §2.4)
@@ -101,10 +105,9 @@ def bowtie_decomposition(
         .orderBy(F.desc("sz"), F.asc("comp"))
         .limit(1)
     )
-    core = (
-        scc.join(F.broadcast(core_comp.select("comp")), on="comp")
-        .select("v")
-        .localCheckpoint(eager=True)
+    core, _ = step(
+        scc.join(F.broadcast(core_comp.select("comp")), on="comp").select("v"),
+        release=(scc,),
     )
     # the sweeps (and the weak-CC run) are mutually independent given their
     # seeds — overlap them so one sweep's straggler tail back-fills with the
@@ -115,8 +118,8 @@ def bowtie_decomposition(
         fut_weak = pool.submit(connected_components_exact, und_edges, vertices)
         fwd = fut_fwd.result()
         bwd = fut_bwd.result()
-        in_set = bwd.join(core, on="v", how="left_anti").localCheckpoint(eager=True)
-        out_set = fwd.join(core, on="v", how="left_anti").localCheckpoint(eager=True)
+        in_set, _ = step(bwd.join(core, on="v", how="left_anti"))
+        out_set, _ = step(fwd.join(core, on="v", how="left_anti"))
         # TUBE membership: reachable from IN and reaching OUT while outside
         # core/IN/OUT. Seeds include IN/OUT themselves; the CASE order makes
         # that harmless (IN/OUT/CORE win first).
@@ -125,6 +128,8 @@ def bowtie_decomposition(
         from_in = fut_from_in.result()
         to_out = fut_to_out.result()
         weak = fut_weak.result()
+    _release(in_set)
+    _release(out_set)
     e_fwd.unpersist()
     e_bwd.unpersist()
     core_weak = weak.join(core, on="v").select(

@@ -20,9 +20,9 @@ logarithmic rounds", ICDE'13).
 Placement: while the live edge set is larger than COLLECT_THRESHOLD, each
 round runs as DataFrame jobs (the hook aggregate, then pointer jumps and the
 edge relabel as union + window steps, _follow), every intermediate a local
-checkpoint released before the call returns. Once the live edges fit, they
-come to the driver through Arrow and the numpy kernel (_hook_and_shortcut)
-finishes. The driver-side union-find this
+checkpoint (checkpoint.step) released before the call returns. Once the
+live edges fit, they come to the driver through Arrow and the numpy kernel
+(_hook_and_shortcut) finishes. The driver-side union-find this
 amounts to is bounded by the one constant, as "BTS: load-balanced
 distributed union-find" (ICDE'24) bounds a central one. Sketch Boruvka's
 distributed merge (sketch/boruvka.py) runs its sampled component pairs
@@ -35,9 +35,11 @@ import warnings
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from landscape_spark.checkpoint import _release, step
 
 # The most rows the driver owns. Exact CC collects its live edge set once it
 # has at most this many edges (with no distributed round run, the vertex
@@ -81,12 +83,6 @@ def _relabel(labels: DataFrame, remap: DataFrame) -> DataFrame:
     )
 
 
-def _release(checkpoint: DataFrame) -> None:
-    """Free a local checkpoint's blocks: they belong to the RDD under its
-    LogicalRDD leaf, which DataFrame.unpersist does not reach."""
-    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 def _hook_and_shortcut(
     u: np.ndarray, v: np.ndarray, n: int, max_iter: int
 ) -> tuple[np.ndarray, bool]:
@@ -114,7 +110,8 @@ def _hook_and_shortcut(
 
 def _follow(df: DataFrame, col: str, ptr: DataFrame) -> DataFrame:
     """``df`` with ``col`` moved along ptr's (x, p) pointers where it has
-    one, plus ``_to``: the new value, null where nothing moved. A union and
+    one, plus ``_to``: the new value, null where nothing moved (a ``_to``
+    that ``df`` carries from an earlier call is dropped). A union and
     a window over the key, not a join: Spark estimates a join's size as the
     PRODUCT of its inputs' estimates, and local checkpoints keep their
     plan's estimate, so joining a pointer table with itself once per jump
@@ -122,6 +119,7 @@ def _follow(df: DataFrame, col: str, ptr: DataFrame) -> DataFrame:
     planning stalls in BigInt arithmetic within a few rounds. A union's
     estimate is a sum. The cost: one task buffers (and spills) all rows of
     a key, as a shuffle join without skew splitting would."""
+    df = df.drop("_to")
     rows = df.withColumnRenamed(col, "_k").unionByName(
         ptr.select(F.col("x").alias("_k"), F.col("p").alias("_to")),
         allowMissingColumns=True,
@@ -134,14 +132,6 @@ def _follow(df: DataFrame, col: str, ptr: DataFrame) -> DataFrame:
             *[F.coalesce("_to", "_k").alias(c) if c == col else c for c in df.columns], "_to"
         )
     )
-
-
-def _checkpoint(df: DataFrame, agg) -> tuple[DataFrame, int]:
-    """Eager local checkpoint of ``df`` (less ``_to``) and the integer
-    aggregate ``agg``, observed on the same job."""
-    obs = Observation()
-    out = df.observe(obs, agg.alias("n")).drop("_to").localCheckpoint(eager=True)
-    return out, obs.get["n"]
 
 
 def connected_components_exact(
@@ -174,16 +164,18 @@ def connected_components_exact(
             hooks = sym.groupBy("x").agg(F.min("y").alias("p")).where(F.col("p") < F.col("x"))
             moved = 1
             while moved:
-                hooks, moved = _checkpoint(_follow(hooks, "p", hooks), F.count("_to"))
+                hooks, stats = step(_follow(hooks, "p", hooks), moved=F.count("_to"))
                 owned.append(hooks)
-            edges, n_live = _checkpoint(
-                _follow(_follow(edges, "x", hooks).drop("_to"), "y", hooks)
+                moved = stats["moved"]
+            edges, stats = step(
+                _follow(_follow(edges, "x", hooks), "y", hooks)
                 .where(F.col("x") != F.col("y"))
                 .select(F.least("x", "y").alias("x"), F.greatest("x", "y").alias("y"))
                 .distinct(),
-                F.count(F.lit(1)),
+                n=F.count(F.lit(1)),
             )
             owned.append(edges)
+            n_live = stats["n"]
             labels = _relabel(labels, hooks)
             rounds += 1
         converged = n_live == 0
@@ -214,7 +206,7 @@ def connected_components_exact(
                 stacklevel=2,
             )
         if owned:
-            labels = labels.localCheckpoint(eager=True)
+            labels, _ = step(labels)
     finally:
         # the labels checkpoint no longer reads them; on an error, nothing does
         for df in owned:

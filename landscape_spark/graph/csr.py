@@ -28,6 +28,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
+
 CSR_SCHEMA = "part int, vids binary, indptr binary, indices binary"
 
 
@@ -396,7 +398,8 @@ def pagerank_csr_blocked(
       3. partials shuffle on j and fold; the dangling scalar folds in as a
          1-row broadcast crossJoin (same trick as the join path — no
          driver collect in the loop);
-      4. the new shard row localCheckpoints, cutting lineage per iteration.
+      4. the new shard row is checkpointed (checkpoint.step), cutting
+         lineage per iteration and freeing the iteration it replaces.
 
     Values match the join path and the dense CSR path to float-sum
     reordering (~1e-13 relative; tested). ``blocks`` accepts a pre-built
@@ -406,10 +409,9 @@ def pagerank_csr_blocked(
     S = int(shards)
     n = int(n_vertices)
     width = -(-n // S)
-    if blocks is None:
-        blocks, deg_rows = build_blocked_csr(edges, n, S, num_partitions)
-    else:
-        blocks, deg_rows = blocks
+    built = blocks is None
+    blocks, deg_rows = build_blocked_csr(edges, n, S, num_partitions) if built else blocks
+    packed = blocks
     # cache the static block table PRE-PARTITIONED ON THE JOIN KEY: the
     # per-iteration rank join then reuses the cached partitioning and only
     # the S rank-shard rows shuffle — an unpartitioned cache moved (or
@@ -441,11 +443,8 @@ def pagerank_csr_blocked(
                     names=["i", "r"],
                 )
 
-    ranks = (
-        spark.range(S)
-        .repartition(min(num_partitions, S))
-        .mapInArrow(init, "i int, r binary")
-        .localCheckpoint(eager=True)
+    ranks, _ = step(
+        spark.range(S).repartition(min(num_partitions, S)).mapInArrow(init, "i int, r binary")
     )
 
     def spmv(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -535,17 +534,19 @@ def pagerank_csr_blocked(
         # every shard must emit a row even with no inbound edges: union a
         # zero partial per shard (tiny — S rows)
         zeros = ranks.select(F.col("i").alias("j"), F.lit(zero).alias("p"))
-        ranks = (
+        ranks, _ = step(
             partials.unionAll(zeros)
             .crossJoin(F.broadcast(dang_df))
             .repartition(min(num_partitions, S), "j")
-            .mapInArrow(update, "i int, r binary")
-            .localCheckpoint(eager=True)
+            .mapInArrow(update, "i int, r binary"),
+            release=(ranks,),
         )
 
     blocks.unpersist()  # the repartitioned copy; ranks are checkpointed
     if own_deg:
         deg_rows.unpersist()
+    if built:
+        _release(packed)  # the build's checkpoint, which only the caches read
 
     def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:

@@ -25,11 +25,12 @@ Scale design mirrors pagerank.py's join path:
   no driver collect, no O(n) broadcast anywhere in the loop (the same
   1-row-DF pattern as pagerank's dangling mass).
 * Lineage is cut by checkpointing each half-step's RAW contribution
-  aggregate (one eager action per half-step). The cut sits BEFORE the norm
-  on purpose: the norm is a broadcast scalar subquery Catalyst does not
-  exchange-dedup against the main side, so cutting after the division (the
-  r5 shape) executed every half-step's join+aggregate twice — once under
-  the norm, once under the division (measured 1.7x the half-step cost).
+  aggregate (one checkpoint.step per half-step, which frees the score
+  that half-step replaces). The cut sits BEFORE the norm on purpose: the
+  norm is a broadcast scalar subquery Catalyst does not exchange-dedup
+  against the main side, so cutting after the division (the r5 shape)
+  executed every half-step's join+aggregate twice — once under the norm,
+  once under the division (measured 1.7x the half-step cost).
 * The O(n) vertex frame is joined ONCE, in the final projection — a vertex
   absent from a half-step's aggregate has score exactly 0.0 and contributes
   nothing to the next join, so keeping it out of the loop is bit-identical
@@ -41,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import step
 from landscape_spark.session import local_parallelism
 
 
@@ -61,23 +63,24 @@ def hits(
     e_src.count()
     e_dst.count()
 
-    hubs = vertices.select(
-        "v", F.lit(1.0 / float(n_vertices)).alias("s")
-    ).localCheckpoint(eager=True)
+    hubs, _ = step(vertices.select("v", F.lit(1.0 / float(n_vertices)).alias("s")))
     auth = hubs
 
-    def _half_step(e: DataFrame, key: str, out: str, scores: DataFrame) -> DataFrame:
+    def _half_step(
+        e: DataFrame, key: str, out: str, scores: DataFrame, replaced: DataFrame
+    ) -> DataFrame:
         # raw(v) = sum of the other side's scores over edges incident at v.
         # CHECKPOINTED before the norm: the 1-row L1 norm is a broadcast
         # subquery Catalyst does not exchange-dedup against the main side,
         # so an un-cut raw would execute its join+aggregate TWICE per
-        # half-step (once under the norm, once under the division).
-        raw = (
+        # half-step (once under the norm, once under the division). The
+        # checkpoint of the score this half-step replaces is freed with it.
+        raw, _ = step(
             e.join(scores, F.col(key) == scores.v)
             .select(F.col(out).alias("v"), F.col("s").alias("c"))
             .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("c").alias("c")),
+            release=(replaced,),
         )
         norm = raw.agg(F.coalesce(F.sum("c"), F.lit(0.0)).alias("_n"))
         # vertices with no incident edge on this orientation never appear in
@@ -92,8 +95,8 @@ def hits(
         )
 
     for _ in range(iters):
-        auth = _half_step(e_src, "src", "dst", hubs)
-        hubs = _half_step(e_dst, "dst", "src", auth)
+        auth = _half_step(e_src, "src", "dst", hubs, auth)
+        hubs = _half_step(e_dst, "dst", "src", auth, hubs)
 
     out = (
         vertices.join(auth.select("v", F.col("s").alias("authority")), on="v", how="left")

@@ -20,9 +20,10 @@ Plan shape mirrors pagerank.py's join path:
   partitioning) + one map-side-combined groupBy(dst) + a left join onto
   the vertex frame — one real shuffle per iteration, no vertex-sized
   broadcast, no driver-side state;
-* lineage is cut with one eager localCheckpoint per iteration (the
-  score frame is referenced once per step, so plan growth is linear,
-  but 10+ chained joins still deserve a cut — same discipline as HITS).
+* lineage is cut with one checkpoint.step per iteration, which frees the
+  iteration it replaces (the score frame is referenced once per step, so
+  plan growth is linear, but 10+ chained joins still deserve a cut — same
+  discipline as HITS).
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import step
 from landscape_spark.session import local_parallelism
 
 
@@ -50,9 +52,7 @@ def katz_centrality(
     e = edges.select("src", "dst").repartition(p, "src").cache()
     e.count()
 
-    x = vertices.select("v", F.lit(float(beta)).alias("x")).localCheckpoint(
-        eager=True
-    )
+    x, _ = step(vertices.select("v", F.lit(float(beta)).alias("x")))
     for _ in range(iters):
         contrib = (
             e.join(x, e.src == x.v)
@@ -60,16 +60,15 @@ def katz_centrality(
             .groupBy("v")
             .agg(F.sum("c").alias("c"))
         )
-        x = (
-            vertices.join(contrib, on="v", how="left")
-            .select(
+        x, _ = step(
+            vertices.join(contrib, on="v", how="left").select(
                 "v",
                 (
                     F.lit(float(beta))
                     + F.lit(float(alpha)) * F.coalesce(F.col("c"), F.lit(0.0))
                 ).alias("x"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            release=(x,),
         )
     e.unpersist()
     return x.select("v", F.col("x").alias("katz"))
@@ -93,9 +92,7 @@ def eigenvector_centrality(
     p = local_parallelism(spark)
     e = edges.select("src", "dst").repartition(p, "src").cache()
     e.count()
-    x = vertices.select(
-        "v", F.lit(1.0 / float(n_vertices)).alias("x")
-    ).localCheckpoint(eager=True)
+    x, _ = step(vertices.select("v", F.lit(1.0 / float(n_vertices)).alias("x")))
     for _ in range(iters):
         # checkpoint the RAW aggregate BEFORE the norm (the hits.py fix):
         # the 1-row norm is a broadcast scalar subquery Catalyst does not
@@ -103,12 +100,12 @@ def eigenvector_centrality(
         # its join+aggregate twice per iteration. Vertices missing from raw
         # hold score exactly 0.0 and contribute nothing to the next join —
         # the O(n) vertex left-join happens once, below the loop.
-        raw = (
+        raw, _ = step(
             e.join(x, e.src == x.v)
             .select(F.col("dst").alias("v"), F.col("x").alias("c"))
             .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("c").alias("c")),
+            release=(x,),
         )
         norm = raw.agg(F.coalesce(F.sum("c"), F.lit(0.0)).alias("_n"))
         x = raw.crossJoin(F.broadcast(norm)).select(

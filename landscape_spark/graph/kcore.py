@@ -29,35 +29,41 @@ hash partitioning). The window streams each vertex's neighbor list with
 spill — nothing materializes a hub's full neighbor array in one row
 (the collect_list formulation would). Rounds to fixpoint are bounded by
 the peeling depth of the graph (worst case O(n) on a path, tens on web
-graphs); lineage is cut every round.
+graphs); lineage is cut every round (checkpoint.step, which frees the
+round it replaces).
 """
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import step
 from landscape_spark.graph.cc import symmetrize
+from landscape_spark.session import local_parallelism
 
 
-def h_round(sym: DataFrame, state: DataFrame, vertices: DataFrame) -> DataFrame:
-    """One H-operator round: h'(v) = H-index of {h(w) : w ~ v}. Exposed
-    un-checkpointed so plan tests can pin the round's physical shape
-    (one join exchange + one per-vertex window exchange; the aggregate
-    rides the window's hash partitioning)."""
+def _h_round(sym: DataFrame, state: DataFrame) -> DataFrame:
+    """One H-operator round over the edge-incident vertices: h'(v) = H-index
+    of {h(w) : w ~ v}, as (v, h). Its physical shape — one join exchange
+    plus one per-vertex window exchange, the aggregate riding the window's
+    hash partitioning — is pinned by a plan test."""
     w = Window.partitionBy("v").orderBy(F.desc("hw"))
     msgs = sym.join(
         state.select(F.col("v").alias("w"), F.col("h").alias("hw")), on="w"
     ).select("v", "hw")
-    new_h = (
+    return (
         msgs.withColumn("rn", F.row_number().over(w))
         # hw desc-sorted, rn ascending: hw >= rn is prefix-closed, so
         # the max satisfying rank IS the H-index of the neighbor values
         .groupBy("v")
-        .agg(F.max(F.when(F.col("hw") >= F.col("rn"), F.col("rn")).otherwise(0)).alias("h"))
-    )
-    return vertices.join(new_h, on="v", how="left").select(
-        "v", F.coalesce("h", F.lit(0)).cast("long").alias("h")
+        .agg(
+            F.max(
+                F.when(F.col("hw") >= F.col("rn"), F.col("rn")).otherwise(0)
+            ).cast("long").alias("h")
+        )
     )
 
 
@@ -70,13 +76,6 @@ def coreness(
     k-core). und_edges: canonical (a, b) with a < b; vertices: (v).
     Isolated vertices have core 0.
     """
-    import warnings
-
-    from pyspark.sql import Observation
-
-    from landscape_spark.session import local_parallelism
-
-    w = Window.partitionBy("v").orderBy(F.desc("hw"))
     # adjacency materialized once, partitioned on the MESSAGE key (w): each
     # round's join then reuses the cached partitioning and only the
     # vertex-sized state frame moves (guide §2.4)
@@ -91,38 +90,18 @@ def coreness(
     # the convergence certificate (global INTEGER sum — exact under any
     # task-completion merge order) rides the checkpoint action itself via
     # observe(), so no round pays a separate O(n)-scan certificate job
-    obs0 = Observation()
-    state = (
-        sym.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("h"))
-        .observe(obs0, F.sum("h").alias("s"))
-        .localCheckpoint(eager=True)
+    state, stats = step(
+        sym.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("h")),
+        s=F.sum("h"),
     )
-    prev_sum = obs0.get["s"]
+    prev_sum = stats["s"]
     converged = False
     for _ in range(max_iter):
-        msgs = sym.join(
-            state.select(F.col("v").alias("w"), F.col("h").alias("hw")), on="w"
-        ).select("v", "hw")
-        obs = Observation()
-        state = (
-            msgs.withColumn("rn", F.row_number().over(w))
-            # hw desc-sorted, rn ascending: hw >= rn is prefix-closed, so
-            # the max satisfying rank IS the H-index of the neighbor values
-            .groupBy("v")
-            .agg(
-                F.max(
-                    F.when(F.col("hw") >= F.col("rn"), F.col("rn")).otherwise(0)
-                ).cast("long").alias("h")
-            )
-            .observe(obs, F.sum("h").alias("s"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
+        state, stats = step(_h_round(sym, state), release=(state,), s=F.sum("h"))
+        if stats["s"] == prev_sum:
             converged = True
             break
-        prev_sum = cur_sum
+        prev_sum = stats["s"]
     if not converged:
         warnings.warn(
             f"coreness did not converge within {max_iter} rounds — values "

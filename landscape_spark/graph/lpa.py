@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
 from landscape_spark.graph.cc import symmetrize
 
 
@@ -42,11 +43,9 @@ def label_propagation(
     # that would otherwise re-execute per round
     sym = symmetrize(und_edges).cache()
     if start_labels is not None:
-        labels = start_labels.select("v", "label").localCheckpoint(eager=True)
+        labels, _ = step(start_labels.select("v", "label"))
     else:
-        labels = vertices.select("v", F.col("v").alias("label")).localCheckpoint(
-            eager=True
-        )
+        labels, _ = step(vertices.select("v", F.col("v").alias("label")))
     ckpt = None
     if checkpoint_dir is not None:
         from landscape_spark.checkpoint import RoundCheckpointer
@@ -64,10 +63,11 @@ def label_propagation(
             .where(F.col("rn") == 1)
             .select("v", F.col("label").alias("new_label"))
         )
-        labels = (
-            labels.join(best, on="v", how="left")
-            .select("v", F.coalesce("new_label", "label").alias("label"))
-            .localCheckpoint(eager=True)
+        labels, _ = step(
+            labels.join(best, on="v", how="left").select(
+                "v", F.coalesce("new_label", "label").alias("label")
+            ),
+            release=(labels,),
         )
         if ckpt is not None and (_it + 1) % checkpoint_every == 0:
             ckpt.save_round(
@@ -99,14 +99,12 @@ def seeded_label_propagation(
     until the wave reaches it. Returns (v, label) with label NULL for
     vertices no seed can reach. Same per-round plan shape as
     label_propagation (one count shuffle + a per-vertex window)."""
-    seeds = seed_labels.select(
-        "v", F.col("label").alias("seed_label")
-    ).localCheckpoint(eager=True)
+    seeds, _ = step(seed_labels.select("v", F.col("label").alias("seed_label")))
     sym = symmetrize(und_edges).cache()
-    labels = (
-        vertices.join(seeds, on="v", how="left")
-        .select("v", F.col("seed_label").alias("label"))
-        .localCheckpoint(eager=True)
+    labels, _ = step(
+        vertices.join(seeds, on="v", how="left").select(
+            "v", F.col("seed_label").alias("label")
+        )
     )
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("label"))
     for _ in range(iters):
@@ -122,7 +120,7 @@ def seeded_label_propagation(
             .where(F.col("rn") == 1)
             .select("v", F.col("label").alias("new_label"))
         )
-        labels = (
+        labels, _ = step(
             labels.join(best, on="v", how="left")
             .join(seeds, on="v", how="left")
             .select(
@@ -130,10 +128,11 @@ def seeded_label_propagation(
                 F.coalesce(
                     "seed_label", "new_label", "label"
                 ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            release=(labels,),
         )
     sym.unpersist()  # labels are checkpointed
+    _release(seeds)
     return labels
 
 

@@ -19,8 +19,9 @@ plain filtered aggregate of the checkpointed ranks (a 1-row broadcast), with
 NO per-iteration O(n) join or broadcast anywhere in the loop (at 10^9
 vertices a per-iteration vertex-set broadcast is a driver OOM). Each
 LINEAGE BATCH (lineage_every iterations; 1 on work-bound graphs) is one
-eager job (the localCheckpoint) containing one shuffle per iteration (the
-contrib groupBy).
+eager job (a checkpoint.step) containing one shuffle per iteration (the
+contrib groupBy); the previous batch's checkpoint is freed once nothing
+reads it.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
 from landscape_spark.session import local_parallelism
 
 
@@ -109,21 +111,19 @@ def pagerank(
     # static dangling flag: outdeg(v) = 0. Computed ONCE, carried through the
     # rank table so the per-iteration dangling mass is a filtered sum of
     # ranks — never a join against a vertex-sized side.
-    vstate = (
+    vstate, _ = step(
         vertices.join(
             deg.select(F.col("src").alias("v"), F.lit(True).alias("_o")),
             on="v",
             how="left",
-        )
-        .select("v", F.col("_o").isNull().alias("is_dang"))
-        .localCheckpoint(eager=True)
+        ).select("v", F.col("_o").isNull().alias("is_dang"))
     )
     if start_ranks is not None:
-        ranks = start_ranks.select("v", "r", "is_dang").localCheckpoint(eager=True)
+        ranks, _ = step(start_ranks.select("v", "r", "is_dang"))
     else:
-        ranks = vstate.select(
-            "v", F.lit(1.0 / n).alias("r"), "is_dang"
-        ).localCheckpoint(eager=True)
+        ranks, _ = step(vstate.select("v", F.lit(1.0 / n).alias("r"), "is_dang"))
+    # the checkpoint the lazy rank chain starts from, freed at the next cut
+    base = ranks
 
     ckpt = None
     if checkpoint_dir is not None:
@@ -191,8 +191,10 @@ def pagerank(
         # dedups the dangling sub-plans). Cuts per-iteration driver
         # scheduling + block-materialization fixed costs ~B-fold at small
         # inputs without changing any value.
-        if (_it + 1 - start_iter) % lineage_every == 0 or _it == iters - 1:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
+        cut = (_it + 1 - start_iter) % lineage_every == 0 or _it == iters - 1
+        if cut:
+            new_ranks, _ = step(new_ranks)
+        delta = None
         if tol is not None:
             delta = (
                 new_ranks.join(
@@ -201,11 +203,13 @@ def pagerank(
                 .agg(F.max(F.abs(F.col("r") - F.col("r_old"))))
                 .first()[0]
             )
-            ranks = new_ranks
-            if delta < tol:
-                break
-        else:
-            ranks = new_ranks
+        if cut:
+            # nothing reads the previous cut any more (the delta above did)
+            _release(base)
+            base = new_ranks
+        ranks = new_ranks
+        if delta is not None and delta < tol:
+            break
         if ckpt is not None and (_it + 1) % checkpoint_every == 0:
             _t0 = _time.time()
             ckpt.save_round(
@@ -220,6 +224,7 @@ def pagerank(
                 metrics={"iter_wall_ts": _t0},
             )
     ew.unpersist()
+    _release(vstate)  # ranks is a checkpoint here (every exit is a cut)
     return ranks.select("v", F.col("r").alias("pr_score"))
 
 
@@ -299,18 +304,14 @@ def personalized_pagerank(
     p_col = F.when(
         F.col("v").isin([int(s) for s in seeds]), F.lit(1.0 / len(seeds))
     ).otherwise(F.lit(0.0))
-    vstate = (
+    vstate, _ = step(
         vertices.join(
             deg.select(F.col("src").alias("v"), F.lit(True).alias("_o")),
             on="v",
             how="left",
-        )
-        .select("v", p_col.alias("p"), F.col("_o").isNull().alias("is_dang"))
-        .localCheckpoint(eager=True)
+        ).select("v", p_col.alias("p"), F.col("_o").isNull().alias("is_dang"))
     )
-    ranks = vstate.select("v", F.col("p").alias("r"), "p", "is_dang").localCheckpoint(
-        eager=True
-    )
+    ranks, _ = step(vstate.select("v", F.col("p").alias("r"), "p", "is_dang"))
 
     for _ in range(iters):
         contrib = (
@@ -322,7 +323,7 @@ def personalized_pagerank(
         dangling_df = ranks.where("is_dang").agg(
             F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
         )
-        ranks = (
+        ranks, _ = step(
             vstate.join(contrib, on="v", how="left")
             .crossJoin(F.broadcast(dangling_df))
             .select(
@@ -337,8 +338,9 @@ def personalized_pagerank(
                 ).alias("r"),
                 "p",
                 "is_dang",
-            )
-            .localCheckpoint(eager=True)
+            ),
+            release=(ranks,),
         )
     ew.unpersist()
+    _release(vstate)
     return ranks.select("v", F.col("r").alias("ppr_score"))

@@ -23,9 +23,9 @@ relation is repartitioned + cached once per orientation (each copy
 pruned to the 3 columns its half-steps read), so every half-step is one
 hash join against a cached partitioning + one map-side-combined
 aggregate (one real shuffle), no vertex-sized broadcast, lineage cut per
-iteration — and the two independent walks run as overlapped concurrent
-jobs (guide §2.6) so one walk's straggler tail back-fills with the
-other's tasks.
+iteration (checkpoint.step, which frees the iteration it replaces) —
+and the two independent walks run as overlapped concurrent jobs (guide
+§2.6) so one walk's straggler tail back-fills with the other's tasks.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import step
 from landscape_spark.session import local_parallelism
 
 
@@ -69,9 +70,7 @@ def salsa(
         partitioned on score_key, back_e on back_key."""
         side = score_e.select(F.col(score_key).alias("v")).distinct()
         n_side = side.count()
-        s = side.select(
-            "v", F.lit(1.0 / float(n_side)).alias("s")
-        ).localCheckpoint(eager=True)
+        s, _ = step(side.select("v", F.lit(1.0 / float(n_side)).alias("s")))
         for _ in range(iters):
             back = (
                 score_e.join(s, score_e[score_key] == s.v)
@@ -82,15 +81,15 @@ def salsa(
                 .groupBy("u")
                 .agg(F.sum("c").alias("b"))
             )
-            s = (
+            s, _ = step(
                 back_e.join(back, back_e[back_key] == back.u)
                 .select(
                     F.col(score_key).alias("v"),
                     (F.col("b") / F.col(fwd_deg)).alias("c"),
                 )
                 .groupBy("v")
-                .agg(F.sum("c").alias("s"))
-                .localCheckpoint(eager=True)
+                .agg(F.sum("c").alias("s")),
+                release=(s,),
             )
         return s
 

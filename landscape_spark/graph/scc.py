@@ -37,17 +37,20 @@ by the depth of the SCC condensation DAG that survives trimming.
 Scale notes: all state is vertex-partitioned DataFrames; per inner round
 one shuffle for the message join plus the min/distinct aggregate. The
 remaining-graph edge relation is re-derived by semi-join each outer
-round and checkpointed, so lineage stays O(1) across the nested loops.
+round and checkpointed, so lineage stays O(1) across the nested loops;
+every checkpoint goes through checkpoint.step, which frees the one it
+replaces, and only the assigned SCC parts outlive the call.
 """
 
 from __future__ import annotations
 
+import warnings
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from landscape_spark.checkpoint import _release, step
 
 
 def strongly_connected_components(
@@ -58,18 +61,18 @@ def strongly_connected_components(
 ) -> DataFrame:
     """Return (v, comp): comp is the MIN vertex id in v's strongly
     connected component (unique canonical fixpoint, same convention as
-    the undirected CC operators). edges: (src, dst); vertices: (v)."""
-    import warnings
+    the undirected CC operators). edges: (src, dst); vertices: (v).
 
-    remaining = _checkpoint(vertices.select("v"))
-    edges_rem = _checkpoint(edges.select("src", "dst"))
+    The result is a lazy union over this call's per-round checkpoints (the
+    SCCs each round assigned), which stay persisted while it is read; a
+    caller that re-checkpoints it frees them with checkpoint._release."""
+    count = F.count(F.lit(1))
+    remaining, _ = step(vertices.select("v"))
+    edges_rem, _ = step(edges.select("src", "dst"))
     assigned: list[DataFrame] = []
-
-    from pyspark.sql import Observation
 
     for _outer in range(max_outer):
         # --- 1. trim singleton SCCs (in-deg 0 or out-deg 0) to fixpoint ---
-        n_remaining = None
         while True:
             # one endpoint-flag aggregate replaces the two distinct passes:
             # a vertex survives iff it occurs as BOTH a src and a dst
@@ -84,76 +87,58 @@ def strongly_connected_components(
                 .select("v")
             )
             # emptiness probes ride the checkpoint actions via observe()
-            obs_k, obs_t = Observation(), Observation()
-            keep = _checkpoint(
-                remaining.join(keep_v, on="v", how="left_semi").observe(
-                    obs_k, F.count(F.lit(1)).alias("n")
-                )
+            keep, kept = step(remaining.join(keep_v, on="v", how="left_semi"), n=count)
+            trimmed, cut = step(
+                remaining.join(keep, on="v", how="left_anti"), release=(remaining,), n=count
             )
-            trimmed = _checkpoint(
-                remaining.join(keep, on="v", how="left_anti").observe(
-                    obs_t, F.count(F.lit(1)).alias("n")
-                )
-            )
-            n_remaining = obs_k.get["n"]
-            if obs_t.get["n"] == 0:
+            remaining = keep
+            if cut["n"] == 0:
+                _release(trimmed)
                 break
             assigned.append(trimmed.select("v", F.col("v").alias("comp")))
-            remaining = keep
             # shrink against the (typically small) TRIMMED set — an
             # anti-join Catalyst broadcasts when it fits, instead of two
             # semi-joins against the n-sized keep set
-            edges_rem = _checkpoint(
+            edges_rem, _ = step(
                 edges_rem.join(
                     trimmed.withColumnRenamed("v", "src"), on="src", how="left_anti"
-                ).join(trimmed.withColumnRenamed("v", "dst"), on="dst", how="left_anti")
+                ).join(trimmed.withColumnRenamed("v", "dst"), on="dst", how="left_anti"),
+                release=(edges_rem,),
             )
-        if n_remaining == 0:
+        if kept["n"] == 0:
             break
 
         # NOTE measured, kept plain: materializing orientation-partitioned
         # cached copies of edges_rem per outer round benched +10% at sf0.1
         # — the color/frontier side broadcasts while it fits, so the two
         # cache-building exchanges bought nothing per inner round
-        e_src = edges_rem
-        e_dst = edges_rem
 
         # --- 2. forward coloring: color(v) = min id reaching v ---
         # the certificate (INTEGER color sum — exact under any task merge
         # order) rides each checkpoint action via observe(): no separate
         # per-round certificate job
-        from pyspark.sql import Observation
-
-        obs0 = Observation()
-        colors = _checkpoint(
-            remaining.select("v", F.col("v").alias("color")).observe(
-                obs0, F.sum("color").alias("s")
-            )
+        colors, stats = step(
+            remaining.select("v", F.col("v").alias("color")), s=F.sum("color")
         )
-        prev_sum = obs0.get["s"]
+        prev_sum = stats["s"]
         colors_converged = False
         for _ in range(max_label_iter):
             msgs = (
-                e_src.join(
-                    colors.withColumnRenamed("v", "src"), on="src"
-                )
+                edges_rem.join(colors.withColumnRenamed("v", "src"), on="src")
                 .select(F.col("dst").alias("v"), "color")
                 # color(u) <= u, so a message with color >= v can never
                 # lower v's label — drop pre-shuffle (cc.py monotonicity)
                 .where(F.col("color") < F.col("v"))
             )
-            obs = Observation()
-            colors = _checkpoint(
-                msgs.unionAll(colors)
-                .groupBy("v")
-                .agg(F.min("color").alias("color"))
-                .observe(obs, F.sum("color").alias("s"))
+            colors, stats = step(
+                msgs.unionAll(colors).groupBy("v").agg(F.min("color").alias("color")),
+                release=(colors,),
+                s=F.sum("color"),
             )
-            cur_sum = obs.get["s"]
-            if cur_sum == prev_sum:
+            if stats["s"] == prev_sum:
                 colors_converged = True
                 break
-            prev_sum = cur_sum
+            prev_sum = stats["s"]
         if not colors_converged:
             # un-converged colors make the backward mark under-approximate
             # SCCs — not a silent wrong answer we are willing to return
@@ -163,7 +148,7 @@ def strongly_connected_components(
             )
 
         # --- 3. backward mark from roots within each color class ---
-        marked = _checkpoint(
+        marked, _ = step(
             colors.where(F.col("color") == F.col("v")).select(
                 "v", F.col("color").alias("comp")
             )
@@ -171,40 +156,40 @@ def strongly_connected_components(
         frontier = marked
         while True:
             cand = (
-                e_dst.join(frontier.withColumnRenamed("v", "dst"), on="dst")
+                edges_rem.join(frontier.withColumnRenamed("v", "dst"), on="dst")
                 .select(F.col("src").alias("v"), "comp")
                 .join(colors, on="v")
                 .where(F.col("color") == F.col("comp"))
                 .select("v", "comp")
                 .distinct()
             )
-            obs_n = Observation()
-            new = _checkpoint(
-                cand.join(marked.select("v"), on="v", how="left_anti").observe(
-                    obs_n, F.count(F.lit(1)).alias("n")
-                )
+            new, stats = step(
+                cand.join(marked.select("v"), on="v", how="left_anti"),
+                release=() if frontier is marked else (frontier,),
+                n=count,
             )
-            if obs_n.get["n"] == 0:
+            if stats["n"] == 0:
+                _release(new)
                 break
-            marked = _checkpoint(marked.unionAll(new))
+            marked, _ = step(marked.unionAll(new), release=(marked,))
             frontier = new
 
         # --- 4. assign the SCCs found this round and shrink the graph ---
         assigned.append(marked)
-        obs_r = Observation()
-        remaining = _checkpoint(
-            remaining.join(marked.select("v"), on="v", how="left_anti").observe(
-                obs_r, F.count(F.lit(1)).alias("n")
-            )
+        remaining, stats = step(
+            remaining.join(marked.select("v"), on="v", how="left_anti"),
+            release=(remaining, colors),
+            n=count,
         )
-        if obs_r.get["n"] == 0:
+        if stats["n"] == 0:
             break
         # shrink against the small marked set (broadcastable), not the
         # n-sized remaining set — same anti-join trick as the trim
-        edges_rem = _checkpoint(
+        edges_rem, _ = step(
             edges_rem.join(
                 marked.select(F.col("v").alias("src")), on="src", how="left_anti"
-            ).join(marked.select(F.col("v").alias("dst")), on="dst", how="left_anti")
+            ).join(marked.select(F.col("v").alias("dst")), on="dst", how="left_anti"),
+            release=(edges_rem,),
         )
     else:
         warnings.warn(
@@ -215,9 +200,9 @@ def strongly_connected_components(
             stacklevel=2,
         )
 
+    _release(edges_rem)
     if not assigned:
-        return vertices.select("v", F.col("v").alias("comp")).limit(0)
-    out = assigned[0]
-    for df in assigned[1:]:
-        out = out.unionAll(df)
-    return out
+        # no vertex at all: the empty result reads only this call's state
+        return remaining.select("v", F.col("v").alias("comp")).limit(0)
+    _release(remaining)
+    return reduce(DataFrame.unionAll, assigned)

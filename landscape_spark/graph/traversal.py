@@ -21,9 +21,9 @@ side is the small side — AQE broadcasts it while it fits, and web-graph
 frontiers peak at a few percent of n), one distinct on the candidate
 set, one anti-join against the visited table (hash-partitioned on v both
 times, so the exchange is reused). Lineage is cut every round
-(localCheckpoint) to keep the plan O(1); the loop terminates the first
-round the frontier comes back empty — `isEmpty` on the checkpointed
-frontier is O(1) jobs, not a full count.
+(checkpoint.step, which frees the round it replaces) to keep the plan
+O(1); the loop terminates the first round the frontier comes back empty,
+its row count observed on the frontier's own checkpoint job.
 
 Unreached vertices are absent from the output (a left join against the
 vertex table is the caller's choice of NULL vs sentinel).
@@ -31,10 +31,23 @@ vertex table is the caller's choice of NULL vs sentinel).
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from landscape_spark.checkpoint import _release, step
+from landscape_spark.graph.cc import _local_frame
+
+
+def _seed_frame(spark, seeds: Sequence[int], dist_type: str) -> DataFrame:
+    """(v, dist=0) over the distinct seeds, built through Arrow: the first
+    round's frontier, which reads no checkpoint."""
+    v = np.asarray(list(dict.fromkeys(int(s) for s in seeds)), dtype=np.int64)
+    zeros = np.zeros(v.size, dtype=np.int32 if dist_type == "int" else np.int64)
+    return _local_frame(spark, {"v": v, "dist": zeros}, f"v long, dist {dist_type}")
 
 
 def bfs_distances(
@@ -47,36 +60,34 @@ def bfs_distances(
     at the graph's seed eccentricity (web graphs: ~tens); hitting the cap
     returns the correct ≤max_iter-hop ball, and distances in it are exact.
     """
-    from pyspark.sql import Observation
-
-    spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in dict.fromkeys(seeds)], "v long, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = dist.select("v")
+    frontier = _seed_frame(edges.sparkSession, seeds, "int")
+    dist, _ = step(frontier)
     for d in range(1, max_iter + 1):
         candidates = (
-            edges.join(frontier.withColumnRenamed("v", "src"), on="src")
+            edges.join(frontier.select(F.col("v").alias("src")), on="src")
             .select(F.col("dst").alias("v"))
             .distinct()
         )
         # the emptiness probe rides the checkpoint action via observe()
         # (integer count — exact), saving one job per round
-        obs = Observation()
-        nxt = (
-            candidates.join(dist, on="v", how="left_anti")
-            .select("v", F.lit(d).cast("int").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        nxt, stats = step(
+            candidates.join(dist, on="v", how="left_anti").select(
+                "v", F.lit(d).cast("int").alias("dist")
+            ),
+            release=(frontier,),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if stats["n"] == 0:
+            _release(nxt)
             break
         # NOTE measured, kept: accumulating dist as a LAZY union of the
         # checkpointed levels (no per-round copy) re-scans L fragments in
         # every round's anti-join and benched +6% at sf0.1 — the
         # consolidated re-checkpoint wins despite the extra job
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("v")
+        dist, _ = step(dist.unionAll(nxt), release=(dist,))
+        frontier = nxt
+    else:
+        _release(frontier)
     return dist
 
 
@@ -98,18 +109,15 @@ def sssp_weighted(
     improves, which positive weights bound by the distinct-distance count,
     in practice a few rounds past the hop eccentricity). Per round: one
     frontier-sized join + a min-aggregate + one join against the distance
-    table; lineage cut per round. Terminates exactly when no distance
-    improves (empty frontier)."""
-    spark = edges.sparkSession
+    table; lineage cut per round (checkpoint.step). Terminates exactly when
+    no distance improves (empty frontier); reaching max_iter rounds with
+    the frontier still non-empty WARNS: some distances may then be too
+    large."""
     ew = edges.select(
         "src", "dst", F.col(weight_col).cast("long").alias("_w")
     )
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in dict.fromkeys(seeds)], "v long, dist long"
-    ).localCheckpoint(eager=True)
-    from pyspark.sql import Observation
-
-    frontier = dist
+    frontier = _seed_frame(edges.sparkSession, seeds, "long")
+    dist, _ = step(frontier)
     for _ in range(max_iter):
         cand = (
             ew.join(
@@ -122,21 +130,27 @@ def sssp_weighted(
             .agg(F.min(F.col("_d") + F.col("_w")).alias("cand"))
         )
         joined = cand.join(dist, on="v", how="left")
-        obs = Observation()
-        improved = (
+        improved, stats = step(
             joined.where(
                 F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
-            )
-            .select("v", F.col("cand").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            ).select("v", F.col("cand").alias("dist")),
+            release=(frontier,),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if stats["n"] == 0:
+            _release(improved)
             break
-        dist = (
-            dist.join(improved.select("v"), on="v", how="left_anti")
-            .unionAll(improved)
-            .localCheckpoint(eager=True)
+        dist, _ = step(
+            dist.join(improved.select("v"), on="v", how="left_anti").unionAll(improved),
+            release=(dist,),
         )
         frontier = improved
+    else:
+        _release(frontier)
+        warnings.warn(
+            f"sssp_weighted stopped at max_iter={max_iter} with its frontier "
+            "non-empty — some distances may be too large; raise max_iter",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     return dist

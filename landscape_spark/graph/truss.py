@@ -17,8 +17,8 @@ the surviving subgraph and deletes ALL under-threshold edges at once —
 deterministic (no tie-breaking), and the round count is O(peel depth),
 not O(edges). Per round: one triangle enumeration (two joins + an
 aggregate) + one semi-join + one count action for the fixpoint probe.
-Lineage is cut per round with an eager localCheckpoint, so round r never
-re-executes rounds 0..r-1.
+Lineage is cut per round (checkpoint.step, which frees the round it
+replaces), so round r never re-executes rounds 0..r-1.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
 from landscape_spark.graph.triangles import _oriented_by_degree
 
 
@@ -86,37 +87,30 @@ def k_truss(
     for pathologically deep peels; each round strictly shrinks the edge
     set until the fixpoint, so termination is guaranteed)."""
     k = int(k)
-
-    def _supp_round(e: DataFrame) -> DataFrame:
-        # NOTE measured, kept recompute: caching the oriented relation for
-        # the round's three references benched +18% at sf0.1 — the cache
-        # materialization job costs more than two recomputes of the narrow
-        # broadcast-join orientation over the checkpointed edge set
-        return edge_support(e).localCheckpoint(eager=True)
-
-    e = und_edges.select("a", "b").localCheckpoint(eager=True)
-    supp = _supp_round(e)
+    count = F.count(F.lit(1))
+    # NOTE measured, kept recompute: caching the oriented relation for each
+    # round's three references benched +18% at sf0.1 — the cache
+    # materialization job costs more than two recomputes of the narrow
+    # broadcast-join orientation over the checkpointed edge set
+    e, stats = step(und_edges.select("a", "b"), n=count)
+    supp, _ = step(edge_support(e), release=(e,))
     if k <= 2:
         return supp
-    from pyspark.sql import Observation
-
-    n_prev = e.count()
+    n_prev = stats["n"]
     for _ in range(max_rounds):
-        keep = supp.where(F.col("support") >= F.lit(k - 2)).select("a", "b")
         # survivor count rides the checkpoint action (integer — exact)
-        obs = Observation()
-        e_new = keep.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        n_new = obs.get["n"]
-        if n_new == n_prev:
+        e, stats = step(supp.where(F.col("support") >= F.lit(k - 2)).select("a", "b"), n=count)
+        if stats["n"] == n_prev:
             # nothing was deleted: supp is already the support within the
             # surviving subgraph — exact fixpoint
+            _release(e)
             return supp
-        e, n_prev = e_new, n_new
-        if n_new == 0:
+        if stats["n"] == 0:
+            _release(e)
             return supp.where(F.lit(False))
-        supp = _supp_round(e)
+        supp, _ = step(edge_support(e), release=(e, supp))
+        n_prev = stats["n"]
+    _release(supp)
     raise RuntimeError(
         f"k_truss did not converge within {max_rounds} rounds"
     )

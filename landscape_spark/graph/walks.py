@@ -28,15 +28,19 @@ cached; each step resolves the hop rank with a vertex-keyed degree join,
 then fetches the chosen neighbor via an EQUI-join on (src, rank) — one
 matching adjacency row per walker, NO per-hub fan-out (see the in-loop
 comment for the 10^12-row failure mode the equi-key avoids). Lineage is
-cut per step.
+cut per step (checkpoint.step); every step's checkpoint stays, as the
+result is their union.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from landscape_spark.checkpoint import step
 from landscape_spark.session import local_parallelism
 
 # the public hop law — mirrored verbatim in the DuckDB oracle SQL
@@ -94,7 +98,7 @@ def random_walks(
         F.lit(0).alias("step"),
         F.col("start_v").alias("v"),
     )
-    state = state.localCheckpoint(eager=True)
+    state, _ = step(state)
     levels = [state]
     for t in range(1, int(walk_len) + 1):
         walk_key = F.col("start_v") * F.lit(WALK_SHIFT) + F.col("walk")
@@ -114,27 +118,20 @@ def random_walks(
                 (h % F.col("out_deg")).alias("rank"),
             )
         )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        nxt = (
-            picked.join(adj.select("src", "rank", "dst"), on=["src", "rank"])
-            .select(
+        # every level stays: the result is their union
+        state, stats = step(
+            picked.join(adj.select("src", "rank", "dst"), on=["src", "rank"]).select(
                 "start_v",
                 "walk",
                 F.lit(t).alias("step"),
                 F.col("dst").alias("v"),
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            ),
+            n=F.count(F.lit(1)),
         )
-        levels.append(nxt)
-        state = nxt
-        if obs.get["n"] == 0:
+        levels.append(state)
+        if stats["n"] == 0:
             break
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionAll(lv)
+    out = reduce(DataFrame.unionAll, levels)
     adj.unpersist()
     deg.unpersist()
     return out
@@ -205,7 +202,7 @@ def node2vec_walks(
         F.lit(-1).cast("long").alias("prev"),
         F.col("start_v").alias("v"),
     )
-    state = state.localCheckpoint(eager=True)
+    state, _ = step(state)
     levels = [state.select("start_v", "walk", "step", "v")]
     w_cum = Window.partitionBy("start_v", "walk").orderBy("w").rowsBetween(
         Window.unboundedPreceding, 0
@@ -248,22 +245,21 @@ def node2vec_walks(
                 & (F.col("_u") * F.col("tot") >= F.col("cum") - F.col("wt"))
             )
         )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        state = picked.select(
-            "start_v",
-            "walk",
-            F.lit(t).alias("step"),
-            F.col("v").alias("prev"),
-            F.col("w").alias("v"),
-        ).observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+        # every level stays: the result is their union
+        state, stats = step(
+            picked.select(
+                "start_v",
+                "walk",
+                F.lit(t).alias("step"),
+                F.col("v").alias("prev"),
+                F.col("w").alias("v"),
+            ),
+            n=F.count(F.lit(1)),
+        )
         levels.append(state.select("start_v", "walk", "step", "v"))
-        if obs.get["n"] == 0:
+        if stats["n"] == 0:
             break
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionAll(lv)
+    out = reduce(DataFrame.unionAll, levels)
     adj.unpersist()
     prev_edge.unpersist()
     return out

@@ -44,9 +44,10 @@ import warnings
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from landscape_spark.checkpoint import _release, step
 from landscape_spark.graph.cc import (
     COLLECT_THRESHOLD,
     _local_frame,
@@ -213,11 +214,8 @@ def _distributed_samples(
     # whole narrow sampling pipeline in incremental waves. The row count
     # rides the checkpoint action via observe() (integer — exact under any
     # task merge order), saving one probe job per pass.
-    obs = Observation()
-    resolved = resolved.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
-    return resolved, obs.get["n"]
+    resolved, stats = step(resolved, n=F.count(F.lit(1)))
+    return resolved, stats["n"]
 
 
 def _min_edges(resolved: DataFrame) -> tuple[DataFrame, int]:
@@ -234,16 +232,14 @@ def _min_edges(resolved: DataFrame) -> tuple[DataFrame, int]:
     sym = ek.select(F.col("comp_u").alias("c"), "a", "b", "comp_u", "comp_v").unionAll(
         ek.select(F.col("comp_v").alias("c"), "a", "b", "comp_u", "comp_v")
     )
-    obs = Observation()
-    kept = (
+    kept, stats = step(
         sym.groupBy("c")
         .agg(F.min_by(F.struct("a", "b", "comp_u", "comp_v"), F.struct("a", "b")).alias("e"))
         .select("e.a", "e.b", "e.comp_u", "e.comp_v")
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    return kept, obs.get["n"]
+    return kept, stats["n"]
 
 
 def _boruvka_passes(
@@ -282,8 +278,9 @@ def _boruvka_passes(
       folds map-side and fuses the final fold with l0 sampling in one
       shuffle (sized from live components x groups x slice bytes, capped
       at ``num_partitions``, build.sketch_partitions), then rewrites it
-      as a local checkpoint. An identity first pass samples straight off
-      the vertex rows (no fold, no shuffle, no joins). Sampled edges merge
+      as a local checkpoint (checkpoint.step, freeing the pass's samples
+      and the map it replaces, never a caller's). An identity first pass
+      samples straight off the vertex rows (no fold, no shuffle, no joins). Sampled edges merge
       through the driver union-find while they number at most
       ``collect_threshold``; above that, the Boruvka min-edge rule keeps
       one sampled edge per component (acyclic by the max-edge-in-cycle
@@ -311,8 +308,10 @@ def _boruvka_passes(
     one-partition frame built from the driver's array (_local_frame), or
     above the threshold a local checkpoint. The forest edges are the
     driver-merged (a, b) pairs plus the checkpointed (a, b, comp_u, comp_v)
-    min-edge frames of the distributed passes."""
+    min-edge frames of the distributed passes, which stay persisted until
+    the caller frees them (checkpoint._release)."""
     sp = slice_params(params)
+    caller_vmap = vmap
     identity = vmap is None or start_group == 0
     driver = params.n <= collect_threshold
     if driver:
@@ -327,9 +326,7 @@ def _boruvka_passes(
         n_live = np.unique(labels[vids]).size
     else:
         if vmap is None:
-            vmap = slices.select(
-                F.col("vid").alias("v"), F.col("vid").alias("comp")
-            ).localCheckpoint(eager=True)
+            vmap, _ = step(slices.select(F.col("vid").alias("v"), F.col("vid").alias("comp")))
         # slices is cached/checkpointed, so the count is nearly free; after
         # a resume it starts from the vertex count (an overestimate), which
         # only delays the n_live == 1 shortcut — never wrong
@@ -360,6 +357,8 @@ def _boruvka_passes(
                 slices, vmap, cols, sp, n_live, num_partitions, first
             )
         if n_samp == 0:
+            if not driver:
+                _release(resolved)
             if on_round is not None:
                 on_round(g, 0, False)
             converged = True  # no live component holds a cut edge
@@ -388,7 +387,12 @@ def _boruvka_passes(
                 F.col("v").alias("x"), F.col("comp").alias("p")
             )
         if not driver:
-            vmap = _relabel(vmap, remap).localCheckpoint(eager=True)
+            # the samples, the remap and the replaced map (unless the
+            # caller's) are read by nothing once the new map is materialized
+            vmap, _ = step(
+                _relabel(vmap, remap),
+                release=[f for f in (resolved, remap, vmap) if f is not caller_vmap],
+            )
         if on_round is not None:
             on_round(g, n_samp, n_merged > 0)
         g += len(gs)
@@ -464,7 +468,7 @@ def _cc_rounds(
     taken to be that identity and never read. With ``ckpt``, every pass
     persists (vmap, next group) and the once-written slice table for
     resume_connected_components."""
-    return _boruvka_passes(
+    vmap, (_, kept), _ = _boruvka_passes(
         spark,
         slices,
         vmap,
@@ -476,7 +480,10 @@ def _cc_rounds(
         ckpt,
         collect_threshold,
         slices_path,
-    )[0]
+    )
+    for frame in kept:  # min-edge frames: the forest's, not the map's
+        _release(frame)
+    return vmap
 
 
 def connected_components_sketch(
@@ -605,7 +612,7 @@ def k_spanning_forests(
     forests: list[DataFrame] = []
     group_cursor = 0
     for t in range(k):
-        _, (pairs, kept), used = _boruvka_passes(
+        vmap, (pairs, kept), used = _boruvka_passes(
             spark,
             slices,
             None,
@@ -614,6 +621,7 @@ def k_spanning_forests(
             group_cursor + per_pass,
             num_partitions,
         )
+        _release(vmap)  # the forest does not read the pass's label map
         group_cursor += used
         if not pairs and not kept:
             break  # no edge left in the remaining graph

@@ -23,3 +23,24 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_mid():
     return SF001
+
+
+def persisted(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. Compared as sets, an RDD that
+    an earlier test left behind and the cleaner frees mid-test cannot hide
+    a new one."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def assert_no_litter(spark, before: set[int], result) -> None:
+    """Session litter check for an operator whose result was collected:
+    every RDD persisted since ``before`` is one the result still reads, the
+    RDD under a LogicalRDD leaf (a local checkpoint) of its analyzed plan."""
+    leaves = result._jdf.queryExecution().analyzed().collectLeaves()
+    read = {
+        leaf.rdd().id()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }
+    left = persisted(spark) - before - read
+    assert not left, f"persisted RDDs the result does not read: {sorted(left)}"

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 import landscape_spark.graph.cc as cc
 from landscape_spark import linkgraph
+from landscape_spark.checkpoint import _release
 from landscape_spark.graph.cc import connected_components_exact
 from landscape_spark.sketch import boruvka, build
 from landscape_spark.sketch.boruvka import (
@@ -25,6 +26,7 @@ from landscape_spark.sketch.boruvka import (
 from landscape_spark.sketch.build import build_group_slices
 from landscape_spark.sketch.l0 import SketchParams
 from landscape_spark.streaming.ingest import SketchStreamIngestor
+from tests.conftest import assert_no_litter, persisted
 
 N = 256
 
@@ -43,13 +45,6 @@ def _edges_df(spark, edges):
 def _oracle(edges):
     g = nx.Graph(edges)
     return {v: min(c) for c in nx.connected_components(g) for v in c}
-
-
-def _persisted(spark) -> set[int]:
-    """Ids of the session's persisted RDDs. Compared as sets, an RDD that
-    an earlier test left behind and the cleaner frees mid-test cannot hide
-    a new one."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 @pytest.mark.parametrize("graph", ["er", "path", "matching"])
@@ -90,37 +85,40 @@ def test_sketch_operators_leave_no_persisted_rdds(spark, er_edges, tmp_path, mon
     left, every round's checkpoint released."""
     e = _edges_df(spark, er_edges)
     v = spark.range(N).select(F.col("id").alias("v"))
-    before = _persisted(spark)
+    before = persisted(spark)
     connected_components_exact(e, v).collect()
-    assert _persisted(spark) <= before
+    assert persisted(spark) <= before
     monkeypatch.setattr(cc, "COLLECT_THRESHOLD", 0)
     labels = connected_components_exact(e, v)
     labels.collect()
-    assert _persisted(spark) - before == {labels._jdf.queryExecution().analyzed().rdd().id()}
-    cc._release(labels)
-    assert _persisted(spark) <= before
+    assert persisted(spark) - before == {labels._jdf.queryExecution().analyzed().rdd().id()}
+    _release(labels)
+    assert persisted(spark) <= before
     monkeypatch.undo()
     connected_components_sketch(spark, e, N, num_partitions=4).collect()
-    assert _persisted(spark) <= before
+    assert persisted(spark) <= before
     k_spanning_forests(spark, e, N, 2, num_partitions=4).collect()
-    assert _persisted(spark) <= before
+    assert persisted(spark) <= before
     ing = SketchStreamIngestor(
         spark, SketchParams.for_graph(N, seed=7), str(tmp_path / "st"), num_partitions=4
     )
     ing.absorb_batch(e, 0)
     ing.query_components(0).collect()
-    assert _persisted(spark) <= before
+    assert persisted(spark) <= before
 
 
 def test_driver_and_distributed_label_maps_agree(spark, er_edges):
     """The vmap of the driver-owned labels equals collect_threshold=0's
-    (distributed map, min-edge merges) and the oracle."""
+    (distributed map, min-edge merges) and the oracle; the distributed
+    passes leave only the map's own checkpoint persisted."""
     e = _edges_df(spark, er_edges)
     drv = connected_components_sketch(spark, e, N, num_partitions=4)
+    before = persisted(spark)
     dist = connected_components_sketch(spark, e, N, num_partitions=4, collect_threshold=0)
     got = sorted(map(tuple, drv.collect()))
     assert got == sorted(map(tuple, dist.collect()))
     assert dict(got) == _oracle(er_edges)
+    assert_no_litter(spark, before, dist)
 
 
 def test_label_map_placement_keeps_samples_and_forests(spark, er_edges, monkeypatch):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 import landscape_spark.graph.cc as cc
 from landscape_spark import linkgraph
 from landscape_spark.graph.cc import connected_components_exact
+from tests.conftest import assert_no_litter, persisted
 
 
 def _nx_canonical_components(edges, n):
@@ -110,9 +111,12 @@ def test_cc_shuffled_path_round_bound(spark, monkeypatch, threshold):
     if threshold is not None:
         monkeypatch.setattr(cc, "COLLECT_THRESHOLD", threshold)
     path, verts = _shuffled_path(spark, 1 << 16, seed=11)
+    before = persisted(spark)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        got = connected_components_exact(path, verts, max_iter=20).toArrow()
+        out = connected_components_exact(path, verts, max_iter=20)
+        got = out.toArrow()
     assert not any("did not converge" in str(x.message) for x in w)
     assert got.num_rows == 1 << 16
     assert not got.column("comp").to_numpy().any()
+    assert_no_litter(spark, before, out)

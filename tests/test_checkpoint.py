@@ -8,7 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import RoundCheckpointer
+from landscape_spark.checkpoint import RoundCheckpointer, step
 from landscape_spark.sketch.boruvka import (
     _cc_rounds,
     components_with_isolated,
@@ -17,6 +17,7 @@ from landscape_spark.sketch.boruvka import (
 )
 from landscape_spark.sketch.build import build_group_slices
 from landscape_spark.sketch.l0 import SketchParams
+from tests.conftest import persisted
 from tests.test_cc import _nx_canonical_components, multiples_graph_edges
 
 
@@ -102,3 +103,24 @@ def test_lineage_contents(spark, tmp_path):
     # checkpointed tables are loadable
     df = spark.read.parquet(lineage["tables"]["vmap"]["path"])
     assert df.count() == lineage["tables"]["vmap"]["rows"]
+
+
+def test_step_observes_integers_and_frees_what_it_replaces(spark):
+    """checkpoint.step: integer aggregates come back from the checkpoint's
+    own job (None for a sum over no rows), the released frame's checkpoint
+    is freed once the new one exists, and a float aggregate raises."""
+    import pytest
+
+    first, stats = step(spark.range(10), n=F.count(F.lit(1)), s=F.sum("id"))
+    assert stats == {"n": 10, "s": 45}
+    first_rdd = first._jdf.queryExecution().analyzed().rdd().id()
+    assert first_rdd in persisted(spark)
+    second, stats = step(first.where("id < 3"), release=(first,), s=F.sum("id"))
+    assert stats == {"s": 3} and second.count() == 3
+    assert first_rdd not in persisted(spark)
+    _, stats = step(second.where("id < 0"), release=(second,), s=F.sum("id"))
+    assert stats == {"s": None}
+    before = persisted(spark)
+    with pytest.raises(TypeError, match="float"):
+        step(spark.range(4), m=F.avg("id"))
+    assert persisted(spark) <= before

@@ -11,6 +11,7 @@ from landscape_spark.graph.csr import build_csr_blocks, pagerank_csr
 from landscape_spark.graph.pagerank import pagerank
 from landscape_spark.sketch.build import build_group_slices, group_cols
 from landscape_spark.sketch.l0 import SketchParams
+from tests.conftest import assert_no_litter, persisted
 
 
 def test_csr_blocks_cover_all_edges(spark, sf_small):
@@ -92,10 +93,10 @@ def test_pagerank_csr_blocked_matches_join_path(spark, sf_small):
     e = linkgraph.directed_edges(spark, sf_small)
     verts = linkgraph.vertices(spark, sf_small)
     ref = {r.v: r.pr_score for r in pagerank(e, verts, n, iters=8).collect()}
-    got = {
-        r.v: r.pr_score
-        for r in pagerank_csr_blocked(spark, e, n, iters=8, shards=7).collect()
-    }
+    before = persisted(spark)
+    out = pagerank_csr_blocked(spark, e, n, iters=8, shards=7)
+    got = {r.v: r.pr_score for r in out.collect()}
+    assert_no_litter(spark, before, out)
     assert set(got) == set(ref) and len(got) == n
     assert max(abs(ref[v] - got[v]) for v in ref) < 1e-12
 

@@ -19,6 +19,7 @@ from landscape_spark.graph.linkpred import adamic_adar_topk
 from landscape_spark.graph.scc import strongly_connected_components
 from landscape_spark.graph.traversal import bfs_distances
 from landscape_spark.graph.triangles import clustering_coefficient
+from tests.conftest import assert_no_litter, persisted
 
 
 def _verts(spark, n):
@@ -63,8 +64,11 @@ def test_bfs_matches_python_oracle(spark, seed):
     seeds = [0, 7]
     want = _bfs_py(edges, seeds)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: r.dist for r in bfs_distances(e, seeds=seeds).collect()}
+    before = persisted(spark)
+    out = bfs_distances(e, seeds=seeds)
+    got = {r.v: r.dist for r in out.collect()}
     assert got == want  # unreached vertices absent on both sides
+    assert_no_litter(spark, before, out)
 
 
 def test_bfs_each_edge_fires_once_semantics_disconnected(spark):
@@ -141,8 +145,11 @@ def test_coreness_clique_plus_tail(spark):
     clique = [(a, b) for a in range(5) for b in range(a + 1, 5)]
     tail = [(4, 5), (5, 6)]
     e = spark.createDataFrame(clique + tail, "a long, b long")
-    got = {r.v: r.core for r in coreness(e, _verts(spark, 8)).collect()}
+    before = persisted(spark)
+    out = coreness(e, _verts(spark, 8))
+    got = {r.v: r.core for r in out.collect()}
     assert got == {0: 4, 1: 4, 2: 4, 3: 4, 4: 4, 5: 1, 6: 1, 7: 0}
+    assert_no_litter(spark, before, out)
 
 
 def test_k_core_is_coreness_filter(spark):
@@ -231,9 +238,11 @@ def test_scc_matches_tarjan(spark, seed, n, m):
     edges = _rand_digraph(seed, n, m)
     want = _scc_py(edges, n)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: r.comp for r in
-           strongly_connected_components(e, _verts(spark, n)).collect()}
+    before = persisted(spark)
+    out = strongly_connected_components(e, _verts(spark, n))
+    got = {r.v: r.comp for r in out.collect()}
     assert got == {v: want[v] for v in range(n)}
+    assert_no_litter(spark, before, out)
 
 
 def test_scc_pure_dag_all_singletons(spark):
@@ -366,8 +375,10 @@ def test_bowtie_textbook_regions(spark):
     u = spark.createDataFrame(und, "a long, b long")
     from landscape_spark.graph.bowtie import bowtie_decomposition
 
-    got = {r.v: r.region for r in
-           bowtie_decomposition(e, u, _verts(spark, 12)).collect()}
+    before = persisted(spark)
+    out = bowtie_decomposition(e, u, _verts(spark, 12))
+    got = {r.v: r.region for r in out.collect()}
+    assert_no_litter(spark, before, out)
     assert got == {
         0: "CORE", 1: "CORE", 2: "CORE",
         4: "IN", 5: "IN", 9: "IN",
@@ -520,8 +531,10 @@ def test_anf_tracks_exact_neighborhood_function(spark, seed, n, m):
     edges = _rand_digraph(seed, n, m)
     want = _nf_py(edges, n)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.h: r.n_pairs_est for r in
-           neighborhood_function(e, _verts(spark, n)).collect()}
+    before = persisted(spark)
+    out = neighborhood_function(e, _verts(spark, n))
+    got = {r.h: r.n_pairs_est for r in out.collect()}
+    assert_no_litter(spark, before, out)
     assert max(got) == len(want) - 1  # identical horizon
     for h, exact in enumerate(want):
         assert abs(got[h] - exact) / exact < 0.20, (h, got[h], exact)
@@ -646,8 +659,10 @@ def test_harmonic_centrality_tracks_exact(spark):
     edges = _rand_digraph(51, 40, 130)
     want = _harmonic_py(edges, 40)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: r.harmonic for r in
-           harmonic_centrality(e, _verts(spark, 40)).collect()}
+    before = persisted(spark)
+    out = harmonic_centrality(e, _verts(spark, 40))
+    got = {r.v: r.harmonic for r in out.collect()}
+    assert_no_litter(spark, before, out)
     for v in range(40):
         if want[v] < 0.5:
             assert got[v] < max(1.0, 2 * want[v] + 0.5), (v, got[v], want[v])

@@ -18,6 +18,7 @@ from landscape_spark.graph.katz import katz_centrality
 from landscape_spark.graph.linkpred import jaccard_topk
 from landscape_spark.graph.motifs import rectangle_count
 from landscape_spark.graph.stats import degree_powerlaw_alpha, modularity
+from tests.conftest import assert_no_litter, persisted
 
 
 def _verts(spark, n):
@@ -56,9 +57,10 @@ def test_katz_matches_numpy(spark, seed):
     n = 50
     edges = _rand_digraph(seed, n, 200)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: r.katz
-           for r in katz_centrality(e, _verts(spark, n), iters=8,
-                                    alpha=0.01, beta=1.0).collect()}
+    before = persisted(spark)
+    out = katz_centrality(e, _verts(spark, n), iters=8, alpha=0.01, beta=1.0)
+    got = {r.v: r.katz for r in out.collect()}
+    assert_no_litter(spark, before, out)
     want = _katz_np(edges, n, iters=8, alpha=0.01, beta=1.0)
     assert set(got) == set(range(n))
     for v in range(n):
@@ -280,8 +282,11 @@ def test_ktruss_matches_python_peel(spark, seed, k):
 
     edges = _rand_undirected(seed, 25, 90)
     e = spark.createDataFrame(edges, "a long, b long")
-    got = {(r.a, r.b): r.support for r in k_truss(e, k).collect()}
+    before = persisted(spark)
+    out = k_truss(e, k)
+    got = {(r.a, r.b): r.support for r in out.collect()}
     assert got == _ktruss_py(edges, k)
+    assert_no_litter(spark, before, out)
 
 
 def test_ktruss_hand_graphs(spark):
@@ -359,9 +364,11 @@ def test_random_walks_match_python(spark, seed):
     n = 40
     edges = _rand_digraph(seed, n, 100)  # leaves some dangling vertices
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = sorted(map(tuple, random_walks(e, _verts(spark, n), walk_len=5,
-                                         walks_per_vertex=2).collect()))
+    before = persisted(spark)
+    out = random_walks(e, _verts(spark, n), walk_len=5, walks_per_vertex=2)
+    got = sorted(map(tuple, out.collect()))
     assert got == _walks_py(edges, n, 5, 2)
+    assert_no_litter(spark, before, out)
 
 
 def test_random_walks_truncate_at_dangling(spark):
@@ -454,8 +461,11 @@ def test_sssp_weighted_matches_dijkstra(spark, seed):
                                          for _ in range(160)) if a != b})
     wedges = [(a, b, rng.randrange(1, 6)) for a, b in wedges]
     e = spark.createDataFrame(wedges, "src long, dst long, w long")
-    got = {r.v: r.dist for r in sssp_weighted(e, seeds=[0, 1]).collect()}
+    before = persisted(spark)
+    out = sssp_weighted(e, seeds=[0, 1])
+    got = {r.v: r.dist for r in out.collect()}
     assert got == _dijkstra_py(wedges, [0, 1])
+    assert_no_litter(spark, before, out)
 
 
 def test_sssp_prefers_cheap_long_path(spark):
@@ -467,6 +477,29 @@ def test_sssp_prefers_cheap_long_path(spark):
     )
     got = {r.v: r.dist for r in sssp_weighted(e, seeds=[0]).collect()}
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
+
+
+def test_sssp_weighted_warns_at_its_cap(spark):
+    """Weighted SSSP that reaches max_iter with its frontier still non-empty
+    WARNS (a distance may still be too large); a converged run is silent."""
+    import warnings
+
+    from landscape_spark.graph.traversal import sssp_weighted
+
+    # directed path 0 -> 1 -> 2 -> 3 with weights 1, 2, 3
+    e = spark.range(3).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst"), (F.col("id") + 1).alias("w")
+    )
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got = {r.v: r.dist for r in sssp_weighted(e, seeds=[0], max_iter=1).collect()}
+    assert got == {0: 0, 1: 1}
+    assert any("frontier non-empty" in str(x.message) for x in w)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        got = {r.v: r.dist for r in sssp_weighted(e, seeds=[0]).collect()}
+    assert got == {0: 0, 1: 1, 2: 3, 3: 6}
+    assert not any("frontier non-empty" in str(x.message) for x in w)
 
 
 def test_sssp_oracle_hop_bound_is_noop(spark, sf_mid):
@@ -520,9 +553,10 @@ def test_seeded_lpa_matches_python(spark, seed):
     seeds = {0: 10, 1: 11, 2: 10}
     e = spark.createDataFrame(edges, "a long, b long")
     sl = spark.createDataFrame(sorted(seeds.items()), "v long, label long")
-    got = {r.v: r.label
-           for r in seeded_label_propagation(e, _verts(spark, n), sl,
-                                             iters=4).collect()}
+    before = persisted(spark)
+    out = seeded_label_propagation(e, _verts(spark, n), sl, iters=4)
+    got = {r.v: r.label for r in out.collect()}
+    assert_no_litter(spark, before, out)
     want = _seeded_lpa_py(edges, n, seeds, 4)
     assert got == {v: want[v] for v in range(n)}
     assert any(x is None for x in got.values())  # some vertex stayed unreached
@@ -643,8 +677,10 @@ def test_salsa_matches_python(spark, seed):
     n = 40
     edges = _rand_digraph(seed, n, 140)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: (r.authority, r.hub)
-           for r in salsa(e, _verts(spark, n), iters=6).collect()}
+    before = persisted(spark)
+    out = salsa(e, _verts(spark, n), iters=6)
+    got = {r.v: (r.authority, r.hub) for r in out.collect()}
+    assert_no_litter(spark, before, out)
     wa, wh = _salsa_np(edges, n, 6)
     for v in range(n):
         assert got[v][0] == pytest.approx(wa[v], abs=1e-12)
@@ -865,9 +901,10 @@ def test_eigenvector_matches_numpy(spark, seed):
     n = 40
     edges = _rand_digraph(seed, n, 160)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: r.eigen
-           for r in eigenvector_centrality(e, _verts(spark, n), n,
-                                           iters=8).collect()}
+    before = persisted(spark)
+    out = eigenvector_centrality(e, _verts(spark, n), n, iters=8)
+    got = {r.v: r.eigen for r in out.collect()}
+    assert_no_litter(spark, before, out)
     want = _eigen_np(edges, n, 8)
     for v in range(n):
         assert got[v] == pytest.approx(want[v], abs=1e-12)
@@ -924,8 +961,10 @@ def test_betweenness_matches_python_brandes(spark, seed):
     edges = _rand_digraph(seed, n, 120)
     srcs = [0, 1, 2, 5]
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.v: r.betweenness
-           for r in betweenness_sources(e, _verts(spark, n), srcs).collect()}
+    before = persisted(spark)
+    out = betweenness_sources(e, _verts(spark, n), srcs)
+    got = {r.v: r.betweenness for r in out.collect()}
+    assert_no_litter(spark, before, out)
     want = _brandes_py(edges, n, srcs)
     assert set(got) == set(range(n))
     for v in range(n):
@@ -1041,10 +1080,11 @@ def test_node2vec_matches_python(spark, seed):
     n = 35
     edges = _rand_digraph(seed, n, 110)
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = sorted(map(tuple, node2vec_walks(e, _verts(spark, n), walk_len=5,
-                                           walks_per_vertex=2,
-                                           p=4.0, q=0.25).collect()))
+    before = persisted(spark)
+    out = node2vec_walks(e, _verts(spark, n), walk_len=5, walks_per_vertex=2, p=4.0, q=0.25)
+    got = sorted(map(tuple, out.collect()))
     assert got == _n2v_py(edges, n, 5, 2, 4.0, 0.25)
+    assert_no_litter(spark, before, out)
 
 
 def test_node2vec_return_bias_on_triangle(spark):

@@ -10,6 +10,7 @@ from landscape_spark import linkgraph
 from landscape_spark.graph.hits import hits
 from landscape_spark.graph.pagerank import pagerank, personalized_pagerank
 from landscape_spark.text.tfidf import term_frequencies, term_postings, tfidf_topk
+from tests.conftest import assert_no_litter, persisted
 
 
 def _verts(spark, n):
@@ -24,7 +25,10 @@ def test_hits_star_graph(spark):
     # 1,2,3 all point at 0: vertex 0 is the only authority (score 1),
     # vertices 1-3 are equal hubs (1/3 each); 0 is no hub, 1-3 no authority.
     e = spark.createDataFrame([(1, 0), (2, 0), (3, 0)], "src long, dst long")
-    got = {r.v: (r.authority, r.hub) for r in hits(e, _verts(spark, 4), 4, iters=3).collect()}
+    before = persisted(spark)
+    out = hits(e, _verts(spark, 4), 4, iters=3)
+    got = {r.v: (r.authority, r.hub) for r in out.collect()}
+    assert_no_litter(spark, before, out)
     assert got[0][0] == 1.0 and got[0][1] == 0.0
     for v in (1, 2, 3):
         assert abs(got[v][1] - 1 / 3) < 1e-12 and got[v][0] == 0.0
@@ -77,8 +81,10 @@ def test_hits_python_reference(spark):
 def test_ppr_sums_to_one_and_teleport_locality(spark, sf_small):
     e = linkgraph.directed_edges(spark, sf_small)
     n = linkgraph.num_vertices(spark, sf_small)
+    before = persisted(spark)
     out = personalized_pagerank(e, _verts(spark, n), n, seeds=[0, 1], iters=8)
     assert abs(out.agg(F.sum("ppr_score")).first()[0] - 1.0) < 1e-9
+    assert_no_litter(spark, before, out)
     # seeds hold at least the undamped teleport share
     seed_mass = out.where("v IN (0, 1)").agg(F.sum("ppr_score")).first()[0]
     assert seed_mass >= 0.15 - 1e-9

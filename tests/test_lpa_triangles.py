@@ -6,6 +6,7 @@ from landscape_spark import linkgraph
 from landscape_spark.graph.lpa import label_propagation
 from landscape_spark.graph.triangles import triangle_count, triangles_per_vertex
 from tests.oracles import lpa_oracle, triangle_oracle
+from tests.conftest import assert_no_litter, persisted
 
 
 def test_lpa_matches_oracle(spark, sf_small):
@@ -14,8 +15,11 @@ def test_lpa_matches_oracle(spark, sf_small):
     verts = linkgraph.vertices(spark, sf_small)
     edges = [(r.a, r.b) for r in und.collect()]
     oracle = lpa_oracle(edges, n, iters=5)
-    got = {r.v: r.label for r in label_propagation(und, verts, iters=5).collect()}
+    before = persisted(spark)
+    out = label_propagation(und, verts, iters=5)
+    got = {r.v: r.label for r in out.collect()}
     assert got == {v: oracle[v] for v in range(n)}
+    assert_no_litter(spark, before, out)
 
 
 def test_triangles_match_oracle(spark, sf_small):

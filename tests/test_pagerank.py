@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from landscape_spark import linkgraph
 from landscape_spark.graph.pagerank import pagerank
 from tests.oracles import pagerank_oracle
+from tests.conftest import assert_no_litter, persisted
 
 
 def test_pagerank_matches_oracle(spark, sf_small):
@@ -18,7 +19,10 @@ def test_pagerank_matches_oracle(spark, sf_small):
     edges = [(r.src, r.dst) for r in e.collect()]
     oracle = pagerank_oracle(edges, n)
 
-    got = {r.v: r.pr_score for r in pagerank(e, verts, n, iters=200, tol=1e-10).collect()}
+    before = persisted(spark)
+    out = pagerank(e, verts, n, iters=200, tol=1e-10)
+    got = {r.v: r.pr_score for r in out.collect()}
+    assert_no_litter(spark, before, out)
     assert len(got) == n
     for v in range(n):
         assert got[v] == pytest.approx(oracle[v], abs=1e-6)

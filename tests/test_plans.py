@@ -235,7 +235,7 @@ def test_coreness_round_is_one_join_one_window_exchange(spark, sf_small):
     partitioning (no third exchange), and the neighbor-value window must
     partition by vertex — a global window would collapse to one task."""
     from landscape_spark.graph.cc import symmetrize
-    from landscape_spark.graph.kcore import h_round
+    from landscape_spark.graph.kcore import _h_round
 
     und = linkgraph.undirected_edges(spark, sf_small).localCheckpoint(eager=True)
     verts = linkgraph.vertices(spark, sf_small).localCheckpoint(eager=True)
@@ -243,7 +243,7 @@ def test_coreness_round_is_one_join_one_window_exchange(spark, sf_small):
     state = verts.select("v", F.lit(1).cast("long").alias("h")).localCheckpoint(
         eager=True
     )
-    plan = _plan(h_round(sym, state, verts))
+    plan = _plan(_h_round(sym, state))
     assert "hashpartitioning(v" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "IdentityBroadcastMode" not in plan, plan
