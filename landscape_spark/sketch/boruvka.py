@@ -30,7 +30,10 @@ live edges fit) merges their component pairs.
 Each Boruvka round consumes one sketch GROUP (one-shot sampling), so k-forest
 extraction budgets per_pass groups per pass. Batch CC (_cc_rounds), the
 k-forests (k_spanning_forests) and the streaming in-stream queries
-(streaming/ingest reuses _cc_rounds on its slice-parquet state) all call it.
+(streaming/ingest reuses _cc_rounds on its committed state) all call it. A
+stream state small enough to live on the driver reaches the loop as an Arrow
+table, not a DataFrame: each pass then runs the fold kernel in-process
+(build.relabel_fold_kernel) and the query runs no Spark job.
 
 Component labels are canonical min-vertex-ids — exactly comparable to the
 min-label SQL oracle.
@@ -44,6 +47,7 @@ import warnings
 from functools import reduce
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,6 +62,7 @@ from landscape_spark.sketch.build import (
     build_group_slices,
     fold_sample,
     relabel_fold,
+    relabel_fold_kernel,
     sketch_partitions,
     slice_params,
     xor_merge_slices,
@@ -66,6 +71,8 @@ from landscape_spark.sketch.l0 import SketchParams
 
 # Sketch groups sampled by a pass loop's first pass; later passes sample 2.
 FIRST_PASS_GROUPS = 4
+
+_SAMPLES = pa.schema([("ckey", pa.int64()), ("u", pa.int64()), ("v", pa.int64())])
 
 
 class DSU:
@@ -134,7 +141,7 @@ def _dsu_merge(
 
 
 def _driver_samples(
-    slices: DataFrame,
+    slices: DataFrame | pa.Table,
     cols: list[str],
     sp: SketchParams,
     labels: np.ndarray,
@@ -149,21 +156,26 @@ def _driver_samples(
     by gathers from ``labels``. Returns (gi, u, v, comp_u, comp_v) of the
     samples that cut two components.
 
+    A driver-held Arrow table runs the same kernel in-process, no Spark job.
     When the rows the pass reads fit one task (sketch_partitions), it runs
     as one coalesced task with no shuffle. Otherwise the identity pass
     samples straight off the stored slice partitions (every key is one
     vertex's), and later passes fold map-side, then shuffle into
     sketch_partitions(live components x groups) tasks for fold_sample."""
     j = len(cols)
-    src = slices.select("vid", *cols)
-    if sketch_partitions(n_vids * j, sp.nbytes, num_partitions) == 1:
-        out = relabel_fold(src.coalesce(1), sp, labels)
-    elif identity:
-        out = relabel_fold(src, sp)
+    if isinstance(slices, pa.Table):
+        batches = slices.select(["vid", *cols]).to_batches()
+        t = pa.Table.from_batches(relabel_fold_kernel(batches, "vid", cols, sp, labels), _SAMPLES)
     else:
-        parts = sketch_partitions(n_live * j, sp.nbytes, num_partitions)
-        out = fold_sample(relabel_fold(src, sp, labels, final=False), "ckey", sp, parts)
-    t = out.toArrow()
+        src = slices.select("vid", *cols)
+        if sketch_partitions(n_vids * j, sp.nbytes, num_partitions) == 1:
+            out = relabel_fold(src.coalesce(1), sp, labels)
+        elif identity:
+            out = relabel_fold(src, sp)
+        else:
+            parts = sketch_partitions(n_live * j, sp.nbytes, num_partitions)
+            out = fold_sample(relabel_fold(src, sp, labels, final=False), "ckey", sp, parts)
+        t = out.toArrow()
     ckey, u, v = (t.column(c).to_numpy() for c in ("ckey", "u", "v"))
     comp_u, comp_v = labels[u], labels[v]
     cut = comp_u != comp_v
@@ -244,7 +256,7 @@ def _min_edges(resolved: DataFrame) -> tuple[DataFrame, int]:
 
 def _boruvka_passes(
     spark: SparkSession,
-    slices: DataFrame,
+    slices: DataFrame | pa.Table,
     vmap: DataFrame | None,
     params: SketchParams,
     start_group: int,
@@ -287,6 +299,9 @@ def _boruvka_passes(
       argument) and connected_components_exact over their component
       pairs (graph/cc.py) gives the merged components' min labels.
 
+    A driver-held Arrow slice table always takes the first placement, with
+    no vid collect and each pass in-process (_driver_samples): no Spark job.
+
     Either way the driver merge applies the samples in (group, lo, hi)
     order (_dsu_merge), and the accepted edges are a spanning forest of the
     merges.
@@ -305,17 +320,20 @@ def _boruvka_passes(
     non-maximal forest.
 
     Returns (vid->comp map, forest edges, groups consumed). The map is a
-    one-partition frame built from the driver's array (_local_frame), or
-    above the threshold a local checkpoint. The forest edges are the
-    driver-merged (a, b) pairs plus the checkpointed (a, b, comp_u, comp_v)
-    min-edge frames of the distributed passes, which stay persisted until
-    the caller frees them (checkpoint._release)."""
+    one-partition frame built from the driver's array (_local_frame), an
+    Arrow table when the slices were one, or above the threshold a local
+    checkpoint. The forest edges are the driver-merged (a, b) pairs plus
+    the checkpointed (a, b, comp_u, comp_v) min-edge frames of the
+    distributed passes, which stay persisted until the caller frees them
+    (checkpoint._release)."""
     sp = slice_params(params)
     caller_vmap = vmap
     identity = vmap is None or start_group == 0
-    driver = params.n <= collect_threshold
+    held = isinstance(slices, pa.Table)
+    driver = held or params.n <= collect_threshold
     if driver:
-        vids = np.sort(slices.select("vid").toArrow().column("vid").to_numpy())
+        vids = (slices if held else slices.select("vid").toArrow()).column("vid").to_numpy()
+        vids = np.sort(vids)
         labels = np.arange(params.n, dtype=np.int64)
         if not identity:
             t = vmap.toArrow()
@@ -444,13 +462,14 @@ def _boruvka_passes(
                 stacklevel=3,
             )
     if driver:
-        vmap = _local_frame(spark, {"v": vids, "comp": labels[vids]}, "v long, comp long")
+        vc = {"v": vids, "comp": labels[vids]}
+        vmap = pa.table(vc) if held else _local_frame(spark, vc, "v long, comp long")
     return vmap, (pairs, kept_parts), g - start_group
 
 
 def _cc_rounds(
     spark: SparkSession,
-    slices: DataFrame,
+    slices: DataFrame | pa.Table,
     vmap: DataFrame | None,
     params: SketchParams,
     start_group: int = 0,
@@ -462,11 +481,12 @@ def _cc_rounds(
 ) -> DataFrame:
     """Boruvka CC over the columnar slice table: _boruvka_passes from
     ``start_group`` to the end of the group budget, returning only the
-    vid->comp map (a one-partition driver-built frame, or above
-    ``collect_threshold`` a local checkpoint). ``vmap=None`` is the identity
-    map over ``slices.vid``; a caller-built map at ``start_group == 0`` is
-    taken to be that identity and never read. With ``ckpt``, every pass
-    persists (vmap, next group) and the once-written slice table for
+    vid->comp map (a one-partition driver-built frame, an Arrow table for
+    an Arrow slice table, or above ``collect_threshold`` a local
+    checkpoint). ``vmap=None`` is the identity map over ``slices.vid``; a
+    caller-built map at ``start_group == 0`` is taken to be that identity
+    and never read. With ``ckpt`` (slices a DataFrame), every pass persists
+    (vmap, next group) and the once-written slice table for
     resume_connected_components."""
     vmap, (_, kept), _ = _boruvka_passes(
         spark,

@@ -23,10 +23,14 @@ every vid's updates are co-located, so each partition emits FINAL supernodes —
 no second merge stage. Map-side the kernel XOR-folds duplicates, the exact
 analog of worker-side delta generation (partial aggregation).
 
-Unlike the reference — which applies every delta on rank 0 and holds all
-supernodes in main-node RAM (src/work_distributor.cpp:99-100, its
-acknowledged scalability ceiling) — the sketch table here stays distributed;
-merges happen where the data lives.
+The reference applies every delta on rank 0 and holds all supernodes in
+main-node RAM (src/work_distributor.cpp:99-100, its acknowledged scalability
+ceiling). Here a sketch table stays distributed and merges happen where the
+data lives, with one exception: a streaming state that fits one sketch task
+(n x slice_row_bytes <= TASK_SKETCH_BYTES) is held on the driver as the
+reference holds it, because its merge would run as one Python task anyway.
+The driver then runs this module's kernels in-process (slice_batch,
+relabel_fold_kernel; streaming/ingest.py).
 """
 
 from __future__ import annotations
@@ -170,6 +174,17 @@ def _split_groups(sk: np.ndarray, params: SketchParams) -> list[np.ndarray]:
     ]
 
 
+def slice_batch(vids: np.ndarray, codes: np.ndarray, params: SketchParams) -> pa.RecordBatch:
+    """The build kernel: (vid, code) updates -> one columnar slice row
+    (vid, g0, ..., g{R-1}) per distinct vid, every vid's updates XOR-folded.
+    build_group_slices runs it in each partition; the streaming ingest runs
+    it on the driver over a collected batch."""
+    uvids, sk = build_sketches(vids, codes, params)
+    arrays = [pa.array(uvids, type=pa.int64())]
+    arrays += [_binary_array(sl) for sl in _split_groups(sk, params)]
+    return pa.RecordBatch.from_arrays(arrays, names=["vid"] + group_cols(params))
+
+
 def build_group_slices(
     und_edges: DataFrame,
     params: SketchParams,
@@ -196,7 +211,6 @@ def build_group_slices(
         upd = upd.repartition(parts, sub)
     else:
         upd = upd.repartition(parts, F.col("vid"))
-    names = ["vid"] + group_cols(params)
     schema = "vid long, " + ", ".join(f"{c} binary" for c in group_cols(params))
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -204,15 +218,10 @@ def build_group_slices(
         for b in batches:
             vid_parts.append(b.column("vid").to_numpy(zero_copy_only=False))
             code_parts.append(b.column("code").to_numpy(zero_copy_only=False))
-        if not vid_parts:
-            return
-        vids = np.concatenate(vid_parts).astype(np.int64)
-        codes = np.concatenate(code_parts).astype(np.int64).view(np.uint64)
-        uvids, sk = build_sketches(vids, codes, params)
-        arrays = [pa.array(uvids, type=pa.int64())]
-        for sl in _split_groups(sk, params):
-            arrays.append(_binary_array(sl))
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        if vid_parts:
+            vids = np.concatenate(vid_parts).astype(np.int64)
+            codes = np.concatenate(code_parts).astype(np.int64).view(np.uint64)
+            yield slice_batch(vids, codes, params)
 
     partials = upd.mapInArrow(build, schema)
     if salt > 1:
@@ -319,6 +328,34 @@ def fold_sample(
     return part.mapInArrow(fs, f"{key} long, u long, v long")
 
 
+def relabel_fold_kernel(
+    batches: Iterator[pa.RecordBatch],
+    key: str,
+    cols: list[str],
+    sparams: SketchParams,
+    labels: np.ndarray | None = None,
+    final: bool = True,
+) -> Iterator[pa.RecordBatch]:
+    """relabel_fold's kernel over one partition of (key, *cols) slice rows;
+    the driver runs it in-process over a driver-held slice table."""
+    got = _gather(batches, key, cols)
+    if got is None:
+        return
+    ids, wide = got
+    j = len(cols)
+    comp = ids if labels is None else labels[ids]
+    # (N, j*W) -> (N*j, W): row r*j+i is row r's slice of group i
+    keys = (comp[:, None] * j + np.arange(j, dtype=np.int64)).ravel()
+    ckeys, folded = xor_fold_rows(wide.reshape(len(keys), -1), keys)
+    if final:
+        yield _sample_batch(ckeys, folded, sparams, "ckey")
+    else:
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ckeys, type=pa.int64()), _binary_array(folded)],
+            names=["ckey", "sketch"],
+        )
+
+
 def relabel_fold(
     df: DataFrame,
     sparams: SketchParams,
@@ -338,24 +375,8 @@ def relabel_fold(
     (ckey, u, v). Otherwise the partial folds (ckey, sketch) go on to a
     repartition on ckey and fold_sample."""
     key, *cols = df.columns
-    j = len(cols)
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        got = _gather(batches, key, cols)
-        if got is None:
-            return
-        ids, wide = got
-        comp = ids if labels is None else labels[ids]
-        # (N, j*W) -> (N*j, W): row r*j+i is row r's slice of group i
-        keys = (comp[:, None] * j + np.arange(j, dtype=np.int64)).ravel()
-        ckeys, folded = xor_fold_rows(wide.reshape(len(keys), -1), keys)
-        if final:
-            yield _sample_batch(ckeys, folded, sparams, "ckey")
-        else:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ckeys, type=pa.int64()), _binary_array(folded)],
-                names=["ckey", "sketch"],
-            )
-
     schema = "ckey long, u long, v long" if final else "ckey long, sketch binary"
-    return df.mapInArrow(kernel, schema)
+    return df.mapInArrow(
+        lambda batches: relabel_fold_kernel(batches, key, cols, sparams, labels, final),
+        schema,
+    )

@@ -15,10 +15,27 @@ operation (XOR toggles presence), exactly the reference's linear-sketch
 deletion semantics. A "breakpoint query" is simply a Boruvka run on the
 committed state after any micro-batch — the batch boundary IS the pause.
 
+Where the merge runs depends on the state's size. While the whole state fits
+one sketch task (n x slice_row_bytes <= TASK_SKETCH_BYTES, a 2 MiB table at
+n=256), a Spark merge would run as one Python task, and PySpark's fixed
+per-task cost would be most of its time. So the DRIVER holds the committed
+state as an Arrow table, as the reference's main node holds every supernode
+and merges the workers' deltas there (src/worker_cluster.cpp:107-118,
+src/work_distributor.cpp:99-100). An absorb is then one Spark job that
+collects the batch's edges; the delta build (build.slice_batch), the XOR
+fold and the parquet write run in-process. CC queries run the Boruvka passes
+on the table in-process, and point bursts look pairs up in the driver's
+labels, as the reference's DSU point query does
+(graph_distrib_update.cpp:211-226). Above that size the state stays
+distributed: each absorb builds the delta and XOR-merges it with the
+committed parquet in Spark, and each query scans that parquet.
+
 State lives as VERSIONED parquet directories behind an atomically-renamed
 CURRENT pointer file, so ingest is resumable and queries read a consistent
 snapshot (the analog of the reference's flush barrier before queries,
-graph_distrib_update.cpp:122-124). Three failure modes drove the design:
+graph_distrib_update.cpp:122-124). The driver-held table is always the
+committed version's: it is replaced only after the pointer flip, and read
+back from parquet on resume. Three failure modes drove the design:
 
 * foreachBatch is AT-LEAST-ONCE: a crash after the state commit but before
   the stream's offset commit re-delivers the same batch, and under XOR
@@ -29,11 +46,11 @@ graph_distrib_update.cpp:122-124). Three failure modes drove the design:
   pointer flip (os.replace of CURRENT) is the single atomic commit point:
   a crash before it leaves the previous version intact (the uncommitted
   batch is re-delivered), after it the new version is live.
-* An in-stream query scans its version's parquet across multiple Boruvka
-  passes; the PREVIOUS version is retained one commit before cleanup so a
-  query racing one concurrent commit keeps its snapshot (queries racing
-  more than one commit should run between batches — availableNow mode —
-  or pin the DataFrame first).
+* Above the driver-held size, an in-stream query scans its version's
+  parquet across multiple Boruvka passes; the PREVIOUS version is retained
+  one commit before cleanup so a query racing one concurrent commit keeps
+  its snapshot (queries racing more than one commit should run between
+  batches — availableNow mode — or pin the DataFrame first).
 """
 
 from __future__ import annotations
@@ -43,21 +60,47 @@ import os
 import shutil
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from landscape_spark.sketch.build import build_group_slices, xor_merge_slices
-from landscape_spark.sketch.l0 import SketchParams
+from landscape_spark.graph.cc import COLLECT_THRESHOLD, _ids, _local_frame
+from landscape_spark.sketch.build import (
+    TASK_SKETCH_BYTES,
+    _binary_array,
+    _fold_batches,
+    build_group_slices,
+    group_cols,
+    slice_batch,
+    slice_row_bytes,
+    xor_merge_slices,
+)
+from landscape_spark.sketch.l0 import SketchParams, edge_code
+
+
+def _components_of(labels: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Components of vertex ids ``x`` from a dense comp-per-vid array; an
+    id outside it is its own component."""
+    out = x.copy()
+    inside = (x >= 0) & (x < len(labels))
+    out[inside] = labels[x[inside]]
+    return out
 
 
 class SketchStreamIngestor:
     """Maintains a persistent per-vertex sketch table under micro-batched
-    edge updates; supports in-stream CC queries on the committed state.
+    edge updates; supports in-stream CC queries and point bursts on the
+    committed state.
 
-    ``num_partitions`` caps the sketch shuffles of every absorb and query;
-    each runs as many partitions as its sketch bytes need
-    (sketch.build.sketch_partitions). The merged state is written from the
-    merge's partitions, so a small table commits as one parquet file."""
+    A state of at most TASK_SKETCH_BYTES (params.n x slice_row_bytes) is
+    held on the driver: absorb, CC query and point burst run no Python task,
+    and each commit writes one parquet file with pyarrow. A larger state is
+    merged and queried in Spark; ``num_partitions`` caps those sketch
+    shuffles, each running as many partitions as its sketch bytes need
+    (sketch.build.sketch_partitions), and the merged state is written from
+    the merge's partitions, so a table of one task's bytes commits as one
+    parquet file either way."""
 
     def __init__(
         self,
@@ -98,9 +141,17 @@ class SketchStreamIngestor:
         # point queries between updates reuse them
         self._cc_cache_version: int | None = None
         self._cc_cache_vmap: DataFrame | None = None
+        # dense comp per vid, when the state is driver-held
+        self._cc_cache_labels: np.ndarray | None = None
         self.cc_cache_hits = 0
         self.cc_cache_misses = 0
         os.makedirs(state_dir, exist_ok=True)
+        # below one sketch task of state, a Spark merge would run as one
+        # Python task: the driver holds the committed version's rows instead
+        self._held = params.n * slice_row_bytes(params) <= TASK_SKETCH_BYTES
+        # (version, rows), swapped whole: a reader never pairs one version's
+        # number with another's rows
+        self._state: tuple[int, pa.Table] | None = None
 
     @property
     def _pointer(self) -> str:
@@ -133,6 +184,46 @@ class SketchStreamIngestor:
             return None
         return self.spark.read.parquet(self._cur)
 
+    def _held_state(self) -> pa.Table | None:
+        """The committed version's slice rows on the driver, or None before
+        the first commit. Read from the version's parquet only when the
+        held table is another version's: after a resume, or a commit by
+        another ingestor on this directory."""
+        if not self._has_state():
+            return None
+        version = self._meta()["version"]
+        state = self._state
+        if state is None or state[0] != version:
+            state = (version, pq.read_table(self._version_dir(version)))
+            self._state = state
+        return state[1]
+
+    def _merge_on_driver(self, edges: DataFrame) -> pa.Table:
+        """The committed rows XOR-merged with the batch's delta, on the
+        driver. One Spark job collects the batch's edges and the build kernel
+        runs in-process; a batch above COLLECT_THRESHOLD edges builds in
+        Spark, returning at most n delta rows. A vid whose sketch folds to
+        zero keeps its row: the vertex set is part of the state."""
+        cols = group_cols(self.params)
+        t = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
+        if t.num_rows <= COLLECT_THRESHOLD:
+            a, b = _ids(t, "a"), _ids(t, "b")
+            code = edge_code(a, b, self.params.n)
+            delta = [slice_batch(np.concatenate([a, b]), np.concatenate([code, code]), self.params)]
+        else:
+            delta = build_group_slices(edges, self.params, self.num_partitions)
+            delta = delta.toArrow().to_batches()
+        cur = self._held_state()
+        out = _fold_batches((cur.to_batches() if cur is not None else []) + delta, "vid", cols)
+        if out is None:
+            ids, folded = np.empty(0, dtype=np.int64), [np.empty((0, 0), np.uint64)] * len(cols)
+        else:
+            ids, folded = out
+        return pa.table(
+            [pa.array(ids, type=pa.int64())] + [_binary_array(m) for m in folded],
+            names=["vid"] + cols,
+        )
+
     def absorb_batch(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         """foreachBatch sink: XOR-merge this batch's sketch delta into state.
         batch_df: columns (a, b) — canonical or not; both endpoints update.
@@ -156,14 +247,22 @@ class SketchStreamIngestor:
         edges = batch_df.select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         ).where(F.col("a") != F.col("b"))
-        delta = build_group_slices(edges, self.params, self.num_partitions)
-        cur = self.current_sketches()
-        merged = delta if cur is None else xor_merge_slices(
-            cur.unionAll(delta), "vid", self.params, self.num_partitions
-        )
         new_version = (meta["version"] + 1) if meta else 0
         new_dir = self._version_dir(new_version)
-        merged.write.mode("overwrite").parquet(new_dir)
+        if self._held:
+            merged = self._merge_on_driver(edges)
+            # a dir left by a commit that never flipped the pointer is stale
+            shutil.rmtree(new_dir, ignore_errors=True)
+            os.makedirs(new_dir)
+            pq.write_table(merged, os.path.join(new_dir, "part-00000.parquet"))
+            open(os.path.join(new_dir, "_SUCCESS"), "w").close()
+        else:
+            delta = build_group_slices(edges, self.params, self.num_partitions)
+            cur = self.current_sketches()
+            merged = delta if cur is None else xor_merge_slices(
+                cur.unionAll(delta), "vid", self.params, self.num_partitions
+            )
+            merged.write.mode("overwrite").parquet(new_dir)
         # atomic commit: tmp-write + rename of the pointer file
         committed_bid = batch_id if batch_id is not None else (
             meta.get("batch_id") if meta else None
@@ -172,6 +271,8 @@ class SketchStreamIngestor:
         with open(tmp, "w") as f:
             json.dump({"version": new_version, "batch_id": committed_bid}, f)
         os.replace(tmp, self._pointer)
+        if self._held:
+            self._state = (new_version, merged)
         # retain the PREVIOUS version (a query racing this commit keeps its
         # snapshot); garbage-collect anything older
         for name in os.listdir(self.state_dir):
@@ -186,6 +287,7 @@ class SketchStreamIngestor:
         # appended updates invalidate the cached CC result
         self._cc_cache_version = None
         self._cc_cache_vmap = None
+        self._cc_cache_labels = None
 
     def start(self, stream_df: DataFrame, trigger_available_now: bool = True):
         """Attach to a streaming DataFrame with columns (a, b). Returns the
@@ -200,63 +302,95 @@ class SketchStreamIngestor:
             writer = writer.trigger(availableNow=True)
         return writer.start()
 
+    def _components(self) -> tuple[DataFrame, np.ndarray | None]:
+        """The cached CC result of the committed state: the (v, comp) map of
+        its edge-incident vertices, plus, when the state is driver-held, the
+        dense comp-per-vid array it came from (else None). The Boruvka run
+        is paid once per absorbed batch (GreedyCC, the reference's dsu_valid
+        fast path); every later call is a cache hit."""
+        from landscape_spark.sketch.boruvka import _cc_rounds
+
+        if self._cc_cache_version == self.batches_seen and self._cc_cache_vmap is not None:
+            self.cc_cache_hits += 1
+            return self._cc_cache_vmap, self._cc_cache_labels
+        self.cc_cache_misses += 1
+        slices = self._held_state() if self._held else self.current_sketches()
+        labels = None
+        if slices is None or self._held:
+            v = comp = np.empty(0, dtype=np.int64)
+            if slices is not None:
+                # the passes run in-process on the driver-held table
+                t = _cc_rounds(self.spark, slices, None, self.params)
+                v, comp = _ids(t, "v"), _ids(t, "comp")
+            if self._held:
+                labels = np.arange(self.params.n, dtype=np.int64)
+                labels[v] = comp
+            vmap = _local_frame(self.spark, {"v": v, "comp": comp}, "v long, comp long")
+        else:
+            # _cc_rounds returns a one-partition frame built from its
+            # driver-side labels (above COLLECT_THRESHOLD vertex ids, a
+            # local checkpoint); neither rereads the state: cache it as is
+            vmap = _cc_rounds(
+                self.spark, slices, None, self.params, num_partitions=self.num_partitions
+            )
+        self._cc_cache_version = self.batches_seen
+        self._cc_cache_vmap, self._cc_cache_labels = vmap, labels
+        return vmap, labels
+
     def query_components(self, n_vertices: int = 0) -> DataFrame:
         """In-stream CC query on the committed sketch state (v, comp): the
         SAME _cc_rounds pass loop as the flagship batch query and the
-        k-forests (column-pruned passes straight off the parquet state from
-        the identity label map, no supernode rematerialization; driver-owned
-        labels and DSU up to COLLECT_THRESHOLD vertex ids, one Spark job per
-        pass). With n_vertices > 0 the result covers ALL of 0..n-1
+        k-forests (column-pruned passes from the identity label map, no
+        supernode rematerialization; driver-owned labels and DSU up to
+        COLLECT_THRESHOLD vertex ids). A driver-held state runs every pass
+        in-process; a larger one reads its parquet in one Spark job per
+        pass. With n_vertices > 0 the result covers ALL of 0..n-1
         (never-seen vertices as their own singleton components); with 0 it
         covers edge-incident vertices only. The micro-batch boundary is the
         flush barrier; each query starts at group 0 — the state changed
         since the last query, which is the reference's query-state reset
         (Q5). The raw Boruvka result is cached until the next absorbed batch
-        (GreedyCC); the isolated-vertex padding is a cheap per-call join on
-        top of the cache."""
-        from landscape_spark.sketch.boruvka import (
-            _cc_rounds,
-            _local_frame,
-            components_with_isolated,
-        )
+        (GreedyCC), so q(0) and q(n) share one cache entry; the padding is
+        a gather from the driver's labels, or above the driver-held size a
+        per-call join on top of the cache."""
+        from landscape_spark.sketch.boruvka import components_with_isolated
 
-        # the cache holds the RAW edge-incident map (the expensive Boruvka
-        # result); isolated-vertex padding is a cheap join applied per call,
-        # so q(0) and q(n) share one cache entry
-        if self._cc_cache_version == self.batches_seen and self._cc_cache_vmap is not None:
-            self.cc_cache_hits += 1
-            vmap = self._cc_cache_vmap
-        else:
-            self.cc_cache_misses += 1
-            slices = self.current_sketches()
-            if slices is None:
-                empty = np.empty(0, dtype=np.int64)
-                vmap = _local_frame(self.spark, {"v": empty, "comp": empty}, "v long, comp long")
-            else:
-                # _cc_rounds returns a one-partition frame built from its
-                # driver-side labels (above COLLECT_THRESHOLD vertex ids, a
-                # local checkpoint); neither rereads the state: cache it as is
-                vmap = _cc_rounds(
-                    self.spark, slices, None, self.params,
-                    num_partitions=self.num_partitions,
-                )
-            self._cc_cache_version = self.batches_seen
-            self._cc_cache_vmap = vmap
-        if n_vertices > 0:
-            verts = self.spark.range(n_vertices).select(F.col("id").alias("v"))
-            vmap = components_with_isolated(self.spark, vmap, verts)
-        return vmap
+        vmap, labels = self._components()
+        if n_vertices <= 0:
+            return vmap
+        if labels is not None:
+            v = np.arange(n_vertices, dtype=np.int64)
+            return _local_frame(
+                self.spark, {"v": v, "comp": _components_of(labels, v)}, "v long, comp long"
+            )
+        verts = self.spark.range(n_vertices).select(F.col("id").alias("v"))
+        return components_with_isolated(self.spark, vmap, verts)
 
     def burst_point_queries(self, pairs: DataFrame) -> DataFrame:
         """A burst of point-to-point queries on the committed state — the
         reference fires 100-query bursts at registered breakpoints
         (/root/reference/experiment/cluster_query_expr.cpp:197-332). The
         first query of a burst pays the Boruvka run; the rest hit the cache
-        (its dsu_valid / GreedyCC behavior)."""
+        (its dsu_valid / GreedyCC behavior). With driver-held labels the
+        pairs come to the driver in one Spark job and are answered by a
+        gather, as the reference's DSU point query
+        (graph_distrib_update.cpp:211-226); a burst above COLLECT_THRESHOLD
+        pairs, or one with a null id, is joined in Spark
+        (batched_reachability)."""
         from landscape_spark.sketch.boruvka import batched_reachability
 
-        cc = self.query_components(0)
-        return batched_reachability(cc, pairs)
+        vmap, labels = self._components()
+        if labels is not None:
+            t = pairs.select("a", "b").limit(COLLECT_THRESHOLD + 1).toArrow()
+            if t.num_rows <= COLLECT_THRESHOLD and not any(c.null_count for c in t.columns):
+                a, b = _ids(t, "a"), _ids(t, "b")
+                connected = _components_of(labels, a) == _components_of(labels, b)
+                return _local_frame(
+                    self.spark,
+                    {"a": a, "b": b, "connected": connected},
+                    "a long, b long, connected boolean",
+                )
+        return batched_reachability(vmap, pairs)
 
 
 def replay_with_breakpoints(

@@ -57,6 +57,16 @@ def test_stream_deletions(spark, tmp_path):
         for r in components_with_isolated(spark, ing.query_components(n), v).collect()
     }
     assert got == _cc_oracle([(1, 2)], n)
+    # degenerate batches on a fresh state: an empty first batch, an
+    # all-self-loop batch, and a batch whose duplicate edge cancels (its
+    # endpoints stay vertices of the state)
+    ing = SketchStreamIngestor(spark, params, str(tmp_path / "degen"), num_partitions=2)
+    ing.absorb_batch(spark.createDataFrame([], "a long, b long"), 0)
+    assert ing.query_components(0).collect() == []
+    ing.absorb_batch(spark.createDataFrame([(4, 4), (7, 7)], "a long, b long"), 1)
+    assert ing.query_components(0).collect() == []
+    ing.absorb_batch(spark.createDataFrame([(1, 2), (2, 3), (1, 2)], "a long, b long"), 2)
+    assert {r.v: r.comp for r in ing.query_components(0).collect()} == {1: 1, 2: 2, 3: 2}
 
 
 def test_real_structured_stream_file_source(spark, tmp_path):
@@ -167,12 +177,16 @@ def test_absorb_batch_replay_is_idempotent(spark, tmp_path):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
-def test_state_commit_survives_crash_before_pointer_flip(spark, tmp_path):
+def test_state_commit_survives_crash_before_pointer_flip(spark, tmp_path, monkeypatch):
     """The atomic commit point is the CURRENT pointer rename: a crash after
     writing the new version dir but BEFORE the flip must leave the previous
-    committed state live (the stream re-delivers the uncommitted batch)."""
+    committed state live (the stream re-delivers the uncommitted batch). A
+    flip that fails leaves it live in the driver-held state too, so the
+    retried batch applies exactly once."""
     import json
     import os
+
+    import pytest
 
     n = 16
     params = SketchParams.for_graph(n, seed=9)
@@ -188,6 +202,16 @@ def test_state_commit_survives_crash_before_pointer_flip(spark, tmp_path):
     open(os.path.join(nxt, "_SUCCESS"), "w").close()
     with open(os.path.join(sd, "CURRENT")) as f:
         assert json.load(f)["version"] == 0  # pointer still on v0
+    assert {r.v: r.comp for r in ing2.query_components(0).collect()} == committed
+    replace = os.replace
+
+    def fail_once(src, dst):
+        monkeypatch.setattr(os, "replace", replace)
+        raise OSError("pointer flip failed")
+
+    monkeypatch.setattr(os, "replace", fail_once)
+    with pytest.raises(OSError, match="pointer flip failed"):
+        ing2.absorb_batch(spark.createDataFrame([(3, 4)], "a long, b long"), 1)
     assert {r.v: r.comp for r in ing2.query_components(0).collect()} == committed
     # the re-delivered batch commits over the stale dir and flips to v1
     ing2.absorb_batch(spark.createDataFrame([(3, 4)], "a long, b long"), 1)
@@ -233,21 +257,37 @@ def test_state_retains_previous_version_for_racing_queries(spark, tmp_path):
     assert dirs == ["sketches_v1", "sketches_v2"]  # current + previous only
 
 
-def test_small_state_commits_one_parquet_file(spark, tmp_path):
+def test_small_state_commits_one_parquet_file(spark, tmp_path, monkeypatch):
     """A 64-vertex sketch table is far below one task's byte target, so the
-    build and the state merge each run one partition and every commit
-    writes exactly one parquet part file, even with a cap of 8."""
+    state is driver-held and every commit writes exactly one parquet part
+    file, also when a batch above COLLECT_THRESHOLD edges builds its delta
+    in Spark. With the driver threshold at 0 the build and the state merge
+    run in Spark, each as one partition even with a cap of 8: one part file
+    too. All three commit the same rows and labels."""
     import os
+
+    import pyarrow.parquet as pq
+
+    from landscape_spark.streaming import ingest
 
     n = 64
     params = SketchParams.for_graph(n, seed=17)
-    sd = str(tmp_path / "one")
-    ing = SketchStreamIngestor(spark, params, sd, num_partitions=8)
-    for i, batch in enumerate([[(1, 2), (2, 3), (10, 11)], [(3, 4), (2, 3)]]):
-        ing.absorb_batch(spark.createDataFrame(batch, "a long, b long"), i)
-        vdir = ing._version_dir(i)
-        parts = [f for f in os.listdir(vdir) if f.startswith("part-")]
-        assert len(parts) == 1, parts
-    got = {r.v: r.comp for r in ing.query_components(0).collect()}
-    # (2, 3) was sent twice: XOR deleted it
-    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10}
+    committed = []
+    for held, collect in ((True, ingest.COLLECT_THRESHOLD), (True, 1), (False, None)):
+        if held:
+            monkeypatch.setattr(ingest, "COLLECT_THRESHOLD", collect)
+        else:
+            monkeypatch.setattr(ingest, "TASK_SKETCH_BYTES", 0)
+        sd = str(tmp_path / f"one_{held}_{collect}")
+        ing = SketchStreamIngestor(spark, params, sd, num_partitions=8)
+        assert ing._held == held
+        for i, batch in enumerate([[(1, 2), (2, 3), (10, 11)], [(3, 4), (2, 3)]]):
+            ing.absorb_batch(spark.createDataFrame(batch, "a long, b long"), i)
+            vdir = ing._version_dir(i)
+            parts = [f for f in os.listdir(vdir) if f.startswith("part-")]
+            assert len(parts) == 1, parts
+        got = {r.v: r.comp for r in ing.query_components(0).collect()}
+        # (2, 3) was sent twice: XOR deleted it
+        assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10}
+        committed.append(pq.read_table(ing._cur).sort_by("vid").to_pylist())
+    assert committed[0] == committed[1] == committed[2]
