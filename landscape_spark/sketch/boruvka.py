@@ -266,7 +266,7 @@ def _boruvka_passes(
     ckpt=None,
     collect_threshold: int = COLLECT_THRESHOLD,
     slices_path: str | None = None,
-) -> tuple[DataFrame, tuple[list[tuple[int, int]], list[DataFrame]], int]:
+) -> tuple[DataFrame | pa.Table, tuple[list[tuple[int, int]], list[DataFrame]], int]:
     """The one Boruvka pass loop over the columnar slice table, consuming
     sketch groups [start_group, end_group). It serves CC (_cc_rounds) and
     every k-forest pass (k_spanning_forests).
@@ -478,7 +478,7 @@ def _cc_rounds(
     ckpt=None,
     collect_threshold: int = COLLECT_THRESHOLD,
     slices_path: str | None = None,
-) -> DataFrame:
+) -> DataFrame | pa.Table:
     """Boruvka CC over the columnar slice table: _boruvka_passes from
     ``start_group`` to the end of the group budget, returning only the
     vid->comp map (a one-partition driver-built frame, an Arrow table for
