@@ -81,10 +81,13 @@ def _proc_rss_mib(pid: int) -> float:
 
 def _descendant_pids(root: int, depth: int = 4) -> list[int]:
     """Descendant PIDs via /proc ppid scan, ``depth`` generations deep.
-    The full local-mode tree is driver -> JVM -> pyspark.daemon -> UDF
-    workers (depth 3) — the workers hold the numpy kernel allocations, so a
-    depth-2 scan (the original default) missed the processes with the
-    largest RSS and under-reported peaks; depth 4 adds one spare level."""
+    The full local-mode tree is driver -> JVM -> Python worker daemon ->
+    UDF workers (depth 3). Under ``get_spark``'s local masters the daemon
+    is ``landscape_spark.pyworker``, which runs ``pyspark.daemon``'s loop in
+    its own process, so the depth is the same as with Spark's daemon. The
+    workers hold the numpy kernel allocations, so a depth-2 scan (the
+    original default) missed the processes with the largest RSS and
+    under-reported peaks; depth 4 adds one spare level."""
     by_parent: dict[int, list[int]] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():

@@ -49,23 +49,29 @@ from landscape_spark.sketch.l0 import (
     xor_fold_rows,
 )
 
-# NOTE: per-task fixed cost. Every mapInArrow task pays 0.1-0.2 s before its
-# kernel sees a batch, whatever its data: PySpark 4.1's worker calls
-# importlib.invalidate_caches() once per task, and under Python 3.11 the
-# zipimporters then re-read the directories of pyspark.zip and the spark-core
-# jar (0.11-0.21 s per call, timed inside workers). Measured on local[4], a
-# 4-vCPU VM: an empty mapInArrow stage takes 0.22-0.27 s as 1 task and
-# 0.54-0.67 s as 8; XOR-merging a 2 MiB slice table (n=256) takes 0.37 s as
-# 1 task and 0.77 s as 8; a 10.5 MiB one (n=1000) 0.41 s as 1-4 tasks and
-# 0.71 s as 8. So a sketch shuffle runs one task per TASK_SKETCH_BYTES of the
+# NOTE: per-task fixed cost. PySpark 4.1's worker calls
+# importlib.invalidate_caches() once per task, and under Python 3.11 every
+# zipimporter on the worker's path then re-reads its archive's directory:
+# 0.11-0.22 s per task with Spark's daemon, which puts pyspark.zip and the
+# spark-core jar on the path. get_spark's local masters start the workers
+# from landscape_spark.pyworker, which imports pyspark from its installed
+# directory, and the call takes 0.006-0.012 s (both timed inside workers).
+# Measured with that daemon on local[4], a 4-vCPU VM (medians of 5
+# interleaved reps in two sessions, Spark's daemon in brackets): an empty
+# mapInArrow stage takes 0.08 s as 1 task and 0.15 s as 8 (0.14 / 0.34-0.36
+# s); XOR-merging a 2 MiB slice table (n=256) 0.12 s as 1 task and 0.21 s as
+# 8 (0.19-0.22 / 0.43-0.47 s); a 10.5 MiB one (n=1000) 0.17-0.24 s as 1-4
+# tasks and 0.24-0.30 s as 8 (0.25-0.29 / 0.47-0.51 s). A task still costs
+# something, so a sketch shuffle runs one task per TASK_SKETCH_BYTES of the
 # sketch rows it can produce, up to the caller's num_partitions. 8 MiB gives
-# 1 task at n=256, 2 at n=1000 (the fastest build there: 0.53 s, against
-# 0.63 s as 1 task and 0.79 s as 8) and the cap at n=2^14. In between the
+# 1 task at n=256, 2 at n=1000 and the cap at n=2^14; the n=1000 link-graph
+# build took 0.183 s as 2 tasks against 0.190 s as 1 and 0.215 s as 4
+# (medians of 25 interleaved reps), so the size stays. In between the
 # rounding can land past the core count (n=4096: 7 tasks, two waves; its
-# build took 0.80 s against 0.48 s as 4). The bound is on OUTPUT rows
-# (distinct keys x row bytes), never on shuffle input: AQE coalescing sizes by
-# input, 16 B per update, and could put a sparse 1 MB update shuffle whose
-# kernel allocates GBs of sketches into one task.
+# build took 0.80 s against 0.48 s as 4 with Spark's daemon). The bound is on
+# OUTPUT rows (distinct keys x row bytes), never on shuffle input: AQE
+# coalescing sizes by input, 16 B per update, and could put a sparse 1 MB
+# update shuffle whose kernel allocates GBs of sketches into one task.
 TASK_SKETCH_BYTES = 8 << 20
 
 

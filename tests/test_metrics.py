@@ -4,9 +4,14 @@ network comm factor, work_distributor.cpp:24-90, parser.py:21-27)."""
 from __future__ import annotations
 
 import json
+import os
 import time
+import zipfile
+
+import pyarrow as pa
 
 from landscape_spark.metrics import HeartbeatReporter, comm_factor, stage_totals
+from landscape_spark.pyworker import installed_first
 
 
 def test_heartbeat_writes_jsonl(spark, tmp_path):
@@ -32,3 +37,61 @@ def test_comm_factor_arithmetic():
 def test_stage_totals_none_when_ui_disabled(spark):
     # the shared test session runs with spark.ui.enabled=false
     assert stage_totals(spark) is None
+
+
+def test_local_workers_import_installed_pyspark(spark):
+    """A local master's Python workers import pyspark from its installed
+    directory, so PySpark's per-task importlib.invalidate_caches() re-reads
+    neither pyspark.zip nor the spark-core jar (landscape_spark.pyworker)."""
+    import pyspark
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyspark as worker_pyspark
+
+        for _ in batches:
+            pass
+        cache = dict(sys.path_importer_cache)
+        yield pa.RecordBatch.from_pylist([{
+            "file": worker_pyspark.__file__,
+            "version": worker_pyspark.__version__,
+            "jars": [p for p in sys.path + list(cache) if ".jar" in p],
+            "zipped": [
+                k for k, v in cache.items()
+                if isinstance(v, zipimport.zipimporter) and "pyspark.zip" + os.sep in k
+            ],
+        }])
+
+    schema = "file string, version string, jars array<string>, zipped array<string>"
+    rows = spark.range(0, 2, 1, 2).mapInArrow(probe, schema).collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert ".zip" + os.sep not in r.file, r.file
+        assert r.version == pyspark.__version__
+        assert r.jars == [] and r.zipped == []
+
+
+def test_installed_first_keeps_spark_order_without_a_matching_install(tmp_path):
+    def pyspark_dir(name, version):
+        d = tmp_path / name
+        (d / "pyspark").mkdir(parents=True)
+        (d / "pyspark" / "version.py").write_text(f"__version__: str = '{version}'\n")
+        return str(d)
+
+    archive = str(tmp_path / "pyspark.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("pyspark/version.py", "__version__: str = '4.1.2'\n")
+    py4j = str(tmp_path / "py4j-src.zip")
+    jar = str(tmp_path / "spark-core.jar")
+    cwd, site, other = str(tmp_path / "cwd"), pyspark_dir("site", "4.1.2"), pyspark_dir("other", "4.0.0")
+
+    assert installed_first([cwd, archive, py4j, jar, site]) == [cwd, site, archive, py4j]
+    for path in (
+        [cwd, archive, py4j, jar],  # no directory pyspark
+        [cwd, archive, py4j, jar, other],  # version mismatch
+        [cwd, archive, py4j, jar, other, site],  # the first install shadows the match
+        [cwd, py4j, jar, site],  # no pyspark.zip to compare with
+    ):
+        assert installed_first(path) == path
