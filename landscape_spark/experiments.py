@@ -36,14 +36,14 @@ import time
 def _spark(cpus: int):
     from landscape_spark.session import get_spark
 
-    return get_spark("landscape_experiments", master=f"local[{cpus}]",
-                     shuffle_partitions=max(8, cpus))
+    return get_spark("landscape_experiments", master=f"local[{cpus}]")
 
 
 def exp_speed(args) -> dict:
     from pyspark.sql import functions as F
 
     from landscape_spark import linkgraph
+    from landscape_spark.session import local_parallelism
     from landscape_spark.sketch.boruvka import _cc_rounds
     from landscape_spark.sketch.build import build_group_slices
     from landscape_spark.sketch.l0 import SketchParams
@@ -54,16 +54,17 @@ def exp_speed(args) -> dict:
     )
     m_upd = stream.count()
     params = SketchParams.for_graph(args.n, seed=args.seed)
+    parts = local_parallelism(spark)
     best, sk = float("inf"), None
     for _ in range(args.reps):
         if sk is not None:
             sk.unpersist(blocking=True)
         t0 = time.time()
-        sk = build_group_slices(stream, params, max(8, args.cpus)).persist()
+        sk = build_group_slices(stream, params, parts).persist()
         sk.count()
         best = min(best, time.time() - t0)
     t0 = time.time()
-    vmap = _cc_rounds(spark, sk, None, params, 0, max(8, args.cpus))
+    vmap = _cc_rounds(spark, sk, None, params, 0, parts)
     ncomp = vmap.select("comp").distinct().count()
     cc_sec = time.time() - t0
     return {"experiment": "speed", "n": args.n, "updates": m_upd,
@@ -75,6 +76,7 @@ def exp_query(args) -> dict:
     from pyspark.sql import functions as F
 
     from landscape_spark import linkgraph
+    from landscape_spark.session import local_parallelism
     from landscape_spark.sketch.l0 import SketchParams
     from landscape_spark.streaming.ingest import (
         SketchStreamIngestor,
@@ -94,7 +96,7 @@ def exp_query(args) -> dict:
     breakpoints = [step * (i + 1) for i in range(args.bursts)]
     params = SketchParams.for_graph(args.n, seed=args.seed)
     ing = SketchStreamIngestor(
-        spark, params, tempfile.mkdtemp(prefix="lsq_"), max(8, args.cpus)
+        spark, params, tempfile.mkdtemp(prefix="lsq_"), local_parallelism(spark)
     )
     pairs = spark.createDataFrame(
         [(i, (i + 1) % args.n) for i in range(0, args.qpairs * 2, 2)], "a long, b long"
@@ -109,6 +111,7 @@ def exp_kconnect(args) -> dict:
 
     from landscape_spark import linkgraph
     from landscape_spark.metrics import PeakRssSampler
+    from landscape_spark.session import local_parallelism
     from landscape_spark.sketch.boruvka import k_spanning_forests
 
     spark = _spark(args.cpus)
@@ -123,7 +126,7 @@ def exp_kconnect(args) -> dict:
         with PeakRssSampler(interval=0.2) as rss:
             t0 = time.time()
             nf = k_spanning_forests(spark, edges, args.n, k=k, seed=args.seed,
-                                    num_partitions=max(8, args.cpus)).count()
+                                    num_partitions=local_parallelism(spark)).count()
             sec = time.time() - t0
         rows.append({"k": k, "forest_edges": nf, "sec": round(sec, 3),
                      "max_rss_mib": round(rss.peak_mib, 1)})

@@ -62,9 +62,10 @@ def _local_frame(spark: SparkSession, cols: dict[str, np.ndarray], schema: str) 
     """One-partition DataFrame over driver-side arrays, built through Arrow.
     A frame built from a Python list is a pickled Python RDD, and every
     scan of it maps spark.default.parallelism partitions through Python
-    workers; an Arrow-built frame is a local relation, scanned in up to
-    that many JVM tasks. Coalesced, every scan is one task (an empty frame
-    too: Spark keeps one empty partition)."""
+    workers (on a local master get_spark sets one per task slot, so one
+    wave of Python tasks); an Arrow-built frame is a local relation,
+    scanned in up to that many JVM tasks. Coalesced, every scan is one task
+    (an empty frame too: Spark keeps one empty partition)."""
     table = pa.table({c: pa.array(a) for c, a in cols.items()})
     return spark.createDataFrame(table, schema).coalesce(1)
 

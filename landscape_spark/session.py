@@ -9,8 +9,26 @@ executors instead).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# Spark's local master forms: local, local[N], local[*], local[N,F], local[*,F]
+# (F, the task retry count, does not change the number of task slots).
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+
+def default_partitions(master: str) -> int:
+    """Shuffle partitions and default parallelism for ``master``: its task
+    slots on a local master (N for local[N] and local[N,F], the cores this
+    process may run on for local[*], 1 for local), 200 on any other."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None:
+        return 200
+    slots = m.group(1)
+    if slots is None:
+        return 1
+    return len(os.sched_getaffinity(0)) if slots == "*" else int(slots)
 
 
 def get_spark(
@@ -23,10 +41,14 @@ def get_spark(
 
     Defaults favor the 100TB design point: AQE on (runtime re-plan, skew-join
     splitting, small-partition coalescing), Arrow transfer for every
-    Python-side kernel, shuffle partitions sized to cores locally (a cluster
-    deploy overrides via --conf).
+    Python-side kernel, and shuffle and default parallelism from
+    ``default_partitions(master)`` unless ``shuffle_partitions`` is given (a
+    cluster deploy overrides via --conf). A local master gets one partition
+    per task slot, so a stage of default width runs in one wave. There is no
+    floor: one above the slot count, such as 8 on local[4], runs every such
+    stage in two waves of tasks, each paying a Python task's fixed cost.
 
-    On ``local[...]`` masters the Python worker daemon is
+    On local masters the Python worker daemon is
     ``landscape_spark.pyworker``, which imports pyspark from its installed
     directory instead of pyspark.zip, so no task pays for its zipimporters
     re-reading pyspark.zip and the spark-core jar (about 0.1-0.2 s per Python
@@ -37,11 +59,7 @@ def get_spark(
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
-        if master.startswith("local["):
-            inner = master[len("local[") : -1]
-            shuffle_partitions = 32 if inner == "*" else max(8, int(inner))
-        else:
-            shuffle_partitions = 200
+        shuffle_partitions = default_partitions(master)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -69,7 +87,7 @@ def get_spark(
             shm = "/dev/shm/spark-local"
             os.makedirs(shm, exist_ok=True)
             builder = builder.config("spark.local.dir", shm)
-    if master.startswith("local["):
+    if _LOCAL_MASTER.fullmatch(master):
         builder = builder.config("spark.python.daemon.module", "landscape_spark.pyworker").config(
             "spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )

@@ -67,8 +67,11 @@ from landscape_spark.sketch.l0 import (
 # 1 task at n=256, 2 at n=1000 and the cap at n=2^14; the n=1000 link-graph
 # build took 0.183 s as 2 tasks against 0.190 s as 1 and 0.215 s as 4
 # (medians of 25 interleaved reps), so the size stays. In between the
-# rounding can land past the core count (n=4096: 7 tasks, two waves; its
-# build took 0.80 s against 0.48 s as 4 with Spark's daemon). The bound is on
+# rounding can land past the core count: n=4096 wants 7 tasks, which ran in
+# two waves on local[4] under an 8-partition cap (0.80 s against 0.48 s as 4
+# tasks with Spark's daemon). A caller that passes local_parallelism caps at
+# a local master's task slots (get_spark), so that build runs as 4 tasks;
+# the num_partitions=32 defaults still cap at 32. The bound is on
 # OUTPUT rows (distinct keys x row bytes), never on shuffle input: AQE
 # coalescing sizes by input, 16 B per update, and could put a sparse 1 MB
 # update shuffle whose kernel allocates GBs of sketches into one task.

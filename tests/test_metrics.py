@@ -12,6 +12,7 @@ import pyarrow as pa
 
 from landscape_spark.metrics import HeartbeatReporter, comm_factor, stage_totals
 from landscape_spark.pyworker import installed_first
+from landscape_spark.session import default_partitions
 
 
 def test_heartbeat_writes_jsonl(spark, tmp_path):
@@ -37,6 +38,19 @@ def test_comm_factor_arithmetic():
 def test_stage_totals_none_when_ui_disabled(spark):
     # the shared test session runs with spark.ui.enabled=false
     assert stage_totals(spark) is None
+
+
+def test_default_partitions_follow_task_slots():
+    """A local master gets one partition per task slot, so a default-width
+    stage runs in one wave; the retry count F of local[N,F] is no slot."""
+    assert default_partitions("local[4]") == 4
+    assert default_partitions("local[1]") == 1
+    assert default_partitions("local") == 1
+    assert default_partitions("local[4,2]") == 4
+    assert default_partitions("local[*]") == len(os.sched_getaffinity(0))
+    assert default_partitions("local[*, 3]") == len(os.sched_getaffinity(0))
+    assert default_partitions("spark://h:7077") == 200
+    assert default_partitions("local-cluster[2,1,1024]") == 200
 
 
 def test_local_workers_import_installed_pyspark(spark):
