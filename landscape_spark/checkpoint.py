@@ -1,11 +1,11 @@
 """Per-round checkpoints: the in-session round step, and durable rounds with
 per-partition lineage + metrics (north rule).
 
-``step`` is the one round primitive of every iterative operator (graph/ and
-sketch Boruvka's distributed label map): it cuts the round's lineage with an
-eager local checkpoint, reads the round's integer certificates off the same
-job, and frees the checkpoints the new round replaces, so a finished query
-leaves only the checkpoints its result reads. The reference likewise keeps
+``step`` is the one round primitive of every iterative graph/ operator: it
+cuts the round's lineage with an eager local checkpoint, reads the round's
+integer certificates off the same job, and frees the checkpoints the new
+round replaces, so a finished query leaves only the checkpoints its result
+reads. The reference likewise keeps
 only the current round's state on its main node (its
 src/graph_distrib_update.cpp:105-154).
 

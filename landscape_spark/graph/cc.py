@@ -24,9 +24,9 @@ checkpoint (checkpoint.step) released before the call returns. Once the
 live edges fit, they come to the driver through Arrow and the numpy kernel
 (_hook_and_shortcut) finishes. The driver-side union-find this
 amounts to is bounded by the one constant, as "BTS: load-balanced
-distributed union-find" (ICDE'24) bounds a central one. Sketch Boruvka's
-distributed merge (sketch/boruvka.py) runs its sampled component pairs
-through this same operator.
+distributed union-find" (ICDE'24) bounds a central one. Sketch Boruvka
+(sketch/boruvka.py) merges its sampled cut edges on the driver only, with
+this kernel's pointer jumping (_pointer_jump).
 """
 
 from __future__ import annotations
@@ -43,11 +43,7 @@ from landscape_spark.checkpoint import _release, step
 
 # The most rows the driver owns. Exact CC collects its live edge set once it
 # has at most this many edges (with no distributed round run, the vertex
-# column too). Sketch Boruvka (sketch/boruvka.py) keeps its vid->comp map as
-# a dense driver array (at most 16 MB) up to this vertex-id space, and above
-# it merges a pass's samples in its driver DSU while they number at most
-# this many (the reference collects every sample on rank 0,
-# src/graph_distrib_update.cpp:105-154 — its acknowledged ceiling).
+# column too).
 COLLECT_THRESHOLD = 2_000_000
 
 
@@ -84,6 +80,14 @@ def _relabel(labels: DataFrame, remap: DataFrame) -> DataFrame:
     )
 
 
+def _pointer_jump(parent: np.ndarray) -> np.ndarray:
+    """A parent array whose pointers form a forest, flattened: every entry
+    moved to its tree's root by repeated pointer jumping."""
+    while not np.array_equal(jumped := parent[parent], parent):
+        parent = jumped
+    return parent
+
+
 def _hook_and_shortcut(
     u: np.ndarray, v: np.ndarray, n: int, max_iter: int
 ) -> tuple[np.ndarray, bool]:
@@ -102,9 +106,7 @@ def _hook_and_shortcut(
         hook = np.arange(n)
         np.minimum.at(hook, u, v)
         np.minimum.at(hook, v, u)
-        parent = hook[parent]
-        while not np.array_equal(jumped := parent[parent], parent):
-            parent = jumped
+        parent = _pointer_jump(hook[parent])
         u, v = parent[u], parent[v]
     return parent, not (u != v).any()
 

@@ -6,11 +6,13 @@ calls ``importlib.invalidate_caches()`` once per task, and under Python 3.11
 that makes each zipimporter in ``sys.path_importer_cache`` re-read its
 archive's directory: 0.11-0.22 s per task on a 4-vCPU VM, before the task's
 kernel sees a batch. Before it starts Spark's own daemon loop, this module
-drops the jars (the spark-core jar holds no ``.py`` file), moves the zips
-behind the directory entries so pyspark and py4j load from their installed
-packages, and forgets the archives' importers. The workers fork from the
-daemon and inherit its path. When the first installed pyspark on the path is
-not the zip's version (its ``version.py`` differs), Spark's order is kept.
+drops the jars (the spark-core jar holds no ``.py`` file) and, when the
+first installed pyspark and py4j on the path are the archives' own (their
+``version.py`` files match byte for byte), drops both archives too, so no
+import can fall through to them, and forgets the archives' importers. The
+workers fork from the daemon and inherit its path. When only pyspark
+matches, the zips move behind the directory entries; when pyspark does not,
+Spark's order is kept.
 
 Run as ``python -m landscape_spark.pyworker``; ``session.get_spark`` sets it
 for ``local[...]`` masters only, because elsewhere executors receive the
@@ -19,30 +21,45 @@ engine through ``--py-files`` after their daemon has started.
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import sys
 import zipfile
 
 
-def installed_first(path: list[str]) -> list[str]:
-    """``path`` with its ``.jar`` entries dropped and its ``.zip`` entries
-    moved behind the directories, or ``path`` itself unless the first
-    directory holding a pyspark has pyspark.zip's ``pyspark/version.py``."""
-    zips = [p for p in path if p.endswith(".zip")]
-    dirs = [p for p in path if not p.endswith((".zip", ".jar"))]
+def _matching_archive(zips: list[str], dirs: list[str], pattern: str, package: str) -> str | None:
+    """The first of ``zips`` named like ``pattern``, if the first of
+    ``dirs`` holding ``package`` has the archive's ``package/version.py``;
+    else None."""
     try:
-        zipped = next(p for p in zips if os.path.basename(p) == "pyspark.zip")
+        zipped = next(p for p in zips if fnmatch.fnmatch(os.path.basename(p), pattern))
         with zipfile.ZipFile(zipped) as z:
-            want = z.read("pyspark/version.py")
+            want = z.read(f"{package}/version.py")
     except (StopIteration, OSError, KeyError, zipfile.BadZipFile):
-        return path
+        return None
     for d in dirs:
         try:
-            with open(os.path.join(d or os.curdir, "pyspark", "version.py"), "rb") as f:
-                return dirs + zips if f.read() == want else path
+            with open(os.path.join(d or os.curdir, package, "version.py"), "rb") as f:
+                return zipped if f.read() == want else None
         except OSError:
             continue
-    return path
+    return None
+
+
+def installed_first(path: list[str]) -> list[str]:
+    """``path`` with its ``.jar`` entries dropped and its ``.zip`` entries
+    moved behind the directories, pyspark.zip and py4j's zip dropped as
+    well when both installed packages match them; or ``path`` itself unless
+    the installed pyspark matches pyspark.zip."""
+    zips = [p for p in path if p.endswith(".zip")]
+    dirs = [p for p in path if not p.endswith((".zip", ".jar"))]
+    pyspark = _matching_archive(zips, dirs, "pyspark.zip", "pyspark")
+    if pyspark is None:
+        return path
+    py4j = _matching_archive(zips, dirs, "py4j-*-src.zip", "py4j")
+    if py4j is None:
+        return dirs + zips
+    return dirs + [p for p in zips if p not in (pyspark, py4j)]
 
 
 if __name__ == "__main__":

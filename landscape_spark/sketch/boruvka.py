@@ -18,15 +18,15 @@ table — one binary column per sketch group, built once and never rewritten
 which this removes). As in the reference, CC and every k-forest pass run the
 SAME Boruvka emulation, _boruvka_passes: every pass projects only the groups
 it consumes (column pruning), re-folds vertex slices under the current labels
-and l0-samples the folds; only the vid->comp map updates per pass. Up to
-COLLECT_THRESHOLD vertex ids that map is a dense array on the driver beside
-one DSU, as the reference keeps its DSU on the main node — each pass is then
-one Spark job, with the labels shipped inside the fold kernel. Above it the
-map stays distributed and is joined per pass; sampled cut edges merge via the
-driver DSU up to COLLECT_THRESHOLD samples; above it the Boruvka min-edge
-rule keeps one sampled edge per component and the engine's one exact-CC
-kernel (graph/cc.py: hook-and-shortcut, finished on the driver once its
-live edges fit) merges their component pairs.
+and l0-samples the folds; only the vid->comp map updates per pass. That map
+is a dense array on the driver, and the sampled cut edges merge there in one
+numpy forest kernel (_spanning_forest), as the reference keeps its DSU on
+the main node — each pass is one Spark job, with the labels shipped inside
+the fold kernel. A first pass's merge peaks near 700 driver bytes per
+vertex id (labels, vids, four groups of samples and the kernel's
+temporaries, measured at 1.1M ids), against the cluster's
+build.slice_row_bytes per vertex (32832 at n = 2M); an id space too large
+for the driver fails in numpy's allocation.
 Each Boruvka round consumes one sketch GROUP (one-shot sampling), so k-forest
 extraction budgets per_pass groups per pass. Batch CC (_cc_rounds), the
 k-forests (k_spanning_forests) and the streaming in-stream queries
@@ -51,13 +51,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import _release, step
-from landscape_spark.graph.cc import (
-    COLLECT_THRESHOLD,
-    _local_frame,
-    _relabel,
-    connected_components_exact,
-)
+from landscape_spark.graph.cc import _local_frame, _pointer_jump
 from landscape_spark.sketch.build import (
     build_group_slices,
     fold_sample,
@@ -75,69 +69,45 @@ FIRST_PASS_GROUPS = 4
 _SAMPLES = pa.schema([("ckey", pa.int64()), ("u", pa.int64()), ("v", pa.int64())])
 
 
-class DSU:
-    """Union-find with union-by-min (roots are component minima)."""
+def _spanning_forest(
+    gi: np.ndarray, u: np.ndarray, v: np.ndarray, comp_u: np.ndarray, comp_v: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The driver merge of one pass's sampled cut edges (group gi, endpoints
+    u, v in components comp_u != comp_v): the minimum spanning forest of the
+    component multigraph under the key (gi, lo, hi) — Kruskal's forest in
+    that order, found by vectorized Boruvka over the edges' ranks. Each
+    round every root takes its least-rank live edge; on a mutual pick the
+    smaller root stays the root; pointer jumping flattens the trees.
 
-    def __init__(self) -> None:
-        self.parent: dict[int, int] = {}
-
-    def find(self, x: int) -> int:
-        # iterative with full path compression: recursion would blow the
-        # interpreter stack on adversarial union chains near the
-        # COLLECT_THRESHOLD-sized sample sets
-        root = x
-        while self.parent.get(root, root) != root:
-            root = self.parent[root]
-        while self.parent.get(x, x) != root:
-            self.parent[x], x = root, self.parent[x]
-        return root
-
-    def union(self, a: int, b: int) -> int | None:
-        """Join a's and b's sets; return the root absorbed (the larger), or
-        None when they were already one set."""
-        ra, rb = self.find(a), self.find(b)
-        if ra == rb:
-            return None
-        lo, hi = (ra, rb) if ra < rb else (rb, ra)
-        self.parent[hi] = lo
-        return hi
-
-
-def _forest_frame(
-    spark: SparkSession, pairs: list[tuple[int, int]], kept: list[DataFrame]
-) -> DataFrame:
-    """One (a, b) DataFrame over a pass loop's forest edges: the
-    driver-merged pairs plus the distributed passes' min-edge frames."""
-    ab = np.asarray(pairs, dtype=np.int64).reshape(-1, 2)
-    merged = _local_frame(spark, {"a": ab[:, 0], "b": ab[:, 1]}, "a long, b long")
-    return reduce(DataFrame.unionAll, [f.select("a", "b") for f in kept], merged)
-
-
-def _dsu_merge(
-    dsu: DSU,
-    gi: np.ndarray,
-    u: np.ndarray,
-    v: np.ndarray,
-    comp_u: np.ndarray,
-    comp_v: np.ndarray,
-    pairs: list[tuple[int, int]],
-) -> list[int]:
-    """The driver merge of one pass's sampled cut edges: union their
-    endpoint components in (group, lo, hi) order — union-by-min makes the
-    roots the component minima whatever the order — and append each edge
-    that merges two components to ``pairs`` as (lo, hi). Returns the
-    components absorbed, one per merging edge."""
+    Returns the forest's (lo, hi) pairs as an (m, 2) array in rank order,
+    every component met, and each one's root: the least component id of
+    its merged group."""
     lo, hi = np.minimum(u, v), np.maximum(u, v)
     order = np.lexsort((hi, lo, gi))
-    absorbed: list[int] = []
-    for a, b, cu, cv in zip(
-        lo[order].tolist(), hi[order].tolist(), comp_u[order].tolist(), comp_v[order].tolist()
-    ):
-        gone = dsu.union(cu, cv)
-        if gone is not None:
-            absorbed.append(gone)
-            pairs.append((a, b))
-    return absorbed
+    ids, ends = np.unique(np.concatenate([comp_u[order], comp_v[order]]), return_inverse=True)
+    a, b = ends.reshape(2, -1)
+    none = a.size  # a rank past every edge's
+    parent = np.arange(ids.size)
+    taken = np.zeros(none, dtype=bool)
+    live = np.flatnonzero(a != b)
+    while live.size:
+        ra, rb = parent[a[live]], parent[b[live]]
+        best = np.full(ids.size, none)
+        np.minimum.at(best, ra, live)
+        np.minimum.at(best, rb, live)
+        roots = np.flatnonzero(best < none)
+        e = best[roots]
+        taken[e] = True
+        ea, eb = parent[a[e]], parent[b[e]]
+        other = np.where(ea == roots, eb, ea)
+        hook = (best[other] != e) | (other < roots)
+        parent[roots[hook]] = other[hook]
+        parent = _pointer_jump(parent)
+        live = live[parent[ra] != parent[rb]]
+    low = np.full(ids.size, ids.size)
+    np.minimum.at(low, parent, np.arange(ids.size))
+    pairs = np.stack([lo[order][taken], hi[order][taken]], axis=1)
+    return pairs, ids, ids[low[parent]]
 
 
 def _driver_samples(
@@ -150,11 +120,11 @@ def _driver_samples(
     num_partitions: int,
     identity: bool,
 ) -> tuple[np.ndarray, ...]:
-    """One driver-mode pass in one Spark job: relabel_fold keys every
-    vertex slice of ``cols`` by its component from ``labels``, folds and
-    samples; the samples come back through Arrow and resolve to components
-    by gathers from ``labels``. Returns (gi, u, v, comp_u, comp_v) of the
-    samples that cut two components.
+    """One pass in one Spark job: relabel_fold keys every vertex slice of
+    ``cols`` by its component from ``labels``, folds and samples; the
+    samples come back through Arrow and resolve to components by gathers
+    from ``labels``. Returns (gi, u, v, comp_u, comp_v) of the samples that
+    cut two components.
 
     A driver-held Arrow table runs the same kernel in-process, no Spark job.
     When the rows the pass reads fit one task (sketch_partitions), it runs
@@ -182,78 +152,6 @@ def _driver_samples(
     return ckey[cut] % j, u[cut], v[cut], comp_u[cut], comp_v[cut]
 
 
-def _distributed_samples(
-    slices: DataFrame,
-    vmap: DataFrame,
-    cols: list[str],
-    sp: SketchParams,
-    n_live: int,
-    num_partitions: int,
-    identity: bool,
-) -> tuple[DataFrame, int]:
-    """One distributed-mode pass's sampled cut edges as a local checkpoint
-    of (gi, u, v, comp_u, comp_v) rows, and their count. The identity pass
-    samples straight off the vertex rows; later passes join the vid->comp
-    map to the vertex slices, fold map-side (relabel_fold on the comp
-    column) and fuse the final fold with sampling in one shuffle."""
-    j = len(cols)
-    if identity:
-        resolved = relabel_fold(slices.select("vid", *cols), sp).select(
-            (F.col("ckey") % j).alias("gi"),
-            "u",
-            "v",
-            F.col("u").alias("comp_u"),
-            F.col("v").alias("comp_v"),
-        )
-    else:
-        keyed = slices.select(F.col("vid").alias("v"), *cols).join(vmap, on="v")
-        samples = fold_sample(
-            relabel_fold(keyed.select("comp", *cols), sp, final=False),
-            "ckey",
-            sp,
-            sketch_partitions(n_live * j, sp.nbytes, num_partitions),
-        )
-        u_map = vmap.select(F.col("v").alias("u"), F.col("comp").alias("comp_u"))
-        v_map = vmap.select(F.col("v").alias("v2"), F.col("comp").alias("comp_v"))
-        resolved = (
-            samples.join(u_map, on="u")
-            .join(v_map, samples.v == v_map.v2)
-            .select((F.col("ckey") % j).alias("gi"), "u", "v", "comp_u", "comp_v")
-            .where(F.col("comp_u") != F.col("comp_v"))
-        )
-    # materialize the (tiny: <= live components x j rows) sample set ONCE,
-    # then read it from the checkpoint — limit().collect() would re-run the
-    # whole narrow sampling pipeline in incremental waves. The row count
-    # rides the checkpoint action via observe() (integer — exact under any
-    # task merge order), saving one probe job per pass.
-    resolved, stats = step(resolved, n=F.count(F.lit(1)))
-    return resolved, stats["n"]
-
-
-def _min_edges(resolved: DataFrame) -> tuple[DataFrame, int]:
-    """Boruvka min-edge rule over one pass's sampled cut edges, nothing
-    collected: every component keeps its least (a, b) incident sample. The
-    kept edges are acyclic, so each merges two components; returns them as
-    a local checkpoint of (a, b, comp_u, comp_v) rows, and their count."""
-    ek = resolved.select(
-        F.least("u", "v").alias("a"),
-        F.greatest("u", "v").alias("b"),
-        "comp_u",
-        "comp_v",
-    )
-    sym = ek.select(F.col("comp_u").alias("c"), "a", "b", "comp_u", "comp_v").unionAll(
-        ek.select(F.col("comp_v").alias("c"), "a", "b", "comp_u", "comp_v")
-    )
-    kept, stats = step(
-        sym.groupBy("c")
-        .agg(F.min_by(F.struct("a", "b", "comp_u", "comp_v"), F.struct("a", "b")).alias("e"))
-        .select("e.a", "e.b", "e.comp_u", "e.comp_v")
-        .distinct(),
-        n=F.count(F.lit(1)),
-    )
-    return kept, stats["n"]
-
-
 def _boruvka_passes(
     spark: SparkSession,
     slices: DataFrame | pa.Table,
@@ -264,9 +162,8 @@ def _boruvka_passes(
     num_partitions: int,
     on_round=None,
     ckpt=None,
-    collect_threshold: int = COLLECT_THRESHOLD,
     slices_path: str | None = None,
-) -> tuple[DataFrame | pa.Table, tuple[list[tuple[int, int]], list[DataFrame]], int]:
+) -> tuple[DataFrame | pa.Table, np.ndarray, int]:
     """The one Boruvka pass loop over the columnar slice table, consuming
     sketch groups [start_group, end_group). It serves CC (_cc_rounds) and
     every k-forest pass (k_spanning_forests).
@@ -278,149 +175,78 @@ def _boruvka_passes(
     over ``slices.vid``, as does any map at ``start_group == 0``. Vertex
     sketches are built ONCE and never rewritten.
 
-    Where the vid->comp map lives is chosen once per call from
-    ``params.n`` (every vid is below it, build.edge_updates), at no Spark
-    cost:
+    The vid->comp map is a dense int64 array on the driver over
+    ``[0, params.n)`` (every vid is below ``params.n``,
+    build.edge_updates). One vid collect starts the call; each pass is ONE
+    Spark job (_driver_samples — the array ships in relabel_fold's
+    closure), its samples merge in _spanning_forest, and the relabel is one
+    numpy gather. A driver-held Arrow slice table needs no vid collect and
+    runs each pass in-process: no Spark job.
 
-    * ``params.n <= collect_threshold``: a dense int64 array on the driver,
-      beside one union-find for the whole call. One vid collect starts the
-      call; each pass is ONE Spark job (_driver_samples — the array ships
-      in relabel_fold's closure), and the relabel is one numpy gather.
-    * above it, a distributed map: each pass joins it to the vertex slices,
-      folds map-side and fuses the final fold with l0 sampling in one
-      shuffle (sized from live components x groups x slice bytes, capped
-      at ``num_partitions``, build.sketch_partitions), then rewrites it
-      as a local checkpoint (checkpoint.step, freeing the pass's samples
-      and the map it replaces, never a caller's). An identity first pass
-      samples straight off the vertex rows (no fold, no shuffle, no joins). Sampled edges merge
-      through the driver union-find while they number at most
-      ``collect_threshold``; above that, the Boruvka min-edge rule keeps
-      one sampled edge per component (acyclic by the max-edge-in-cycle
-      argument) and connected_components_exact over their component
-      pairs (graph/cc.py) gives the merged components' min labels.
-
-    A driver-held Arrow slice table always takes the first placement, with
-    no vid collect and each pass in-process (_driver_samples): no Spark job.
-
-    Either way the driver merge applies the samples in (group, lo, hi)
-    order (_dsu_merge), and the accepted edges are a spanning forest of the
-    merges.
+    The merge keeps Kruskal's forest of the samples in (group, lo, hi)
+    order, so the accepted edges are a spanning forest of the merges.
 
     Schedule: the first pass samples FIRST_PASS_GROUPS groups, later passes
     2 (groups 2..j of a pass sample at the pass-start granularity, so some of
-    their samples land inside freshly-merged components and union as no-ops,
+    their samples land inside freshly-merged components and merge nothing,
     for j-times fewer Spark jobs). A RESERVE schedule guards the tail: once
     the remaining budget is within ceil(log2(live))+1 groups (one
     guaranteed-halving group per remaining doubling) passes drop to one
-    group, as do all passes above collect_threshold live components. If the
-    budget runs out while the last pass still sampled cut edges and the
-    exact distinct-component count is above 1, the result is UNCONFIRMED and
-    a RuntimeWarning says so (sampling failures beyond the census-calibrated
-    rate) instead of silently returning an under-merged map or a
-    non-maximal forest.
+    group. If the budget runs out while the last pass still sampled cut
+    edges and more than one component is live, the result is UNCONFIRMED
+    and a RuntimeWarning says so (sampling failures beyond the
+    census-calibrated rate) instead of silently returning an under-merged
+    map or a non-maximal forest.
 
     Returns (vid->comp map, forest edges, groups consumed). The map is a
-    one-partition frame built from the driver's array (_local_frame), an
-    Arrow table when the slices were one, or above the threshold a local
-    checkpoint. The forest edges are the driver-merged (a, b) pairs plus
-    the checkpointed (a, b, comp_u, comp_v) min-edge frames of the
-    distributed passes, which stay persisted until the caller frees them
-    (checkpoint._release)."""
+    one-partition frame built from the driver's array (_local_frame), or an
+    Arrow table when the slices were one. The forest edges are an (m, 2)
+    int64 array of (a, b) pairs, a < b, in merge order."""
     sp = slice_params(params)
-    caller_vmap = vmap
     identity = vmap is None or start_group == 0
     held = isinstance(slices, pa.Table)
-    driver = held or params.n <= collect_threshold
-    if driver:
-        vids = (slices if held else slices.select("vid").toArrow()).column("vid").to_numpy()
-        vids = np.sort(vids)
-        labels = np.arange(params.n, dtype=np.int64)
-        if not identity:
-            t = vmap.toArrow()
-            labels[t.column("v").to_numpy()] = t.column("comp").to_numpy()
-        # exact live-component count: at 1 the graph is fully connected and
-        # NO cut edge can exist — converged without paying a confirm pass
-        # (graphs with >1 final component converge via the empty-sample break)
-        n_live = np.unique(labels[vids]).size
-    else:
-        if vmap is None:
-            vmap, _ = step(slices.select(F.col("vid").alias("v"), F.col("vid").alias("comp")))
-        # slices is cached/checkpointed, so the count is nearly free; after
-        # a resume it starts from the vertex count (an overestimate), which
-        # only delays the n_live == 1 shortcut — never wrong
-        n_live = slices.count()
-    dsu = DSU()
-    pairs: list[tuple[int, int]] = []
-    kept_parts: list[DataFrame] = []
+    vids = (slices if held else slices.select("vid").toArrow()).column("vid").to_numpy()
+    vids = np.sort(vids)
+    labels = np.arange(params.n, dtype=np.int64)
+    if not identity:
+        t = vmap.toArrow()
+        labels[t.column("v").to_numpy()] = t.column("comp").to_numpy()
+    # exact live-component count: at 1 the graph is fully connected and
+    # NO cut edge can exist — converged without paying a confirm pass
+    # (graphs with >1 final component converge via the empty-sample break)
+    n_live = np.unique(labels[vids]).size
+    forest = [np.empty((0, 2), dtype=np.int64)]
     g = start_group
     converged = n_live <= 1
     while g < end_group and not converged:
         t0 = time.time()
-        if n_live > collect_threshold:
-            j = 1  # distributed passes contract strictly one group at a time
-        else:
-            j = FIRST_PASS_GROUPS if g == start_group else 2
-            if end_group - g <= math.ceil(math.log2(max(n_live, 2))) + 1:
-                j = 1
+        j = FIRST_PASS_GROUPS if g == start_group else 2
+        if end_group - g <= math.ceil(math.log2(max(n_live, 2))) + 1:
+            j = 1
         gs = list(range(g, min(g + j, end_group)))
         cols = [f"g{gg}" for gg in gs]
         first = g == start_group and identity
-        if driver:
-            samples = _driver_samples(
-                slices, cols, sp, labels, len(vids), n_live, num_partitions, first
-            )
-            n_samp = len(samples[0])
-        else:
-            resolved, n_samp = _distributed_samples(
-                slices, vmap, cols, sp, n_live, num_partitions, first
-            )
+        samples = _driver_samples(
+            slices, cols, sp, labels, len(vids), n_live, num_partitions, first
+        )
+        n_samp = len(samples[0])
         if n_samp == 0:
-            if not driver:
-                _release(resolved)
             if on_round is not None:
                 on_round(g, 0, False)
             converged = True  # no live component holds a cut edge
             break
-        if driver or n_samp <= collect_threshold:
-            if not driver:
-                t = resolved.toArrow()
-                samples = [t.column(c).to_numpy() for c in ("gi", "u", "v", "comp_u", "comp_v")]
-            absorbed = np.asarray(_dsu_merge(dsu, *samples, pairs), dtype=np.int64)
-            roots = np.asarray([dsu.find(c) for c in absorbed.tolist()], dtype=np.int64)
-            n_merged = len(absorbed)
-            if driver:
-                remap = np.arange(params.n, dtype=np.int64)
-                remap[absorbed] = roots
-                labels = remap[labels]
-            else:
-                remap = _local_frame(spark, {"x": absorbed, "p": roots}, "x long, p long")
-        else:
-            kept, n_merged = _min_edges(resolved)
-            kept_parts.append(kept)
-            # the merged components' min labels: exact CC over the kept
-            # component pairs (materialized, so the join reads it once)
-            comps = kept.select(F.col("comp_u").alias("a"), F.col("comp_v").alias("b"))
-            ends = comps.select(F.col("a").alias("v")).unionAll(comps.select("b"))
-            remap = connected_components_exact(comps, ends).select(
-                F.col("v").alias("x"), F.col("comp").alias("p")
-            )
-        if not driver:
-            # the samples, the remap and the replaced map (unless the
-            # caller's) are read by nothing once the new map is materialized
-            vmap, _ = step(
-                _relabel(vmap, remap),
-                release=[f for f in (resolved, remap, vmap) if f is not caller_vmap],
-            )
+        pairs, comp, root = _spanning_forest(*samples)
+        forest.append(pairs)
+        remap = np.arange(params.n, dtype=np.int64)
+        remap[comp] = root
+        labels = remap[labels]
         if on_round is not None:
-            on_round(g, n_samp, n_merged > 0)
+            on_round(g, n_samp, len(pairs) > 0)
         g += len(gs)
-        n_live -= n_merged
+        n_live -= len(pairs)
         converged = n_live <= 1
         if ckpt is not None:
-            if driver:
-                vmap = _local_frame(
-                    spark, {"v": vids, "comp": labels[vids]}, "v long, comp long"
-                )
+            vmap = _local_frame(spark, {"v": vids, "comp": labels[vids]}, "v long, comp long")
             dfs = {"vmap": vmap}
             if ckpt.latest_round() is None:
                 dfs["slices"] = slices
@@ -442,29 +268,19 @@ def _boruvka_passes(
                 {"samples": n_samp, "round_sec": round(time.time() - t0, 3)},
             )
     if not converged:
-        # n_live can overestimate after a distributed resume, so confirm with
-        # the exact distinct-component count before alarming — a graph that
-        # finished on the last budgeted group with every vertex in one
-        # component is NOT under-merged
-        if driver:
-            n_true = np.unique(labels[vids]).size
-        else:
-            n_true = vmap.select("comp").distinct().count()
-        if n_true > 1:
-            warnings.warn(
-                f"sketch group budget exhausted after groups {start_group}.."
-                f"{end_group - 1} with {n_true} components live and cut edges "
-                "still sampled — the returned map and forest are UNCONFIRMED "
-                "(complete if the graph is disconnected, or under-merged); "
-                "raise SketchParams.rounds (extra_rounds) or check the "
-                "sampling-failure census calibration",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-    if driver:
-        vc = {"v": vids, "comp": labels[vids]}
-        vmap = pa.table(vc) if held else _local_frame(spark, vc, "v long, comp long")
-    return vmap, (pairs, kept_parts), g - start_group
+        warnings.warn(
+            f"sketch group budget exhausted after groups {start_group}.."
+            f"{end_group - 1} with {n_live} components live and cut edges "
+            "still sampled — the returned map and forest are UNCONFIRMED "
+            "(complete if the graph is disconnected, or under-merged); "
+            "raise SketchParams.rounds (extra_rounds) or check the "
+            "sampling-failure census calibration",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    vc = {"v": vids, "comp": labels[vids]}
+    vmap = pa.table(vc) if held else _local_frame(spark, vc, "v long, comp long")
+    return vmap, np.concatenate(forest), g - start_group
 
 
 def _cc_rounds(
@@ -476,19 +292,17 @@ def _cc_rounds(
     num_partitions: int = 32,
     on_round=None,
     ckpt=None,
-    collect_threshold: int = COLLECT_THRESHOLD,
     slices_path: str | None = None,
 ) -> DataFrame | pa.Table:
     """Boruvka CC over the columnar slice table: _boruvka_passes from
     ``start_group`` to the end of the group budget, returning only the
-    vid->comp map (a one-partition driver-built frame, an Arrow table for
-    an Arrow slice table, or above ``collect_threshold`` a local
-    checkpoint). ``vmap=None`` is the identity map over ``slices.vid``; a
-    caller-built map at ``start_group == 0`` is taken to be that identity
-    and never read. With ``ckpt`` (slices a DataFrame), every pass persists
-    (vmap, next group) and the once-written slice table for
-    resume_connected_components."""
-    vmap, (_, kept), _ = _boruvka_passes(
+    vid->comp map (a one-partition driver-built frame, or an Arrow table
+    for an Arrow slice table). ``vmap=None`` is the identity map over
+    ``slices.vid``; a caller-built map at ``start_group == 0`` is taken to
+    be that identity and never read. With ``ckpt`` (slices a DataFrame),
+    every pass persists (vmap, next group) and the once-written slice table
+    for resume_connected_components."""
+    vmap, _, _ = _boruvka_passes(
         spark,
         slices,
         vmap,
@@ -498,11 +312,8 @@ def _cc_rounds(
         num_partitions,
         on_round,
         ckpt,
-        collect_threshold,
         slices_path,
     )
-    for frame in kept:  # min-edge frames: the forest's, not the map's
-        _release(frame)
     return vmap
 
 
@@ -514,7 +325,6 @@ def connected_components_sketch(
     num_partitions: int = 32,
     on_round=None,
     checkpoint_dir: str | None = None,
-    collect_threshold: int = COLLECT_THRESHOLD,
 ) -> DataFrame:
     """Return (v, comp), comp = min vertex id of v's component. Isolated
     vertices never enter the sketch table; extend with components_with_isolated.
@@ -554,7 +364,6 @@ def connected_components_sketch(
         num_partitions=num_partitions,
         on_round=on_round,
         ckpt=ckpt,
-        collect_threshold=collect_threshold,
     )
     # the returned map does not read the slices — release the slice cache
     # instead of pinning O(n x rounds x slice-bytes) until session end
@@ -632,7 +441,7 @@ def k_spanning_forests(
     forests: list[DataFrame] = []
     group_cursor = 0
     for t in range(k):
-        vmap, (pairs, kept), used = _boruvka_passes(
+        _, pairs, used = _boruvka_passes(
             spark,
             slices,
             None,
@@ -641,11 +450,10 @@ def k_spanning_forests(
             group_cursor + per_pass,
             num_partitions,
         )
-        _release(vmap)  # the forest does not read the pass's label map
         group_cursor += used
-        if not pairs and not kept:
+        if not len(pairs):
             break  # no edge left in the remaining graph
-        forest = _forest_frame(spark, pairs, kept)
+        forest = _local_frame(spark, {"a": pairs[:, 0], "b": pairs[:, 1]}, "a long, b long")
         forests.append(forest.select(F.lit(t).cast("int").alias("forest_id"), "a", "b"))
         if t == k - 1:
             break
@@ -668,8 +476,7 @@ def k_spanning_forests(
         new_slices.count()
         slices.unpersist()
         slices = new_slices
-    # the forests are driver-side pairs and checkpointed frames — nothing
-    # below reads slices
+    # the forests are driver-built frames — nothing below reads slices
     slices.unpersist()
     if not forests:
         empty = np.empty(0, dtype=np.int64)

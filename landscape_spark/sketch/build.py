@@ -376,7 +376,10 @@ def relabel_fold(
     ``labels`` array (None: the id already is the component), key its slice
     of the pass's i-th group comp*j+i (j groups), and XOR-fold the rows
     sharing a key. The array ships with the kernel's closure — no label
-    join, no broadcast frame.
+    join. PySpark broadcasts a pickled kernel larger than
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MiB by default,
+    rdd._prepare_for_python_RDD), so above about 131k vertex ids the labels
+    already ride one broadcast rather than every task.
 
     ``final``: the partition holds every row of its keys (one task over the
     whole table, or the identity labels, under which every key is one

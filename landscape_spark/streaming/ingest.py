@@ -334,8 +334,8 @@ class SketchStreamIngestor:
             vmap = _local_frame(self.spark, {"v": empty, "comp": empty}, "v long, comp long")
         else:
             # _cc_rounds returns a one-partition frame built from its
-            # driver-side labels (above COLLECT_THRESHOLD vertex ids, a
-            # local checkpoint); neither rereads the state: cache it as is
+            # driver-side labels, which never rereads the state: cache it
+            # as is
             vmap = _cc_rounds(
                 self.spark, slices, None, self.params, num_partitions=self.num_partitions
             )
@@ -347,8 +347,8 @@ class SketchStreamIngestor:
         """In-stream CC query on the committed sketch state (v, comp): the
         SAME _cc_rounds pass loop as the flagship batch query and the
         k-forests (column-pruned passes from the identity label map, no
-        supernode rematerialization; driver-owned labels and DSU up to
-        COLLECT_THRESHOLD vertex ids). A driver-held state runs every pass
+        supernode rematerialization; labels and the sample merge on the
+        driver). A driver-held state runs every pass
         in-process; a larger one reads its parquet in one Spark job per
         pass. With n_vertices > 0 the result covers ALL of 0..n-1
         (never-seen vertices as their own singleton components); with 0 it

@@ -79,31 +79,10 @@ def test_sketch_cc_random_insert_delete(spark, trial):
     assert got == oracle
 
 
-def test_sketch_cc_distributed_merge_path(spark):
-    """collect_threshold=0 forces EVERY round through the distributed
-    star-contraction merge (no driver DSU, nothing collected) — must equal
-    the oracle exactly."""
-    n = 1024
-    edges = multiples_graph_edges(n)
-    oracle = _nx_canonical_components(edges, n)
-    e = spark.createDataFrame(
-        sorted({(min(a, b), max(a, b)) for a, b in edges}), "a long, b long"
-    )
-    v = spark.range(n).select(F.col("id").alias("v"))
-    vmap = connected_components_sketch(
-        spark, e, n, num_partitions=8, collect_threshold=0
-    )
-    full = components_with_isolated(spark, vmap, v)
-    got = {r.v: r.comp for r in full.collect()}
-    assert got == oracle
-    assert len(set(got.values())) == 78
-
-
 def test_star_contraction_matches_nx(spark, monkeypatch):
-    """The component-merge primitive of Borůvka's distributed passes — the
-    one exact-CC kernel over the sampled component pairs — against networkx
-    on a messy multi-component pair graph, finished on the driver and with
-    every round distributed (COLLECT_THRESHOLD 0)."""
+    """Exact CC (graph/cc.py) against networkx on a messy
+    multi-component pair graph, finished on the driver and with every round
+    distributed (COLLECT_THRESHOLD 0)."""
     import networkx as nx
 
     import landscape_spark.graph.cc as cc

@@ -1,11 +1,8 @@
-"""Driver-owned Borůvka labels: up to COLLECT_THRESHOLD vertex ids the
-vid->comp map is a driver array, so each pass is one Spark job, no pass
-leaves session state behind, and the labels, samples and forests equal those
-of the distributed label map."""
+"""Driver-owned Borůvka labels: the vid->comp map is a driver array, so
+each pass is one Spark job, no pass leaves session state behind, and the
+labels, samples and forests do not depend on the pass's task layout."""
 
 from __future__ import annotations
-
-import functools
 
 import networkx as nx
 import pytest
@@ -15,7 +12,7 @@ import landscape_spark.graph.cc as cc
 from landscape_spark import linkgraph
 from landscape_spark.checkpoint import _release
 from landscape_spark.graph.cc import connected_components_exact
-from landscape_spark.sketch import boruvka, build
+from landscape_spark.sketch import build
 from landscape_spark.sketch.boruvka import (
     _boruvka_passes,
     _cc_rounds,
@@ -26,7 +23,7 @@ from landscape_spark.sketch.boruvka import (
 from landscape_spark.sketch.build import build_group_slices
 from landscape_spark.sketch.l0 import SketchParams
 from landscape_spark.streaming.ingest import SketchStreamIngestor
-from tests.conftest import assert_no_litter, persisted
+from tests.conftest import persisted
 
 N = 256
 
@@ -79,10 +76,9 @@ def test_cc_rounds_runs_one_job_per_pass(spark, er_edges, graph):
 
 def test_sketch_operators_leave_no_persisted_rdds(spark, er_edges, tmp_path, monkeypatch):
     """Session litter: no sketch operator leaves a persisted RDD behind,
-    its result consumed. Exact CC, which sketch Borůvka's distributed merge
-    runs, neither: below COLLECT_THRESHOLD its result is a driver-built
-    frame; above it, the result's own local checkpoint is the only RDD
-    left, every round's checkpoint released."""
+    its result consumed. Exact CC neither: below COLLECT_THRESHOLD its
+    result is a driver-built frame; above it, the result's own local
+    checkpoint is the only RDD left, every round's checkpoint released."""
     e = _edges_df(spark, er_edges)
     v = spark.range(N).select(F.col("id").alias("v"))
     before = persisted(spark)
@@ -107,44 +103,6 @@ def test_sketch_operators_leave_no_persisted_rdds(spark, er_edges, tmp_path, mon
     assert persisted(spark) <= before
 
 
-def test_driver_and_distributed_label_maps_agree(spark, er_edges):
-    """The vmap of the driver-owned labels equals collect_threshold=0's
-    (distributed map, min-edge merges) and the oracle; the distributed
-    passes leave only the map's own checkpoint persisted."""
-    e = _edges_df(spark, er_edges)
-    drv = connected_components_sketch(spark, e, N, num_partitions=4)
-    before = persisted(spark)
-    dist = connected_components_sketch(spark, e, N, num_partitions=4, collect_threshold=0)
-    got = sorted(map(tuple, drv.collect()))
-    assert got == sorted(map(tuple, dist.collect()))
-    assert dict(got) == _oracle(er_edges)
-    assert_no_litter(spark, before, dist)
-
-
-def test_label_map_placement_keeps_samples_and_forests(spark, er_edges, monkeypatch):
-    """A vertex-id space above the threshold keeps the label map distributed
-    while its few samples still merge in the driver DSU: every sample and
-    every merge is the driver-owned run's, so the k=2 forests are the same
-    sets."""
-    n = 4096  # vids stay below 256, so the ids fit either placement
-    e = _edges_df(spark, er_edges)
-
-    def forests():
-        out: dict[int, set[tuple[int, int]]] = {}
-        for r in k_spanning_forests(spark, e, n, 2, num_partitions=4).collect():
-            out.setdefault(r.forest_id, set()).add((r.a, r.b))
-        return out
-
-    drv = forests()
-    monkeypatch.setattr(
-        boruvka,
-        "_boruvka_passes",
-        functools.partial(_boruvka_passes, collect_threshold=n - 1),
-    )
-    assert forests() == drv
-    assert set(drv) == {0, 1}
-
-
 def test_pass_task_layout_keeps_samples(spark, er_edges, monkeypatch):
     """A driver-mode pass runs as one coalesced task when its rows fit one;
     otherwise over the stored slice partitions, the identity pass sampling
@@ -155,10 +113,8 @@ def test_pass_task_layout_keeps_samples(spark, er_edges, monkeypatch):
 
     def run():
         slices = build_group_slices(e, params, 4).persist()
-        vmap, (pairs, _), used = _boruvka_passes(
-            spark, slices, None, params, 0, params.rounds, 4
-        )
-        out = sorted(map(tuple, vmap.collect())), pairs, used
+        vmap, pairs, used = _boruvka_passes(spark, slices, None, params, 0, params.rounds, 4)
+        out = sorted(map(tuple, vmap.collect())), pairs.tolist(), used
         slices.unpersist()
         return out
 

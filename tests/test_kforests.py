@@ -99,14 +99,13 @@ def test_point_queries(spark):
     assert got == {(0, 1): True, (1, 2): False, (2, 3): True, (0, 4): False}
 
 
-def test_boruvka_pass_distributed_path_matches_exact(spark):
-    """collect_threshold=0 forces the fully-distributed round machinery
-    (min-edge rule + the exact-CC kernel, no driver DSU) on every round; the
-    resulting components must equal exact CC and the forest must be an
-    acyclic spanning forest of the graph."""
+def test_boruvka_pass_matches_exact(spark):
+    """One Borůvka pass loop over every group: the labels equal exact CC's
+    and the forest is a duplicate-free, acyclic spanning forest of the
+    graph."""
     import random
 
-    from landscape_spark.sketch.boruvka import _boruvka_passes, _forest_frame
+    from landscape_spark.sketch.boruvka import _boruvka_passes
     from landscape_spark.sketch.build import build_group_slices
     from landscape_spark.sketch.l0 import SketchParams
 
@@ -124,7 +123,7 @@ def test_boruvka_pass_distributed_path_matches_exact(spark):
     slices = build_group_slices(e, params, num_partitions=4).localCheckpoint(
         eager=True
     )
-    vmap, (pairs, kept), _ = _boruvka_passes(
+    vmap, pairs, _ = _boruvka_passes(
         spark,
         slices,
         None,
@@ -132,19 +131,13 @@ def test_boruvka_pass_distributed_path_matches_exact(spark):
         start_group=0,
         end_group=params.rounds,
         num_partitions=4,
-        collect_threshold=0,
     )
-    # nothing merges on the driver under collect_threshold=0
-    assert pairs == [] and kept
-    forest = _forest_frame(spark, pairs, kept)
     g = nx.Graph(edges)
     oracle = {v: min(c) for c in nx.connected_components(g) for v in c}
     got = {r.v: r.comp for r in vmap.collect()}
-    # component PARTITION must match (labels are min-ids in the oracle; the
-    # exact-CC kernel of the distributed path also gives min labels)
     assert got == oracle
-    fe = [(r.a, r.b) for r in forest.collect()]
-    assert len(fe) == len(set(fe))
+    fe = list(map(tuple, pairs.tolist()))
+    assert len(fe) == len(set(fe)) and set(fe) <= set(edges)
     fg = nx.Graph(fe)
     fg.add_nodes_from(g.nodes)
     assert nx.is_forest(nx.Graph(fe))
@@ -185,8 +178,6 @@ def test_budget_exhaustion_policy_shared(spark):
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         vmap = _cc_rounds(spark, slices_of(star, one), None, one, num_partitions=4)
-        _, (pairs, kept), used = _boruvka_passes(
-            spark, slices_of(star, base), None, base, 2, 3, 4
-        )
+        _, pairs, used = _boruvka_passes(spark, slices_of(star, base), None, base, 2, 3, 4)
     assert {r.comp for r in vmap.collect()} == {0}
-    assert sorted(pairs) == star and kept == [] and used == 1
+    assert sorted(map(tuple, pairs.tolist())) == star and used == 1

@@ -56,7 +56,8 @@ def test_default_partitions_follow_task_slots():
 def test_local_workers_import_installed_pyspark(spark):
     """A local master's Python workers import pyspark from its installed
     directory, so PySpark's per-task importlib.invalidate_caches() re-reads
-    neither pyspark.zip nor the spark-core jar (landscape_spark.pyworker)."""
+    neither pyspark.zip, py4j's zip nor the spark-core jar
+    (landscape_spark.pyworker)."""
     import pyspark
 
     def probe(batches):
@@ -74,7 +75,7 @@ def test_local_workers_import_installed_pyspark(spark):
             "jars": [p for p in sys.path + list(cache) if ".jar" in p],
             "zipped": [
                 k for k, v in cache.items()
-                if isinstance(v, zipimport.zipimporter) and "pyspark.zip" + os.sep in k
+                if isinstance(v, zipimport.zipimporter) and ("pyspark.zip" in k or "py4j-" in k)
             ],
         }])
 
@@ -88,22 +89,38 @@ def test_local_workers_import_installed_pyspark(spark):
 
 
 def test_installed_first_keeps_spark_order_without_a_matching_install(tmp_path):
-    def pyspark_dir(name, version):
+    def package_dir(name, package, version):
         d = tmp_path / name
-        (d / "pyspark").mkdir(parents=True)
-        (d / "pyspark" / "version.py").write_text(f"__version__: str = '{version}'\n")
+        (d / package).mkdir(parents=True)
+        (d / package / "version.py").write_text(f"__version__ = '{version}'\n")
         return str(d)
+
+    def pyspark_dir(name, version):
+        return package_dir(name, "pyspark", version)
 
     archive = str(tmp_path / "pyspark.zip")
     with zipfile.ZipFile(archive, "w") as z:
-        z.writestr("pyspark/version.py", "__version__: str = '4.1.2'\n")
-    py4j = str(tmp_path / "py4j-src.zip")
+        z.writestr("pyspark/version.py", "__version__ = '4.1.2'\n")
+    py4j = str(tmp_path / "py4j-0.10.9.9-src.zip")
+    with zipfile.ZipFile(py4j, "w") as z:
+        z.writestr("py4j/version.py", "__version__ = '0.10.9.9'\n")
     jar = str(tmp_path / "spark-core.jar")
     cwd, site, other = str(tmp_path / "cwd"), pyspark_dir("site", "4.1.2"), pyspark_dir("other", "4.0.0")
 
+    # pyspark matches, py4j is not installed: the zips move behind
     assert installed_first([cwd, archive, py4j, jar, site]) == [cwd, site, archive, py4j]
+    # both match: both archives go
+    package_dir("site", "py4j", "0.10.9.9")
+    assert installed_first([cwd, archive, py4j, jar, site]) == [cwd, site]
+    # a first installed py4j that is not the archive's keeps the zips behind
+    py4j_old = package_dir("old", "py4j", "0.10.9.7")
+    py4j_only = package_dir("py4j", "py4j", "0.10.9.9")
+    assert installed_first([cwd, archive, py4j, jar, py4j_old, site]) == [
+        cwd, py4j_old, site, archive, py4j
+    ]
     for path in (
         [cwd, archive, py4j, jar],  # no directory pyspark
+        [cwd, archive, py4j, jar, py4j_only],  # py4j alone matches
         [cwd, archive, py4j, jar, other],  # version mismatch
         [cwd, archive, py4j, jar, other, site],  # the first install shadows the match
         [cwd, py4j, jar, site],  # no pyspark.zip to compare with
