@@ -8,14 +8,23 @@ executors instead).
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import re
+import tempfile
 
 from pyspark.sql import SparkSession
 
 # Spark's local master forms: local, local[N], local[*], local[N,F], local[*,F]
 # (F, the task retry count, does not change the number of task slots).
 _LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+# Spark refuses a spark.python.unix.domain.socket.dir longer than 61
+# characters, which keeps each socket path, ``<dir>/.<uuid4>.sock``, inside
+# ``sun_path`` (108 bytes with its NUL). Counted in bytes, the bound holds
+# for the JVM's characters and for the kernel's bytes alike.
+_SOCKET_DIR_MAX = 61
 
 
 def default_partitions(master: str) -> int:
@@ -29,6 +38,17 @@ def default_partitions(master: str) -> int:
     if slots is None:
         return 1
     return len(os.sched_getaffinity(0)) if slots == "*" else int(slots)
+
+
+def unix_socket_dir(tmpdir: str, fallback: str = "/tmp") -> str | None:
+    """The directory for the Python workers' Unix domain sockets: ``tmpdir``
+    if its path is short enough for socket paths inside it (at most 61
+    bytes), else ``fallback`` if that one is, else None (keep loopback
+    TCP)."""
+    for d in (tmpdir, fallback):
+        if len(os.fsencode(d)) <= _SOCKET_DIR_MAX:
+            return d
+    return None
 
 
 def get_spark(
@@ -53,8 +73,16 @@ def get_spark(
     directory instead of pyspark.zip, so no task pays for its zipimporters
     re-reading pyspark.zip and the spark-core jar (about 0.1-0.2 s per Python
     task); the package's parent directory goes on the workers' PYTHONPATH so
-    the daemon starts from any working directory. Other masters keep Spark's
-    daemon: their executors receive the engine through --py-files only after
+    the daemon starts from any working directory. The JVM also reaches those
+    workers over Unix domain sockets in ``unix_socket_dir`` (the temp
+    directory, or /tmp when the temp directory's path is too long) instead of
+    loopback TCP, where each Python stage waited about 40 ms for its input to
+    arrive: an empty one-task ``mapInArrow`` stage fell from 0.063-0.066 s to
+    0.023 s on local[4]. The socket files skip Spark's auth handshake, so
+    their file mode is their guard: the daemon binds its socket with group
+    and other write cleared (pyworker). When neither directory fits a
+    socket path the workers keep TCP. Other masters keep Spark's daemon
+    and TCP: their executors receive the engine through --py-files only after
     the daemon has started. ``extra_conf`` overrides every setting here.
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -91,11 +119,27 @@ def get_spark(
         builder = builder.config("spark.python.daemon.module", "landscape_spark.pyworker").config(
             "spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
+        sock_dir = unix_socket_dir(tempfile.gettempdir())
+        if sock_dir is not None:
+            builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+                "spark.python.unix.domain.socket.dir", sock_dir
+            )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    accumulators = spark.sparkContext._accumulatorServer.server_address
+    if isinstance(accumulators, str):
+        # the driver's accumulator socket file goes only with
+        # SparkContext.stop(); a process that exits without it would leave
+        # the file in the socket directory
+        atexit.register(_unlink, accumulators)
     return spark
+
+
+def _unlink(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def local_parallelism(spark: SparkSession, default: int = 32) -> int:

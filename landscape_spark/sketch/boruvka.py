@@ -22,9 +22,9 @@ and l0-samples the folds; only the vid->comp map updates per pass. That map
 is a dense array on the driver, and the sampled cut edges merge there in one
 numpy forest kernel (_spanning_forest), as the reference keeps its DSU on
 the main node — each pass is one Spark job, with the labels shipped inside
-the fold kernel. A first pass's merge peaks near 700 driver bytes per
+the fold kernel. A first pass's merge peaks near 245 driver bytes per
 vertex id (labels, vids, four groups of samples and the kernel's
-temporaries, measured at 1.1M ids), against the cluster's
+temporaries, traced at 1.075M ids), against the cluster's
 build.slice_row_bytes per vertex (32832 at n = 2M); an id space too large
 for the driver fails in numpy's allocation.
 Each Boruvka round consumes one sketch GROUP (one-shot sampling), so k-forest
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from landscape_spark.graph.cc import _local_frame, _pointer_jump
+from landscape_spark.session import local_parallelism
 from landscape_spark.sketch.build import (
     build_group_slices,
     fold_sample,
@@ -81,32 +82,73 @@ def _spanning_forest(
 
     Returns the forest's (lo, hi) pairs as an (m, 2) array in rank order,
     every component met, and each one's root: the least component id of
-    its merged group."""
+    its merged group. The caller's arrays stay as they are; _merge_samples
+    is the same merge over a list it empties."""
+    return _merge_samples([gi, u, v, comp_u, comp_v])
+
+
+def _merge_samples(samples: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """_spanning_forest over ``samples`` = [gi, u, v, comp_u, comp_v],
+    which it empties: each input is gathered into rank order once and
+    dropped, so a caller that hands over its only references (the pass
+    loop does) frees the inputs while the merge runs. Component ids are
+    labels, non-negative and below the id space, so they compact through a
+    dense table over [0, max id] instead of a sort. What the rounds keep of
+    sample size is the endpoints (lo, hi) in rank order, and the live
+    edges' ranks and their ends' roots (ra, rb)."""
+    gi, u, v, comp_u, comp_v = samples
+    samples.clear()
     lo, hi = np.minimum(u, v), np.maximum(u, v)
+    del u, v
     order = np.lexsort((hi, lo, gi))
-    ids, ends = np.unique(np.concatenate([comp_u[order], comp_v[order]]), return_inverse=True)
-    a, b = ends.reshape(2, -1)
-    none = a.size  # a rank past every edge's
+    del gi
+    lo = lo[order]
+    hi = hi[order]
+    ra = comp_u[order]
+    del comp_u
+    rb = comp_v[order]
+    del comp_v, order
+    seen = np.zeros(max(ra.max(initial=-1), rb.max(initial=-1)) + 1, dtype=bool)
+    seen[ra] = True
+    seen[rb] = True
+    ids = np.flatnonzero(seen).astype(ra.dtype, copy=False)
+    dense = np.cumsum(seen)
+    dense -= 1
+    del seen
+    ra = dense[ra]
+    rb = dense[rb]
+    del dense
+    none = lo.size  # a rank past every edge's
     parent = np.arange(ids.size)
     taken = np.zeros(none, dtype=bool)
-    live = np.flatnonzero(a != b)
+    live = np.arange(none)  # the live edges' ranks, ascending
     while live.size:
-        ra, rb = parent[a[live]], parent[b[live]]
         best = np.full(ids.size, none)
         np.minimum.at(best, ra, live)
         np.minimum.at(best, rb, live)
         roots = np.flatnonzero(best < none)
         e = best[roots]
         taken[e] = True
-        ea, eb = parent[a[e]], parent[b[e]]
-        other = np.where(ea == roots, eb, ea)
+        at = np.searchsorted(live, e)  # e's place among the live edges
+        # one of e's two ends is its root, so ra ^ rb ^ roots is the other
+        other = ra[at]
+        other ^= rb[at]
+        other ^= roots
+        del at
         hook = (best[other] != e) | (other < roots)
         parent[roots[hook]] = other[hook]
+        del best, roots, e, other, hook
         parent = _pointer_jump(parent)
-        live = live[parent[ra] != parent[rb]]
+        # one array at a time: no two sample-sized temporaries at once
+        ra = parent[ra]
+        rb = parent[rb]
+        keep = ra != rb
+        live = live[keep]
+        ra = ra[keep]
+        rb = rb[keep]
     low = np.full(ids.size, ids.size)
     np.minimum.at(low, parent, np.arange(ids.size))
-    pairs = np.stack([lo[order][taken], hi[order][taken]], axis=1)
+    pairs = np.stack([lo[taken], hi[taken]], axis=1)
     return pairs, ids, ids[low[parent]]
 
 
@@ -119,12 +161,12 @@ def _driver_samples(
     n_live: int,
     num_partitions: int,
     identity: bool,
-) -> tuple[np.ndarray, ...]:
+) -> list[np.ndarray]:
     """One pass in one Spark job: relabel_fold keys every vertex slice of
     ``cols`` by its component from ``labels``, folds and samples; the
     samples come back through Arrow and resolve to components by gathers
-    from ``labels``. Returns (gi, u, v, comp_u, comp_v) of the samples that
-    cut two components.
+    from ``labels``. Returns the list [gi, u, v, comp_u, comp_v] of the
+    samples that cut two components, for _merge_samples to consume.
 
     A driver-held Arrow table runs the same kernel in-process, no Spark job.
     When the rows the pass reads fit one task (sketch_partitions), it runs
@@ -147,9 +189,11 @@ def _driver_samples(
             out = fold_sample(relabel_fold(src, sp, labels, final=False), "ckey", sp, parts)
         t = out.toArrow()
     ckey, u, v = (t.column(c).to_numpy() for c in ("ckey", "u", "v"))
-    comp_u, comp_v = labels[u], labels[v]
-    cut = comp_u != comp_v
-    return ckey[cut] % j, u[cut], v[cut], comp_u[cut], comp_v[cut]
+    del t
+    cut = labels[u] != labels[v]
+    if not cut.all():
+        ckey, u, v = ckey[cut], u[cut], v[cut]
+    return [ckey % j, u, v, labels[u], labels[v]]
 
 
 def _boruvka_passes(
@@ -179,7 +223,7 @@ def _boruvka_passes(
     ``[0, params.n)`` (every vid is below ``params.n``,
     build.edge_updates). One vid collect starts the call; each pass is ONE
     Spark job (_driver_samples — the array ships in relabel_fold's
-    closure), its samples merge in _spanning_forest, and the relabel is one
+    closure), its samples merge in _merge_samples, and the relabel is one
     numpy gather. A driver-held Arrow slice table needs no vid collect and
     runs each pass in-process: no Spark job.
 
@@ -235,7 +279,7 @@ def _boruvka_passes(
                 on_round(g, 0, False)
             converged = True  # no live component holds a cut edge
             break
-        pairs, comp, root = _spanning_forest(*samples)
+        pairs, comp, root = _merge_samples(samples)
         forest.append(pairs)
         remap = np.arange(params.n, dtype=np.int64)
         remap[comp] = root
@@ -289,7 +333,7 @@ def _cc_rounds(
     vmap: DataFrame | None,
     params: SketchParams,
     start_group: int = 0,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     on_round=None,
     ckpt=None,
     slices_path: str | None = None,
@@ -301,7 +345,8 @@ def _cc_rounds(
     ``slices.vid``; a caller-built map at ``start_group == 0`` is taken to
     be that identity and never read. With ``ckpt`` (slices a DataFrame),
     every pass persists (vmap, next group) and the once-written slice table
-    for resume_connected_components."""
+    for resume_connected_components. ``num_partitions`` defaults to
+    local_parallelism(spark)."""
     vmap, _, _ = _boruvka_passes(
         spark,
         slices,
@@ -309,7 +354,7 @@ def _cc_rounds(
         params,
         start_group,
         params.rounds,
-        num_partitions,
+        num_partitions or local_parallelism(spark),
         on_round,
         ckpt,
         slices_path,
@@ -322,7 +367,7 @@ def connected_components_sketch(
     und_edges: DataFrame,
     n: int,
     params: SketchParams | None = None,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     on_round=None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -332,8 +377,9 @@ def connected_components_sketch(
     resume_connected_components). ``num_partitions`` caps every sketch
     shuffle (build and per-pass fold); each runs as many partitions as its
     sketch bytes need (build.sketch_partitions), so a small graph runs one
-    Python task per stage."""
+    Python task per stage; it defaults to local_parallelism(spark)."""
     params = params or SketchParams.for_graph(n)
+    num_partitions = num_partitions or local_parallelism(spark)
     ckpt = None
     if checkpoint_dir is not None:
         from landscape_spark.checkpoint import RoundCheckpointer
@@ -374,12 +420,12 @@ def connected_components_sketch(
 def resume_connected_components(
     spark: SparkSession,
     checkpoint_dir: str,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     on_round=None,
 ) -> DataFrame:
     """Resume a checkpointed Boruvka CC mid-iteration: load the latest round's
     (vmap, next group) plus the once-written slice table and continue to
-    convergence."""
+    convergence. ``num_partitions`` defaults to local_parallelism(spark)."""
     from landscape_spark.checkpoint import RoundCheckpointer
 
     ckpt = RoundCheckpointer(spark, checkpoint_dir, "boruvka_cc")
@@ -413,7 +459,7 @@ def k_spanning_forests(
     n: int,
     k: int,
     seed: int = 42,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """k edge-disjoint spanning forests (k-edge-connectivity certificate).
 
@@ -422,8 +468,10 @@ def k_spanning_forests(
     edges from the linear sketches, graph_distrib_update.cpp:180-183).
     Sketch-space budget scales with k, mirroring sketches_factor(k)
     (graph_distrib_update.cpp:11-14,25). ``num_partitions`` caps every
-    sketch shuffle, as in connected_components_sketch.
+    sketch shuffle, as in connected_components_sketch, and defaults to
+    local_parallelism(spark).
     """
+    num_partitions = num_partitions or local_parallelism(spark)
     lg = max(1, int(np.ceil(np.log2(max(n, 2)))))
     # per-pass budget = the census-calibrated CC budget (log2(n) + retry
     # slack; BENCH/CENSUS.md) — each forest pass is one CC run on the

@@ -42,6 +42,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.session import local_parallelism
 from landscape_spark.sketch.l0 import (
     SketchParams,
     build_sketches,
@@ -49,30 +50,29 @@ from landscape_spark.sketch.l0 import (
     xor_fold_rows,
 )
 
-# NOTE: per-task fixed cost. PySpark 4.1's worker calls
-# importlib.invalidate_caches() once per task, and under Python 3.11 every
-# zipimporter on the worker's path then re-reads its archive's directory:
-# 0.11-0.22 s per task with Spark's daemon, which puts pyspark.zip and the
-# spark-core jar on the path. get_spark's local masters start the workers
-# from landscape_spark.pyworker, which imports pyspark from its installed
-# directory, and the call takes 0.006-0.012 s (both timed inside workers).
-# Measured with that daemon on local[4], a 4-vCPU VM (medians of 5
-# interleaved reps in two sessions, Spark's daemon in brackets): an empty
-# mapInArrow stage takes 0.08 s as 1 task and 0.15 s as 8 (0.14 / 0.34-0.36
-# s); XOR-merging a 2 MiB slice table (n=256) 0.12 s as 1 task and 0.21 s as
-# 8 (0.19-0.22 / 0.43-0.47 s); a 10.5 MiB one (n=1000) 0.17-0.24 s as 1-4
-# tasks and 0.24-0.30 s as 8 (0.25-0.29 / 0.47-0.51 s). A task still costs
-# something, so a sketch shuffle runs one task per TASK_SKETCH_BYTES of the
-# sketch rows it can produce, up to the caller's num_partitions. 8 MiB gives
-# 1 task at n=256, 2 at n=1000 and the cap at n=2^14; the n=1000 link-graph
-# build took 0.183 s as 2 tasks against 0.190 s as 1 and 0.215 s as 4
-# (medians of 25 interleaved reps), so the size stays. In between the
-# rounding can land past the core count: n=4096 wants 7 tasks, which ran in
-# two waves on local[4] under an 8-partition cap (0.80 s against 0.48 s as 4
-# tasks with Spark's daemon). A caller that passes local_parallelism caps at
-# a local master's task slots (get_spark), so that build runs as 4 tasks;
-# the num_partitions=32 defaults still cap at 32. The bound is on
-# OUTPUT rows (distinct keys x row bytes), never on shuffle input: AQE
+# NOTE: per-task fixed cost. get_spark's local masters start the Python
+# workers from landscape_spark.pyworker, so PySpark's per-task
+# importlib.invalidate_caches() re-reads no archive (0.006-0.012 s, against
+# 0.11-0.22 s with Spark's daemon), and the JVM reaches them over Unix domain
+# sockets. Measured on local[4], a 4-vCPU VM (medians of 15 interleaved reps
+# in each of two sessions, loopback TCP in brackets): an empty mapInArrow
+# stage takes 0.023 s as 1 task, 0.031 s as 4 and 0.049 s as 8 (0.063-0.066
+# / 0.072-0.073 / 0.124-0.126 s); XOR-merging a 2 MiB slice table (n=256)
+# 0.060 s as 1 task and 0.085-0.091 s as 8 (0.056-0.059 / 0.095-0.100 s); a
+# 10.5 MiB one (n=1000) 0.137-0.143 s as 1 task, 0.086-0.094 s as 4 and
+# 0.108-0.125 s as 8 (0.133-0.135 / 0.087-0.094 / 0.130-0.137 s). The
+# socket saves about 40 ms on a stage whose tasks read little; a task that
+# reads megabytes barely notices it. A task still costs something, so a
+# sketch shuffle runs one task per TASK_SKETCH_BYTES of the sketch rows it
+# can produce, up to the caller's num_partitions. 8 MiB gives 1 task at
+# n=256, 2 at n=1000 and the cap at n=2^14; the n=1000 link-graph build
+# took 0.096-0.099 s as 2 tasks against 0.103-0.112 s as 1 and 0.101-0.104
+# s as 4 (same reps), so the size stays. In between the rounding can land
+# past the core count: n=4096 wants 7 tasks, and an n=4096 build of 16k
+# updates took 0.186-0.198 s as 7 tasks (two waves on local[4]) against
+# 0.060-0.063 s as 4. num_partitions defaults to local_parallelism, a local
+# master's task slots (get_spark), so that build runs as 4 tasks. The bound
+# is on OUTPUT rows (distinct keys x row bytes), never on shuffle input: AQE
 # coalescing sizes by input, 16 B per update, and could put a sparse 1 MB
 # update shuffle whose kernel allocates GBs of sketches into one task.
 TASK_SKETCH_BYTES = 8 << 20
@@ -197,7 +197,7 @@ def slice_batch(vids: np.ndarray, codes: np.ndarray, params: SketchParams) -> pa
 def build_group_slices(
     und_edges: DataFrame,
     params: SketchParams,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     salt: int = 1,
 ) -> DataFrame:
     """Distributed supernode build, columnar-by-group:
@@ -210,9 +210,10 @@ def build_group_slices(
     §2.2 I6). Linearity makes the salted result bit-identical to the
     unsalted one.
 
-    ``num_partitions`` caps both shuffles; each is sized by
-    sketch_partitions from the sketch rows it can emit (n*salt partials,
-    then n merged rows)."""
+    ``num_partitions`` (default: local_parallelism) caps both shuffles;
+    each is sized by sketch_partitions from the sketch rows it can emit
+    (n*salt partials, then n merged rows)."""
+    num_partitions = num_partitions or local_parallelism(und_edges.sparkSession)
     upd = edge_updates(und_edges, params.n)
     parts = sketch_partitions(params.n * salt, slice_row_bytes(params), num_partitions)
     if salt > 1:

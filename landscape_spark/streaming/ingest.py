@@ -17,8 +17,10 @@ committed state after any micro-batch — the batch boundary IS the pause.
 
 Where the merge runs depends on the state's size. While the whole state fits
 one sketch task (n x slice_row_bytes <= TASK_SKETCH_BYTES, a 2 MiB table at
-n=256), a Spark merge would run as one Python task, and PySpark's fixed
-per-task cost would be most of its time. So the DRIVER holds the committed
+n=256), a Spark merge would run as one Python task, and Spark's fixed cost
+would be most of its time: at n=256 on local[4], with the workers already
+on Unix sockets, a Spark absorb took 0.25-0.29 s and a CC query 0.11-0.14 s,
+against 0.05-0.07 s and 0.02-0.03 s held. So the DRIVER holds the committed
 state as an Arrow table, as the reference's main node holds every supernode
 and merges the workers' deltas there (src/worker_cluster.cpp:107-118,
 src/work_distributor.cpp:99-100). An absorb is then one Spark job that
@@ -66,6 +68,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from landscape_spark.graph.cc import COLLECT_THRESHOLD, _ids, _local_frame
+from landscape_spark.session import local_parallelism
 from landscape_spark.sketch.build import (
     TASK_SKETCH_BYTES,
     _binary_array,
@@ -96,24 +99,24 @@ class SketchStreamIngestor:
     A state of at most TASK_SKETCH_BYTES (params.n x slice_row_bytes) is
     held on the driver: absorb, CC query and point burst run no Python task,
     and each commit writes one parquet file with pyarrow. A larger state is
-    merged and queried in Spark; ``num_partitions`` caps those sketch
-    shuffles, each running as many partitions as its sketch bytes need
-    (sketch.build.sketch_partitions), and the merged state is written from
-    the merge's partitions, so a table of one task's bytes commits as one
-    parquet file either way."""
+    merged and queried in Spark; ``num_partitions`` (default:
+    local_parallelism) caps those sketch shuffles, each running as many
+    partitions as its sketch bytes need (sketch.build.sketch_partitions),
+    and the merged state is written from the merge's partitions, so a table
+    of one task's bytes commits as one parquet file either way."""
 
     def __init__(
         self,
         spark: SparkSession,
         params: SketchParams,
         state_dir: str,
-        num_partitions: int = 32,
+        num_partitions: int | None = None,
         resume: bool = False,
     ) -> None:
         self.spark = spark
         self.params = params
         self.state_dir = state_dir
-        self.num_partitions = num_partitions
+        self.num_partitions = num_partitions or local_parallelism(spark)
         self.batches_seen = 0
         # Reusing a state_dir that already holds committed state with a FRESH
         # stream is silent data loss: the new stream's batch ids restart at 0
@@ -148,10 +151,11 @@ class SketchStreamIngestor:
         os.makedirs(state_dir, exist_ok=True)
         # below one sketch task of state, a Spark merge would run as one
         # Python task: the driver holds the committed version's rows instead.
-        # The bound is on driver memory, not speed: on one 4-vCPU host the
-        # held path still absorbed 1.5x and queried 7x faster at n=8192
-        # (15x the bound), but above it the state, its fold and its write
-        # would all sit on the driver, where Spark spreads them over tasks
+        # The bound is on driver memory, not speed: on one 4-vCPU host, with
+        # Unix-socket workers, the held path still absorbed 1.9-2.1x and
+        # queried 2.8-2.9x faster at n=4096 (27x the bound), but above it the
+        # state, its fold and its write would all sit on the driver, where
+        # Spark spreads them over tasks
         self._held = params.n * slice_row_bytes(params) <= TASK_SKETCH_BYTES
         # (version, rows), swapped whole: a reader never pairs one version's
         # number with another's rows

@@ -411,7 +411,11 @@ def minhash_lsh_dedup(
         .localCheckpoint(eager=True)  # reused twice below; tiny
     )
     # signatures are consumed entirely by the (now-materialized) screen —
-    # release the cache instead of pinning it until session end
+    # release the cache instead of pinning it until session end. The
+    # release cannot force a recompute: the eager checkpoint cut the
+    # screen's lineage, so the result's plan holds no signature kernel
+    # (MapInArrow) and no cached relation, only the checkpoint's LogicalRDD
+    # (test_text.py::test_minhash_lsh_recall checks that plan)
     sigs.unpersist()
     # fetch shingle sets ONLY for docs that survived screening (semi-join
     # pushdown: at scale the near-threshold docs are a sliver of the corpus)

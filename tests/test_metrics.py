@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 import os
+import stat
+import tempfile
 import time
 import zipfile
 
@@ -12,7 +14,7 @@ import pyarrow as pa
 
 from landscape_spark.metrics import HeartbeatReporter, comm_factor, stage_totals
 from landscape_spark.pyworker import installed_first
-from landscape_spark.session import default_partitions
+from landscape_spark.session import default_partitions, unix_socket_dir
 
 
 def test_heartbeat_writes_jsonl(spark, tmp_path):
@@ -86,6 +88,57 @@ def test_local_workers_import_installed_pyspark(spark):
         assert ".zip" + os.sep not in r.file, r.file
         assert r.version == pyspark.__version__
         assert r.jars == [] and r.zipped == []
+
+
+def test_unix_socket_dir_fits_sun_path():
+    """Spark takes a socket directory of at most 61 characters, so that
+    ``<dir>/.<uuid4>.sock`` fits sun_path's 107 bytes: the temp directory
+    serves up to 61 bytes, /tmp beyond that, and nothing when the fallback
+    is too long as well."""
+    fits, long = "/" + "d" * 60, "/" + "d" * 61
+    assert unix_socket_dir("/tmp") == "/tmp"
+    assert unix_socket_dir(fits) == fits
+    assert unix_socket_dir(long) == "/tmp"
+    assert unix_socket_dir(long, fallback=fits) == fits
+    assert unix_socket_dir(long, fallback=long) is None
+    # sun_path counts bytes: 32 two-byte characters are too many
+    assert unix_socket_dir("/" + "é" * 30) == "/" + "é" * 30
+    assert unix_socket_dir("/" + "é" * 31) == "/tmp"
+
+
+def test_local_python_stage_runs_over_unix_sockets(spark):
+    """A local session's Python workers reach the JVM over Unix domain
+    sockets in the temp directory, and no such socket file lets group or
+    other write (connect) to it: the sockets skip Spark's auth handshake."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+    assert sock_dir == unix_socket_dir(tempfile.gettempdir())
+
+    def probe(batches):
+        import socket
+
+        for _ in batches:
+            pass
+        names = set()
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                s = socket.socket(fileno=os.dup(int(fd)))
+            except OSError:
+                continue
+            with s:
+                if s.family == socket.AF_UNIX and s.getsockname():
+                    names.add(s.getsockname())
+        yield pa.RecordBatch.from_pylist([{"names": sorted(names)}])
+
+    rows = spark.range(0, 2, 1, 2).mapInArrow(probe, "names array<string>").collect()
+    names = {n for r in rows for n in r.names}
+    assert names, "no task held a Unix domain socket"
+    for name in names:
+        assert os.path.dirname(name) == sock_dir, name
+        st = os.stat(name)
+        assert stat.S_ISSOCK(st.st_mode) and st.st_uid == os.getuid(), name
+        assert st.st_mode & 0o022 == 0, oct(st.st_mode)
 
 
 def test_installed_first_keeps_spark_order_without_a_matching_install(tmp_path):

@@ -78,11 +78,15 @@ def test_minhash_lsh_recall(spark, docs):
     truth = {
         (r.doc_lo, r.doc_hi) for r in dedup.ngram_jaccard_pairs(docs, 0.5).collect()
     }
-    got = {
-        (r.doc_lo, r.doc_hi)
-        for r in dedup.minhash_lsh_dedup(docs, threshold=0.5).collect()
-    }
+    result = dedup.minhash_lsh_dedup(docs, threshold=0.5)
+    got = {(r.doc_lo, r.doc_hi) for r in result.collect()}
     assert got <= truth
+    # the screen is an eager local checkpoint: the result's plan reads no
+    # signature kernel and no cache, so releasing the signatures (as the
+    # operator does) cannot make it recompute them
+    plan = result._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" in dedup.minhash_signatures(docs)._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" not in plan and "InMemoryRelation" not in plan
     if truth:
         recall = len(got) / len(truth)
         assert recall >= 0.9, f"LSH recall too low: {recall}"
