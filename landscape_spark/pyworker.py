@@ -14,12 +14,6 @@ workers fork from the daemon and inherit its path. When only pyspark
 matches, the zips move behind the directory entries; when pyspark does not,
 Spark's order is kept.
 
-With Unix domain sockets on (``session.get_spark`` turns them on for local
-masters), the daemon listens on a socket file that skips Spark's auth
-handshake: whoever may connect to it can run code as this user. The module
-therefore clears the group and other write bits from its umask before the
-daemon binds that file.
-
 Run as ``python -m landscape_spark.pyworker``; ``session.get_spark`` sets it
 for ``local[...]`` masters only, because elsewhere executors receive the
 engine through ``--py-files`` after their daemon has started.
@@ -69,7 +63,6 @@ def installed_first(path: list[str]) -> list[str]:
 
 
 if __name__ == "__main__":
-    os.umask(os.umask(0) | 0o022)
     archives = tuple(p for p in sys.path if p.endswith((".zip", ".jar")))
     reordered = installed_first(sys.path)
     if reordered is not sys.path:

@@ -9,9 +9,9 @@ executors instead).
 from __future__ import annotations
 
 import atexit
-import contextlib
 import os
 import re
+import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
@@ -23,8 +23,13 @@ _LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
 # Spark refuses a spark.python.unix.domain.socket.dir longer than 61
 # characters, which keeps each socket path, ``<dir>/.<uuid4>.sock``, inside
 # ``sun_path`` (108 bytes with its NUL). Counted in bytes, the bound holds
-# for the JVM's characters and for the kernel's bytes alike.
+# for the JVM's characters and for the kernel's bytes alike. Each session's
+# sockets go in a private directory, ``<parent>/uds-XXXXXXXX`` from
+# ``tempfile.mkdtemp`` (8 random characters), so the parent may take what
+# is left.
 _SOCKET_DIR_MAX = 61
+_SOCKET_DIR_PREFIX = "uds-"
+_SOCKET_PARENT_MAX = _SOCKET_DIR_MAX - len(os.sep + _SOCKET_DIR_PREFIX) - 8
 
 
 def default_partitions(master: str) -> int:
@@ -40,15 +45,11 @@ def default_partitions(master: str) -> int:
     return len(os.sched_getaffinity(0)) if slots == "*" else int(slots)
 
 
-def unix_socket_dir(tmpdir: str, fallback: str = "/tmp") -> str | None:
-    """The directory for the Python workers' Unix domain sockets: ``tmpdir``
-    if its path is short enough for socket paths inside it (at most 61
-    bytes), else ``fallback`` if that one is, else None (keep loopback
-    TCP)."""
-    for d in (tmpdir, fallback):
-        if len(os.fsencode(d)) <= _SOCKET_DIR_MAX:
-            return d
-    return None
+def socket_dir_parent(tmpdir: str) -> str:
+    """The directory that holds a session's private socket directory:
+    ``tmpdir`` if the socket directory's path inside it stays within 61
+    bytes (``tmpdir`` itself at most 48), else ``/tmp``."""
+    return tmpdir if len(os.fsencode(tmpdir)) <= _SOCKET_PARENT_MAX else "/tmp"
 
 
 def get_spark(
@@ -74,14 +75,16 @@ def get_spark(
     re-reading pyspark.zip and the spark-core jar (about 0.1-0.2 s per Python
     task); the package's parent directory goes on the workers' PYTHONPATH so
     the daemon starts from any working directory. The JVM also reaches those
-    workers over Unix domain sockets in ``unix_socket_dir`` (the temp
-    directory, or /tmp when the temp directory's path is too long) instead of
-    loopback TCP, where each Python stage waited about 40 ms for its input to
-    arrive: an empty one-task ``mapInArrow`` stage fell from 0.063-0.066 s to
-    0.023 s on local[4]. The socket files skip Spark's auth handshake, so
-    their file mode is their guard: the daemon binds its socket with group
-    and other write cleared (pyworker). When neither directory fits a
-    socket path the workers keep TCP. Other masters keep Spark's daemon
+    workers over Unix domain sockets instead of loopback TCP, where each
+    Python stage waited about 40 ms for its input to arrive: an empty
+    one-task ``mapInArrow`` stage fell from 0.063-0.066 s to 0.023 s on
+    local[4]. These sockets skip Spark's auth handshake, and the driver's
+    accumulator socket unpickles whatever it receives, so the file system is
+    their guard: each session's sockets (the worker daemon's and the
+    accumulator server's) live in a private 0700 directory that
+    ``tempfile.mkdtemp`` makes under ``socket_dir_parent`` (the temp
+    directory, or /tmp when the temp directory's path is too long), removed
+    when the process exits. Other masters keep Spark's daemon
     and TCP: their executors receive the engine through --py-files only after
     the daemon has started. ``extra_conf`` overrides every setting here.
     """
@@ -119,32 +122,26 @@ def get_spark(
         builder = builder.config("spark.python.daemon.module", "landscape_spark.pyworker").config(
             "spark.executorEnv.PYTHONPATH", os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
-        sock_dir = unix_socket_dir(tempfile.gettempdir())
-        if sock_dir is not None:
-            builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
-                "spark.python.unix.domain.socket.dir", sock_dir
-            )
+        sock_dir = tempfile.mkdtemp(prefix=_SOCKET_DIR_PREFIX, dir=socket_dir_parent(tempfile.gettempdir()))
+        atexit.register(shutil.rmtree, sock_dir, ignore_errors=True)
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+            "spark.python.unix.domain.socket.dir", sock_dir
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    accumulators = spark.sparkContext._accumulatorServer.server_address
-    if isinstance(accumulators, str):
-        # the driver's accumulator socket file goes only with
-        # SparkContext.stop(); a process that exits without it would leave
-        # the file in the socket directory
-        atexit.register(_unlink, accumulators)
     return spark
 
 
-def _unlink(path: str) -> None:
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(path)
-
-
 def local_parallelism(spark: SparkSession, default: int = 32) -> int:
-    """Target parallelism for the zero-shuffle kernels' small-corpus
-    repartition guard (minhash/simhash/substring fingerprints).
+    """Target parallelism for the kernels that are given no width: the
+    graph kernels' repartitions, the small-corpus repartition guard of the
+    minhash/simhash/substring fingerprints, and the sketch shuffles of the
+    Borůvka entry points, ``build_group_slices`` and
+    ``SketchStreamIngestor``. It is ``spark.sql.shuffle.partitions``: from
+    ``get_spark``, one per task slot on a local master and 200 on any other
+    unless the session sets it.
 
     ``spark.sql.shuffle.partitions`` is not guaranteed numeric on every
     platform (some AQE-managed deployments set it to 'auto'), and int() on

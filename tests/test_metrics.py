@@ -14,7 +14,7 @@ import pyarrow as pa
 
 from landscape_spark.metrics import HeartbeatReporter, comm_factor, stage_totals
 from landscape_spark.pyworker import installed_first
-from landscape_spark.session import default_partitions, unix_socket_dir
+from landscape_spark.session import default_partitions, socket_dir_parent
 
 
 def test_heartbeat_writes_jsonl(spark, tmp_path):
@@ -90,30 +90,37 @@ def test_local_workers_import_installed_pyspark(spark):
         assert r.jars == [] and r.zipped == []
 
 
-def test_unix_socket_dir_fits_sun_path():
+def test_socket_dir_parent_fits_spark_limit(tmp_path):
     """Spark takes a socket directory of at most 61 characters, so that
-    ``<dir>/.<uuid4>.sock`` fits sun_path's 107 bytes: the temp directory
-    serves up to 61 bytes, /tmp beyond that, and nothing when the fallback
-    is too long as well."""
-    fits, long = "/" + "d" * 60, "/" + "d" * 61
-    assert unix_socket_dir("/tmp") == "/tmp"
-    assert unix_socket_dir(fits) == fits
-    assert unix_socket_dir(long) == "/tmp"
-    assert unix_socket_dir(long, fallback=fits) == fits
-    assert unix_socket_dir(long, fallback=long) is None
-    # sun_path counts bytes: 32 two-byte characters are too many
-    assert unix_socket_dir("/" + "é" * 30) == "/" + "é" * 30
-    assert unix_socket_dir("/" + "é" * 31) == "/tmp"
+    ``<dir>/.<uuid4>.sock`` fits sun_path's 107 bytes. A session's private
+    directory, ``<parent>/uds-XXXXXXXX``, keeps to that bound: the temp
+    directory is its parent up to 48 bytes, /tmp beyond that."""
+    fits, long = "/" + "d" * 47, "/" + "d" * 48
+    assert socket_dir_parent(fits) == fits
+    assert socket_dir_parent(long) == "/tmp"
+    # sun_path counts bytes: 24 two-byte characters are too many
+    assert socket_dir_parent("/" + "é" * 23) == "/" + "é" * 23
+    assert socket_dir_parent("/" + "é" * 24) == "/tmp"
+    # mkdtemp names its directory with 8 random characters after the prefix
+    assert len(os.path.basename(tempfile.mkdtemp(prefix="uds-", dir=tmp_path))) == len("uds-") + 8
 
 
 def test_local_python_stage_runs_over_unix_sockets(spark):
     """A local session's Python workers reach the JVM over Unix domain
-    sockets in the temp directory, and no such socket file lets group or
-    other write (connect) to it: the sockets skip Spark's auth handshake."""
+    sockets. Those sockets, the workers' and the driver's accumulator
+    server's, skip Spark's auth handshake, so they live in a directory that
+    only this user may enter, under the chosen parent."""
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
     sock_dir = conf.get("spark.python.unix.domain.socket.dir")
-    assert sock_dir == unix_socket_dir(tempfile.gettempdir())
+    assert os.path.dirname(sock_dir) == socket_dir_parent(tempfile.gettempdir())
+    assert len(os.fsencode(sock_dir)) <= 61, sock_dir
+    st = os.stat(sock_dir)
+    assert stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid(), sock_dir
+    assert stat.S_IMODE(st.st_mode) == 0o700, oct(st.st_mode)
+    accumulators = spark.sparkContext._accumulatorServer.server_address
+    assert os.path.dirname(accumulators) == sock_dir, accumulators
+    assert stat.S_ISSOCK(os.stat(accumulators).st_mode), accumulators
 
     def probe(batches):
         import socket
@@ -136,9 +143,7 @@ def test_local_python_stage_runs_over_unix_sockets(spark):
     assert names, "no task held a Unix domain socket"
     for name in names:
         assert os.path.dirname(name) == sock_dir, name
-        st = os.stat(name)
-        assert stat.S_ISSOCK(st.st_mode) and st.st_uid == os.getuid(), name
-        assert st.st_mode & 0o022 == 0, oct(st.st_mode)
+        assert stat.S_ISSOCK(os.stat(name).st_mode), name
 
 
 def test_installed_first_keeps_spark_order_without_a_matching_install(tmp_path):
