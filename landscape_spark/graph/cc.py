@@ -69,6 +69,36 @@ def _local_frame(spark: SparkSession, cols: dict[str, np.ndarray], schema: str) 
     return spark.createDataFrame(table, schema).coalesce(1)
 
 
+def _collect_at_most(df: DataFrame, bound: int) -> pa.Table:
+    """At most ``bound + 1`` rows of ``df`` on the driver through Arrow:
+    more than ``bound`` rows means the frame did not fit. ``limit`` alone
+    collects through an exchange under ``toArrow()``: every partition's
+    rows shuffle into one, one extra stage and task. A narrow plan instead
+    runs as ONE task with no exchange, ``coalesce(1).limit(bound + 1)``; a
+    held stream absorb of about 6000 edges went from 2 stages, 5 tasks and
+    55 KB of shuffle to 1 stage, 1 task and none on local[4]. The cost is
+    that the whole narrow stage, Python UDFs included, runs in that one
+    task; the callers fold or gather the rows on one driver thread anyway.
+
+    The executed plan is read once, and ``toArrow()`` reuses it (planning it
+    twice cost about 24 ms per call). A frame whose plan is adaptive (an
+    exchange, a distribution requirement or an adaptive cache below it, as
+    under ``distinct()``) keeps the plain ``limit``, so a blocking final
+    stage never runs as one task. So does every frame with AQE off, where
+    such a plan's root is the ``CollectLimitExec`` itself. Exact CC's edge
+    collect keeps the plain ``limit``: its edges read an adaptive cache, so
+    this helper would plan them twice for the same plain collect."""
+    q = df.coalesce(1).limit(bound + 1)
+    spark = df.sparkSession
+    if (
+        spark.conf.get("spark.sql.adaptive.enabled").lower() == "true"
+        and q._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+        != "AdaptiveSparkPlanExec"
+    ):
+        return q.toArrow()
+    return df.limit(bound + 1).toArrow()
+
+
 def _ids(table: pa.Table, col: str) -> np.ndarray:
     """A collected id column as int64."""
     return table.column(col).to_numpy().astype(np.int64)
@@ -161,7 +191,9 @@ def connected_components_exact(
     # one job: the whole edge set when it fits, else a sign that it does not
     t = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
     n_live, rounds, owned = t.num_rows, 0, []
-    labels = vertices.select("v").distinct().select("v", F.col("v").alias("comp"))
+    if n_live > COLLECT_THRESHOLD:
+        # only the distributed rounds (or a max_iter=0 result) read it
+        labels = vertices.select("v").distinct().select("v", F.col("v").alias("comp"))
     try:
         while n_live > COLLECT_THRESHOLD and rounds < max_iter:
             # every root hooks onto the smallest root it touches, then full

@@ -29,8 +29,9 @@ ceiling). Here a sketch table stays distributed and merges happen where the
 data lives, with one exception: a streaming state that fits one sketch task
 (n x slice_row_bytes <= TASK_SKETCH_BYTES) is held on the driver as the
 reference holds it, because its merge would run as one Python task anyway.
-The driver then runs this module's kernels in-process (slice_batch,
-relabel_fold_kernel; streaming/ingest.py).
+The driver then builds a batch's delta in-process and XORs it into dense
+per-group matrices (_split_groups; streaming/ingest.py), and its CC query
+runs relabel_fold_kernel in-process.
 """
 
 from __future__ import annotations
@@ -186,8 +187,7 @@ def _split_groups(sk: np.ndarray, params: SketchParams) -> list[np.ndarray]:
 def slice_batch(vids: np.ndarray, codes: np.ndarray, params: SketchParams) -> pa.RecordBatch:
     """The build kernel: (vid, code) updates -> one columnar slice row
     (vid, g0, ..., g{R-1}) per distinct vid, every vid's updates XOR-folded.
-    build_group_slices runs it in each partition; the streaming ingest runs
-    it on the driver over a collected batch."""
+    build_group_slices runs it in each partition."""
     uvids, sk = build_sketches(vids, codes, params)
     arrays = [pa.array(uvids, type=pa.int64())]
     arrays += [_binary_array(sl) for sl in _split_groups(sk, params)]

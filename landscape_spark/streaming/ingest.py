@@ -21,23 +21,32 @@ n=256), a Spark merge would run as one Python task, and Spark's fixed cost
 would be most of its time: at n=256 on local[4], with the workers already
 on Unix sockets, a Spark absorb took 0.25-0.29 s and a CC query 0.11-0.14 s,
 against 0.05-0.07 s and 0.02-0.03 s held. So the DRIVER holds the committed
-state as an Arrow table, as the reference's main node holds every supernode
-and merges the workers' deltas there (src/worker_cluster.cpp:107-118,
-src/work_distributor.cpp:99-100). An absorb is then one Spark job that
-collects the batch's edges; the delta build (build.slice_batch), the XOR
-fold and the parquet write run in-process. CC queries run the Boruvka passes
-on the table in-process, and point bursts look pairs up in the driver's
-labels, as the reference's DSU point query does
+state, as the reference's main node holds every supernode and applies the
+workers' deltas there (src/worker_cluster.cpp:107-118,
+src/work_distributor.cpp:99-100): dense per-group (n, W) uint64 matrices
+indexed by vid, beside the committed Arrow table. An absorb is then one
+single-task Spark job that collects the raw batch (graph.cc._collect_at_most,
+no exchange); canonicalization, the delta build (l0.build_sketches) and an
+in-place XOR of the delta rows into copies of the matrices run in-process,
+then the parquet write and the same CURRENT flip. CC queries run the Boruvka
+passes on the table in-process, and point bursts look pairs up in the
+driver's labels, as the reference's DSU point query does
 (graph_distrib_update.cpp:211-226). Above that size the state stays
 distributed: each absorb builds the delta and XOR-merges it with the
 committed parquet in Spark, and each query scans that parquet.
+
+Every vertex id of a batch must lie in [0, n): a held batch is checked on
+the driver before anything is written, a Spark one by a min/max observed on
+its merge job, before the pointer flip. Either way a bad id raises
+ValueError and CURRENT stays on the previous version.
 
 State lives as VERSIONED parquet directories behind an atomically-renamed
 CURRENT pointer file, so ingest is resumable and queries read a consistent
 snapshot (the analog of the reference's flush barrier before queries,
 graph_distrib_update.cpp:122-124). The driver-held table is always the
 committed version's: it is replaced only after the pointer flip, and read
-back from parquet on resume. Three failure modes drove the design:
+back from parquet whenever CURRENT names another version (resume, or a
+commit by another ingestor). Three failure modes drove the design:
 
 * foreachBatch is AT-LEAST-ONCE: a crash after the state commit but before
   the stream's offset commit re-delivers the same batch, and under XOR
@@ -60,26 +69,28 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from landscape_spark.graph.cc import COLLECT_THRESHOLD, _ids, _local_frame
+from landscape_spark.graph.cc import COLLECT_THRESHOLD, _collect_at_most, _ids, _local_frame
 from landscape_spark.session import local_parallelism
 from landscape_spark.sketch.build import (
     TASK_SKETCH_BYTES,
     _binary_array,
-    _fold_batches,
+    _binary_matrix,
+    _split_groups,
     build_group_slices,
     group_cols,
-    slice_batch,
+    slice_params,
     slice_row_bytes,
     xor_merge_slices,
 )
-from landscape_spark.sketch.l0 import SketchParams, edge_code
+from landscape_spark.sketch.l0 import SketchParams, build_sketches, edge_code
 
 
 def _components_of(labels: np.ndarray, x: np.ndarray) -> np.ndarray:
@@ -91,14 +102,77 @@ def _components_of(labels: np.ndarray, x: np.ndarray) -> np.ndarray:
     return out
 
 
+def _check_ids(lo: int | None, hi: int | None, n: int) -> None:
+    """Raise ValueError unless every vertex id of a batch whose least id is
+    ``lo`` and greatest ``hi`` (None for an empty batch) lies in [0, n)."""
+    if lo is None:
+        return
+    for vid in (lo, hi):
+        if not 0 <= vid < n:
+            raise ValueError(f"vertex id {vid} is outside [0, n) for n = {n}")
+
+
+def _canonical(batch_df: DataFrame) -> DataFrame:
+    """The batch's edges as (least, greatest) pairs, self-loops and rows
+    with a null endpoint dropped."""
+    return batch_df.select(
+        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
+    ).where(F.col("a") != F.col("b"))
+
+
+class _HeldState(NamedTuple):
+    """A committed version held on the driver, swapped whole: a reader never
+    pairs one version's number with another's rows. ``groups`` holds one
+    (n, W) uint64 slice matrix per sketch group, row = vid; ``present`` marks
+    the vids with a row (a sketch that folds to zero keeps its row: the
+    vertex set is part of the state); ``table`` is the committed rows (vid,
+    g0, ...) in vid order, as written to parquet, which the CC query reads."""
+
+    version: int
+    table: pa.Table
+    groups: list[np.ndarray]
+    present: np.ndarray
+
+    @staticmethod
+    def zeros(params: SketchParams) -> tuple[list[np.ndarray], np.ndarray]:
+        """(groups, present) of a state with no rows."""
+        width = slice_params(params).n_slots
+        groups = [np.zeros((params.n, width), dtype=np.uint64) for _ in range(params.rounds)]
+        return groups, np.zeros(params.n, dtype=bool)
+
+    @staticmethod
+    def of(
+        version: int, groups: list[np.ndarray], present: np.ndarray, params: SketchParams
+    ) -> "_HeldState":
+        ids = np.flatnonzero(present)
+        table = pa.table(
+            [pa.array(ids, type=pa.int64())] + [_binary_array(m[ids]) for m in groups],
+            names=["vid"] + group_cols(params),
+        )
+        return _HeldState(version, table, groups, present)
+
+    @staticmethod
+    def read(version: int, path: str, params: SketchParams) -> "_HeldState":
+        table = pq.read_table(path)
+        ids = _ids(table, "vid")
+        groups, present = _HeldState.zeros(params)
+        if ids.size:
+            for m, c in zip(groups, group_cols(params)):
+                m[ids] = _binary_matrix(table.column(c).combine_chunks())
+        present[ids] = True
+        return _HeldState(version, table, groups, present)
+
+
 class SketchStreamIngestor:
     """Maintains a persistent per-vertex sketch table under micro-batched
     edge updates; supports in-stream CC queries and point bursts on the
     committed state.
 
     A state of at most TASK_SKETCH_BYTES (params.n x slice_row_bytes) is
-    held on the driver: absorb, CC query and point burst run no Python task,
-    and each commit writes one parquet file with pyarrow. A larger state is
+    held on the driver as dense per-group matrices plus the committed table:
+    an absorb collects its batch in one single-task Spark job and XOR-folds
+    it in place, CC query and point burst run no Python task, and each
+    commit writes one parquet file with pyarrow. A larger state is
     merged and queried in Spark; ``num_partitions`` (default:
     local_parallelism) caps those sketch shuffles, each running as many
     partitions as its sketch bytes need (sketch.build.sketch_partitions),
@@ -157,9 +231,7 @@ class SketchStreamIngestor:
         # state, its fold and its write would all sit on the driver, where
         # Spark spreads them over tasks
         self._held = params.n * slice_row_bytes(params) <= TASK_SKETCH_BYTES
-        # (version, rows), swapped whole: a reader never pairs one version's
-        # number with another's rows
-        self._state: tuple[int, pa.Table] | None = None
+        self._state: _HeldState | None = None
 
     @property
     def _pointer(self) -> str:
@@ -192,45 +264,60 @@ class SketchStreamIngestor:
             return None
         return self.spark.read.parquet(self._cur)
 
-    def _held_state(self) -> pa.Table | None:
-        """The committed version's slice rows on the driver, or None before
-        the first commit. Read from the version's parquet only when the
-        held table is another version's: after a resume, or a commit by
-        another ingestor on this directory."""
+    def _held_state(self) -> _HeldState | None:
+        """The committed version held on the driver, or None before the
+        first commit. Rebuilt from the version's parquet only when the held
+        one is another version's: after a resume, or a commit by another
+        ingestor on this directory."""
         if not self._has_state():
             return None
         version = self._meta()["version"]
         state = self._state
-        if state is None or state[0] != version:
-            state = (version, pq.read_table(self._version_dir(version)))
+        if state is None or state.version != version:
+            state = _HeldState.read(version, self._version_dir(version), self.params)
             self._state = state
-        return state[1]
+        return state
 
-    def _merge_on_driver(self, edges: DataFrame) -> pa.Table:
-        """The committed rows XOR-merged with the batch's delta, on the
-        driver. One Spark job collects the batch's edges and the build kernel
-        runs in-process; a batch above COLLECT_THRESHOLD edges builds in
-        Spark, returning at most n delta rows. A vid whose sketch folds to
-        zero keeps its row: the vertex set is part of the state."""
-        cols = group_cols(self.params)
-        t = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
+    def _merge_on_driver(self, batch_df: DataFrame, version: int) -> _HeldState:
+        """The committed state XOR-merged with the batch's delta, on the
+        driver, as version ``version``. One single-task Spark job collects
+        the raw (a, b) batch (_collect_at_most); numpy canonicalizes it as
+        _canonical does (rows with a null endpoint and self-loops dropped,
+        each pair as (least, greatest)), checks its ids and builds the
+        delta, and the delta rows are XORed in place into copies of the
+        committed matrices: the committed state is never written to. A
+        batch above COLLECT_THRESHOLD edges builds its delta in Spark,
+        returning at most n rows."""
+        params = self.params
+        t = _collect_at_most(batch_df.select("a", "b"), COLLECT_THRESHOLD)
         if t.num_rows <= COLLECT_THRESHOLD:
+            t = t.drop_null()
             a, b = _ids(t, "a"), _ids(t, "b")
-            code = edge_code(a, b, self.params.n)
-            delta = [slice_batch(np.concatenate([a, b]), np.concatenate([code, code]), self.params)]
+            lo, hi = np.minimum(a, b), np.maximum(a, b)
+            keep = lo != hi
+            lo, hi = lo[keep], hi[keep]
+            if lo.size:
+                _check_ids(lo.min(), hi.max(), params.n)
+            code = edge_code(lo, hi, params.n)
+            vids, sk = build_sketches(np.concatenate([lo, hi]), np.concatenate([code, code]), params)
+            delta = _split_groups(sk, params)
         else:
-            delta = build_group_slices(edges, self.params, self.num_partitions)
-            delta = delta.toArrow().to_batches()
+            d = build_group_slices(_canonical(batch_df), params, self.num_partitions).toArrow()
+            vids = _ids(d, "vid")
+            if vids.size:
+                _check_ids(vids.min(), vids.max(), params.n)
+            delta = [_binary_matrix(d.column(c).combine_chunks()) for c in group_cols(params)]
         cur = self._held_state()
-        out = _fold_batches((cur.to_batches() if cur is not None else []) + delta, "vid", cols)
-        if out is None:
-            ids, folded = np.empty(0, dtype=np.int64), [np.empty((0, 0), np.uint64)] * len(cols)
+        if cur is None:
+            groups, present = _HeldState.zeros(params)
         else:
-            ids, folded = out
-        return pa.table(
-            [pa.array(ids, type=pa.int64())] + [_binary_array(m) for m in folded],
-            names=["vid"] + cols,
-        )
+            groups, present = [m.copy() for m in cur.groups], cur.present.copy()
+        if vids.size:
+            # vids are distinct, so a fancy-indexed XOR folds each row once
+            for m, rows in zip(groups, delta):
+                m[vids] ^= rows
+            present[vids] = True
+        return _HeldState.of(version, groups, present, params)
 
     def absorb_batch(self, batch_df: DataFrame, batch_id: int | None = None) -> None:
         """foreachBatch sink: XOR-merge this batch's sketch delta into state.
@@ -252,25 +339,32 @@ class SketchStreamIngestor:
             and batch_id <= meta["batch_id"]
         ):
             return  # at-least-once replay of a committed batch
-        edges = batch_df.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        ).where(F.col("a") != F.col("b"))
         new_version = (meta["version"] + 1) if meta else 0
         new_dir = self._version_dir(new_version)
         if self._held:
-            merged = self._merge_on_driver(edges)
+            held = self._merge_on_driver(batch_df, new_version)
             # a dir left by a commit that never flipped the pointer is stale
             shutil.rmtree(new_dir, ignore_errors=True)
             os.makedirs(new_dir)
-            pq.write_table(merged, os.path.join(new_dir, "part-00000.parquet"))
+            pq.write_table(held.table, os.path.join(new_dir, "part-00000.parquet"))
             open(os.path.join(new_dir, "_SUCCESS"), "w").close()
         else:
+            # the id range rides the merge's own job: no extra Spark job
+            bounds = Observation()
+            edges = _canonical(batch_df).observe(
+                bounds, F.min("a").alias("lo"), F.max("b").alias("hi")
+            )
             delta = build_group_slices(edges, self.params, self.num_partitions)
             cur = self.current_sketches()
             merged = delta if cur is None else xor_merge_slices(
                 cur.unionAll(delta), "vid", self.params, self.num_partitions
             )
             merged.write.mode("overwrite").parquet(new_dir)
+            try:
+                _check_ids(bounds.get["lo"], bounds.get["hi"], self.params.n)
+            except ValueError:
+                shutil.rmtree(new_dir, ignore_errors=True)
+                raise
         # atomic commit: tmp-write + rename of the pointer file
         committed_bid = batch_id if batch_id is not None else (
             meta.get("batch_id") if meta else None
@@ -280,7 +374,7 @@ class SketchStreamIngestor:
             json.dump({"version": new_version, "batch_id": committed_bid}, f)
         os.replace(tmp, self._pointer)
         if self._held:
-            self._state = (new_version, merged)
+            self._state = held
         # retain the PREVIOUS version (a query racing this commit keeps its
         # snapshot); garbage-collect anything older
         for name in os.listdir(self.state_dir):
@@ -326,10 +420,10 @@ class SketchStreamIngestor:
         labels = None
         if self._held:
             # the passes run in-process on the driver-held table
-            slices = self._held_state()
+            held = self._held_state()
             v = comp = empty
-            if slices is not None:
-                t = _cc_rounds(self.spark, slices, None, self.params)
+            if held is not None:
+                t = _cc_rounds(self.spark, held.table, None, self.params)
                 v, comp = _ids(t, "v"), _ids(t, "comp")
             labels = np.arange(self.params.n, dtype=np.int64)
             labels[v] = comp
@@ -385,7 +479,7 @@ class SketchStreamIngestor:
 
         vmap, labels = self._components()
         if labels is not None:
-            t = pairs.select("a", "b").limit(COLLECT_THRESHOLD + 1).toArrow()
+            t = _collect_at_most(pairs.select("a", "b"), COLLECT_THRESHOLD)
             if t.num_rows <= COLLECT_THRESHOLD and not any(c.null_count for c in t.columns):
                 a, b = _ids(t, "a"), _ids(t, "b")
                 connected = _components_of(labels, a) == _components_of(labels, b)

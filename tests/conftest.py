@@ -44,3 +44,33 @@ def assert_no_litter(spark, before: set[int], result) -> None:
     }
     left = persisted(spark) - before - read
     assert not left, f"persisted RDDs the result does not read: {sorted(left)}"
+
+
+def job_counts(spark, fn):
+    """Run ``fn()`` under a job group of its own and return (its result,
+    (jobs, stages, tasks)) from the status tracker, no Spark UI needed: the
+    jobs the group ran, the stages among them that ran tasks (a skipped
+    stage ran none) and those stages' tasks."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    saved = [sc.getLocalProperty(k) for k in keys]
+    group = f"job_counts-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k, v in zip(keys, saved):
+            sc.setLocalProperty(k, v)
+    # the tracker is fed by the listener bus, which may lag the action
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [
+        info
+        for job in jobs
+        for sid in tracker.getJobInfo(job).stageIds
+        if (info := tracker.getStageInfo(sid)) is not None and info.numCompletedTasks > 0
+    ]
+    return out, (len(jobs), len(stages), sum(s.numTasks for s in stages))

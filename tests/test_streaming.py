@@ -310,3 +310,79 @@ def test_small_state_commits_one_parquet_file(spark, tmp_path, monkeypatch):
         assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10}
         committed.append(pq.read_table(ing._cur).sort_by("vid").to_pylist())
     assert committed[0] == committed[1] == committed[2]
+
+
+def test_held_absorb_and_burst_collect_in_one_task(spark, tmp_path):
+    """A held absorb collects its batch, and a held burst its pairs, in one
+    job of one stage and one task: no exchange into a single partition."""
+    from tests.conftest import job_counts
+
+    ing = SketchStreamIngestor(spark, SketchParams.for_graph(16, seed=5), str(tmp_path / "one"))
+    assert ing._held
+    batch = spark.createDataFrame([(1, 2), (3, 4), (2, 5)], "a long, b long")
+    _, counts = job_counts(spark, lambda: ing.absorb_batch(batch, 0))
+    assert counts == (1, 1, 1)
+    ing.query_components(0)
+    pairs = spark.createDataFrame([(1, 5), (1, 3)], "a long, b long")
+    res, counts = job_counts(spark, lambda: ing.burst_point_queries(pairs))
+    assert counts[1:] == (1, 1)
+    assert sorted(tuple(r) for r in res.collect()) == [(1, 3, False), (1, 5, True)]
+
+
+def test_raw_batches_commit_the_same_rows_on_every_path(spark, tmp_path, monkeypatch):
+    """Nulls, self-loops and reversed pairs are canonicalized the same way
+    whether the held path does it in numpy or Spark does it: both placements
+    commit the same rows. A distinct() batch, and any batch with AQE off,
+    take the plain limit collect (more than one stage) and commit them too."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import job_counts
+
+    n = 16
+    params = SketchParams.for_graph(n, seed=3)
+    raw = [[(1, 2), (2, 1), (3, None), (None, 4), (5, 5), (6, 7)], [(7, 6), (2, 3), (2, 3), (9, 8)]]
+    # every pair but (8, 9) cancels; its endpoints stay vertices of the state
+    expected = {1: 1, 2: 2, 3: 3, 6: 6, 7: 7, 8: 8, 9: 8}
+    committed = []
+    for path in ("narrow", "distinct", "aqe_off", "spark"):
+        if path == "spark":
+            monkeypatch.setattr(ingest, "TASK_SKETCH_BYTES", 0)
+        ing = SketchStreamIngestor(spark, params, str(tmp_path / path), num_partitions=2)
+        for i, batch in enumerate(raw):
+            df = spark.createDataFrame(batch, "a long, b long")
+            if path == "distinct":
+                # the same multiset of rows, through an exchange
+                df = df.distinct()
+                df = df.union(df.where("a = 2 and b = 3"))
+            aqe = spark.conf.get("spark.sql.adaptive.enabled")
+            if path == "aqe_off":
+                spark.conf.set("spark.sql.adaptive.enabled", "false")
+            try:
+                _, counts = job_counts(spark, lambda: ing.absorb_batch(df, i))
+            finally:
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            if path != "spark":
+                assert (counts[1] > 1) == (path != "narrow"), (path, counts)
+        assert {r.v: r.comp for r in ing.query_components(0).collect()} == expected
+        committed.append(pq.read_table(ing._cur).sort_by("vid").to_pylist())
+    assert all(c == committed[0] for c in committed)
+
+
+def test_out_of_range_vertex_id_raises_and_keeps_current(spark, tmp_path, monkeypatch):
+    """A vertex id outside [0, n) raises ValueError naming it and n before
+    the pointer flip, on both placements: CURRENT and the answers stay on
+    the committed version, so no later query reads a poisoned state."""
+    import pytest
+
+    n = 16
+    params = SketchParams.for_graph(n, seed=5)
+    for placement in _placements(monkeypatch):
+        sd = tmp_path / f"range_{placement}"
+        ing = SketchStreamIngestor(spark, params, str(sd), num_partitions=2)
+        ing.absorb_batch(spark.createDataFrame([(1, 2)], "a long, b long"), 0)
+        current = (sd / "CURRENT").read_text()
+        for bad, vid in (((1, 300), 300), ((-1, 5), -1), ((3, 16), 16)):
+            with pytest.raises(ValueError, match=rf"vertex id {vid} .* n = {n}"):
+                ing.absorb_batch(spark.createDataFrame([bad], "a long, b long"), 1)
+        assert (sd / "CURRENT").read_text() == current
+        assert {r.v: r.comp for r in ing.query_components(0).collect()} == {1: 1, 2: 1}
