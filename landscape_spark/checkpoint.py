@@ -1,5 +1,5 @@
-"""Per-round checkpoints: the in-session round step, and durable rounds with
-per-partition lineage + metrics (north rule).
+"""Per-round checkpoints: the in-session round step and round loop, and
+durable rounds with per-partition lineage + metrics (north rule).
 
 ``step`` is the one round primitive of every iterative graph/ operator: it
 cuts the round's lineage with an eager local checkpoint, reads the round's
@@ -8,6 +8,12 @@ round replaces, so a finished query leaves only the checkpoints its result
 reads. The reference likewise keeps
 only the current round's state on its main node (its
 src/graph_distrib_update.cpp:105-154).
+
+``rounds`` numbers the rounds of every capped graph/ loop and owns the one
+exhaustion policy: a loop that runs out without its stop certificate warns,
+unless the operator declares that it raises or that its bounded result is
+the contract. ``expand`` is the one frontier closure (reachability, BFS
+levels, SCC's backward mark, Brandes' forward levels) built on both.
 
 Every Boruvka round (and any other iterative loop) can persist its state as
 parquet plus a lineage JSON capturing: round index, input lineage (previous
@@ -24,8 +30,9 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterable
-from typing import Any
+import warnings
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from typing import Any, Literal
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +69,75 @@ def step(
     for frame in release:
         _release(frame)
     return out, stats
+
+
+def rounds(
+    op: str,
+    cap: int,
+    partial: str = "",
+    *,
+    on_cap: Literal["warn", "raise", "return"] = "warn",
+) -> Iterator[int]:
+    """The round numbers 1..``cap`` of a capped loop, written
+    ``for r in rounds(...)`` with a ``break`` (or ``return``) once the
+    loop's stop certificate holds. Only a loop that runs out reaches the
+    code after the last round, the one exhaustion policy, which says
+    "{op} did not converge within {cap} rounds — {partial}": as a
+    RuntimeWarning (``on_cap="warn"``, the partial result is returned), as
+    a RuntimeError (``"raise"``, for a contract that refuses a partial
+    result), or not at all (``"return"``, for a contract whose result is
+    the cap-bounded one, such as a hop ball). Sets no job description."""
+    yield from range(1, cap + 1)
+    message = f"{op} did not converge within {cap} rounds — {partial}"
+    if on_cap == "raise":
+        raise RuntimeError(message)
+    if on_cap == "warn":
+        warnings.warn(message, RuntimeWarning, stacklevel=3)
+
+
+def expand(
+    op: str,
+    cap: int,
+    seeds: DataFrame,
+    level: Callable[[DataFrame, int], DataFrame],
+    *,
+    keys: Sequence[str] = ("v",),
+    levels: list[DataFrame] | None = None,
+    partial: str = "",
+    on_cap: Literal["warn", "raise", "return"] = "warn",
+) -> DataFrame:
+    """Frontier closure under ``rounds(op, cap, partial, on_cap=on_cap)``:
+    one consolidated checkpoint of the ``seeds`` rows plus every level
+    reached from them. Round r steps ``level(frontier, r)`` less the rows
+    whose ``keys`` are already reached, observing its row count on the same
+    job; the first empty level stops the loop, and any other is unioned
+    into the reached checkpoint (its columns) and becomes the next
+    frontier. Each reached checkpoint a round replaces is freed, and so is
+    each level once the next replaces it, unless ``levels`` is given: the
+    levels so far, whose last is the first frontier (else the seeds are),
+    which gets every new level for the caller to keep and free."""
+    reached, _ = step(seeds)
+    frontier = levels[-1] if levels else reached
+    spent: tuple[DataFrame, ...] = ()
+    for r in rounds(op, cap, partial, on_cap=on_cap):
+        nxt, stats = step(
+            level(frontier, r).join(reached.select(*keys), on=list(keys), how="left_anti"),
+            release=spent,
+            n=F.count(F.lit(1)),
+        )
+        if stats["n"] == 0:
+            _release(nxt)
+            break
+        reached, _ = step(reached.unionAll(nxt.select(*reached.columns)), release=(reached,))
+        frontier = nxt
+        if levels is None:
+            spent = (nxt,)
+        else:
+            levels.append(nxt)
+    else:
+        for frame in spent:
+            _release(frame)
+    return reached
 
 
 def partition_counts(df: DataFrame) -> list[int]:

@@ -25,8 +25,10 @@ keeps the forward frontier minimal. Path counts are exact int64 (sigma
 overflows int64 only past ~9e18 shortest paths per (s,v) — far beyond
 any graph this runs on at gate scale; the oracle uses BIGINT too, so
 overflow would at worst break both sides identically). Lineage is cut
-per level (checkpoint.step); each forward level is kept until the backward
-phase has checkpointed its delta (the levels are that phase's schedule).
+per level (checkpoint.step). The forward levels are a checkpoint.expand
+closure that keeps every level until the backward phase has checkpointed
+its delta (the levels are that phase's schedule); ``max_depth`` bounds
+them, and a sweep cut there returns its depth-bounded sum silently.
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import _release, step
+from landscape_spark.checkpoint import _release, expand, step
 from landscape_spark.graph.cc import _local_frame
 from landscape_spark.session import local_parallelism
 
@@ -62,23 +64,21 @@ def betweenness_sources(
     seeds = {"s": src, "v": src, "sigma": np.ones_like(src)}
     level0, _ = step(_local_frame(spark, seeds, "s long, v long, sigma long"))
     levels = [level0]
-    reached, _ = step(level0.select("s", "v"))
-    for _ in range(int(max_depth)):
-        prev = levels[-1]
-        nxt, stats = step(
-            prev.join(e, e.src == prev.v)
+    # the forward levels are kept: they are the backward phase's schedule
+    _release(
+        expand(
+            "betweenness_sources",
+            int(max_depth),
+            level0.select("s", "v"),
+            lambda prev, _: prev.join(e, e.src == prev.v)
             .select("s", F.col("dst").alias("v"), "sigma")
             .groupBy("s", "v")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(reached, on=["s", "v"], how="left_anti"),
-            n=F.count(F.lit(1)),
+            .agg(F.sum("sigma").alias("sigma")),
+            keys=("s", "v"),
+            levels=levels,
+            on_cap="return",
         )
-        if stats["n"] == 0:
-            _release(nxt)
-            break
-        levels.append(nxt)
-        reached, _ = step(reached.unionAll(nxt.select("s", "v")), release=(reached,))
-    _release(reached)
+    )
 
     # backward sweep: deepest level has no successors -> delta 0. The
     # successor state carries (sigma, delta) in ONE frame, so each level

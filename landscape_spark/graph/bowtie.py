@@ -22,56 +22,38 @@ Region semantics (Broder's full 6-way map):
 Plan shape: one SCC run (graph/scc.py), four frontier-synchronous
 reachability sweeps (forward/backward from the core, forward from IN,
 backward from OUT — each edge fires at most once per sweep, the
-graph/traversal.py cost model), one exact CC run (graph/cc.py) for the
-weak components, then a single CASE projection. All state is
-vertex-partitioned DataFrames; every round is a checkpoint.step, which
-frees the round it replaces, and the SCC labels are re-checkpointed once
-so the per-round parts they read can be freed too.
+graph/traversal.py cost model, each a checkpoint.expand closure that
+frees the rounds it replaces and warns at its cap), one exact CC run
+(graph/cc.py) for the weak components, then a single CASE projection. All
+state is vertex-partitioned DataFrames, and the SCC labels are
+re-checkpointed once so the per-round parts they read can be freed too.
 """
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import _release, step
+from landscape_spark.checkpoint import _release, expand, step
 from landscape_spark.graph.cc import connected_components_exact
 from landscape_spark.graph.scc import strongly_connected_components
 
 
 def _reachable(edges: DataFrame, seeds: DataFrame, max_iter: int = 512) -> DataFrame:
     """(v) reachable from the seed DataFrame along (src, dst) edges —
-    seeds included. Frontier-synchronous: each edge fires once across the
-    run, when its src enters the reached set. Reaching max_iter rounds with
-    the frontier still non-empty WARNS: the reached set is then incomplete."""
-    reached, _ = step(seeds.select("v").distinct())
-    frontier = reached
-    for _ in range(max_iter):
-        nxt, stats = step(
-            edges.join(frontier.withColumnRenamed("v", "src"), on="src")
-            .select(F.col("dst").alias("v"))
-            .distinct()
-            .join(reached, on="v", how="left_anti"),
-            release=() if frontier is reached else (frontier,),
-            n=F.count(F.lit(1)),
-        )
-        if stats["n"] == 0:
-            _release(nxt)
-            break
-        reached, _ = step(reached.unionAll(nxt), release=(reached,))
-        frontier = nxt
-    else:
-        if frontier is not reached:
-            _release(frontier)
-        warnings.warn(
-            f"bow-tie reachability stopped at max_iter={max_iter} with its "
-            "frontier non-empty — the reached set is incomplete; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return reached
+    seeds included. Frontier-synchronous (checkpoint.expand): each edge
+    fires once across the run, when its src enters the reached set.
+    Reaching max_iter rounds with the frontier still non-empty WARNS: the
+    reached set is then incomplete."""
+    return expand(
+        "bow-tie reachability",
+        max_iter,
+        seeds.select("v").distinct(),
+        lambda frontier, _: edges.join(frontier.withColumnRenamed("v", "src"), on="src")
+        .select(F.col("dst").alias("v"))
+        .distinct(),
+        partial="frontier non-empty, so the reached set is incomplete; raise max_iter",
+    )
 
 
 def bowtie_decomposition(

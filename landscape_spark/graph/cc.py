@@ -31,7 +31,7 @@ this kernel's pointer jumping (_pointer_jump).
 
 from __future__ import annotations
 
-import warnings
+from collections.abc import Iterable
 
 import numpy as np
 import pyarrow as pa
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from landscape_spark.checkpoint import _release, step
+from landscape_spark.checkpoint import _release, rounds, step
 
 # The most rows the driver owns. Exact CC collects its live edge set once it
 # has at most this many edges (with no distributed round run, the vertex
@@ -122,26 +122,26 @@ def _pointer_jump(parent: np.ndarray) -> np.ndarray:
 
 
 def _hook_and_shortcut(
-    u: np.ndarray, v: np.ndarray, n: int, max_iter: int
-) -> tuple[np.ndarray, bool]:
+    u: np.ndarray, v: np.ndarray, n: int, budget: Iterable[int]
+) -> np.ndarray:
     """Component minima of the graph on dense ids [0, n) with edges (u, v):
-    returns (parent, converged), parent[i] the least id of i's component.
-    Each round every root hooks onto the smallest root it touches, full
-    pointer jumping flattens the trees, and the edges are relabelled to
-    roots; converged is False when edges were still live after max_iter
-    rounds."""
+    parent[i] is the least id of i's component. Each round every root hooks
+    onto the smallest root it touches, full pointer jumping flattens the
+    trees, and the edges are relabelled to roots, dropping the dead ones;
+    the rounds come from ``budget`` (checkpoint.rounds), which runs out
+    only while edges are still live."""
     parent = np.arange(n)
-    for _ in range(max_iter):
-        live = u != v
-        u, v = u[live], v[live]
-        if u.size == 0:
-            return parent, True
+    for _ in budget if (u != v).any() else ():
         hook = np.arange(n)
         np.minimum.at(hook, u, v)
         np.minimum.at(hook, v, u)
         parent = _pointer_jump(hook[parent])
         u, v = parent[u], parent[v]
-    return parent, not (u != v).any()
+        live = u != v
+        u, v = u[live], v[live]
+        if not u.size:
+            break
+    return parent
 
 
 def _follow(df: DataFrame, col: str, ptr: DataFrame) -> DataFrame:
@@ -182,20 +182,28 @@ def connected_components_exact(
 
     und_edges: columns (a, b), a != b. vertices: column (v).
 
-    max_iter bounds hook rounds, distributed and driver rounds together.
-    Exhausting it with edges still live WARNS: the labels are then wrong
-    for some vertices.
+    max_iter bounds hook rounds, distributed and driver rounds together
+    (one checkpoint.rounds budget). Exhausting it with edges still live
+    WARNS: the labels are then wrong for some vertices.
     """
     spark = vertices.sparkSession
     edges = und_edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     # one job: the whole edge set when it fits, else a sign that it does not
     t = edges.limit(COLLECT_THRESHOLD + 1).toArrow()
-    n_live, rounds, owned = t.num_rows, 0, []
+    n_live, owned = t.num_rows, []
     if n_live > COLLECT_THRESHOLD:
         # only the distributed rounds (or a max_iter=0 result) read it
         labels = vertices.select("v").distinct().select("v", F.col("v").alias("comp"))
+    # one budget for the distributed and the driver rounds together. A run
+    # that exhausts it returns labels that are WRONG for some vertices: this
+    # is the golden path the sketch CC is verified against, so it must say so
+    budget = rounds(
+        "connected_components_exact",
+        max_iter,
+        "edges between components are still live, so some labels are wrong; raise max_iter",
+    )
     try:
-        while n_live > COLLECT_THRESHOLD and rounds < max_iter:
+        for _ in budget if n_live > COLLECT_THRESHOLD else ():
             # every root hooks onto the smallest root it touches, then full
             # pointer jumping, then the edges move to their endpoints' roots
             sym = edges.unionAll(edges.select(F.col("y").alias("x"), F.col("x").alias("y")))
@@ -215,15 +223,14 @@ def connected_components_exact(
             owned.append(edges)
             n_live = stats["n"]
             labels = _relabel(labels, hooks)
-            rounds += 1
-        converged = n_live == 0
+            if n_live <= COLLECT_THRESHOLD:
+                break
         if n_live <= COLLECT_THRESHOLD:
             x, y = (_ids(edges.toArrow() if owned else t, c) for c in ("x", "y"))
             vids = np.unique(_ids(vertices.select("v").toArrow(), "v")) if not owned else x[:0]
             ids = np.unique(np.concatenate([vids, x, y]))
             u, v = np.searchsorted(ids, x), np.searchsorted(ids, y)
-            parent, converged = _hook_and_shortcut(u, v, ids.size, max_iter - rounds)
-            comp = ids[parent]
+            comp = ids[_hook_and_shortcut(u, v, ids.size, budget)]
             if not owned:
                 comp = comp[np.searchsorted(ids, vids)]
                 labels = _local_frame(spark, {"v": vids, "comp": comp}, "v long, comp long")
@@ -231,18 +238,6 @@ def connected_components_exact(
                 moved = comp != ids
                 remap = {"x": ids[moved], "p": comp[moved]}
                 labels = _relabel(labels, _local_frame(spark, remap, "x long, p long"))
-        if not converged:
-            # edges were still live when the round budget ran out — the
-            # returned map is WRONG for some vertices (this is the golden path
-            # the sketch CC is verified against; silence here would let a
-            # mislabeled run validate or falsify sketch results)
-            warnings.warn(
-                f"connected_components_exact did not converge within "
-                f"{max_iter} rounds — edges between components are still live; "
-                "raise max_iter",
-                RuntimeWarning,
-                stacklevel=2,
-            )
         if owned:
             labels, _ = step(labels)
     finally:

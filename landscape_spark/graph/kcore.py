@@ -35,12 +35,10 @@ round it replaces).
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import step
+from landscape_spark.checkpoint import rounds, step
 from landscape_spark.graph.cc import symmetrize
 from landscape_spark.session import local_parallelism
 
@@ -74,7 +72,9 @@ def coreness(
 ) -> DataFrame:
     """Return (v, core) — each vertex's coreness (max k with v in the
     k-core). und_edges: canonical (a, b) with a < b; vertices: (v).
-    Isolated vertices have core 0.
+    Isolated vertices have core 0. Exhausting max_iter before the sum
+    certificate holds WARNS (checkpoint.rounds): the values are then upper
+    bounds on the true coreness.
     """
     # adjacency materialized once, partitioned on the MESSAGE key (w): each
     # round's join then reuses the cached partitioning and only the
@@ -95,21 +95,15 @@ def coreness(
         s=F.sum("h"),
     )
     prev_sum = stats["s"]
-    converged = False
-    for _ in range(max_iter):
+    for _ in rounds(
+        "coreness",
+        max_iter,
+        "values are still decreasing (upper bounds on the true coreness); raise max_iter",
+    ):
         state, stats = step(_h_round(sym, state), release=(state,), s=F.sum("h"))
         if stats["s"] == prev_sum:
-            converged = True
             break
         prev_sum = stats["s"]
-    if not converged:
-        warnings.warn(
-            f"coreness did not converge within {max_iter} rounds — values "
-            "are still decreasing (upper bounds on the true coreness); "
-            "raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     sym.unpersist()  # state is checkpointed
     return vertices.join(state, on="v", how="left").select(
         "v", F.coalesce("h", F.lit(0)).cast("long").alias("core")

@@ -20,11 +20,14 @@ distribute). Each outer round:
    fixpoint — color(v) = min vertex id that reaches v within the
    remaining graph (messages with color >= receiver id are dropped
    pre-shuffle, the cc.py monotonicity trick; SUM of labels is the O(1)
-   convergence certificate).
+   convergence certificate). Exhausting max_label_iter RAISES: colors
+   short of their fixpoint would make the mark below under-approximate
+   SCCs.
 3. BACKWARD MARK: roots are vertices with color(v) = v. Mark the root
    set, then expand backwards along edges STAYING INSIDE the root's
    color class, frontier-synchronously (each edge fires at most once
-   per outer round). The marked set of root r is exactly SCC(r), and
+   per outer round; checkpoint.expand, capped by the vertices left, which
+   no mark can exhaust). The marked set of root r is exactly SCC(r), and
    r is the minimum id in it — so comp = color is already the
    canonical min-id component label, matching the undirected CC
    convention.
@@ -32,7 +35,9 @@ distribute). Each outer round:
 
 Every SCC found in a round is independent (different color classes), so
 one round typically resolves many components; outer rounds are bounded
-by the depth of the SCC condensation DAG that survives trimming.
+by the depth of the SCC condensation DAG that survives trimming, and
+exhausting max_outer with vertices unassigned WARNS. Both caps go through
+checkpoint.rounds.
 
 Scale notes: all state is vertex-partitioned DataFrames; per inner round
 one shuffle for the message join plus the min/distinct aggregate. The
@@ -44,13 +49,12 @@ replaces, and only the assigned SCC parts outlive the call.
 
 from __future__ import annotations
 
-import warnings
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import _release, step
+from landscape_spark.checkpoint import _release, expand, rounds, step
 
 
 def strongly_connected_components(
@@ -71,7 +75,12 @@ def strongly_connected_components(
     edges_rem, _ = step(edges.select("src", "dst"))
     assigned: list[DataFrame] = []
 
-    for _outer in range(max_outer):
+    for _ in rounds(
+        "strongly_connected_components",
+        max_outer,
+        "vertices are still unassigned: the condensation DAG is deeper than the "
+        "round budget; raise max_outer",
+    ):
         # --- 1. trim singleton SCCs (in-deg 0 or out-deg 0) to fixpoint ---
         while True:
             # one endpoint-flag aggregate replaces the two distinct passes:
@@ -121,8 +130,14 @@ def strongly_connected_components(
             remaining.select("v", F.col("v").alias("color")), s=F.sum("color")
         )
         prev_sum = stats["s"]
-        colors_converged = False
-        for _ in range(max_label_iter):
+        # un-converged colors would make the backward mark under-approximate
+        # SCCs — not a partial result we are willing to return
+        for _ in rounds(
+            "strongly_connected_components' forward coloring",
+            max_label_iter,
+            "colors are still falling; raise max_label_iter",
+            on_cap="raise",
+        ):
             msgs = (
                 edges_rem.join(colors.withColumnRenamed("v", "src"), on="src")
                 .select(F.col("dst").alias("v"), "color")
@@ -136,43 +151,25 @@ def strongly_connected_components(
                 s=F.sum("color"),
             )
             if stats["s"] == prev_sum:
-                colors_converged = True
                 break
             prev_sum = stats["s"]
-        if not colors_converged:
-            # un-converged colors make the backward mark under-approximate
-            # SCCs — not a silent wrong answer we are willing to return
-            raise RuntimeError(
-                f"SCC forward coloring did not converge within "
-                f"{max_label_iter} rounds; raise max_label_iter"
-            )
 
         # --- 3. backward mark from roots within each color class ---
-        marked, _ = step(
-            colors.where(F.col("color") == F.col("v")).select(
-                "v", F.col("color").alias("comp")
-            )
+        # a mark is at most as deep as its class is large, so the vertices
+        # left after the trim are a cap no mark reaches
+        marked = expand(
+            "strongly_connected_components' backward mark",
+            kept["n"],
+            colors.where(F.col("color") == F.col("v")).select("v", F.col("color").alias("comp")),
+            lambda frontier, _: edges_rem.join(frontier.withColumnRenamed("v", "dst"), on="dst")
+            .select(F.col("src").alias("v"), "comp")
+            .join(colors, on="v")
+            .where(F.col("color") == F.col("comp"))
+            .select("v", "comp")
+            .distinct(),
+            partial="the mark outgrew its color class, which cannot happen",
+            on_cap="raise",
         )
-        frontier = marked
-        while True:
-            cand = (
-                edges_rem.join(frontier.withColumnRenamed("v", "dst"), on="dst")
-                .select(F.col("src").alias("v"), "comp")
-                .join(colors, on="v")
-                .where(F.col("color") == F.col("comp"))
-                .select("v", "comp")
-                .distinct()
-            )
-            new, stats = step(
-                cand.join(marked.select("v"), on="v", how="left_anti"),
-                release=() if frontier is marked else (frontier,),
-                n=count,
-            )
-            if stats["n"] == 0:
-                _release(new)
-                break
-            marked, _ = step(marked.unionAll(new), release=(marked,))
-            frontier = new
 
         # --- 4. assign the SCCs found this round and shrink the graph ---
         assigned.append(marked)
@@ -190,14 +187,6 @@ def strongly_connected_components(
                 marked.select(F.col("v").alias("src")), on="src", how="left_anti"
             ).join(marked.select(F.col("v").alias("dst")), on="dst", how="left_anti"),
             release=(edges_rem,),
-        )
-    else:
-        warnings.warn(
-            f"strongly_connected_components hit max_outer={max_outer} with "
-            "vertices unassigned — the condensation DAG is deeper than the "
-            "round budget; raise max_outer",
-            RuntimeWarning,
-            stacklevel=2,
         )
 
     _release(edges_rem)

@@ -20,10 +20,11 @@ Scale notes per round: one shuffle for the frontier join (the frontier
 side is the small side — AQE broadcasts it while it fits, and web-graph
 frontiers peak at a few percent of n), one distinct on the candidate
 set, one anti-join against the visited table (hash-partitioned on v both
-times, so the exchange is reused). Lineage is cut every round
-(checkpoint.step, which frees the round it replaces) to keep the plan
-O(1); the loop terminates the first round the frontier comes back empty,
-its row count observed on the frontier's own checkpoint job.
+times, so the exchange is reused). The loop is checkpoint.expand: lineage
+is cut every round (checkpoint.step, which frees the round it replaces) to
+keep the plan O(1), and the loop terminates the first round the frontier
+comes back empty, its row count observed on the frontier's own checkpoint
+job.
 
 Unreached vertices are absent from the output (a left join against the
 vertex table is the caller's choice of NULL vs sentinel).
@@ -31,20 +32,19 @@ vertex table is the caller's choice of NULL vs sentinel).
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import _release, step
+from landscape_spark.checkpoint import _release, expand, rounds, step
 from landscape_spark.graph.cc import _local_frame
 
 
 def _seed_frame(spark, seeds: Sequence[int], dist_type: str) -> DataFrame:
-    """(v, dist=0) over the distinct seeds, built through Arrow: the first
-    round's frontier, which reads no checkpoint."""
+    """(v, dist=0) over the distinct seeds, built through Arrow: the round-0
+    state, which reads no checkpoint."""
     v = np.asarray(list(dict.fromkeys(int(s) for s in seeds)), dtype=np.int64)
     zeros = np.zeros(v.size, dtype=np.int32 if dist_type == "int" else np.int64)
     return _local_frame(spark, {"v": v, "dist": zeros}, f"v long, dist {dist_type}")
@@ -58,37 +58,23 @@ def bfs_distances(
     """Return (v, dist) — minimum hop count from any seed along DIRECTED
     edges (src, dst). Only reached vertices appear. max_iter bounds rounds
     at the graph's seed eccentricity (web graphs: ~tens); hitting the cap
-    returns the correct ≤max_iter-hop ball, and distances in it are exact.
+    returns the correct ≤max_iter-hop ball, and distances in it are exact:
+    the declared bounded result, so the cap passes without a message.
     """
-    frontier = _seed_frame(edges.sparkSession, seeds, "int")
-    dist, _ = step(frontier)
-    for d in range(1, max_iter + 1):
-        candidates = (
-            edges.join(frontier.select(F.col("v").alias("src")), on="src")
-            .select(F.col("dst").alias("v"))
-            .distinct()
-        )
-        # the emptiness probe rides the checkpoint action via observe()
-        # (integer count — exact), saving one job per round
-        nxt, stats = step(
-            candidates.join(dist, on="v", how="left_anti").select(
-                "v", F.lit(d).cast("int").alias("dist")
-            ),
-            release=(frontier,),
-            n=F.count(F.lit(1)),
-        )
-        if stats["n"] == 0:
-            _release(nxt)
-            break
-        # NOTE measured, kept: accumulating dist as a LAZY union of the
-        # checkpointed levels (no per-round copy) re-scans L fragments in
-        # every round's anti-join and benched +6% at sf0.1 — the
-        # consolidated re-checkpoint wins despite the extra job
-        dist, _ = step(dist.unionAll(nxt), release=(dist,))
-        frontier = nxt
-    else:
-        _release(frontier)
-    return dist
+    # NOTE measured, kept: accumulating dist as a LAZY union of the
+    # checkpointed levels (no per-round copy) re-scans L fragments in
+    # every round's anti-join and benched +6% at sf0.1 — expand's
+    # consolidated re-checkpoint wins despite the extra job
+    return expand(
+        "bfs_distances",
+        max_iter,
+        _seed_frame(edges.sparkSession, seeds, "int"),
+        lambda frontier, d: edges.join(frontier.select(F.col("v").alias("src")), on="src")
+        .select(F.col("dst").alias("v"))
+        .distinct()
+        .select("v", F.lit(d).cast("int").alias("dist")),
+        on_cap="return",
+    )
 
 
 def sssp_weighted(
@@ -111,14 +97,18 @@ def sssp_weighted(
     frontier-sized join + a min-aggregate + one join against the distance
     table; lineage cut per round (checkpoint.step). Terminates exactly when
     no distance improves (empty frontier); reaching max_iter rounds with
-    the frontier still non-empty WARNS: some distances may then be too
-    large."""
+    the frontier still non-empty WARNS (checkpoint.rounds): some distances
+    may then be too large."""
     ew = edges.select(
         "src", "dst", F.col(weight_col).cast("long").alias("_w")
     )
     frontier = _seed_frame(edges.sparkSession, seeds, "long")
     dist, _ = step(frontier)
-    for _ in range(max_iter):
+    for _ in rounds(
+        "sssp_weighted",
+        max_iter,
+        "frontier non-empty, so some distances may be too large; raise max_iter",
+    ):
         cand = (
             ew.join(
                 frontier.select(
@@ -147,10 +137,4 @@ def sssp_weighted(
         frontier = improved
     else:
         _release(frontier)
-        warnings.warn(
-            f"sssp_weighted stopped at max_iter={max_iter} with its frontier "
-            "non-empty — some distances may be too large; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     return dist

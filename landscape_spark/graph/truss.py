@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from landscape_spark.checkpoint import _release, step
+from landscape_spark.checkpoint import _release, rounds, step
 from landscape_spark.graph.triangles import _oriented_by_degree
 
 
@@ -82,10 +82,10 @@ def k_truss(
     support WITHIN the truss subgraph (>= k-2 by definition).
 
     k <= 2 returns the whole graph (every edge trivially satisfies
-    support >= 0; supports are then w.r.t. the full graph). The
-    synchronous peel converges in at most ``max_rounds`` rounds (raise
-    for pathologically deep peels; each round strictly shrinks the edge
-    set until the fixpoint, so termination is guaranteed)."""
+    support >= 0; supports are then w.r.t. the full graph). Each round of
+    the synchronous peel strictly shrinks the edge set until the fixpoint,
+    so it terminates; a peel deeper than ``max_rounds`` RAISES
+    RuntimeError (checkpoint.rounds) rather than return a partial truss."""
     k = int(k)
     count = F.count(F.lit(1))
     # NOTE measured, kept recompute: caching the oriented relation for each
@@ -97,7 +97,9 @@ def k_truss(
     if k <= 2:
         return supp
     n_prev = stats["n"]
-    for _ in range(max_rounds):
+    for _ in rounds(
+        "k_truss", max_rounds, "edges are still being peeled; raise max_rounds", on_cap="raise"
+    ):
         # survivor count rides the checkpoint action (integer — exact)
         e, stats = step(supp.where(F.col("support") >= F.lit(k - 2)).select("a", "b"), n=count)
         if stats["n"] == n_prev:
@@ -110,7 +112,3 @@ def k_truss(
             return supp.where(F.lit(False))
         supp, _ = step(edge_support(e), release=(e, supp))
         n_prev = stats["n"]
-    _release(supp)
-    raise RuntimeError(
-        f"k_truss did not converge within {max_rounds} rounds"
-    )

@@ -309,7 +309,7 @@ def xor_fold(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
 
 
 def xor_merge_slices(
-    df: DataFrame, key: str, params: SketchParams, num_partitions: int = 32
+    df: DataFrame, key: str, params: SketchParams, num_partitions: int
 ) -> DataFrame:
     """GroupBy-key XOR merge of columnar slice rows (all group columns): one
     shuffle on the key, then xor_fold. The key is a vid, so the output is at
@@ -320,7 +320,7 @@ def xor_merge_slices(
 
 
 def fold_sample(
-    df: DataFrame, key: str, sparams: SketchParams, num_partitions: int = 32
+    df: DataFrame, key: str, sparams: SketchParams, num_partitions: int
 ) -> DataFrame:
     """Final fold + l0 sample fused in one pass: (key, sketch-slice) rows ->
     (key, u, v) for keys whose merged slice yields a sample. One shuffle on

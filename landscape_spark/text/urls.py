@@ -19,6 +19,9 @@ normalization + the de-facto tracking-param strip):
      slash: `http://ex.com/` -> `http://ex.com` — the equivalence RFC
      3986 section 6.2.3 licenses for an empty path).
 
+A url with no scheme (`ex.com/a`) is a relative reference with no
+authority to parse: rules 2 and 3 leave it alone, and it has no host.
+
 Everything is a `regexp_replace` / `regexp_extract` chain in the
 Java-regex ∩ RE2 common subset (no lookaround, no pattern backrefs) so
 the DuckDB oracle reproduces the rewrite byte-for-byte — the pii.py
@@ -60,7 +63,8 @@ def canonicalize_col(url: F.Column) -> F.Column:
         (scheme == "https") & hostport.endswith(":443"),
         F.regexp_replace(hostport, r":443$", ""),
     ).otherwise(hostport)
-    u = F.concat(scheme, F.lit("://"), hostport, rest)
+    # a scheme-less url has no authority to rebuild: it stays as it is
+    u = F.when(scheme != "", F.concat(scheme, F.lit("://"), hostport, rest)).otherwise(u)
     for _ in range(3):  # compose runs of adjacent tracking params
         for pat, repl in _PARAM_RULES:
             u = F.regexp_replace(u, pat, repl)
@@ -104,7 +108,7 @@ def _sql_chain(expr: str) -> str:
         f" THEN regexp_replace({hostport}, ':443$', '')"
         f" ELSE {hostport} END"
     )
-    u = f"({scheme} || '://' || {hostport_fixed} || {rest})"
+    u = f"(CASE WHEN {scheme} <> '' THEN {scheme} || '://' || {hostport_fixed} || {rest} ELSE {u} END)"
     for _ in range(3):
         for pat, repl in _PARAM_RULES:
             sql_repl = repl.replace("$1", r"\1")

@@ -561,6 +561,11 @@ URL_CASES = [
     ("http://ex.com/a?fbclid=zz", "http://ex.com/a", "ex.com", 1),
     ("https://Ex.com/CaseKept/Path", "https://ex.com/CaseKept/Path",
      "ex.com", 2),                                                  # path case preserved
+    # no scheme: no authority to parse, so no "://" prefix and no host
+    ("ex.com/a", "ex.com/a", "", 2),
+    ("ex.com/a?utm_source=x&id=1#top", "ex.com/a?id=1", "", 2),
+    ("ex.com/a/?fbclid=zz", "ex.com/a", "", 2),
+    ("ex.com/", "ex.com", "", 1),
 ]
 
 
